@@ -274,9 +274,10 @@ def pool_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     doc="S5/S9 — upsert merge, last-writer-wins by ts with incoming-batch "
     "tie-break (HBase cell-timestamp conflict resolution, "
-    "HBaseTable.update, HBaseTable.scala:100-122). Implemented as union + "
-    "one max aggregation per key (table.py:_upsert_latest) — a single "
-    "shuffle, no join: the cheapest merge shape at 100 TB. The batch here "
+    "HBaseTable.update, HBaseTable.scala:100-122). Implemented as the "
+    "table's version fold over two layers (table.py:_upsert_latest -> "
+    "_merge_layers_fold): union + one hash shuffle + window resolution, no "
+    "join — the same plan every KeyedTable read uses. The batch here "
     "carries ts in {50,100,150}: stale writes lose, ties go to the batch, "
     "newer writes win — all three paths graded.",
     tags=("mutation",),
@@ -370,8 +371,9 @@ def mutation_increment_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     "tombstones (keys %11), CELLDEL of name (keys %13) — major-compacts, "
     "and reads the folded state under TTL 850 at now=925 (cutoff 75: even "
     "keys never re-written are purged). This puts the hardest custom "
-    "semantics — the ordered version fold of _merge_layers_fold "
-    "(table.py) and TTL-at-compaction (reference column-family TTL, "
+    "semantics — the ordered version fold (table.py:_merge_layers_fold, "
+    "one shuffle + window pass over every layer kind) and "
+    "TTL-at-compaction (reference column-family TTL, "
     "examples/simple/HBaseTableSimple.scala:23-30) — under the DuckDB hard "
     "signal, not just pytest. The oracle mirrors the fold as CASE algebra: "
     "put beats upd (later layer, ts 300>=200), celldel beats both, "

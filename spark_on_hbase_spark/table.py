@@ -28,12 +28,13 @@ This table re-expresses that **same LSM design on columnar storage**:
   CELLDEL 3 per-cell tombstone — ``__delcols`` lists the cells nulled
            (HBase DeleteColumn);
   plus ``__tombstone`` on ROW rows for whole-row deletes (HBase Delete);
-- reads: single-layer tables scan directly; multi-layer tables with only ROW
-  rows merge by one max_by aggregation (last-writer-wins by (ts, seq));
-  tables holding sparse/delta/celldel layers fold each key's version list in
-  layer order with pure column expressions (collect_list -> array_sort ->
-  aggregate) — the per-key list is bounded by the layer count (<=
-  compact_threshold), so the fold is O(1) per key at any table size;
+- reads: a lone base layer scans directly; every multi-layer stack,
+  whatever its row kinds, resolves through ONE version fold
+  (``_merge_layers_fold``): each key's versions apply in layer order by the
+  per-kind rules documented there, evaluated as one shuffle + sort + window
+  pass of codegen'd column expressions — the per-key version count is
+  bounded by the layer count (<= compact_threshold), so the fold is O(1)
+  per key at any table size;
 - ``compact()``: fold all layers into a fresh base (HBase major compaction);
   triggered automatically when the delta stack exceeds ``compact_threshold``
   so read fan-in stays bounded.
@@ -290,9 +291,9 @@ class KeyedTable:
         sampling pass repartitionByRange runs to pick bounds does not
         double-count.
 
-        ``row_kind`` stamps a non-ROW __kind column (sparse put / additive
-        delta / cell delete); ROW layers omit the column entirely so tables
-        that only ever see whole-row mutations keep the cheap max_by merge.
+        ``row_kind`` stamps a __kind column (sparse put / additive delta /
+        cell delete / ROW tombstones); plain upsert layers omit it and the
+        fold reads a missing __kind as ROW.
 
         ``stamp``: an idempotence token recorded IN the layer directory name
         (``<kind>-<seq>-<stamp>``), so data and applied-marker commit in the
@@ -486,17 +487,11 @@ class KeyedTable:
         check below catches kind-stamped frames on every path."""
         if len(frames) == 1 and not force_fold and _KIND not in frames[0].columns:
             merged = frames[0]
-        elif any(_KIND in f.columns for f in frames):
-            # sparse-put / increment-delta / cell-delete layers present:
-            # per-key ordered version fold (see _merge_layers_fold)
-            merged = _merge_layers_fold(frames, self.key_col, self.ts_col)
+            if _TOMBSTONE in merged.columns:
+                # a prefix-compaction base keeps its tombstone rows
+                merged = merged.where(~F.col(_TOMBSTONE)).drop(_TOMBSTONE)
         else:
-            merged = _merge_layers(frames, self.key_col, self.ts_col)
-        for meta in (_KIND, _DELCOLS):
-            if meta in merged.columns:
-                merged = merged.drop(meta)
-        if _TOMBSTONE in merged.columns:
-            merged = merged.where(~F.col(_TOMBSTONE)).drop(_TOMBSTONE)
+            merged = _merge_layers_fold(frames, self.key_col, self.ts_col)
         if self.ttl is not None:
             cutoff = self.now_fn() - self.ttl
             merged = merged.where(
@@ -1028,8 +1023,8 @@ class KeyedTable:
         no job runs — mutations use it to shape O(batch) delta layers.
 
         Read from the LOWEST layer's footer, not ``self.df().dtypes``:
-        analyzing the full merged-fold plan (per-column CASE chains under
-        ``F.aggregate``) costs Catalyst 50-200ms, and every mutation calls
+        analyzing the full merged-fold plan (per-column window and CASE
+        expressions) costs Catalyst 50-200ms, and every mutation calls
         this — the footer read is equivalent because every live layer
         carries the full data-column set (update validates it, put/delete/
         increment shape to it, add/drop_column compact first) and the merge
@@ -1283,15 +1278,9 @@ class KeyedTable:
         self._visible_layers(keep_since)
         m = max(int(p.name.split("-")[1]) for p in fold)
         frames = [_cached_layer_df(self.spark, str(p)) for p in fold]
-        if any(_KIND in f.columns for f in frames):
-            state = _merge_layers_fold(
-                frames, self.key_col, self.ts_col, keep_state=True
-            )
-        else:
-            # pure-ROW stack: the max_by merge IS this table's resolution
-            # rule; it already carries __tombstone through
-            state = _merge_layers(frames, self.key_col, self.ts_col)
-        folded = state.localCheckpoint()
+        folded = _merge_layers_fold(
+            frames, self.key_col, self.ts_col, keep_state=True
+        ).localCheckpoint()
         self._persist_stamps(fold)
         self._write_layer(folded, "base", seq=m, stamp=_PFXFOLD)
         # the folded base is committed: from here _layers() already serves
@@ -1497,44 +1486,6 @@ def _observed_count(df: DataFrame):
     return df.observe(obs, F.count(F.lit(1)).alias("n")), obs
 
 
-def _merge_layers(frames: list[DataFrame], key_col: str, ts_col: str) -> DataFrame:
-    """Merge ordered layers, last-writer-wins by (ts, layer-seq).
-
-    One union + one max_by aggregation per key — a single shuffle, no join:
-    the cheapest merge shape at scale. The ordering key is (ts, seq) only;
-    data columns ride as an opaque struct (maps/arrays are not orderable)."""
-    tagged = None
-    for seq, f in enumerate(frames):
-        if _TOMBSTONE not in f.columns:
-            f = f.withColumn(_TOMBSTONE, F.lit(False))
-        t = f.withColumn("__seq", F.lit(seq))
-        tagged = t if tagged is None else tagged.unionByName(t)
-    cols = [c for c in tagged.columns if c != "__seq"]
-    struct_cols = [c for c in cols if c != key_col]
-    packed = tagged.select(
-        key_col,
-        F.struct(*struct_cols).alias("__row"),
-        F.struct(ts_col, "__seq").alias("__ord"),
-    )
-    latest = packed.groupBy(key_col).agg(F.max_by("__row", "__ord").alias("__row"))
-    return latest.select(key_col, *[F.col(f"__row.{c}").alias(c) for c in struct_cols])
-
-
-def _merge_layers_fold(
-    frames: list[DataFrame], key_col: str, ts_col: str, keep_state: bool = False
-) -> DataFrame:
-    """Merge ordered layers carrying mixed row kinds — dispatches between
-    the codegen-friendly window formulation (default; see
-    ``_merge_layers_fold_window``) and the original interpreted
-    aggregate-HOF fold (``SPARK_GRAFT_FOLD=hof`` — the escape hatch kept
-    while the window rewrite proves itself; both are pinned equivalent by
-    tests/test_table.py::test_fold_window_matches_hof and the oracle
-    gate)."""
-    if os.environ.get("SPARK_GRAFT_FOLD", "window") == "hof":
-        return _merge_layers_fold_hof(frames, key_col, ts_col, keep_state)
-    return _merge_layers_fold_window(frames, key_col, ts_col, keep_state)
-
-
 def _fold_q(c: str) -> str:  # identifier quoting
     return "`" + c.replace("`", "``") + "`"
 
@@ -1548,18 +1499,42 @@ def _fold_s(c: str) -> str:
     return "'" + c.replace("\\", "\\\\").replace("'", "''") + "'"
 
 
-def _merge_layers_fold_window(
+def _merge_layers_fold(
     frames: list[DataFrame], key_col: str, ts_col: str, keep_state: bool = False
 ) -> DataFrame:
-    """The version fold as ONE shuffle + sort + window/CASE resolution —
-    no interpreted higher-order functions, so the per-version resolution
-    runs through codegen'd projections instead of Catalyst's interpreted
-    ``aggregate`` lambda (~30µs/row-version; the r11 verdict measured the
-    HOF fold as the dominant executor cost of every LSM-backed query).
+    """Merge ordered layer frames into the visible-row relation — the
+    table's ONE version-resolution rule (HBase resolving a Get/Scan across
+    store files by cell timestamp), shared by every multi-layer read, every
+    compaction and ``_upsert_latest``.
 
-    Semantics are derived from the sequential fold (``_merge_layers_fold_hof``)
-    via three provable reductions, each pinned by the equivalence test and
-    the oracle gate:
+    ``frames[i]`` is layer i (seq order); a frame without ``__kind`` holds
+    ROW rows. Per key, versions apply in layer order to a state that starts
+    absent, with ``stored ts`` the state's resolved ts:
+
+      ROW     applies iff its ts is null (write-time "now"), the stored ts
+              is null, or ts >= the stored ts — last-writer-wins with
+              arrival-order tie-break. It replaces every cell, takes its
+              ``__tombstone`` flag, and leaves the stored ts at
+              ``coalesce(ts, stored ts)`` (a delete's null-ts tombstone
+              keeps the stored ts as its masking horizon);
+      SPARSE  same ts gate and ts rule; non-null cells overwrite, nulls
+              keep stored; clears the tombstone;
+      DELTA   non-null numeric cells ADD onto the stored value (absent
+              base counts as 0); always applies; clears the tombstone;
+      CELLDEL nulls exactly the cells named in ``__delcols``.
+
+    A key exists once a ROW, SPARSE or DELTA version applies; it is visible
+    iff it exists and its final tombstone is false. ``keep_state`` returns
+    every existing key with its resolved ``__tombstone`` instead (what a
+    prefix compaction persists, so retained layers re-apply over the
+    folded base exactly as over the original stack).
+
+    Evaluated as ONE shuffle + sort + window/CASE resolution — no
+    interpreted higher-order functions, so the per-version resolution runs
+    through codegen'd projections (the r11 verdict measured an
+    ``aggregate``-lambda fold at ~30µs/row-version, the dominant executor
+    cost of every LSM-backed query). The sequential rule reduces to window
+    aggregates in three steps:
 
     1. **ts gate.** A ROW/SPARSE version applies iff ``x.ts IS NULL OR
        prior_max IS NULL OR x.ts >= prior_max`` where ``prior_max`` is the
@@ -1578,11 +1553,10 @@ def _merge_layers_fold_window(
        ``coalesce(base, 0)``. The window sum feeds the setter's
        ``coalesce(base, 0)`` in as the FIRST term and the deltas in seq
        order after it, so even float addition associates exactly as the
-       sequential fold did (bit-identical doubles).
+       sequential rule does (bit-identical doubles).
 
-    In-layer duplicate keys share a seq; their relative order is
-    arbitrary under both formulations (array_sort's seq-only comparator
-    vs row_number's tie-break) — the same nondeterminism class."""
+    In-layer duplicate keys share a seq; their relative order is arbitrary
+    (row_number's tie-break), so a batch must not rely on it."""
     data_cols = [c for c in frames[0].columns if c not in (_TOMBSTONE, _KIND, _DELCOLS)]
     payload = [c for c in data_cols if c != key_col]
     dtypes = dict(frames[0].dtypes)
@@ -1654,7 +1628,7 @@ def _merge_layers_fold_window(
 
     # pass 3: additive-delta resolution per numeric column — a sequential
     # window sum whose first term is the setter's coalesce(base, 0), so
-    # the addition order (and float rounding) matches the sequential fold
+    # the addition order (and float rounding) matches the sequential rule
     w3_exprs = ["*"]
     numeric = [
         (i, c)
@@ -1695,157 +1669,22 @@ def _merge_layers_fold_window(
     if keep_state:
         # resolved per-key STATE, tombstones included (prefix compaction):
         # a NULL resolved tombstone (an explicit NULL in a ROW batch)
-        # stays NULL, exactly like the sequential fold's accumulator
+        # stays NULL, as in the sequential rule
         return one.where(F.expr("coalesce(__fex, false)")).selectExpr(
             *final_cols,
             f"CASE WHEN __ftm IS NULL THEN false ELSE __ftm.v END AS {q(_TOMBSTONE)}",
         )
     # alive view: a NULL resolved tombstone drops the row (three-valued
-    # NOT NULL), mirroring the sequential fold's `where(~tombstone)`
+    # NOT NULL), as the sequential rule's visibility test does
     return one.where(
         F.expr("coalesce(__fex, false) AND (__ftm IS NULL OR (NOT __ftm.v))")
     ).selectExpr(*final_cols)
 
 
-def _merge_layers_fold_hof(
-    frames: list[DataFrame], key_col: str, ts_col: str, keep_state: bool = False
-) -> DataFrame:
-    """Merge ordered layers carrying mixed row kinds (ROW / SPARSE / DELTA /
-    CELLDEL) by folding each key's version list in layer order — the HBase
-    read path over typed cells, as pure column expressions (collect_list ->
-    array_sort by seq -> F.aggregate), zero UDFs.
-
-    Per version, in order:
-      ROW     replaces the whole row iff its ts is null (write-time "now"),
-              the row doesn't exist yet, or ts >= the resolved ts —
-              last-writer-wins with arrival-order tie-break;
-      SPARSE  same ts gate; non-null cells overwrite, nulls keep stored;
-      DELTA   non-null numeric cells ADD onto the stored value (absent
-              base counts as 0); always applies (addition commutes);
-      CELLDEL nulls exactly the cells named in __delcols.
-
-    Scale: ONE shuffle (the groupBy); each key's list is bounded by the
-    layer count (<= compact_threshold + 1), so the fold is O(1) per key
-    regardless of table size. The sort uses a seq-only comparator, so
-    payloads may contain unorderable types (maps)."""
-    data_cols = [c for c in frames[0].columns if c not in (_TOMBSTONE, _KIND, _DELCOLS)]
-    payload = [c for c in data_cols if c != key_col]
-    dtypes = dict(frames[0].dtypes)
-
-    # The whole fold is emitted as GENERATED SQL (one expression parse on
-    # the JVM) instead of Column-by-Column construction: the per-column
-    # CASE chains under F.aggregate cost ~1 py4j round-trip per node —
-    # measured ~0.85s and thousands of socket round-trips per fold
-    # construction at 10 columns, and every multi-kind table read builds
-    # one (r11 profile; OPTIMIZATION_r11.md). Semantics are transcribed
-    # 1:1 from the Column version this replaces; the version-fold tests
-    # (tests/test_table.py) and the oracle gate pin them.
-    q, s = _fold_q, _fold_s  # shared with the window fold (backslash-safe)
-
-    key_q = q(key_col)
-    tagged = None
-    for seq, f in enumerate(frames):
-        fields = [f"'__seq', {seq}"]
-        fields.append(
-            f"'__kind', CAST({q(_KIND)} AS INT)"
-            if _KIND in f.columns
-            else f"'__kind', CAST({_ROW} AS INT)"
-        )
-        fields.append(
-            f"'__delcols', {q(_DELCOLS)}"
-            if _DELCOLS in f.columns
-            else "'__delcols', CAST(NULL AS ARRAY<STRING>)"
-        )
-        fields.append(
-            f"'__tombstone', {q(_TOMBSTONE)}"
-            if _TOMBSTONE in f.columns
-            else "'__tombstone', false"
-        )
-        fields.extend(f"{s(c)}, {q(c)}" for c in payload)
-        t = f.selectExpr(
-            key_q, "named_struct(" + ", ".join(fields) + ") AS __v"
-        )
-        tagged = t if tagged is None else tagged.unionByName(t)
-
-    versions = tagged.groupBy(key_col).agg(
-        F.expr(
-            "array_sort(collect_list(__v), (a, b) -> "
-            "CASE WHEN a.__seq < b.__seq THEN -1 "
-            "WHEN a.__seq > b.__seq THEN 1 ELSE 0 END)"
-        ).alias("__vs")
-    )
-
-    init = "named_struct('__exists', false, '__tombstone', false, " + ", ".join(
-        f"{s(c)}, CAST(NULL AS {dtypes[c]})" for c in payload
-    ) + ")"
-
-    ts_q = q(ts_col)
-    ts_gate = (
-        f"(x.{ts_q} IS NULL OR NOT acc.__exists OR acc.{ts_q} IS NULL "
-        f"OR x.{ts_q} >= acc.{ts_q})"
-    )
-    row_applies = f"((x.__kind = {_ROW}) AND {ts_gate})"
-    sparse_applies = f"((x.__kind = {_SPARSE}) AND {ts_gate})"
-    is_delta = f"(x.__kind = {_DELTA})"
-    is_celldel = f"(x.__kind = {_CELLDEL})"
-    step_fields = [
-        f"'__exists', (acc.__exists OR {row_applies} OR {sparse_applies} "
-        f"OR {is_delta})",
-        f"'__tombstone', CASE WHEN {row_applies} THEN x.__tombstone "
-        f"WHEN ({sparse_applies} OR {is_delta}) THEN false "
-        f"ELSE acc.__tombstone END",
-    ]
-    for c in payload:
-        cq, t = q(c), dtypes[c]
-        if c == ts_col:
-            expr = (
-                f"CASE WHEN ({row_applies} OR {sparse_applies}) "
-                f"THEN coalesce(x.{cq}, acc.{cq}) ELSE acc.{cq} END"
-            )
-        else:
-            branches = [
-                f"WHEN {row_applies} THEN x.{cq}",
-                f"WHEN {sparse_applies} THEN coalesce(x.{cq}, acc.{cq})",
-            ]
-            if _is_numeric_dtype(t):
-                branches.append(
-                    f"WHEN ({is_delta} AND x.{cq} IS NOT NULL) "
-                    f"THEN (coalesce(acc.{cq}, CAST(0 AS {t})) + x.{cq})"
-                )
-            branches.append(
-                f"WHEN ({is_celldel} AND array_contains(x.__delcols, {s(c)})) "
-                f"THEN CAST(NULL AS {t})"
-            )
-            expr = "CASE " + " ".join(branches) + f" ELSE acc.{cq} END"
-        step_fields.append(f"{s(c)}, CAST({expr} AS {t})")
-
-    folded = versions.selectExpr(
-        key_q,
-        "aggregate(__vs, " + init + ", (acc, x) -> named_struct("
-        + ", ".join(step_fields) + ")) AS __r",
-    )
-    if keep_state:
-        # resolved per-key STATE, tombstones included — what a prefix
-        # compaction persists so later layers resolve over the folded base
-        # exactly as they did over the original stack (the tombstone keeps
-        # its resolved ts, so LWW gates fire identically; HBase's rule
-        # that deletes survive minor compaction and purge only at major)
-        return folded.where(F.col("__r.__exists")).select(
-            key_col,
-            *[F.col(f"__r.{c}").alias(c) for c in payload],
-            F.col("__r.__tombstone").alias(_TOMBSTONE),
-        )
-    alive = folded.where(F.col("__r.__exists") & ~F.col("__r.__tombstone"))
-    return alive.select(key_col, *[F.col(f"__r.{c}").alias(c) for c in payload])
-
-
 def _upsert_latest(current: DataFrame, batch: DataFrame, key_col: str, ts_col: str) -> DataFrame:
     """Keyed merge of two relations, greatest-``ts`` wins, incoming batch
-    wins ties — the two-layer case of ``_merge_layers``, exposed for
+    wins ties — the two-layer case of ``_merge_layers_fold``, exposed for
     read-only merge pipelines (inventory_misc.mutation_upsert_merge)."""
-    merged = _merge_layers(
-        [current.select(*current.columns), batch.select(*current.columns)], key_col, ts_col
+    return _merge_layers_fold(
+        [current, batch.select(*current.columns)], key_col, ts_col
     )
-    if _TOMBSTONE not in current.columns:
-        merged = merged.drop(_TOMBSTONE)
-    return merged

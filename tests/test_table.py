@@ -3,13 +3,23 @@ last-writer-wins by ts, cell-level put, pre-aggregated increment, row/column
 deletes, copy — the HBase behaviors re-expressed as deterministic merge
 writes (table.py)."""
 
+import itertools
 from pathlib import Path
 
 import pytest
+from hypothesis import HealthCheck, Phase, settings
+from hypothesis import strategies as st
+from hypothesis.stateful import (
+    RuleBasedStateMachine,
+    initialize,
+    invariant,
+    rule,
+    run_state_machine_as_test,
+)
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from spark_on_hbase_spark.table import KeyedTable
+from spark_on_hbase_spark.table import HistoryFoldedError, KeyedTable
 
 
 @pytest.fixture
@@ -154,15 +164,48 @@ def test_put_then_delete_then_put_resurrects(spark, table):
 
 
 def test_mixed_kind_merge_is_single_shuffle(spark, table):
-    """The version-fold read path (sparse put + increment layers present)
-    stays ONE shuffle: union of layers -> collect_list groupBy -> fold.
-    At 100 TB the merge cost is one hash partition of the live layers,
-    same as the ROW-only max_by fast path."""
+    """Every multi-layer read resolves through the one window fold: union
+    of layers -> one hash shuffle by key -> sort -> Window/CASE
+    resolution. Pinned for a mixed-kind stack (sparse put + increment) and
+    an update-only stack alike: ONE shuffle, Window operators, and no
+    interpreted aggregate-HOF lambda, collect_list or max_by merge."""
     from spark_on_hbase_spark import plans
 
+    def assert_window_fold(df):
+        assert plans.count_shuffles(df) == 1
+        plan = plans.formatted_plan(df)
+        assert "Window" in plan
+        for banned in ("aggregate(", "collect_list", "max_by"):
+            assert banned not in plan, banned
+
+    table.update(spark.createDataFrame([Row(key="k001", ts=300, height=1, tag="u")]))
+    assert_window_fold(table.df())
     table.put(spark.createDataFrame([Row(key="k004", ts=300, height=1)]))
     table.increment(spark.createDataFrame([Row(key="k005", delta=2)]), counter_col="height")
-    assert plans.count_shuffles(table.df()) == 1
+    assert_window_fold(table.df())
+
+
+def test_null_ts_update_applies_over_stored_ts(spark, tmp_path):
+    """An update whose ts is null is a write at "now": it applies over a
+    stored ts=100 row, and the resolved ts stays 100. The answer is the
+    same for an update-only stack, for the same stack plus an unrelated
+    put layer, and after a prefix compaction folds the update in."""
+    schema = "key string, ts bigint, height bigint, tag string"
+    for with_put in (False, True):
+        t = KeyedTable(spark, str(tmp_path / f"t{int(with_put)}"),
+                       num_partitions=2, compact_threshold=99)
+        t.create(spark.createDataFrame(
+            [("k1", 100, 1, "old"), ("k2", 100, 2, "old")], schema))
+        t.update(spark.createDataFrame([("k1", None, 9, "new")], schema))
+        snap = t.snapshot_seq()
+        if with_put:
+            t.put(spark.createDataFrame(
+                [("k2", 200, 5)], "key string, ts bigint, height bigint"))
+        want = {"key": "k1", "ts": 100, "height": 9, "tag": "new"}
+        assert rows(t)["k1"] == want
+        t.compact(keep_since=snap)
+        assert rows(t)["k1"] == want
+        assert len(t._layers()) == (2 if with_put else 1)
 
 
 def test_copy_roundtrip(spark, table, tmp_path):
@@ -215,62 +258,282 @@ def test_write_is_sorted_within_partitions(spark, table):
         assert keys == sorted(keys)
 
 
-def test_mutation_sequence_matches_model(spark, tmp_path):
-    """Model-based check of the LSM fold: a seeded random sequence of
-    update/put/increment/delete batches must resolve exactly like a
-    row-by-row Python model of the documented semantics — update/put apply
-    when ts >= the stored ts (arrival order breaks ties), put overwrites
-    only its non-null cells, increment always adds, delete tombstones while
-    PRESERVING the stored ts as the masking horizon (HBase: a tombstone
-    masks older-ts writes; newer-ts writes resurrect the row)."""
-    import random
+# -- stateful model test ---------------------------------------------------
+#
+# A hypothesis state machine drives a KeyedTable and a pure-Python model
+# side by side. The model applies the fold rules documented on
+# table._merge_layers_fold one layer at a time, in arrival order; it shares
+# no code with the engine, so it pins the window fold's semantics.
 
-    rng = random.Random(1337)
-    t = KeyedTable(spark, str(tmp_path / "m"), num_partitions=2, compact_threshold=99)
-    keys = [f"k{i}" for i in range(6)]
-    model = {k: {"deleted": False, "ts": 10, "cnt": 0, "tag": "init"} for k in keys}
-    t.create(
-        spark.createDataFrame([Row(key=k, ts=10, cnt=0, tag="init") for k in keys])
+_M_KEYS = list(range(5))  # few keys, so versions of one key stack up
+_M_PROBE = _M_KEYS + [5, 6]  # reads also probe absent keys
+_M_CELLS = ("cnt", "bal", "tag")
+_M_TYPES = {"key": "bigint", "ts": "bigint", "cnt": "bigint", "bal": "double",
+            "tag": "string"}
+_M_COLS = tuple(_M_TYPES)
+
+
+def _m_schema(cols) -> str:
+    return ", ".join(f"{c} {_M_TYPES[c]}" for c in cols)
+
+
+# one mutation batch: 1-3 (key, ts, cnt, bal, tag) rows with DISTINCT keys
+# (in-layer order is arbitrary by contract, so a batch never holds two
+# versions of a key)
+_M_BATCH = st.lists(
+    st.tuples(
+        st.sampled_from(_M_KEYS),
+        st.sampled_from([None, 5, 10, 20, 30]),
+        st.one_of(st.none(), st.integers(-5, 50)),
+        st.one_of(st.none(), st.sampled_from([0.1, 0.2, 0.7, 1.5, -2.25, 1e16])),
+        st.one_of(st.none(), st.sampled_from(["a", "b", "c"])),
+    ),
+    min_size=1, max_size=3, unique_by=lambda r: r[0],
+)
+
+
+class _FoldModel:
+    """Per key: resolved ts, tombstone flag and cells, or no entry for a
+    key no ROW/SPARSE/DELTA version has reached."""
+
+    def __init__(self):
+        self.state: dict[int, dict] = {}
+
+    @staticmethod
+    def _gate(cur, ts) -> bool:
+        return ts is None or cur is None or cur["ts"] is None or ts >= cur["ts"]
+
+    def row(self, key, ts, cells, tomb=False):
+        cur = self.state.get(key)
+        if self._gate(cur, ts):
+            self.state[key] = {
+                "ts": ts if ts is not None else (cur or {}).get("ts"),
+                "tomb": tomb, **cells,
+            }
+
+    def sparse(self, key, ts, cells):
+        cur = self.state.get(key)
+        if self._gate(cur, ts):
+            new = dict(cur or {"ts": None, **dict.fromkeys(_M_CELLS)})
+            new.update({c: v for c, v in cells.items() if v is not None})
+            new["ts"] = ts if ts is not None else new["ts"]
+            new["tomb"] = False
+            self.state[key] = new
+
+    def delta(self, key, col, d, zero):
+        new = dict(self.state.get(key) or {"ts": None, **dict.fromkeys(_M_CELLS)})
+        new[col] = (zero if new[col] is None else new[col]) + d
+        new["tomb"] = False
+        self.state[key] = new
+
+    def celldel(self, key, cols):
+        if key in self.state:
+            self.state[key].update(dict.fromkeys(cols))
+
+    def visible(self) -> dict:
+        return {k: dict(v) for k, v in self.state.items() if not v["tomb"]}
+
+
+def _m_canon(rows) -> list:
+    """Order-free comparison form; doubles compare at repr() precision."""
+    return sorted(tuple(repr(v) for v in r) for r in rows)
+
+
+def _m_expect(visible: dict, keys=None) -> list:
+    return _m_canon(
+        (k, *(v[c] for c in _M_COLS[1:]))
+        for k, v in visible.items()
+        if keys is None or k in keys
     )
 
-    def gate(cur, ts):
-        return cur["ts"] is None or ts is None or ts >= cur["ts"]
 
-    for _ in range(12):
-        op = rng.choice(["update", "put", "increment", "delete"])
-        k = rng.choice(keys)
-        cur = model[k]
-        if op == "update":
-            ts = rng.choice([5, 10, 20, 30])
-            cnt, tag = rng.randrange(100), f"u{rng.randrange(100)}"
-            t.update(spark.createDataFrame([Row(key=k, ts=ts, cnt=cnt, tag=tag)]))
-            if gate(cur, ts):
-                model[k] = {"deleted": False, "ts": ts, "cnt": cnt, "tag": tag}
-        elif op == "put":
-            ts = rng.choice([5, 10, 20, 30])
-            cnt = rng.randrange(100)
-            t.put(spark.createDataFrame([Row(key=k, ts=ts, cnt=cnt)]))
-            if gate(cur, ts):
-                cur.update(deleted=False, ts=ts, cnt=cnt)
-        elif op == "increment":
-            d = rng.choice([-3, 1, 7])
-            t.increment(spark.createDataFrame([Row(key=k, delta=d)]), counter_col="cnt")
-            cur.update(deleted=False, cnt=(cur["cnt"] or 0) + d)
-        else:
-            t.delete(spark.createDataFrame([Row(key=k)]))
-            # tombstone: cells cleared, stored ts preserved as the horizon
-            cur.update(deleted=True, cnt=None, tag=None)
+def test_mutation_sequence_matches_model(spark, tmp_path):
+    """Model-based check of the LSM fold: hypothesis drives random
+    sequences of update / put / increment (stacked double increments
+    included) / delete / cell delete / compaction (all, dirty, keep_since)
+    against a KeyedTable at 1-4 partitions with Bloom on or off. After
+    every mutation df() must equal the model, and random reads — df,
+    point_read, range_read, semi_read, at the latest layer or as_of_layer
+    a snapshot taken since the last compaction — must equal the model's
+    state at that point. Derandomized with no example database, so every
+    run replays the same bounded set of sequences; shrinking is off to
+    keep a failure's cost bounded (the failing steps are still printed)."""
+    dirs = itertools.count()
+    key_sets = st.lists(st.sampled_from(_M_PROBE), max_size=3, unique=True)
+    cell_sets = st.sets(st.sampled_from(_M_CELLS), min_size=1)
 
-    got = {r["key"]: (r["ts"], r["cnt"], r["tag"]) for r in t.df().collect()}
-    want = {
-        k: (v["ts"], v["cnt"], v["tag"]) for k, v in model.items() if not v["deleted"]
-    }
-    assert got == want
+    def keys_df(keys):
+        return spark.createDataFrame([(k,) for k in keys], "key bigint")
 
-    # compaction must not change the logical view, and must fold to 1 layer
-    t.compact()
-    after = {r["key"]: (r["ts"], r["cnt"], r["tag"]) for r in t.df().collect()}
-    assert after == want and len(t._layers()) == 1
+    class KeyedTableMachine(RuleBasedStateMachine):
+        @initialize(
+            nparts=st.integers(1, 4), bloom=st.booleans(), base=_M_BATCH
+        )
+        def create(self, nparts, bloom, base):
+            self.t = KeyedTable(
+                spark, str(tmp_path / f"m{next(dirs)}"), key_col="key",
+                ts_col="ts", num_partitions=nparts, compact_threshold=99,
+                bloom=bloom,
+            )
+            self.t.create(spark.createDataFrame(base, _m_schema(_M_COLS)))
+            self.model = _FoldModel()
+            for k, ts, *cells in base:
+                self.model.row(k, ts, dict(zip(_M_CELLS, cells)))
+            # delta layers since the last compaction: (seq, keys written)
+            self.deltas: list[tuple[int, set]] = []
+            # readable snapshots: (seq, visible model state at that seq)
+            self.snaps: list[tuple[int, dict]] = []
+            self._snap()
+
+        def _snap(self, keys=()):
+            self.checked = False
+            seq = self.t.snapshot_seq()
+            if keys:
+                self.deltas.append((seq, set(keys)))
+            self.snaps.append((seq, self.model.visible()))
+
+        # -- mutations ------------------------------------------------------
+
+        @rule(batch=_M_BATCH)
+        def update(self, batch):
+            self.t.update(spark.createDataFrame(batch, _m_schema(_M_COLS)))
+            for k, ts, *cells in batch:
+                self.model.row(k, ts, dict(zip(_M_CELLS, cells)))
+            self._snap(r[0] for r in batch)
+
+        @rule(batch=_M_BATCH, cols=cell_sets)
+        def put(self, batch, cols):
+            cols = [c for c in _M_CELLS if c in cols]
+            idx = [2 + _M_CELLS.index(c) for c in cols]
+            rows_ = [(r[0], r[1], *(r[i] for i in idx)) for r in batch]
+            self.t.put(spark.createDataFrame(rows_, _m_schema(["key", "ts", *cols])))
+            for k, ts, *vals in rows_:
+                self.model.sparse(k, ts, dict(zip(cols, vals)))
+            self._snap(r[0] for r in batch)
+
+        @rule(batch=_M_BATCH, counter=st.sampled_from(["cnt", "bal"]),
+              data=st.data())
+        def increment(self, batch, counter, data):
+            # the batch's ts rides along and must be ignored: an increment
+            # carries no version timestamp
+            choices = [7, 1, -3, 0] if counter == "cnt" else [0.1, 0.2, 0.7, -1.5, 0.0]
+            rows_ = [(r[0], r[1], data.draw(st.sampled_from(choices))) for r in batch]
+            self.t.increment(
+                spark.createDataFrame(
+                    rows_, f"key bigint, ts bigint, delta {_M_TYPES[counter]}"
+                ),
+                counter_col=counter,
+            )
+            zero = 0 if counter == "cnt" else 0.0
+            written = [(k, d) for k, _, d in rows_ if d != 0]  # zero deltas skip
+            for k, d in written:
+                self.model.delta(k, counter, d, zero)
+            self._snap(k for k, _ in written)
+
+        @rule(key=st.sampled_from(_M_KEYS),
+              d1=st.sampled_from([0.1, 0.2, 0.7]), d2=st.sampled_from([0.1, 0.3, 1e-3]))
+        def double_increment(self, key, d1, d2):
+            # two stacked DELTA layers on one double cell: the fold must
+            # add them in layer order (float addition does not associate)
+            for d in (d1, d2):
+                self.t.increment(
+                    spark.createDataFrame([(key, d)], "key bigint, delta double"),
+                    counter_col="bal",
+                )
+                self.model.delta(key, "bal", d, 0.0)
+                self._snap([key])
+
+        @rule(keys=key_sets.filter(bool), cols=st.one_of(st.none(), cell_sets))
+        def delete(self, keys, cols):
+            # cols None: whole-row tombstones; else a cell delete
+            cols = sorted(cols) if cols else None
+            self.t.delete(keys_df(keys), columns=cols)
+            for k in keys:
+                if cols:
+                    self.model.celldel(k, cols)
+                else:
+                    self.model.row(k, None, dict.fromkeys(_M_CELLS), tomb=True)
+            self._snap(keys)
+
+        @rule(scope=st.sampled_from(["all", "dirty", "keep_since"]), data=st.data())
+        def compact(self, scope, data):
+            if scope == "keep_since":
+                seq = data.draw(st.sampled_from([s for s, _ in self.snaps]))
+                self.t.compact(keep_since=seq)
+                # tombstones survive a prefix compaction; history below
+                # the checkpoint folds away, so older snapshots go
+                old = [s for s, _ in self.snaps if s < seq]
+                if old:
+                    with pytest.raises(HistoryFoldedError):
+                        self.t.df(as_of_layer=old[-1])
+                self.deltas = [(s, ks) for s, ks in self.deltas if s > seq]
+                self.snaps = [(s, v) for s, v in self.snaps if s >= seq]
+                self.checked = False
+                return
+            self.t.compact(scope=scope)
+            tombs = {k for k, v in self.model.state.items() if v["tomb"]}
+            if scope == "dirty":
+                # dirty scope purges the tombstones its rewritten ranges
+                # hold: every key a delta touched, plus whatever else
+                # shares a dirty base file. Tombstones in clean files stay.
+                left = {
+                    r["key"]
+                    for p in self.t._layers()
+                    for r in spark.read.parquet(str(p))
+                    .where("__tombstone").select("key").collect()
+                }
+                touched = set().union(*(ks for _, ks in self.deltas))
+                assert left <= tombs and not (left & touched)
+                tombs -= left
+            for k in tombs:
+                del self.model.state[k]
+            self.deltas, self.snaps = [], []
+            self._snap()
+
+        # -- reads ----------------------------------------------------------
+
+        @invariant()
+        def df_matches_model(self):
+            # full read after every mutation and compaction
+            if self.checked:
+                return
+            df = self.t.df()
+            assert tuple(df.columns) == _M_COLS
+            assert _m_canon(df.collect()) == _m_expect(self.model.visible())
+            self.checked = True
+
+        @rule(how=st.sampled_from(["df", "point", "range", "semi"]),
+              keys=key_sets, data=st.data())
+        def read(self, how, keys, data):
+            # the latest state, or a snapshot since the last compaction
+            seq, visible = data.draw(st.sampled_from(self.snaps[::-1]))
+            if seq == self.snaps[-1][0]:
+                seq = data.draw(st.sampled_from([None, seq]))
+            if how == "df":
+                df, keys = self.t.df(as_of_layer=seq), None
+            elif how == "point":
+                df = self.t.point_read(keys, as_of_layer=seq)
+            elif how == "range":
+                lo, hi = min(keys, default=0), max(keys, default=-1)
+                df = self.t.range_read(lo, hi, as_of_layer=seq)
+                keys = range(lo, hi + 1)
+            else:
+                df = self.t.semi_read(keys_df(keys), as_of_layer=seq)
+            got = _m_canon(df.collect())
+            assert got == _m_expect(visible, None if keys is None else set(keys))
+
+    run_state_machine_as_test(
+        KeyedTableMachine,
+        settings=settings(
+            max_examples=8,
+            stateful_step_count=10,
+            derandomize=True,
+            database=None,
+            deadline=None,
+            phases=(Phase.explicit, Phase.generate),
+            suppress_health_check=[HealthCheck.too_slow],
+        ),
+    )
 
 
 def test_ttl_filters_reads_and_compaction_purges(spark, tmp_path):
@@ -1229,70 +1492,6 @@ def test_semi_read_matches_fold_then_semi_join(spark, tmp_path):
         for r in t.df(as_of_layer=snap).join(keys, "k", "semi").collect()
     }
     assert got_snap == want_snap and got_snap != got
-
-
-def test_fold_window_matches_hof(spark, tmp_path):
-    """The codegen-friendly window fold (r12 optimization, the default)
-    must resolve BIT-IDENTICALLY to the sequential aggregate-HOF fold it
-    replaces — across all five mutation kinds, ts-gate rejections, null
-    ts, tombstone-resurrection, and (the float-sensitive case) SEVERAL
-    double increments stacked on one key, where addition order changes
-    the last ULP. Compared at repr() precision for both the alive view
-    and the keep_state (prefix-compaction) view."""
-    from spark_on_hbase_spark import plans
-    from spark_on_hbase_spark.table import (
-        _merge_layers_fold_hof,
-        _merge_layers_fold_window,
-    )
-
-    t = KeyedTable(spark, str(tmp_path / "t"), key_col="key", ts_col="ts",
-                   num_partitions=3, compact_threshold=99)
-    t.create(spark.createDataFrame(
-        [Row(key=f"k{i:02d}", ts=100, bal=0.1 * i, cnt=i, tag=f"v{i}")
-         for i in range(40)]
-    ))
-    keys = t.df().select("key")
-    # ROW upsert at ts 200 (applies) and a LOWER-ts upsert (gate-rejected)
-    t.update(spark.createDataFrame(
-        [Row(key=f"k{i:02d}", ts=200, bal=1.5 * i, cnt=i + 1, tag=f"u{i}")
-         for i in range(0, 40, 7)]))
-    t.update(spark.createDataFrame(
-        [Row(key=f"k{i:02d}", ts=50, bal=-1.0, cnt=0, tag="stale")
-         for i in range(0, 40, 11)]))
-    # SPARSE put with null-ts (always applies) and partial cells
-    t.put(spark.createDataFrame(
-        [Row(key=f"k{i:02d}", ts=None, tag=f"p{i}") for i in range(0, 40, 5)],
-        schema="key string, ts int, tag string"))
-    # two stacked double increments + one int increment (order-sensitive)
-    t.increment(spark.createDataFrame(
-        [Row(key=f"k{i:02d}", delta=0.3) for i in range(0, 40, 2)]),
-        counter_col="bal")
-    t.increment(spark.createDataFrame(
-        [Row(key=f"k{i:02d}", delta=0.7) for i in range(0, 40, 2)]),
-        counter_col="bal")
-    t.increment(spark.createDataFrame(
-        [Row(key=f"k{i:02d}", delta=5) for i in range(0, 40, 3)]),
-        counter_col="cnt")
-    # tombstones, then a resurrecting increment; cell deletes
-    t.delete(keys.where(F.col("key").isin("k04", "k09", "k14")))
-    t.increment(spark.createDataFrame([Row(key="k09", delta=2.5)]),
-                counter_col="bal")
-    t.delete(keys.where(F.col("key").isin("k06", "k18")), columns=["tag"])
-
-    frames = [spark.read.parquet(str(p)) for p in t._layers()]
-    for keep in (False, True):
-        w = _merge_layers_fold_window(frames, "key", "ts", keep)
-        h = _merge_layers_fold_hof(frames, "key", "ts", keep)
-        assert w.columns == h.columns
-        wr = sorted(tuple(repr(x) for x in r) for r in w.collect())
-        hr = sorted(tuple(repr(x) for x in r) for r in h.collect())
-        assert wr and wr == hr
-
-    # plan shape: the default read path resolves through Window operators,
-    # with NO interpreted aggregate-HOF lambda left in the fold
-    plan = plans.formatted_plan(t.df())
-    assert "Window" in plan
-    assert "aggregate(" not in plan and "collect_list" not in plan
 
 
 def test_semi_read_pushes_key_envelope_to_layer_scans(spark, tmp_path):
