@@ -12,22 +12,22 @@ key range covers that value prefix — the "index range scan" made of the
 storage engine's existing machinery, no new file format.
 
 Consistency model (Phoenix's, honestly): index maintenance is write-side
-— each base mutation routed through the index first tombstones the
-touched keys' CURRENT entries, then applies the base mutation, then
-inserts entries for the new values. Three O(batch) jobs; the base table
-is never rewritten, and the read-before-write is a multiget point-read
-(``KeyedTable.point_read``): the batch's keys push into every base layer
-scan as an IN filter, so the sorted layout's footer stats prune to the
-few files covering the touched keys — maintenance I/O tracks the batch,
-not the table. The pair is NOT atomic: a crash
-between the jobs leaves a stale index until the writer retries (global
+— every base mutation routed through the index runs one transaction
+(``_maintain``): tombstone the entries of the touched keys' CURRENT rows,
+apply the base mutation, then insert the entries of the touched keys'
+POST-write rows, so the index holds exactly what the base fold kept. The
+base table is never rewritten, and both reads are ``KeyedTable.semi_read``
+of the touched keys: a batch within the multiget cap pushes into every
+base layer scan as an IN filter, so the sorted layout's footer stats
+prune to the few files covering the touched keys — maintenance I/O
+tracks the batch, not the table. The transaction is NOT atomic: a crash
+between its writes leaves a stale index until the writer retries (global
 Phoenix indexes carry the same caveat; their repair is a WAL replay,
-ours is re-running the idempotent batch: pass ``stamp=`` to
-``update``/``delete`` and each of the jobs is guarded by its own derived
-layer stamp, so a retry re-runs only the jobs that never committed and a
-full replay is a strict no-op). Mutating the base DIRECTLY bypasses
-maintenance and stales the index, exactly as writing HBase rows behind
-Phoenix's back does.
+ours is re-running the idempotent batch: pass ``stamp=`` and each write
+is guarded by its own derived layer stamp, so a retry re-runs only the
+writes that never committed and a full replay is a strict no-op).
+Mutating the base DIRECTLY bypasses maintenance and stales the index,
+exactly as writing HBase rows behind Phoenix's back does.
 
 NULL indexed values are skipped (SQL-index convention): a row whose
 indexed column is NULL simply has no entry and is invisible to lookups.
@@ -383,49 +383,11 @@ class SecondaryIndex:
             *[F.col(c) for c in self.include],
         )
 
-    # touched-key batches up to this size read the base via a driver-known
-    # IN-list (point_read: footer-pruned O(batch) file reads); above it the
-    # literal list would bloat the plan, so fall back to a broadcast
-    # semi-join (table never shuffles, but the scan is table-sized).
-    # Cap aligned with matview's measured finding (r11): the literal plan's
-    # Catalyst cost grows with the list at ANY table size — at 15k keys the
-    # IN-list read measured 5.8-7.6s vs 2.2-3.4s for the semi-join on the
-    # same batch (OPTIMIZATION_r11.md), and at ~94k literals the stacked
-    # expression tree OOMed a 20g driver. 8192 keeps genuinely point-like
-    # probes on the pruned multiget and hands bulk maintenance batches to
-    # the semi-join.
-    MAX_POINT_READ_KEYS = 8192
-
-    def _stale_entry_keys(self, touched_keys: DataFrame) -> DataFrame:
+    def _stale_entry_keys(self, touched: DataFrame) -> DataFrame:
         """Index keys of the touched base keys' CURRENT rows. Evaluated (by
         the caller's delete job) BEFORE the base mutation lands, so the
-        read sees the pre-mutation state it must tombstone.
-
-        The read-before-write is the multiget point-read when the batch is
-        driver-collectable (the normal case — maintenance batches are
-        O(batch) by contract): the IN predicate prunes every base layer to
-        the files covering the touched keys, so maintenance I/O tracks the
-        BATCH, not the table. Oversized batches degrade to the broadcast
-        semi-join, which still never shuffles the base."""
-        return self._entries(self._current_rows(touched_keys)).select("ikey")
-
-    def _current_rows(self, touched_keys: DataFrame) -> DataFrame:
-        """The touched keys' CURRENT base rows — multiget point-read when
-        driver-collectable, broadcast semi-join otherwise."""
-        keys = [
-            r[0]
-            for r in touched_keys.select(self.base.key_col)
-            .distinct()
-            .limit(self.MAX_POINT_READ_KEYS + 1)
-            .collect()
-        ]
-        if len(keys) <= self.MAX_POINT_READ_KEYS:
-            return self.base.point_read(keys)
-        # oversized batch: broadcast semi-join pushed BELOW the version
-        # fold (semi_read) — the fold pays O(batch), never O(table)
-        return self.base.semi_read(
-            touched_keys.select(self.base.key_col).distinct()
-        )
+        read sees the pre-mutation state it must tombstone."""
+        return self._entries(self.base.semi_read(touched)).select("ikey")
 
     # -- consistency tooling -------------------------------------------------
 
@@ -593,41 +555,25 @@ class SecondaryIndex:
     # -- index-maintaining mutations ----------------------------------------
 
     def update(self, batch: DataFrame, stamp: str | None = None) -> int:
-        """Whole-row upsert through the index: tombstone the touched keys'
-        current entries (value may be changing), apply the base update,
-        insert entries for the new values. Three O(batch) layer writes.
+        """Whole-row upsert through the index — ``base.update`` inside the
+        maintenance transaction (see ``_maintain``). The new entries come
+        from the rows the base fold KEPT, so a batch row that loses
+        last-writer-wins, or one of two batch rows for the same key,
+        leaves no entry behind; a loser's unchanged entry is tombstoned and
+        re-inserted at its stored ts, which the index fold lets through
+        (an equal-ts ROW applies), so the entry stays live.
 
-        ``stamp`` makes the whole maintenance TRANSACTION retry-idempotent
-        — the docstring's repair story as code: each sub-write is guarded
-        by its own derived stamp (``<stamp>_xd`` / ``<stamp>`` /
-        ``<stamp>_xi``), recorded atomically in that layer's directory
-        name, so a retry after a crash between any two jobs re-runs ONLY
-        the jobs that never committed and the pair converges to the
-        consistent state. Ordering makes the read-before-write safe under
-        retry: the stale-entry read only ever executes before the base
-        mutation has landed (afterwards its stamp is present and the
-        delete is skipped), so it can never tombstone the NEW entries.
-
-        Maintenance honors the base's LWW ts gate: batch rows OLDER than
-        the stored row (which the base fold rejects) touch the index not
-        at all — see _winners.
+        ``stamp`` makes the transaction retry-idempotent: each of its
+        writes is guarded by its own derived stamp (``<stamp>_xd`` /
+        ``<stamp>`` / ``<stamp>_xi``), recorded atomically in that layer's
+        directory name, so a retry after a crash between any two writes
+        re-runs ONLY the writes that never committed.
 
         Returns rows applied by THIS call's base write; on a stamped retry
-        whose base sub-write already committed in a previous attempt, the
+        whose base write already committed in a previous attempt, the
         skipped write reports 0 (the rows were counted when they actually
         landed)."""
-        self._guarded(
-            self.tbl.delete,
-            self._once(lambda: self._stale_winner_entry_keys(batch)),
-            stamp, "_xd",
-        )
-        n = self._guarded(self.base.update, lambda: batch, stamp, "")
-        self._guarded(
-            self.tbl.update,
-            self._noted_entries(lambda: self._entries(self._winners(batch))),
-            stamp, "_xi",
-        )
-        return n if n is not None else 0
+        return self._maintain(self.base.update, batch, stamp)
 
     def delete(
         self,
@@ -639,39 +585,21 @@ class SecondaryIndex:
         — with ``columns`` — a CELL delete (HBase DeleteColumn through the
         index): nulling an INDEXED column removes the keys' entries (the
         NULL convention — the rows become invisible to lookups), nulling
-        only COVERED columns re-points the entries at the post-delete rows
-        (tombstone + reinsert with the nulled value), and nulling columns
-        the index never sees is exactly ``base.delete``. ``stamp``: same
+        only COVERED columns or functional inputs re-points the entries at
+        the post-delete rows (an expression can stay non-null over a
+        nulled input, e.g. coalesce), and nulling columns the index never
+        reads is exactly ``base.delete``. ``stamp``: same
         retry-idempotence contract as ``update``."""
         if not columns:
-            self._guarded(self.tbl.delete, self._stale(keys), stamp, "_xd")
-            n = self._guarded(self.base.delete, lambda: keys, stamp, "")
-            return n if n is not None else 0
-        affected = set(columns) & self._maintained_inputs()
-        if not affected:
-            n = self._guarded(
-                self.base.delete, lambda: keys, stamp, "", columns=columns
-            )
-            return n if n is not None else 0
-        self._guarded(self.tbl.delete, self._stale(keys), stamp, "_xd")
-        n = self._guarded(self.base.delete, lambda: keys, stamp, "", columns=columns)
-        if not set(columns) & {c for c in self.cols if c not in self.exprs}:
-            # no PLAIN indexed column nulled: rows may keep index entries —
-            # covered columns re-point at the post-delete rows, and a
-            # functional component recomputes over them (an expression can
-            # be non-null over a nulled input, e.g. coalesce) — so
-            # re-insert entries from the POST-delete rows (evaluated lazily
-            # after the base write — the same retry-safe overlay timing as
-            # put). A plain-indexed-column delete instead leaves no entries
-            # (the NULL convention nulls that component for every row, and
-            # a null component drops the whole entry)
-            self._guarded(
-                self.tbl.update,
-                self._noted_entries(lambda: self._entries(self._current_rows(keys))),
-                stamp,
-                "_xi",
-            )
-        return n if n is not None else 0
+            return self._maintain(self.base.delete, keys, stamp, reinsert=False)
+        plain = {c for c in self.cols if c not in self.exprs}
+        return self._maintain(
+            self.base.delete, keys, stamp,
+            touches=bool(set(columns) & self._maintained_inputs()),
+            # a null plain component drops the whole entry
+            reinsert=not set(columns) & plain,
+            columns=columns,
+        )
 
     def increment(
         self,
@@ -682,147 +610,81 @@ class SecondaryIndex:
     ) -> int:
         """Counter increment through the index (HBase's server-side add):
         when ``counter_col`` is neither indexed nor covered this is exactly
-        ``base.increment``; otherwise the usual triple runs, with the new
-        entries read from the POST-increment rows — increments fold at
-        merge-on-read, so a lazy point-read after the base write IS the
-        post-state, and re-reading it on a stamped retry yields the same
-        entries (the additive layer is already down; the read is
-        idempotent). No LWW gate: increments are unconditional adds.
+        ``base.increment``; otherwise the maintenance transaction runs.
+        No LWW gate: increments are unconditional adds.
 
         The key-column check mirrors put's gate: when a functional
         component reads the KEY, an increment that CREATES a row (HBase
         increments upsert) must index it even though the counter column
         itself is nothing the index reads — skipping maintenance left the
         new row invisible to lookups (review-pass finding)."""
-        maintained = self._maintained_inputs()
-        if counter_col not in maintained and self.base.key_col not in maintained:
-            n = self._guarded(
-                self.base.increment, lambda: batch, stamp, "",
-                counter_col=counter_col, delta_col=delta_col,
-            )
-            return n if n is not None else 0
-        self._guarded(self.tbl.delete, self._stale(batch), stamp, "_xd")
-        n = self._guarded(
-            self.base.increment, lambda: batch, stamp, "",
+        return self._maintain(
+            self.base.increment, batch, stamp,
+            touches=bool({counter_col, self.base.key_col} & self._maintained_inputs()),
             counter_col=counter_col, delta_col=delta_col,
         )
-        self._guarded(
-            self.tbl.update,
-            self._noted_entries(lambda: self._entries(self._current_rows(batch))),
-            stamp,
-            "_xi",
-        )
-        return n if n is not None else 0
 
     def put(self, batch: DataFrame, stamp: str | None = None) -> int:
         """Cell-level put through the index: batch columns overwrite (nulls
         keep stored values — the SPARSE fold's contract), absent columns
-        keep stored values. When the batch touches NO indexed or covered
-        column the index needs no maintenance and this is exactly
-        ``base.put`` — the fast path partial writes deserve. Otherwise the
-        usual triple runs, with the new entries computed from the POST-put
-        rows: the batch overlaid (coalesce, matching the fold) onto the
-        touched keys' current rows. The overlay is evaluated lazily against
-        whatever base state exists when the insert job runs, which makes it
-        retry-safe: overlaying the batch onto already-put rows is a no-op,
-        so entries come out identical whether the insert runs right after
-        the base put or on a later retry."""
-        if not set(batch.columns) & self._maintained_inputs():
-            n = self._guarded(self.base.put, lambda: batch, stamp, "")
-            return n if n is not None else 0
-        # the LWW ts gate applies to puts too (a stale-ts put is rejected
-        # per-cell by the SPARSE fold): maintain entries only for winners.
-        # A batch without a ts column cannot be gated — it is applied as-is
-        # (matching a fold that has no ts to compare).
-        has_ts = self.base.ts_col in batch.columns
-        gated = (lambda: self._winners(batch)) if has_ts else (lambda: batch)
-        stale = self._once(
-            (lambda: self._stale_winner_entry_keys(batch))
-            if has_ts
-            else (lambda: self._stale_entry_keys(batch))
+        keep stored values. When the batch touches NO column the index
+        reads this is exactly ``base.put`` — the fast path partial writes
+        deserve; otherwise the maintenance transaction runs, and the new
+        entries come from the post-put rows as the base fold resolved
+        them (ts gate included)."""
+        return self._maintain(
+            self.base.put, batch, stamp,
+            touches=bool(set(batch.columns) & self._maintained_inputs()),
         )
-        self._guarded(self.tbl.delete, stale, stamp, "_xd")
-        n = self._guarded(self.base.put, lambda: batch, stamp, "")
-        self._guarded(
-            self.tbl.update,
-            self._noted_entries(
-                lambda: self._entries(self._post_put_rows(gated()))
-            ),
-            stamp,
-            "_xi",
-        )
-        return n if n is not None else 0
 
-    def _post_put_rows(self, batch: DataFrame) -> DataFrame:
-        """The touched keys' rows as they stand AFTER the put: batch columns
-        overlaid with coalesce onto the current rows (new keys get the batch
-        values, absent/null cells keep stored values) — only the columns an
-        index entry needs (key, ts, indexed, covered)."""
-        keyc, tsc = self.base.key_col, self.base.ts_col
-        current = self._current_rows(batch)
-        b, c = batch.alias("__b"), current.alias("__c")
-        joined = b.join(c, F.col(f"__b.{keyc}") == F.col(f"__c.{keyc}"), "left")
-        sel = [F.col(f"__b.{keyc}").alias(keyc)]
-        plain = [col for col in self.cols if col not in self.exprs]
-        needed = dict.fromkeys([tsc, *plain, *self.include, *sorted(self._expr_inputs())])
-        needed.pop(keyc, None)
-        for col in needed:
-            if col in batch.columns:
-                sel.append(
-                    F.coalesce(F.col(f"__b.{col}"), F.col(f"__c.{col}")).alias(col)
-                )
-            else:
-                sel.append(F.col(f"__c.{col}").alias(col))
-        return joined.select(*sel)
+    def _maintain(
+        self, write, batch: DataFrame, stamp: str | None,
+        touches: bool = True, reinsert: bool = True, **kw,
+    ) -> int:
+        """The one maintenance transaction every indexed mutation runs:
+
+        1. ``_xd`` tombstones the entries of the touched keys' CURRENT rows;
+        2. the base ``write(batch, **kw)`` runs under the caller's stamp;
+        3. ``_xi`` inserts the entries of the touched keys' POST-write rows.
+
+        Both reads are ``semi_read`` of the batch's keys. The ``_xd`` read
+        only ever executes before the base write has landed (afterwards
+        its stamp is present and the step is skipped), so it can never
+        tombstone the NEW entries; the ``_xi`` read is lazy, run after the
+        base write, so a stamped retry reads the same post-write state.
+        ``touches=False`` (the batch changes nothing the index reads) runs
+        the base write alone; ``reinsert=False`` (row deletes, nulled
+        plain components — the post-write rows carry no entry) skips
+        step 3."""
+        if touches:
+            self._guarded(self.tbl.delete, self._stale(batch), stamp, "_xd")
+        n = self._guarded(write, lambda: batch, stamp, "", **kw)
+        if touches and reinsert:
+            self._guarded(
+                self.tbl.update,
+                self._noted_entries(
+                    lambda: self._entries(self.base.semi_read(batch))
+                ),
+                stamp,
+                "_xi",
+            )
+        return n
 
     def _stale(self, touched: DataFrame):
         return self._once(lambda: self._stale_entry_keys(touched))
 
-    def _stale_winner_entry_keys(self, batch: DataFrame) -> DataFrame:
-        """Index keys of the CURRENT entries that the batch's winning rows
-        will replace — ONE point-read of the touched keys, ts-gated against
-        the batch's per-key max ts (losing batch rows leave their current
-        entries alone, exactly as the base fold leaves their rows alone).
-        The _xd sub-write's read: deriving this from _winners would
-        point-read the base twice per sub-write for the same answer."""
-        keyc, tsc = self.base.key_col, self.base.ts_col
-        cur = self._current_rows(batch)
-        bts = batch.groupBy(keyc).agg(F.max(tsc).alias("__b_ts"))
-        win_cur = cur.join(bts, keyc).where(F.col("__b_ts") >= F.col(tsc)).drop("__b_ts")
-        return self._entries(win_cur).select("ikey")
-
-    def _winners(self, batch: DataFrame) -> DataFrame:
-        """Batch rows that WIN the base's last-writer-wins resolution
-        against the stored rows: no current version, or batch ts >= stored
-        ts (ties go to the batch, the fold's rule). Maintenance must touch
-        ONLY winners — the base fold silently rejects a stale-ts batch
-        row, so tombstoning its current entry / inserting its (rejected)
-        value would diverge the index from the table. Evaluated lazily per
-        sub-write and retry-safe: after the base write lands, a winner's
-        stored ts IS its batch ts (>= still holds) and a loser still
-        loses."""
-        keyc, tsc = self.base.key_col, self.base.ts_col
-        cur = self._current_rows(batch).select(
-            F.col(keyc), F.col(tsc).alias("__cur_ts")
-        )
-        return (
-            batch.join(cur, keyc, "left")
-            .where(F.col("__cur_ts").isNull() | (F.col(tsc) >= F.col("__cur_ts")))
-            .drop("__cur_ts")
-        )
-
-    def _guarded(self, write, make_batch, stamp: str | None, suffix: str, **kw):
-        """Run one maintenance sub-write, skipping it when its derived
-        stamp already rides a layer (or the compaction-preserved manifest)
-        of the target table — `make_batch` is lazy so a skipped step never
-        evaluates its read either. Extra kwargs forward to the write (e.g.
-        ``columns=`` for cell deletes)."""
+    def _guarded(self, write, make_batch, stamp: str | None, suffix: str, **kw) -> int:
+        """Run one maintenance sub-write, skipping it (and reporting 0
+        rows) when its derived stamp already rides a layer (or the
+        compaction-preserved manifest) of the target table — `make_batch`
+        is lazy so a skipped step never evaluates its read either. Extra
+        kwargs forward to the write (e.g. ``columns=`` for cell deletes)."""
         if stamp is None:
             return write(make_batch(), **kw)
         derived = f"{stamp}{suffix}" if suffix else stamp
         table = write.__self__
         if derived in table.applied_stamps():
-            return None
+            return 0
         return write(make_batch(), stamp=derived, **kw)
 
     @staticmethod
@@ -831,12 +693,12 @@ class SecondaryIndex:
         every layer write executes its input twice (repartitionByRange
         samples the batch to pick range bounds, then the write job runs it
         again — table.py:_write_layer), so an _xd/_xi batch whose lineage
-        is a point-read fold + join re-ran that fold per write. The batches
+        is a point-read fold re-ran that fold per write. The batches
         are O(batch) rows by contract, so a lazy localCheckpoint (first
         action materializes, the write re-reads blocks) halves the
         maintenance read cost without changing when the read executes
-        (retry-idempotence depends on that timing — see update's
-        docstring). Guide §2.4: remove repeated passes."""
+        (retry-idempotence depends on that timing — see ``_maintain``).
+        Guide §2.4: remove repeated passes."""
         return lambda: make_batch().localCheckpoint(eager=False)
 
     # -- reads ---------------------------------------------------------------
@@ -845,11 +707,10 @@ class SecondaryIndex:
         """Base rows whose indexed column currently equals ``value``, found
         WITHOUT filtering the base: probe the index (the equality predicate
         reaches the index table's parquet scan, where the value-prefixed
-        sorted layout prunes by footer stats), broadcast the matched keys,
-        left-semi join the base on its key. At 100 TB the index probe reads
-        a value's few files and the base side is a keyed semi-join that
-        AQE's runtime bloom filter pushes below the base scan's shuffle —
-        never a full-table predicate scan.
+        sorted layout prunes by footer stats), then read the matched keys
+        from the base with ``semi_read`` (see ``_finish``). At 100 TB the
+        index probe reads a value's few files and the base side is a keyed
+        multiget or semi-join — never a full-table predicate scan.
 
         ``covered=True`` answers from the index ALONE — (key, value,
         included columns), zero base I/O — valid only when the index was
@@ -1485,34 +1346,16 @@ class SecondaryIndex:
                 *[F.col(c) for c in self.include],
             )
         # index scan -> MULTIGET the base (HBase's actual uncovered-index
-        # read): when the matched key set is driver-collectable, point_read
-        # turns the base side into O(result) footer-pruned file reads.
-        # Oversized results (> MAX_POINT_READ_KEYS = 100k: past that an
-        # IN-list literal bloats the plan and the driver pays
-        # O(batch) collection twice) degrade to a broadcast-key semi-join
-        # bounded by the matched keys' [min, max] RANGE, collected as two
-        # scalars and pushed into the base scan as a BETWEEN — parquet
-        # footer stats then prune every base file outside the matched key
-        # span, so clustered matches (time-prefixed keys, tenant ranges)
-        # still read O(span) files, not the table. The base never shuffles
-        # either way. (Spark 4.1 will NOT inject a runtime bloom below the
-        # broadcast semi-join — verified live: InjectRuntimeFilter declines
-        # broadcast-side builds — so the range bound is carried explicitly;
-        # a uniformly-spread match keeps a table-sized scan, which is the
-        # honest cost of selecting >100k uncovered rows.)
-        matched = [
-            r[0]
-            for r in probe.select("base_key")
-            .limit(self.MAX_POINT_READ_KEYS + 1)
-            .collect()
-        ]
-        if len(matched) <= self.MAX_POINT_READ_KEYS:
-            return self.base.point_read(matched)
-        keyc = self.base.key_col
-        keys = probe.select(F.col("base_key").alias(keyc)).localCheckpoint(
-            eager=True
-        )
-        lo, hi = keys.agg(F.min(keyc), F.max(keyc)).first()
-        return self.base.df().where(F.col(keyc).between(F.lit(lo), F.lit(hi))).join(
-            F.broadcast(keys), keyc, "left_semi"
+        # read): semi_read turns a matched key set within its cap into
+        # O(result) footer-pruned file reads, and a larger one into the
+        # broadcast semi-join below the version fold, bounded by the
+        # matched keys' [min, max] envelope — so clustered matches
+        # (time-prefixed keys, tenant ranges) still read O(span) files.
+        # The base never shuffles either way. (Spark 4.1 will NOT inject a
+        # runtime bloom below the broadcast semi-join — verified live:
+        # InjectRuntimeFilter declines broadcast-side builds — so a
+        # uniformly-spread match keeps a table-sized scan, which is the
+        # honest cost of selecting that many uncovered rows.)
+        return self.base.semi_read(
+            probe.select(F.col("base_key").alias(self.base.key_col))
         )

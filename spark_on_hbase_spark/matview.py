@@ -36,16 +36,14 @@ re-runs exactly the missing half on the next refresh.
 Scale posture, piece by piece:
 - change detection reads ONLY the post-snapshot layers (metadata-pruned —
   the feed is O(changed rows), the table is never scanned);
-- old/new states come from ``point_read`` on the changed keys (footer +
-  Bloom pruning: O(changed keys) files) while the key set fits the literal
-  multiget cap, degrading to a shuffled semi-join against the two snapshot
-  folds beyond it. The cap defaults to 8192 — far below the index probe's
-  100k — because the refresh stacks the per-layer IN literal under the
-  version fold AND two signed aggregations: at ~94k literals the combined
-  expression tree OOMed a 20g driver inside Catalyst's ConstantFolding
-  (measured at sf0.1), while the semi-join plan runs the same delta in
-  seconds. Past a few thousand keys the literal plan costs more than its
-  pruning saves, at ANY table size;
+- old/new states come from ``KeyedTable.semi_read`` of the changed keys:
+  a literal multiget (footer + Bloom pruning: O(changed keys) files)
+  while the key set fits the table's ``POINT_READ_CAP`` (8192), a
+  broadcast semi-join below each snapshot's version fold beyond it. The
+  refresh stacks the per-layer IN literal under the version fold AND two
+  signed aggregations: at ~94k literals the combined expression tree
+  OOMed a 20g driver inside Catalyst's ConstantFolding (measured at
+  sf0.1), while the semi-join plan runs the same delta in seconds;
 - the group-delta aggregation shuffles Δ rows, never the base;
 - the apply is one appended layer: O(touched groups) rows written;
 - MIN/MAX recompute is O(affected groups' rows) with a group index.
@@ -123,7 +121,6 @@ class MaterializedAgg:
         maxs: dict[str, str] | None = None,
         group_index=None,
         num_partitions: int = 32,
-        max_point_keys: int = 8192,
     ):
         if base.ttl is not None:
             raise ValueError(
@@ -143,7 +140,6 @@ class MaterializedAgg:
         self.maxs = dict(maxs or {})
         self.count_col = count_col
         self.group_index = group_index
-        self.max_point_keys = max_point_keys
         if group_index is not None and group_index.cols[0] != group_col:
             raise ValueError(
                 f"group_index must lead on {group_col!r} "
@@ -291,32 +287,19 @@ class MaterializedAgg:
         """(old, new, changed-keys) for the base window (lo, hi] — the
         shared read both sub-transactions derive from. old/new are folded
         key states at the window edges, restricted to the changed keys
-        (point reads under the multiget cap, snapshot-fold semi-joins
-        past it)."""
+        (``semi_read`` picks the multiget or the semi-join)."""
         feed = self.base.changes(since_layer=lo, until_layer=hi)
         # ONE pass over the feed: the changed-key relation is materialized
         # (localCheckpoint) because every consumer downstream re-reads it —
-        # the path probe below, both semi-joins of the degraded path, and
-        # (for MIN/MAX views) the touched-group derivation. Before r11 each
-        # of those re-executed the feed scan + distinct from files (guide
-        # §2.4: remove repeated passes).
+        # the emptiness probe, both semi_reads and (for MIN/MAX views) the
+        # touched-group derivation. Before r11 each of those re-executed
+        # the feed scan + distinct from files (guide §2.4: remove repeated
+        # passes).
         changed = feed.select(self.base.key_col).distinct().localCheckpoint()
-        keys = [
-            r[0] for r in changed.limit(self.max_point_keys + 1).collect()
-        ]
-        if not keys:
+        if changed.isEmpty():
             return None, None, changed
-        if len(keys) <= self.max_point_keys:
-            old = self.base.point_read(keys, as_of_layer=lo)
-            new = self.base.point_read(keys, as_of_layer=hi)
-        else:
-            # degraded path (same cap + contract as the secondary-index
-            # probe, index.py): the changed-key semi-join is pushed BELOW
-            # the version fold (semi_read — key membership is version-
-            # stable), so the fold processes O(Δ) rows; the per-layer scan
-            # stays O(table), output O(Δ), still exact
-            old = self.base.semi_read(changed, as_of_layer=lo)
-            new = self.base.semi_read(changed, as_of_layer=hi)
+        old = self.base.semi_read(changed, as_of_layer=lo)
+        new = self.base.semi_read(changed, as_of_layer=hi)
         # both states are read at least once by the sum delta and — for
         # MIN/MAX views — a second time by the touched-group derivation,
         # and the delta layer write itself executes its input twice
@@ -446,14 +429,11 @@ class MaterializedAgg:
         scan semi-joined to the groups (the documented degradation; at
         100 TB you keep a group index exactly so this path never runs)."""
         if self.group_index is not None:
-            # bounded collect (index.py's limit-then-check pattern): never
-            # materialize an unbounded group list on the driver just to
-            # discover it is over the cap
-            vals = [
-                r[0]
-                for r in groups.limit(self.max_point_keys + 1).collect()
-            ]
-            if len(vals) <= self.max_point_keys:
+            # bounded collect: never materialize an unbounded group list
+            # on the driver just to discover it is over the literal cap
+            cap = KeyedTable.POINT_READ_CAP
+            vals = [r[0] for r in groups.limit(cap + 1).collect()]
+            if len(vals) <= cap:
                 return self.group_index.lookup_in(vals)
         return self.base.df().join(groups, self.group_col, "semi")
 

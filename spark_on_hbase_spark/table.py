@@ -553,9 +553,9 @@ class KeyedTable:
         Per-key correctness is preserved because every merge rule (LWW,
         version fold, tombstones) partitions by key: keeping ALL layers'
         rows for the probed keys keeps each probed key's full history.
-        Callers with an unbounded/unknown key set should use a broadcast
-        semi-join against ``df()`` instead (J1 territory); this path is for
-        driver-known batches (index maintenance, point lookups).
+        Callers whose key set is a relation (unbounded, or not known to the
+        driver) should call ``semi_read``, which picks this path when the
+        set fits ``POINT_READ_CAP``.
 
         With ``bloom=True`` (BloomType.ROW — see the Bloom section) the
         probe first consults each layer's sidecar: min/max footer stats
@@ -589,43 +589,45 @@ class KeyedTable:
                 return self._resolve(frames, force_fold=True)
         return self._layer_frames(pred, as_of_layer)
 
+    # Largest key set ``semi_read`` hands to ``point_read`` as a literal IN
+    # list. The literal plan's Catalyst cost grows with the list at ANY
+    # table size: at 15k keys the IN-list read measured 5.8-7.6 s against
+    # 2.2-3.4 s for the semi-join on the same batch (OPTIMIZATION_r11.md),
+    # and at ~94k literals the stacked expression tree OOMed a 20g driver.
+    # 8192 keeps point-like probes on the pruned multiget and hands bulk
+    # key sets to the semi-join.
+    POINT_READ_CAP = 8192
+
     def semi_read(self, keys: DataFrame, as_of_layer: int | None = None) -> DataFrame:
         """Merged view restricted to the keys PRESENT IN ``keys`` — the
-        relation-valued sibling of ``point_read`` for key sets too large
-        (or not driver-known) for a literal IN-list. The broadcast
-        semi-join is applied per layer BEFORE the merge: a key-membership
-        predicate has the same truth value for every version of a key
-        (``_layer_frames``'s contract — tombstones carry the key), so each
-        surviving key keeps its full history and the fold result is
-        identical to ``df(...).join(keys, key, 'semi')`` — and the
-        version fold processes O(|keys| * versions) rows instead of
-        the whole table.
+        one keyed read for a key set given as a relation, identical to
+        ``df(...).join(keys, key, 'semi')``. It collects at most
+        ``POINT_READ_CAP + 1`` distinct keys in one bounded job and picks
+        the read from the count:
 
-        The batch's key ENVELOPE [min, max] is derived once (an O(batch)
-        aggregation over the checkpointed key set) and ANDed into every
-        layer scan before the semi-join (r12): a key-range predicate
-        reaches the parquet scan as PushedFilters, so the sorted layout's
-        footer min/max stats prune each layer to the file run covering
-        the batch — for a localized maintenance batch the per-layer scan
-        drops from O(table) to O(covered files), which is what lets the
-        degrade path stand in front of a 100 TB layout. A spread-out
-        batch prunes nothing and costs one extra metadata-cheap
-        aggregation; correctness is unaffected either way (every key in
-        the set lies inside its own envelope, and a key-range predicate
-        keeps each surviving key's full history — tombstones carry the
-        key)."""
-        kd = keys.select(self.key_col).distinct().localCheckpoint(eager=False)
-        lo, hi = kd.agg(
-            F.min(self.key_col), F.max(self.key_col)
-        ).first()
+        - at or under the cap: ``point_read`` of the collected keys — a
+          literal IN list that reaches every layer's parquet scan, where
+          footer stats and Bloom sidecars prune to the files holding them;
+        - over the cap: a broadcast semi-join applied per layer BEFORE the
+          merge. A key-membership predicate has the same truth value for
+          every version of a key (``_layer_frames``'s contract —
+          tombstones carry the key), so each surviving key keeps its full
+          history and the version fold processes O(|keys| * versions)
+          rows instead of the whole table. The key set's ENVELOPE
+          [min, max] is ANDed into every layer scan before the semi-join
+          (r12): a key-range predicate reaches the parquet scan as
+          PushedFilters, so a localized batch reads only the file run
+          covering it; a spread-out batch prunes nothing and costs one
+          extra small aggregation.
+
+        Either way the key set is resolved when ``semi_read`` is called."""
+        distinct = keys.select(self.key_col).distinct()
+        head = [r[0] for r in distinct.limit(self.POINT_READ_CAP + 1).collect()]
+        if len(head) <= self.POINT_READ_CAP:
+            return self.point_read(head, as_of_layer)
+        kd = distinct.localCheckpoint(eager=False)
+        lo, hi = kd.agg(F.min(self.key_col), F.max(self.key_col)).first()
         layers = self._visible_layers(as_of_layer)
-        if lo is None:
-            # empty key set: schema-correct empty view, no data touched
-            frames = [
-                _cached_layer_df(self.spark, str(p)).where(F.lit(False))
-                for p in layers
-            ]
-            return self._resolve(frames)
         k = F.col(self.key_col)
         pred = (k >= F.lit(lo)) & (k <= F.lit(hi))
         kb = F.broadcast(kd)

@@ -231,17 +231,17 @@ def test_put_through_index_maintains_entries(spark, tmp_path):
 
 
 def test_oversized_batches_degrade_to_semi_join(spark, tmp_path, monkeypatch):
-    """The driver-collect ceiling (MAX_POINT_READ_KEYS) forced to 1: every
-    multiget in the stack — uncovered lookups, maintenance reads, the LWW
-    winners gate — degrades to the broadcast semi-join and must return
-    results identical to the point-read path."""
+    """The multiget cap (KeyedTable.POINT_READ_CAP) forced to 1: every
+    semi_read in the stack — uncovered lookups, both maintenance reads —
+    degrades to the broadcast semi-join and must return results identical
+    to the point-read path."""
     tbl, idx = _fixture(spark, tmp_path)
-    monkeypatch.setattr(SecondaryIndex, "MAX_POINT_READ_KEYS", 1)
+    monkeypatch.setattr(KeyedTable, "POINT_READ_CAP", 1)
 
     # uncovered lookup matching >1 key: fallback read path
     assert {r["key"] for r in idx.lookup("red").collect()} == {1, 2}
 
-    # maintenance with a >1-key batch: stale reads + winners via semi-join
+    # maintenance with a >1-key batch: both reads via the semi-join
     idx.update(
         spark.createDataFrame(
             [Row(key=1, name="a2", color="blue", ts=200),
@@ -439,6 +439,92 @@ def test_stamped_maintenance_converges_under_crash_and_replay(spark, tmp_path):
     seqs = (tbl.snapshot_seq(), idx.tbl.snapshot_seq())
     idx.delete(spark.createDataFrame([Row(key=3)]), stamp="b3")
     assert (tbl.snapshot_seq(), idx.tbl.snapshot_seq()) == seqs
+
+    # a stale-ts update loses LWW: its key's entry is tombstoned and
+    # re-inserted at the stored ts, and stays live
+    idx.update(spark.createDataFrame([Row(key=2, name="x", color="red", ts=250)]))
+    assert {r["key"] for r in idx.lookup("green").collect()} == {2}
+    assert idx.lookup("red").count() == 0
+    assert idx.scrutiny().count() == 0
+
+    # put and increment run the same transaction: crash a put that moves
+    # the indexed column and an increment of a covered counter after _xd
+    # and after the base write, then retry each with the same stamp
+    ctbl = KeyedTable(
+        spark, str(tmp_path / "cbase"), key_col="key", ts_col="ts", num_partitions=2
+    )
+    ctbl.create(
+        spark.createDataFrame(
+            [(1, "red", 10, 100), (2, "red", 20, 100), (3, "blue", 30, 100)],
+            "key bigint, color string, cnt bigint, ts bigint",
+        )
+    )
+    cidx = SecondaryIndex(
+        ctbl, "color", str(tmp_path / "cidx"), num_partitions=2, include=["cnt"]
+    ).build()
+    p = spark.createDataFrame(
+        [(1, "gold", 200), (3, "gold", 200)], "key bigint, color string, ts bigint"
+    )
+    inc = spark.createDataFrame([(2, 5), (3, 7)], "key bigint, delta bigint")
+    ops = [
+        ("put", p, ctbl.put, {}),
+        ("inc", inc, ctbl.increment, {"counter_col": "cnt"}),
+    ]
+    for name, batch, write, kw in ops:
+        for crash_after_base in (False, True):
+            stamp = f"{name}{int(crash_after_base)}"
+            cidx._guarded(cidx.tbl.delete, cidx._stale(batch), stamp, "_xd")
+            if crash_after_base:
+                cidx._guarded(write, lambda: batch, stamp, "", **kw)
+            getattr(cidx, "put" if name == "put" else "increment")(
+                batch, stamp=stamp, **kw
+            )
+            assert cidx.scrutiny().count() == 0, (name, crash_after_base)
+    # each batch applied exactly once per stamp: two puts, two increments
+    got = {
+        (r["key"], r["color"], r["cnt"])
+        for r in cidx.lookup("gold", covered=True).collect()
+    }
+    assert got == {(1, "gold", 10), (3, "gold", 44)}
+    assert {(r["key"], r["cnt"]) for r in cidx.lookup("red", covered=True).collect()} == {
+        (2, 30)
+    }
+    seqs = (ctbl.snapshot_seq(), cidx.tbl.snapshot_seq())
+    cidx.put(p, stamp="put0")
+    cidx.put(p, stamp="put1")
+    cidx.increment(inc, "cnt", stamp="inc0")
+    cidx.increment(inc, "cnt", stamp="inc1")
+    assert (ctbl.snapshot_seq(), cidx.tbl.snapshot_seq()) == seqs
+
+
+def test_duplicate_key_batches_index_the_row_the_base_kept(spark, tmp_path):
+    """A batch that carries one key twice, at one ts, with different
+    indexed values: the base fold keeps one of the two rows, and the index
+    must hold that row's entry alone — no orphaned entry for the value the
+    base dropped, through update and through put."""
+    tbl, idx = _fixture(spark, tmp_path)
+
+    def check(key, values):
+        kept = tbl.df().where(F.col("key") == key).collect()[0]["color"]
+        (dropped,) = set(values) - {kept}
+        assert idx.scrutiny().count() == 0
+        assert idx.lookup(dropped).count() == 0
+        assert {r["key"] for r in idx.lookup(kept).collect()} == {key}
+
+    idx.update(
+        spark.createDataFrame(
+            [Row(key=1, name="a2", color="green", ts=200),
+             Row(key=1, name="a3", color="pink", ts=200)]
+        )
+    )
+    check(1, ("green", "pink"))
+    idx.put(
+        spark.createDataFrame(
+            [(3, "gold", 400), (3, "teal", 400)],
+            "key bigint, color string, ts bigint",
+        )
+    )
+    check(3, ("gold", "teal"))
 
 
 import pytest
@@ -1684,7 +1770,7 @@ def test_pre_tuple_sidecar_heals_from_the_full_index(spark, tmp_path, monkeypatc
 
 def test_oversized_uncovered_lookup_bounds_the_base_scan(spark, tmp_path, monkeypatch):
     """VERDICT r7 item 3: when an uncovered lookup matches more keys than
-    MAX_POINT_READ_KEYS, the degraded broadcast semi-join must not scan the
+    KeyedTable.POINT_READ_CAP, the degraded broadcast semi-join must not scan the
     base unbounded — the matched keys' [min, max] range is pushed into the
     base scan (PushedFilters shows the BETWEEN bounds, so parquet footers
     prune files outside the span; Spark injects no runtime bloom below a
@@ -1706,7 +1792,7 @@ def test_oversized_uncovered_lookup_bounds_the_base_scan(spark, tmp_path, monkey
     idx = SecondaryIndex(
         tbl, "color", str(tmp_path / "i"), num_partitions=4
     ).build()
-    monkeypatch.setattr(SecondaryIndex, "MAX_POINT_READ_KEYS", 10)
+    monkeypatch.setattr(KeyedTable, "POINT_READ_CAP", 10)
     out = idx.lookup(2)
     plan = plans.formatted_plan(out)
     # the range bound reached a parquet scan's pushed filters

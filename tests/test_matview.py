@@ -113,9 +113,12 @@ def test_refresh_is_idempotent_and_meta_crash_heals_from_the_stamp(spark, tmp_pa
     assert _view(mv) == expected
 
 
-def test_big_delta_degrades_to_the_semi_join_path_and_stays_exact(spark, tmp_path):
+def test_big_delta_degrades_to_the_semi_join_path_and_stays_exact(
+    spark, tmp_path, monkeypatch
+):
     base = _base(spark, str(tmp_path))
-    mv = _mv(spark, str(tmp_path), base, max_point_keys=10).build()
+    monkeypatch.setattr(KeyedTable, "POINT_READ_CAP", 10)
+    mv = _mv(spark, str(tmp_path), base).build()
     _mutate_every_kind(spark, base)  # far more than 10 changed keys
     assert mv.refresh() > 0
     assert _view(mv) == _recompute(base)

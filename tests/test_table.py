@@ -1448,58 +1448,71 @@ def test_prefix_compaction_crash_residue_never_double_applies(spark, tmp_path):
     assert {tuple(r) for r in t.df().collect()} == expected
 
 
-def test_semi_read_matches_fold_then_semi_join(spark, tmp_path):
+def test_semi_read_matches_fold_then_semi_join(spark, tmp_path, monkeypatch):
     """semi_read pushes the key semi-join BELOW the version fold (r11
     optimization) — pin that its result is identical to the reference
     formulation df().join(keys, key, 'semi') across every mutation kind,
-    under time travel, and in the lone-base-layer passthrough case."""
+    under time travel, and in the lone-base-layer passthrough case, on
+    both sides of the multiget cap: at the default cap the keys go to
+    point_read (a pushed In filter), at cap 0 to the semi-join."""
     from pyspark.sql import functions as F
 
+    from spark_on_hbase_spark import plans
     from spark_on_hbase_spark.table import KeyedTable
 
-    t = KeyedTable(spark, str(tmp_path / "t"), key_col="k", ts_col="ts",
-                   num_partitions=4)
     base = spark.range(500).select(
         F.col("id").alias("k"),
         F.concat(F.lit("n"), F.col("id")).alias("name"),
         (F.col("id") * 10).alias("v"),
         F.lit(100).cast("int").alias("ts"),
     )
-    t.create(base)
     keys = base.where("k % 3 = 0").select("k")
-    # lone base layer: passthrough path
-    assert {tuple(r) for r in t.semi_read(keys).collect()} == {
-        tuple(r)
-        for r in t.df().join(keys, "k", "semi").collect()
-    }
-    t.update(base.where("k % 7 = 0").select(
-        "k", F.lit("u").alias("name"), (F.col("v") + 5).alias("v"),
-        F.lit(200).cast("int").alias("ts")))
-    snap = t.snapshot_seq()
-    t.put(base.where("k % 5 = 0").select(
-        "k", F.lit("p").alias("name"), F.lit(300).cast("int").alias("ts")))
-    t.increment(base.where("k % 2 = 0").select(
-        "k", F.lit(7).cast("bigint").alias("delta")), counter_col="v")
-    t.delete(base.where("k % 11 = 0").select("k"))
-    t.delete(base.where("k % 13 = 0").select("k"), columns=["name"])
-    got = {tuple(r) for r in t.semi_read(keys).collect()}
-    want = {tuple(r) for r in t.df().join(keys, "k", "semi").collect()}
-    assert got == want and got  # non-vacuous
-    # time travel: prefix reads agree too
-    got_snap = {tuple(r) for r in t.semi_read(keys, as_of_layer=snap).collect()}
-    want_snap = {
-        tuple(r)
-        for r in t.df(as_of_layer=snap).join(keys, "k", "semi").collect()
-    }
-    assert got_snap == want_snap and got_snap != got
+    for cap in (KeyedTable.POINT_READ_CAP, 0):
+        monkeypatch.setattr(KeyedTable, "POINT_READ_CAP", cap)
+        t = KeyedTable(spark, str(tmp_path / f"t{cap}"), key_col="k",
+                       ts_col="ts", num_partitions=4)
+        t.create(base)
+        plan = plans.formatted_plan(t.semi_read(keys))
+        assert ("In(k," in plan) == (cap > 0), plan
+        assert ("BroadcastHashJoin" in plan) == (cap == 0), plan
+        # lone base layer: passthrough path
+        assert {tuple(r) for r in t.semi_read(keys).collect()} == {
+            tuple(r)
+            for r in t.df().join(keys, "k", "semi").collect()
+        }
+        t.update(base.where("k % 7 = 0").select(
+            "k", F.lit("u").alias("name"), (F.col("v") + 5).alias("v"),
+            F.lit(200).cast("int").alias("ts")))
+        snap = t.snapshot_seq()
+        t.put(base.where("k % 5 = 0").select(
+            "k", F.lit("p").alias("name"), F.lit(300).cast("int").alias("ts")))
+        t.increment(base.where("k % 2 = 0").select(
+            "k", F.lit(7).cast("bigint").alias("delta")), counter_col="v")
+        t.delete(base.where("k % 11 = 0").select("k"))
+        t.delete(base.where("k % 13 = 0").select("k"), columns=["name"])
+        got = {tuple(r) for r in t.semi_read(keys).collect()}
+        want = {tuple(r) for r in t.df().join(keys, "k", "semi").collect()}
+        assert got == want and got  # non-vacuous
+        # time travel: prefix reads agree too
+        got_snap = {
+            tuple(r) for r in t.semi_read(keys, as_of_layer=snap).collect()
+        }
+        want_snap = {
+            tuple(r)
+            for r in t.df(as_of_layer=snap).join(keys, "k", "semi").collect()
+        }
+        assert got_snap == want_snap and got_snap != got
 
 
-def test_semi_read_pushes_key_envelope_to_layer_scans(spark, tmp_path):
-    """semi_read derives the key batch's [min, max] envelope and ANDs it
+def test_semi_read_pushes_key_envelope_to_layer_scans(spark, tmp_path, monkeypatch):
+    """Over the multiget cap (forced here: the 101 keys fit the default),
+    semi_read derives the key batch's [min, max] envelope and ANDs it
     into every layer scan below the semi-join (r12): the range must reach
     the parquet scans as PushedFilters so footer stats can prune files,
     and the result must stay identical to the unpruned formulation."""
     from spark_on_hbase_spark import plans
+
+    monkeypatch.setattr(KeyedTable, "POINT_READ_CAP", 100)
 
     t = KeyedTable(spark, str(tmp_path / "t"), key_col="k", ts_col="ts",
                    num_partitions=4)
