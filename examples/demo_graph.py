@@ -54,7 +54,7 @@ def main() -> None:
         truncate=False
     )
 
-    table = KeyedTable(spark, f"{workdir}/demo-graph", key_col="src", ts_col="ts", num_partitions=8)
+    table = KeyedTable(spark, f"{workdir}/demo-graph", key_col="src", ts_col="ts")
     table.create(net)
     print(f"network persisted to {table.path}: {table.df().count()} edges")
 

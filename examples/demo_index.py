@@ -34,7 +34,7 @@ def main() -> None:
             Row(key=4, name="dee", balance=900, ts=100),
         ]
     )
-    tbl = KeyedTable(spark, f"{work}/users", key_col="key", ts_col="ts", num_partitions=2)
+    tbl = KeyedTable(spark, f"{work}/users", key_col="key", ts_col="ts")
     tbl.create(users)
     idx = SecondaryIndex(tbl, "balance", f"{work}/idx_balance", include=["name"]).build()
 
@@ -74,7 +74,7 @@ def main() -> None:
     # key-free — and a get of an ABSENT key touches no data file at all
     btbl = KeyedTable(
         spark, f"{work}/users_bloom", key_col="key", ts_col="ts",
-        num_partitions=2, bloom=True,
+        bloom=True,
     )
     btbl.create(users)
     btbl.update(spark.createDataFrame([Row(key=2, name="bob", balance=1, ts=500)]))

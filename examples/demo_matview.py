@@ -36,14 +36,13 @@ def main() -> None:
             Row(key=5, region="ap", cents=950, ts=100),
         ]
     )
-    base = KeyedTable(spark, f"{work}/orders", key_col="key", ts_col="ts", num_partitions=2)
+    base = KeyedTable(spark, f"{work}/orders", key_col="key", ts_col="ts")
     base.create(orders)
 
     mv = MaterializedAgg(
         spark, f"{work}/rollup", base, "region",
         sums={"revenue": "cents"}, count_col="n_orders",
         mins={"min_order": "cents"}, maxs={"max_order": "cents"},
-        num_partitions=2,
     ).build()
     print("== built rollup ==")
     mv.df().orderBy("region").show()

@@ -41,7 +41,7 @@ def main() -> None:
         rows, "key string, ts int, T map<string,int>, F map<string,double>"
     )
 
-    table = KeyedTable(spark, f"{workdir}/demo-simple", num_partitions=32)
+    table = KeyedTable(spark, f"{workdir}/demo-simple")
     table.create(df)
     print(f"table created at {table.path}: {table.df().count()} rows")
 

@@ -170,7 +170,7 @@ def _lsm_mutation_storm(spark, sf: str) -> int:
         .withColumn("ts", F.lit(0))
     )
     path = f"/tmp/lsm_storm_{hashlib.md5(sf.encode()).hexdigest()[:8]}"
-    tbl = KeyedTable(spark, path, key_col="k", ts_col="ts", num_partitions=8)
+    tbl = KeyedTable(spark, path, key_col="k", ts_col="ts")
     tbl.drop()
     tbl.create(docs)
     for i in range(1, 13):
@@ -201,7 +201,7 @@ def _lsm_dirty_compact(spark, sf: str) -> int:
         .withColumn("ts", F.lit(0))
     )
     path = f"/tmp/lsm_dirty_{hashlib.md5(sf.encode()).hexdigest()[:8]}"
-    tbl = KeyedTable(spark, path, key_col="k", ts_col="ts", num_partitions=8)
+    tbl = KeyedTable(spark, path, key_col="k", ts_col="ts")
     # fixture (the table-sized create) is built once per scale and KEPT, so
     # the warm run times exactly mutate + dirty-compact + scoped read — the
     # numbers that must track DELTA size while the table grows 30x
@@ -261,7 +261,7 @@ def _secondary_index_maintain(spark, sf: str) -> int:
     tag = hashlib.md5(sf.encode()).hexdigest()[:8]
     root = _fresh_root(f"/tmp/secidx_{tag}")
     base = KeyedTable(
-        spark, f"{root}/base", key_col="k", ts_col="ts", num_partitions=8
+        spark, f"{root}/base", key_col="k", ts_col="ts"
     )
     fresh = not base.exists()
     if fresh:
@@ -307,7 +307,7 @@ def _functional_index_maintain(spark, sf: str) -> int:
     tag = hashlib.md5(sf.encode()).hexdigest()[:8]
     root = _fresh_root(f"/tmp/fxidx_{tag}")
     base = KeyedTable(
-        spark, f"{root}/base", key_col="k", ts_col="ts", num_partitions=8
+        spark, f"{root}/base", key_col="k", ts_col="ts"
     )
     fresh = not base.exists()
     if fresh:
@@ -384,7 +384,7 @@ def _bloom_point_read(spark, sf: str) -> int:
     tag = hashlib.md5(sf.encode()).hexdigest()[:8]
     tbl = KeyedTable(
         spark, f"/tmp/bloompr_{tag}/t", key_col="k", ts_col="ts",
-        num_partitions=8, bloom=True,
+        bloom=True,
     )
     if not tbl.exists():
         tbl.create(docs)
@@ -413,7 +413,6 @@ def _skip_scan_fixture(spark, sf: str):
     tag = hashlib.md5(sf.encode()).hexdigest()[:8]
     base = KeyedTable(
         spark, f"/tmp/skipscan_{tag}/base", key_col="k", ts_col="ts",
-        num_partitions=8,
     )
     fresh = not base.exists()
     if fresh:
@@ -494,7 +493,7 @@ def _matview_refresh(spark, sf: str) -> int:
     tag = hashlib.md5(sf.encode()).hexdigest()[:8]
     root = _fresh_root(f"/tmp/mview_{tag}")
     base = KeyedTable(
-        spark, f"{root}/base", key_col="k", ts_col="ts", num_partitions=8
+        spark, f"{root}/base", key_col="k", ts_col="ts"
     )
     mv = MaterializedAgg(
         spark, f"{root}/mv", base, "grp", {"sum_val": "val"}
@@ -551,7 +550,7 @@ def _matview_minmax_refresh(spark, sf: str, batch_keys: int = 600) -> int:
     tag = hashlib.md5(sf.encode()).hexdigest()[:8]
     root = _fresh_root(f"/tmp/mviewmm_{tag}")
     base = KeyedTable(
-        spark, f"{root}/base", key_col="k", ts_col="ts", num_partitions=8
+        spark, f"{root}/base", key_col="k", ts_col="ts"
     )
     # group cardinality scales WITH the data (~60 members per group at any
     # scale) — the realistic 100 TB rollup shape is more groups, not

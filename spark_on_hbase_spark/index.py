@@ -162,7 +162,6 @@ class SecondaryIndex:
         base: KeyedTable,
         col: str | list[str] | None = None,
         path: str | None = None,
-        num_partitions: int = 8,
         include: list[str] | None = None,
         expr: "F.Column | dict[str, F.Column] | None" = None,
         guideposts: bool = True,
@@ -248,7 +247,6 @@ class SecondaryIndex:
             path,
             key_col="ikey",
             ts_col=base.ts_col,
-            num_partitions=num_partitions,
             compact_threshold=base.compact_threshold,
         )
         # order-preserving encodings are fixed by the indexed columns'

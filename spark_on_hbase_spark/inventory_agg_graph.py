@@ -678,7 +678,7 @@ def incremental_bsp_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"bsp_state_{spark.sparkContext.applicationId}_"
         f"{os.path.basename(sf_dir.rstrip('/'))}_{sf_tag}",
     )
-    tbl = KeyedTable(spark, path, key_col="sid", ts_col="ts", num_partitions=8)
+    tbl = KeyedTable(spark, path, key_col="sid", ts_col="ts")
     sid = F.concat_ws(" ", F.col("key"), F.col("origin")).alias("sid")
     done_key = (spark.sparkContext.applicationId, sf_dir)
     if done_key not in _IBSP_DONE:

@@ -397,7 +397,7 @@ def lsm_compaction_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(path, ignore_errors=True)
     tbl = KeyedTable(
         spark, path, key_col="key", ts_col="ts",
-        num_partitions=8, compact_threshold=16,
+        compact_threshold=16,
         ttl=850, now_fn=lambda: 925,
     )
     tbl.create(base)
@@ -472,7 +472,7 @@ def lsm_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(path, ignore_errors=True)
     tbl = KeyedTable(
         spark, path, key_col="key", ts_col="ts",
-        num_partitions=8, compact_threshold=16,
+        compact_threshold=16,
     )
     tbl.create(base)
     keys = base.select("key")
@@ -763,7 +763,6 @@ def streaming_increment_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     src_dir, ckpt = os.path.join(root, "batches"), os.path.join(root, "ckpt")
     tbl = KeyedTable(
         spark, os.path.join(root, "table"), key_col="k", ts_col="ts",
-        num_partitions=8,
     )
     # fixture is built and streamed once per (session, sf_dir): re-running
     # the query replays the availableNow stream against the same checkpoint
@@ -1382,7 +1381,7 @@ def ddl_evolution_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(path, ignore_errors=True)
     tbl = KeyedTable(
         spark, path, key_col="key", ts_col="ts",
-        num_partitions=8, compact_threshold=16,
+        compact_threshold=16,
     )
     tbl.create(base)
     tbl.add_column("tier", default="standard", dtype="string")
@@ -1452,7 +1451,7 @@ def grouped_topk_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SEC_IDX_FIXTURE_DONE: set[str] = set()
 
 
-_SEC_IDX_FIXTURE_VERSION = 2  # bump when tables/mutations/layout change
+_SEC_IDX_FIXTURE_VERSION = 3  # bump when tables/mutations/layout change
 
 
 def _sec_index_handles(spark: SparkSession, root: str) -> dict:
@@ -1463,23 +1462,19 @@ def _sec_index_handles(spark: SparkSession, root: str) -> dict:
 
     tbl_nation = KeyedTable(
         spark, os.path.join(root, "nation_base"), key_col="key", ts_col="ts",
-        num_partitions=8,
     )
     idx_nation = SecondaryIndex(
         tbl_nation, "nation", os.path.join(root, "nation_idx"), include=["name"]
     )
     tbl_bal = KeyedTable(
         spark, os.path.join(root, "bal_base"), key_col="key", ts_col="ts",
-        num_partitions=8,
     )
     idx_bal = SecondaryIndex(tbl_bal, "bal", os.path.join(root, "bal_idx"))
     tbl_point = KeyedTable(
         spark, os.path.join(root, "point"), key_col="key", ts_col="ts",
-        num_partitions=8,
     )
     tbl_fx = KeyedTable(
         spark, os.path.join(root, "fx_base"), key_col="key", ts_col="ts",
-        num_partitions=8,
     )
     idx_fx = SecondaryIndex(
         tbl_fx, path=os.path.join(root, "fx_idx"),
@@ -1819,7 +1814,7 @@ def table_changefeed(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"changefeed_{spark.sparkContext.applicationId}_{sf_tag(sf_dir)}",
     )
     tbl = KeyedTable(
-        spark, root, key_col="key", ts_col="ts", num_partitions=8
+        spark, root, key_col="key", ts_col="ts"
     )
     if not tbl.exists():
         cust = load(spark, sf_dir, "customer")
@@ -1925,7 +1920,6 @@ def _matview_fixture(spark: SparkSession, sf_dir: str):
     )
     base = KeyedTable(
         spark, os.path.join(root, "base"), key_col="k", ts_col="ts",
-        num_partitions=8,
     )
     mv = MaterializedAgg(
         spark, os.path.join(root, "mv"), base, "grp",
@@ -2039,7 +2033,6 @@ def _matview_minmax_fixture(spark: SparkSession, sf_dir: str):
     )
     base = KeyedTable(
         spark, os.path.join(root, "base"), key_col="k", ts_col="ts",
-        num_partitions=8,
     )
     mv = MaterializedAgg(
         spark, os.path.join(root, "mv"), base, "grp",
@@ -2153,7 +2146,7 @@ def lsm_retention_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"retention_{spark.sparkContext.applicationId}_{sf_tag(sf_dir)}",
     )
     tbl = KeyedTable(
-        spark, root, key_col="key", ts_col="ts", num_partitions=8
+        spark, root, key_col="key", ts_col="ts"
     )
     snap_file = os.path.join(root, "_probe_snap")
     if not tbl.exists():
@@ -2205,7 +2198,6 @@ def _stream_mv_handles(spark: SparkSession, root: str):
 
     base = KeyedTable(
         spark, os.path.join(root, "base"), key_col="k", ts_col="ts",
-        num_partitions=8,
     )
     mv = MaterializedAgg(
         spark, os.path.join(root, "mv"), base, "grp",
@@ -2214,7 +2206,7 @@ def _stream_mv_handles(spark: SparkSession, root: str):
     return base, mv
 
 
-_STREAM_MV_VERSION = 1  # bump when rows/mutations/layout change
+_STREAM_MV_VERSION = 2  # bump when rows/mutations/layout change
 _STREAM_MV_DONE: set[str] = set()
 
 
@@ -2382,7 +2374,7 @@ warmer("stream_mv_fixture")(
 )
 
 
-_BLOOM_PR_VERSION = 2  # bump when rows/mutations/layout change
+_BLOOM_PR_VERSION = 3  # bump when rows/mutations/layout change
 
 
 def _bloom_pr_fixture(spark: SparkSession, sf_dir: str) -> KeyedTable:
@@ -2403,13 +2395,13 @@ def _bloom_pr_fixture(spark: SparkSession, sf_dir: str) -> KeyedTable:
     marker = os.path.join(root, "_COMPLETE")
     if os.path.exists(marker):
         return KeyedTable(
-            spark, root, key_col="key", ts_col="ts", num_partitions=8,
+            spark, root, key_col="key", ts_col="ts",
             bloom=True,
         )
     staging = f"{root}.build.{os.getpid()}"
     shutil.rmtree(staging, ignore_errors=True)
     tbl = KeyedTable(
-        spark, staging, key_col="key", ts_col="ts", num_partitions=8,
+        spark, staging, key_col="key", ts_col="ts",
         bloom=True,
     )
     cust = load(spark, sf_dir, "customer")
@@ -2441,7 +2433,7 @@ def _bloom_pr_fixture(spark: SparkSession, sf_dir: str) -> KeyedTable:
         if not os.path.exists(marker):
             raise
     return KeyedTable(
-        spark, root, key_col="key", ts_col="ts", num_partitions=8, bloom=True
+        spark, root, key_col="key", ts_col="ts", bloom=True
     )
 
 
@@ -2626,7 +2618,6 @@ def streaming_indexed_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(root, ignore_errors=True)
     tbl = KeyedTable(
         spark, os.path.join(root, "base"), key_col="key", ts_col="ts",
-        num_partitions=8,
     )
     tbl.create(rows)
     idx = SecondaryIndex(tbl, "nation", os.path.join(root, "idx")).build()
@@ -2905,7 +2896,6 @@ def secondary_index_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(root, ignore_errors=True)
     tbl = KeyedTable(
         spark, os.path.join(root, "base"), key_col="key", ts_col="ts",
-        num_partitions=8,
     )
     tbl.create(rows)
     idx = SecondaryIndex(

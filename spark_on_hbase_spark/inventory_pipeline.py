@@ -1547,7 +1547,7 @@ def incremental_index_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"fp_index_{spark.sparkContext.applicationId}_"
         f"{os.path.basename(sf_dir.rstrip('/'))}_{sf_tag}",
     )
-    tbl = KeyedTable(spark, path, key_col="fp", ts_col="ts", num_partitions=8)
+    tbl = KeyedTable(spark, path, key_col="fp", ts_col="ts")
     # build at most once per (session, sf_dir): the index content is
     # deterministic, the path is session-scoped, and deleting + rewriting
     # would invalidate the lazily-evaluated DataFrame any earlier
@@ -5535,7 +5535,7 @@ def containment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # dedup.band_signature_array) — VERDICT r10 item 2
 # ---------------------------------------------------------------------------
 
-_ND_IDX_VERSION = 1
+_ND_IDX_VERSION = 2
 _ND_IDX_DONE: set = set()
 
 
@@ -5552,7 +5552,7 @@ def _nd_index_handles(spark: SparkSession, root: str) -> dict:
 
     base = KeyedTable(
         spark, _os.path.join(root, "nd_base"), key_col="doc_id",
-        ts_col="ts", num_partitions=8,
+        ts_col="ts",
     )
     idx = SecondaryIndex(
         base, path=_os.path.join(root, "nd_band_idx"),
@@ -5804,7 +5804,7 @@ def incremental_near_dup_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 # VERDICT r10 item 3
 # ---------------------------------------------------------------------------
 
-_CURI_VERSION = 1
+_CURI_VERSION = 2
 _CURI_DONE: set = set()
 _CURI_BASE_CACHE: dict = {}
 _CURI_KEPT_CACHE: dict = {}
@@ -5844,7 +5844,7 @@ def _curi_fixture(spark: SparkSession, sf_dir: str) -> dict:
     def handles(r: str, snap: int | None = None) -> dict:
         tbl = KeyedTable(
             spark, _os.path.join(r, "cur_corpus"), key_col="doc_id",
-            ts_col="ts", num_partitions=8,
+            ts_col="ts",
         )
         if snap is None:
             with open(_os.path.join(r, "SNAP")) as fh:

@@ -24,11 +24,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def snapshot(df: DataFrame, path: str, key_col: str | None = None, num_partitions: int = 32) -> None:
+def snapshot(df: DataFrame, path: str, key_col: str | None = None) -> None:
     """S13 — persist a keyed layer for later reuse (RDDUtils.saveAsKryo).
-    Sorted Parquet when a key is given (zone-map-prunable), plain otherwise."""
+    Sorted Parquet when a key is given (zone-map-prunable, in key ranges
+    sized to the data like a table layer), plain otherwise."""
     if key_col:
-        df = df.repartitionByRange(num_partitions, F.col(key_col)).sortWithinPartitions(key_col)
+        df = df.repartitionByRange(F.col(key_col)).sortWithinPartitions(key_col)
     df.write.mode("overwrite").parquet(path)
 
 

@@ -120,7 +120,6 @@ class MaterializedAgg:
         mins: dict[str, str] | None = None,
         maxs: dict[str, str] | None = None,
         group_index=None,
-        num_partitions: int = 32,
     ):
         if base.ttl is not None:
             raise ValueError(
@@ -155,7 +154,6 @@ class MaterializedAgg:
             os.path.join(self.path, "state"),
             key_col=group_col,
             ts_col="__mv_ts",
-            num_partitions=num_partitions,
         )
 
     # -- bookkeeping ---------------------------------------------------------

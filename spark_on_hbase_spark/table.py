@@ -12,7 +12,11 @@ This table re-expresses that **same LSM design on columnar storage**:
 - layout: ``<path>/base-NNNNNN`` plus ordered ``<path>/delta-NNNNNN`` dirs,
   every layer range-partitioned and sorted by key (the HFile invariant;
   ``repartitionByRange + sortWithinPartitions`` is the DataFrame twin of the
-  reference's HFile bulk pipeline, HBaseTable.scala:242,296-352);
+  reference's HFile bulk pipeline, HBaseTable.scala:242,296-352). The
+  repartition carries no count: AQE coalesces adjacent sampled ranges to
+  its target size, so a small delta is one file and a large base several
+  (HBase flushes one HFile per region holding data, HBaseTable.scala:
+  236-344), each with a narrow key range disjoint from its neighbours';
 - ``update``/``put``/``increment``/``delete``/``bulk_*``: every mutation
   appends ONE sorted delta layer — O(batch) write, the table is never
   rewritten (the reference's bulkUpdate intent; HBase's memstore append);
@@ -192,7 +196,6 @@ class KeyedTable:
         path: str,
         key_col: str = "key",
         ts_col: str = "ts",
-        num_partitions: int = 32,
         compact_threshold: int = 8,
         ttl: int | None = None,
         now_fn=None,
@@ -221,7 +224,6 @@ class KeyedTable:
         self.path = str(path)
         self.key_col = key_col
         self.ts_col = ts_col
-        self.num_partitions = num_partitions
         self.compact_threshold = compact_threshold
         self.ttl = ttl
         self.bloom = bloom
@@ -285,11 +287,12 @@ class KeyedTable:
         self, df: DataFrame, kind: str, row_kind: int | None = None,
         stamp: str | None = None, seq: int | None = None,
     ) -> int:
-        """Write one sorted layer atomically (write to .tmp, rename).
-        Returns rows written, observed inside the write job (A16 accumulator
-        parity) — the observe node sits ABOVE the range exchange, so the
-        sampling pass repartitionByRange runs to pick bounds does not
-        double-count.
+        """Write one sorted layer atomically (write to .tmp, rename), in as
+        many range part-files as AQE coalesces its size to (see the module
+        docstring). Returns rows written, observed inside the write job (A16
+        accumulator parity) — the observe node sits ABOVE the range
+        exchange, so the sampling pass repartitionByRange runs to pick
+        bounds does not double-count.
 
         ``row_kind`` stamps a __kind column (sparse put / additive delta /
         cell delete / ROW tombstones); plain upsert layers omit it and the
@@ -320,9 +323,9 @@ class KeyedTable:
             df = df.withColumn(_KIND, F.lit(row_kind).cast("int"))
         if row_kind == _CELLDEL and _DELCOLS not in df.columns:
             raise ValueError("CELLDEL layers need a __delcols column")
-        out = df.repartitionByRange(
-            self.num_partitions, F.col(self.key_col)
-        ).sortWithinPartitions(self.key_col)
+        out = df.repartitionByRange(F.col(self.key_col)).sortWithinPartitions(
+            self.key_col
+        )
         out, obs = _observed_count(out)
         out.write.mode("overwrite").parquet(str(tmp))
         tmp.rename(target)
@@ -394,9 +397,9 @@ class KeyedTable:
         return bool(self._layers())
 
     def create(self, df: DataFrame) -> "KeyedTable":
-        """Create the table from an initial DataFrame (pre-split into
-        ``num_partitions`` sorted ranges, like the reference's pre-split
-        regions, HBaseAdminUtils.scala:118). Creating over an EXISTING
+        """Create the table from an initial DataFrame, written as sorted,
+        disjoint key ranges sized to the data (the reference pre-splits
+        regions instead, HBaseAdminUtils.scala:118). Creating over an EXISTING
         table raises (HBase's TableExistsException): a silent second base
         layer would union two generations of data — use ``update`` to
         merge or ``drop`` first to replace."""
@@ -413,8 +416,9 @@ class KeyedTable:
         shutil.rmtree(self.path, ignore_errors=True)
 
     def copy(self, dest: "KeyedTable") -> None:
-        """S12 — scan source, re-partition to destination layout, write
-        (HBaseAdminUtils.copy, misc/HBaseAdminUtils.scala:146-176)."""
+        """S12 — scan source, write it as the destination's sole base in
+        sorted key ranges sized to the data (HBaseAdminUtils.copy,
+        misc/HBaseAdminUtils.scala:146-176)."""
         Path(dest.path).mkdir(parents=True, exist_ok=True)
         dest._replace_all_layers(self.df())
 
@@ -823,7 +827,8 @@ class KeyedTable:
         """Build the layer's Bloom sidecar: one distributed pass over the
         layer's key column grouped by (part-file, word) with a bit_or
         combine — O(layer) at write time, the same moment the layer itself
-        was just paid for. Skipped for key dtypes whose string cast is not
+        was just paid for; its files are word ranges sized, like the
+        layer's, by AQE. Skipped for key dtypes whose string cast is not
         canonical across engines and probes (float/decimal/binary)."""
         import json
 
@@ -854,7 +859,7 @@ class KeyedTable:
                 F.col("__bfile").alias("file"),
                 "bits",
             )
-            .repartitionByRange(max(1, self.num_partitions // 4), "word")
+            .repartitionByRange("word")
             .sortWithinPartitions("word")
         )
         root = self._bloom_root()

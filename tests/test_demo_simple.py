@@ -32,7 +32,7 @@ def demo_table(spark, tmp_path_factory):
     df = spark.createDataFrame(
         rows, "key string, ts int, T map<string,int>, FAM map<string,double>"
     )
-    t = KeyedTable(spark, str(tmp_path_factory.mktemp("demo") / "demo-simple"), num_partitions=8)
+    t = KeyedTable(spark, str(tmp_path_factory.mktemp("demo") / "demo-simple"))
     return t.create(df), rows
 
 

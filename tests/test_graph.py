@@ -350,7 +350,6 @@ def test_propagate_incremental_multi_batch_lifecycle(spark, toy_edges, tmp_path)
         str(tmp_path / "prop_state"),
         key_col="sid",
         ts_col="ts",
-        num_partitions=2,
         compact_threshold=1,
     )
 

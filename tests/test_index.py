@@ -19,9 +19,9 @@ def _fixture(spark, tmp_path):
             Row(key=4, name="d", color=None, ts=100),
         ]
     )
-    tbl = KeyedTable(spark, str(tmp_path / "base"), key_col="key", ts_col="ts", num_partitions=2)
+    tbl = KeyedTable(spark, str(tmp_path / "base"), key_col="key", ts_col="ts")
     tbl.create(rows)
-    idx = SecondaryIndex(tbl, "color", str(tmp_path / "idx"), num_partitions=2).build()
+    idx = SecondaryIndex(tbl, "color", str(tmp_path / "idx")).build()
     return tbl, idx
 
 
@@ -73,10 +73,10 @@ def test_covered_lookup_never_touches_the_base(spark, tmp_path):
             Row(key=3, name="c", color="blue", ts=100),
         ]
     )
-    tbl = KeyedTable(spark, str(tmp_path / "basetbl"), key_col="key", ts_col="ts", num_partitions=2)
+    tbl = KeyedTable(spark, str(tmp_path / "basetbl"), key_col="key", ts_col="ts")
     tbl.create(rows)
     idx = SecondaryIndex(
-        tbl, "color", str(tmp_path / "idxtbl"), num_partitions=2, include=["name"]
+        tbl, "color", str(tmp_path / "idxtbl"), include=["name"]
     ).build()
     idx.update(spark.createDataFrame([Row(key=2, name="b2", color="blue", ts=200)]))
 
@@ -125,9 +125,9 @@ def test_index_range_lookup_spans_signs_and_prunes(spark, tmp_path):
         [Row(key=i, name=f"n{i}", score=s, ts=100)
          for i, s in enumerate([-1000, -10, -9, 0, 9, 10, 11, 1000])]
     )
-    tbl = KeyedTable(spark, str(tmp_path / "rb"), key_col="key", ts_col="ts", num_partitions=2)
+    tbl = KeyedTable(spark, str(tmp_path / "rb"), key_col="key", ts_col="ts")
     tbl.create(rows)
-    idx = SecondaryIndex(tbl, "score", str(tmp_path / "ri"), num_partitions=2).build()
+    idx = SecondaryIndex(tbl, "score", str(tmp_path / "ri")).build()
 
     got = sorted(r["score"] for r in idx.lookup_range(-10, 10).collect())
     assert got == [-10, -9, 0, 9, 10]  # raw strings would admit -1000/1000
@@ -156,7 +156,7 @@ def test_point_read_matches_merged_view_and_pushes_in_filter(spark, tmp_path):
     rows = spark.createDataFrame(
         [Row(key=i, name=f"n{i}", color="red", ts=100) for i in range(1, 9)]
     )
-    tbl = KeyedTable(spark, str(tmp_path / "pr"), key_col="key", ts_col="ts", num_partitions=4)
+    tbl = KeyedTable(spark, str(tmp_path / "pr"), key_col="key", ts_col="ts")
     tbl.create(rows)
     tbl.update(spark.createDataFrame([Row(key=2, name="b2", color="blue", ts=200)]))
     tbl.delete(spark.createDataFrame([Row(key=3)]))
@@ -272,10 +272,10 @@ def test_cell_delete_through_index(spark, tmp_path):
             Row(key=3, name="c", color="blue", note="z", ts=100),
         ]
     )
-    tbl = KeyedTable(spark, str(tmp_path / "cd"), key_col="key", ts_col="ts", num_partitions=2)
+    tbl = KeyedTable(spark, str(tmp_path / "cd"), key_col="key", ts_col="ts")
     tbl.create(rows)
     idx = SecondaryIndex(
-        tbl, "color", str(tmp_path / "cdi"), num_partitions=2, include=["name"]
+        tbl, "color", str(tmp_path / "cdi"), include=["name"]
     ).build()
 
     # null the INDEXED column of key 1: entry gone, base row survives
@@ -312,9 +312,9 @@ def test_increment_through_index_moves_buckets(spark, tmp_path):
     rows = spark.createDataFrame(
         [Row(key=1, score=10, other=0, ts=100), Row(key=2, score=20, other=0, ts=100)]
     )
-    tbl = KeyedTable(spark, str(tmp_path / "ib"), key_col="key", ts_col="ts", num_partitions=2)
+    tbl = KeyedTable(spark, str(tmp_path / "ib"), key_col="key", ts_col="ts")
     tbl.create(rows)
-    idx = SecondaryIndex(tbl, "score", str(tmp_path / "ii"), num_partitions=2).build()
+    idx = SecondaryIndex(tbl, "score", str(tmp_path / "ii")).build()
 
     idx.increment(
         spark.createDataFrame([Row(key=1, delta=5, ts=200)]), counter_col="score"
@@ -363,10 +363,10 @@ def test_composite_index_leading_edge_probes(spark, tmp_path):
             Row(key=6, name="f", color=None, score=1, ts=100),  # skipped
         ]
     )
-    tbl = KeyedTable(spark, str(tmp_path / "cb"), key_col="key", ts_col="ts", num_partitions=2)
+    tbl = KeyedTable(spark, str(tmp_path / "cb"), key_col="key", ts_col="ts")
     tbl.create(rows)
     idx = SecondaryIndex(
-        tbl, ["color", "score"], str(tmp_path / "ci"), num_partitions=2
+        tbl, ["color", "score"], str(tmp_path / "ci")
     ).build()
 
     # full tuple + leading prefix
@@ -451,7 +451,7 @@ def test_stamped_maintenance_converges_under_crash_and_replay(spark, tmp_path):
     # the indexed column and an increment of a covered counter after _xd
     # and after the base write, then retry each with the same stamp
     ctbl = KeyedTable(
-        spark, str(tmp_path / "cbase"), key_col="key", ts_col="ts", num_partitions=2
+        spark, str(tmp_path / "cbase"), key_col="key", ts_col="ts"
     )
     ctbl.create(
         spark.createDataFrame(
@@ -460,7 +460,7 @@ def test_stamped_maintenance_converges_under_crash_and_replay(spark, tmp_path):
         )
     )
     cidx = SecondaryIndex(
-        ctbl, "color", str(tmp_path / "cidx"), num_partitions=2, include=["cnt"]
+        ctbl, "color", str(tmp_path / "cidx"), include=["cnt"]
     ).build()
     p = spark.createDataFrame(
         [(1, "gold", 200), (3, "gold", 200)], "key bigint, color string, ts bigint"
@@ -553,10 +553,10 @@ def test_randomized_mutation_storm_matches_dict_model(spark, tmp_path, seed):
     model.update({k: (n, s) for k, n, s in first})
     tbl = KeyedTable(
         spark, str(tmp_path / "mb"), key_col="key", ts_col="ts",
-        num_partitions=4, compact_threshold=50,  # manual compacts only
+        compact_threshold=50,  # manual compacts only
     )
     tbl.create(rows)
-    idx = SecondaryIndex(tbl, "score", str(tmp_path / "mi"), num_partitions=4).build()
+    idx = SecondaryIndex(tbl, "score", str(tmp_path / "mi")).build()
 
     for ts in range(1, 19):
         op = rng.choice(
@@ -688,9 +688,9 @@ def test_repair_survives_auto_compaction_mid_repair(spark, tmp_path):
     rows = spark.createDataFrame(
         [Row(key=i, name=f"n{i}", color="red", ts=100) for i in range(1, 7)]
     )
-    tbl = KeyedTable(spark, str(tmp_path / "cb"), key_col="key", ts_col="ts", num_partitions=2)
+    tbl = KeyedTable(spark, str(tmp_path / "cb"), key_col="key", ts_col="ts")
     tbl.create(rows)
-    idx = SecondaryIndex(tbl, "color", str(tmp_path / "ci"), num_partitions=2)
+    idx = SecondaryIndex(tbl, "color", str(tmp_path / "ci"))
     idx.tbl.compact_threshold = 3
     idx.build()
     # pile index layers up to the threshold via maintained updates
@@ -718,12 +718,12 @@ def test_string_index_edge_values_tab_sep_and_astral(spark, tmp_path):
             Row(key=6, v="aa", ts=100),
         ]
     )
-    tbl = KeyedTable(spark, str(tmp_path / "sb"), key_col="key", ts_col="ts", num_partitions=2)
+    tbl = KeyedTable(spark, str(tmp_path / "sb"), key_col="key", ts_col="ts")
     tbl.create(rows)
-    idx = SecondaryIndex(tbl, "v", str(tmp_path / "si"), num_partitions=2).build()
+    idx = SecondaryIndex(tbl, "v", str(tmp_path / "si")).build()
 
     # equality never admits the separator-bearing sibling ('a' vs 'a\x1fb')
-    idx2 = SecondaryIndex(tbl, "v", str(tmp_path / "si"), num_partitions=2)
+    idx2 = SecondaryIndex(tbl, "v", str(tmp_path / "si"))
     assert {r["key"] for r in idx2.lookup("ab").collect()} == {1}
     assert {r["key"] for r in idx2.lookup("a\x1fb").collect()} == {3}
     # range [ab, ac]: must include 'ab\tz' (tab < sep would have dropped it
@@ -748,10 +748,10 @@ def test_float_and_wide_decimal_probes_are_exact(spark, tmp_path):
          (3, "blue", 0.1, D("1.50"), 100)],
         "key bigint, grp string, score float, bal decimal(20,2), ts int",
     )
-    tbl = KeyedTable(spark, str(tmp_path / "fb"), key_col="key", ts_col="ts", num_partitions=2)
+    tbl = KeyedTable(spark, str(tmp_path / "fb"), key_col="key", ts_col="ts")
     tbl.create(rows)
 
-    fidx = SecondaryIndex(tbl, ["grp", "score"], str(tmp_path / "fi"), num_partitions=2).build()
+    fidx = SecondaryIndex(tbl, ["grp", "score"], str(tmp_path / "fi")).build()
     # float equality through the typed predicate (0.1 stored as float32)
     assert {r["key"] for r in fidx.lookup("red", 0.1).collect()} == {1}
     # composite float range with an order-preserving prefix: correct, and
@@ -767,7 +767,7 @@ def test_float_and_wide_decimal_probes_are_exact(spark, tmp_path):
     # without a prefix pushes nothing)
     assert "GreaterThanOrEqual(ik" in plan
 
-    didx = SecondaryIndex(tbl, "bal", str(tmp_path / "wi"), num_partitions=2).build()
+    didx = SecondaryIndex(tbl, "bal", str(tmp_path / "wi")).build()
     assert {r["key"] for r in didx.lookup(D("1.5")).collect()} == {1, 3}
 
 
@@ -780,9 +780,9 @@ def test_string_range_with_low_char_hi_bound_is_exact(spark, tmp_path):
         [Row(key=1, v="ab", ts=100), Row(key=2, v="ab\tz", ts=100),
          Row(key=3, v="ac", ts=100), Row(key=4, v="aa", ts=100)]
     )
-    tbl = KeyedTable(spark, str(tmp_path / "lb"), key_col="key", ts_col="ts", num_partitions=2)
+    tbl = KeyedTable(spark, str(tmp_path / "lb"), key_col="key", ts_col="ts")
     tbl.create(rows)
-    idx = SecondaryIndex(tbl, "v", str(tmp_path / "li"), num_partitions=2).build()
+    idx = SecondaryIndex(tbl, "v", str(tmp_path / "li")).build()
     got = {r["key"] for r in idx.lookup_range("ab", "ab\tz").collect()}
     assert got == {1, 2}  # 'ab' is a proper prefix of hi and must survive
 
@@ -803,9 +803,9 @@ def test_timestamp_index_range_is_chronological(spark, tmp_path):
     rows = spark.createDataFrame(
         [(i, t, 100) for i, t in enumerate(ts)], "key bigint, seen timestamp, ts int"
     )
-    tbl = KeyedTable(spark, str(tmp_path / "tb"), key_col="key", ts_col="ts", num_partitions=2)
+    tbl = KeyedTable(spark, str(tmp_path / "tb"), key_col="key", ts_col="ts")
     tbl.create(rows)
-    idx = SecondaryIndex(tbl, "seen", str(tmp_path / "ti"), num_partitions=2).build()
+    idx = SecondaryIndex(tbl, "seen", str(tmp_path / "ti")).build()
     got = sorted(
         r["key"] for r in idx.lookup_range(ts[1], ts[3]).collect()
     )
@@ -823,9 +823,9 @@ def test_decimal_index_range_is_numeric(spark, tmp_path):
         [(i, D(v), 100) for i, v in enumerate(["-9.00", "-1.50", "0.25", "9.00", "10.00"])],
         "key bigint, bal decimal(10,2), ts int",
     )
-    tbl = KeyedTable(spark, str(tmp_path / "db"), key_col="key", ts_col="ts", num_partitions=2)
+    tbl = KeyedTable(spark, str(tmp_path / "db"), key_col="key", ts_col="ts")
     tbl.create(rows)
-    idx = SecondaryIndex(tbl, "bal", str(tmp_path / "di"), num_partitions=2).build()
+    idx = SecondaryIndex(tbl, "bal", str(tmp_path / "di")).build()
     got = sorted(str(r["bal"]) for r in idx.lookup_range(D("-9.00"), D("0.25")).collect())
     assert got == ["-1.50", "-9.00", "0.25"]
     got = sorted(str(r["bal"]) for r in idx.lookup_range(D("9.00"), D("10.00")).collect())
@@ -883,10 +883,10 @@ def test_deep_scrutiny_catches_covered_only_staleness_and_repair_fixes_it(spark,
             Row(key=2, name="b", color="red", ts=100),
         ]
     )
-    tbl = KeyedTable(spark, str(tmp_path / "base"), key_col="key", ts_col="ts", num_partitions=2)
+    tbl = KeyedTable(spark, str(tmp_path / "base"), key_col="key", ts_col="ts")
     tbl.create(rows)
     idx = SecondaryIndex(
-        tbl, "color", str(tmp_path / "idx"), num_partitions=2, include=["name"]
+        tbl, "color", str(tmp_path / "idx"), include=["name"]
     ).build()
 
     # behind the back: rename key 1 (covered col only; indexed col intact)
@@ -921,10 +921,10 @@ def _fx_fixture(spark, tmp_path):
             Row(key=4, name=None, color="blue", ts=100),
         ]
     )
-    tbl = KeyedTable(spark, str(tmp_path / "base"), key_col="key", ts_col="ts", num_partitions=2)
+    tbl = KeyedTable(spark, str(tmp_path / "base"), key_col="key", ts_col="ts")
     tbl.create(rows)
     idx = SecondaryIndex(
-        tbl, path=str(tmp_path / "idx"), num_partitions=2,
+        tbl, path=str(tmp_path / "idx"),
         expr=F.lower(F.col("name")), include=["color"],
     ).build()
     return tbl, idx
@@ -963,14 +963,14 @@ def test_functional_index_put_fast_path_is_exact(spark, tmp_path):
     assert idx.scrutiny(deep=True).count() == 0
     assert [r["color"] for r in idx.lookup("alpha", covered=True).collect()] == ["green"]
     # the truly-unrelated case: a column neither indexed, covered, nor read
-    tbl2 = KeyedTable(spark, str(tmp_path / "b2"), key_col="key", ts_col="ts", num_partitions=2)
+    tbl2 = KeyedTable(spark, str(tmp_path / "b2"), key_col="key", ts_col="ts")
     tbl2.create(
         spark.createDataFrame(
             [Row(key=1, name="Alpha", other="x", ts=100)]
         )
     )
     idx2 = SecondaryIndex(
-        tbl2, path=str(tmp_path / "i2"), num_partitions=2, expr=F.lower(F.col("name"))
+        tbl2, path=str(tmp_path / "i2"), expr=F.lower(F.col("name"))
     ).build()
     n_layers = len(idx2.tbl._layers())
     idx2.put(spark.createDataFrame([Row(key=1, other="y", ts=200)]))
@@ -998,12 +998,12 @@ def test_functional_index_cell_delete_of_input_reinserts(spark, tmp_path):
     assert [r["key"] for r in idx.lookup("beta").collect()] == [3]
     assert idx.scrutiny().count() == 0
     # a coalesce expression survives its primary input being nulled
-    tbl3 = KeyedTable(spark, str(tmp_path / "b3"), key_col="key", ts_col="ts", num_partitions=2)
+    tbl3 = KeyedTable(spark, str(tmp_path / "b3"), key_col="key", ts_col="ts")
     tbl3.create(
         spark.createDataFrame([Row(key=1, nick="Al", name="Alpha", ts=100)])
     )
     idx3 = SecondaryIndex(
-        tbl3, path=str(tmp_path / "i3"), num_partitions=2,
+        tbl3, path=str(tmp_path / "i3"),
         expr=F.lower(F.coalesce(F.col("nick"), F.col("name"))),
     ).build()
     assert idx3._expr_inputs() == {"nick", "name"}
@@ -1024,10 +1024,10 @@ def test_functional_index_composite_with_plain_column(spark, tmp_path):
             Row(key=3, name="Alpha", color="blue", ts=100),
         ]
     )
-    tbl = KeyedTable(spark, str(tmp_path / "b4"), key_col="key", ts_col="ts", num_partitions=2)
+    tbl = KeyedTable(spark, str(tmp_path / "b4"), key_col="key", ts_col="ts")
     tbl.create(rows)
     idx = SecondaryIndex(
-        tbl, "color", str(tmp_path / "i4"), num_partitions=2,
+        tbl, "color", str(tmp_path / "i4"),
         expr={"lname": F.lower(F.col("name"))},
     ).build()
     assert idx.cols == ["color", "lname"]
@@ -1038,7 +1038,7 @@ def test_functional_index_composite_with_plain_column(spark, tmp_path):
 
 
 def test_functional_index_rejects_shadowing_and_reserved_names(spark, tmp_path):
-    tbl = KeyedTable(spark, str(tmp_path / "b5"), key_col="key", ts_col="ts", num_partitions=2)
+    tbl = KeyedTable(spark, str(tmp_path / "b5"), key_col="key", ts_col="ts")
     tbl.create(spark.createDataFrame([Row(key=1, name="a", ts=100)]))
     with pytest.raises(ValueError, match="reserved"):
         SecondaryIndex(
@@ -1068,9 +1068,9 @@ def test_skip_scan_probes_non_leading_column(spark, tmp_path):
             )
         ]
     )
-    tbl = KeyedTable(spark, str(tmp_path / "base"), key_col="key", ts_col="ts", num_partitions=2)
+    tbl = KeyedTable(spark, str(tmp_path / "base"), key_col="key", ts_col="ts")
     tbl.create(rows)
-    idx = SecondaryIndex(tbl, ["color", "score"], str(tmp_path / "idx"), num_partitions=2).build()
+    idx = SecondaryIndex(tbl, ["color", "score"], str(tmp_path / "idx")).build()
 
     want = sorted(r["key"] for r in tbl.df().where(F.col("score") == 3).collect())
     got = sorted(r["key"] for r in idx.lookup_skip(score=3).collect())
@@ -1097,9 +1097,9 @@ def test_skip_scan_degradations_stay_correct(spark, tmp_path):
     rows = spark.createDataFrame(
         [Row(key=i, name=f"n{i}", color=f"c{i % 7}", score=i % 3, ts=100) for i in range(42)]
     )
-    tbl = KeyedTable(spark, str(tmp_path / "b"), key_col="key", ts_col="ts", num_partitions=2)
+    tbl = KeyedTable(spark, str(tmp_path / "b"), key_col="key", ts_col="ts")
     tbl.create(rows)
-    idx = SecondaryIndex(tbl, ["color", "score"], str(tmp_path / "i"), num_partitions=2).build()
+    idx = SecondaryIndex(tbl, ["color", "score"], str(tmp_path / "i")).build()
     want = sorted(r["key"] for r in tbl.df().where(F.col("score") == 1).collect())
 
     # prefix budget exceeded -> full index scan fallback, same answer
@@ -1122,13 +1122,13 @@ def test_skip_scan_degradations_stay_correct(spark, tmp_path):
         idx.lookup_skip(nope=1)
 
     # float leading column (non-order-preserving) -> exact-scan fallback
-    tbl2 = KeyedTable(spark, str(tmp_path / "b2"), key_col="key", ts_col="ts", num_partitions=2)
+    tbl2 = KeyedTable(spark, str(tmp_path / "b2"), key_col="key", ts_col="ts")
     tbl2.create(
         spark.createDataFrame(
             [Row(key=i, w=float(i % 2) + 0.5, score=i % 3, ts=100) for i in range(12)]
         )
     )
-    idx2 = SecondaryIndex(tbl2, ["w", "score"], str(tmp_path / "i2"), num_partitions=2).build()
+    idx2 = SecondaryIndex(tbl2, ["w", "score"], str(tmp_path / "i2")).build()
     want2 = sorted(r["key"] for r in tbl2.df().where(F.col("score") == 2).collect())
     assert sorted(r["key"] for r in idx2.lookup_skip(score=2).collect()) == want2
 
@@ -1160,11 +1160,11 @@ def test_skip_scan_guideposts_answer_without_scanning_the_index(
         ]
     )
     tbl = KeyedTable(
-        spark, str(tmp_path / "b"), key_col="key", ts_col="ts", num_partitions=2
+        spark, str(tmp_path / "b"), key_col="key", ts_col="ts"
     )
     tbl.create(rows)
     idx = SecondaryIndex(
-        tbl, ["color", "score"], str(tmp_path / "i"), num_partitions=2
+        tbl, ["color", "score"], str(tmp_path / "i")
     ).build()
     _forbid_live_enumeration(monkeypatch)
 
@@ -1212,11 +1212,11 @@ def test_guidepost_union_lands_before_the_entries(spark, tmp_path, monkeypatch):
         [Row(key=i, name=f"n{i}", color="red", score=i % 2, ts=100) for i in range(4)]
     )
     tbl = KeyedTable(
-        spark, str(tmp_path / "b"), key_col="key", ts_col="ts", num_partitions=2
+        spark, str(tmp_path / "b"), key_col="key", ts_col="ts"
     )
     tbl.create(rows)
     idx = SecondaryIndex(
-        tbl, ["color", "score"], str(tmp_path / "i"), num_partitions=2
+        tbl, ["color", "score"], str(tmp_path / "i")
     ).build()
 
     real = KeyedTable.update
@@ -1256,11 +1256,11 @@ def test_guidepost_overflow_falls_back_to_live_enumeration(spark, tmp_path):
         ]
     )
     tbl = KeyedTable(
-        spark, str(tmp_path / "b"), key_col="key", ts_col="ts", num_partitions=2
+        spark, str(tmp_path / "b"), key_col="key", ts_col="ts"
     )
     tbl.create(rows)
     idx = SecondaryIndex(
-        tbl, ["color", "score"], str(tmp_path / "i"), num_partitions=2
+        tbl, ["color", "score"], str(tmp_path / "i")
     )
     idx.GUIDEPOST_CAP = 4  # 9 distinct colors > 4
     idx.build()
@@ -1292,11 +1292,11 @@ def test_build_resets_a_stale_guidepost_sidecar(spark, tmp_path, monkeypatch):
         ]
     )
     tbl = KeyedTable(
-        spark, str(tmp_path / "b"), key_col="key", ts_col="ts", num_partitions=2
+        spark, str(tmp_path / "b"), key_col="key", ts_col="ts"
     )
     tbl.create(rows)
     idx = SecondaryIndex(
-        tbl, ["color", "score"], str(tmp_path / "i"), num_partitions=2
+        tbl, ["color", "score"], str(tmp_path / "i")
     ).build()
     with open(idx._guidepost_path(), "w") as f:
         _json.dump({"cols": {"color": {"values": ["bogus"], "overflow": False}}}, f)
@@ -1331,11 +1331,11 @@ def test_guidepost_skip_scan_survives_mutation_storm(spark, tmp_path, monkeypatc
     model.update({k: (b, s) for k, b, s in first})
     tbl = KeyedTable(
         spark, str(tmp_path / "gb"), key_col="key", ts_col="ts",
-        num_partitions=4, compact_threshold=50,
+        compact_threshold=50,
     )
     tbl.create(rows)
     idx = SecondaryIndex(
-        tbl, ["band", "score"], str(tmp_path / "gi"), num_partitions=4
+        tbl, ["band", "score"], str(tmp_path / "gi")
     ).build()
 
     for ts in range(1, 13):
@@ -1405,14 +1405,13 @@ def test_guidepost_skip_scan_over_functional_component(spark, tmp_path, monkeypa
         ]
     )
     tbl = KeyedTable(
-        spark, str(tmp_path / "b"), key_col="key", ts_col="ts", num_partitions=2
+        spark, str(tmp_path / "b"), key_col="key", ts_col="ts"
     )
     tbl.create(rows)
     idx = SecondaryIndex(
         tbl,
         ["grp"],
         str(tmp_path / "i"),
-        num_partitions=2,
         expr={"initial": F.substring(F.col("name"), 1, 1)},
     ).build()
     monkeypatch.setattr(
@@ -1454,11 +1453,11 @@ def test_maintenance_heals_a_missing_guidepost_sidecar(spark, tmp_path, monkeypa
         ]
     )
     tbl = KeyedTable(
-        spark, str(tmp_path / "b"), key_col="key", ts_col="ts", num_partitions=2
+        spark, str(tmp_path / "b"), key_col="key", ts_col="ts"
     )
     tbl.create(rows)
     idx = SecondaryIndex(
-        tbl, ["color", "score"], str(tmp_path / "i"), num_partitions=2
+        tbl, ["color", "score"], str(tmp_path / "i")
     ).build()
     os.remove(idx._guidepost_path())  # simulate the crash window
 
@@ -1484,11 +1483,11 @@ def test_skip_scan_out_of_range_fixed_value_never_lies(spark, tmp_path):
         "key int, grp smallint, band smallint, ts bigint",
     )
     tbl = KeyedTable(
-        spark, str(tmp_path / "b"), key_col="key", ts_col="ts", num_partitions=2
+        spark, str(tmp_path / "b"), key_col="key", ts_col="ts"
     )
     tbl.create(rows)
     idx = SecondaryIndex(
-        tbl, ["grp", "band"], str(tmp_path / "i"), num_partitions=2
+        tbl, ["grp", "band"], str(tmp_path / "i")
     ).build()
     # the declined guidepost path and the live path agree: loud overflow
     assert idx._guidepost_tuples(["grp", "band"], {"band": 70000}) is None
@@ -1507,11 +1506,11 @@ def test_guideposts_opt_out_disables_maintenance_and_reads(spark, tmp_path):
         [Row(key=i, grp=i % 3, band=i, ts=100) for i in range(6)]
     )
     tbl = KeyedTable(
-        spark, str(tmp_path / "b"), key_col="key", ts_col="ts", num_partitions=2
+        spark, str(tmp_path / "b"), key_col="key", ts_col="ts"
     )
     tbl.create(rows)
     idx = SecondaryIndex(
-        tbl, ["grp", "band"], str(tmp_path / "i"), num_partitions=2,
+        tbl, ["grp", "band"], str(tmp_path / "i"),
         guideposts=False,
     ).build()
     import os
@@ -1531,13 +1530,13 @@ def test_repair_wins_even_when_base_ts_moved_backwards(spark, tmp_path):
     (review-pass finding: repair used to report success while the stale
     covered value kept being served, re-flagged forever)."""
     tbl = KeyedTable(
-        spark, str(tmp_path / "b"), key_col="key", ts_col="ts", num_partitions=2
+        spark, str(tmp_path / "b"), key_col="key", ts_col="ts"
     )
     tbl.create(
         spark.createDataFrame([Row(key=1, name="a", color="red", ts=100)])
     )
     idx = SecondaryIndex(
-        tbl, "color", str(tmp_path / "i"), include=["name"], num_partitions=2
+        tbl, "color", str(tmp_path / "i"), include=["name"]
     ).build()
     tbl.delete(spark.createDataFrame([Row(key=1)], "key bigint"))
     tbl.compact()
@@ -1558,13 +1557,13 @@ def test_key_only_functional_index_maintains_on_put(spark, tmp_path):
     took the no-maintenance fast path and created rows with no entry
     (review-pass finding)."""
     tbl = KeyedTable(
-        spark, str(tmp_path / "b"), key_col="key", ts_col="ts", num_partitions=2
+        spark, str(tmp_path / "b"), key_col="key", ts_col="ts"
     )
     tbl.create(
         spark.createDataFrame([Row(key=i, other="x", ts=100) for i in range(4)])
     )
     idx = SecondaryIndex(
-        tbl, path=str(tmp_path / "i"), num_partitions=2,
+        tbl, path=str(tmp_path / "i"),
         expr={"kmod": F.col("key") % 10},
     ).build()
     assert "key" in idx._maintained_inputs()
@@ -1573,11 +1572,11 @@ def test_key_only_functional_index_maintains_on_put(spark, tmp_path):
     assert idx.scrutiny(deep=True).count() == 0
     # a row created via increment on a NON-key counter still indexes its key
     tbl2 = KeyedTable(
-        spark, str(tmp_path / "b2"), key_col="key", ts_col="ts", num_partitions=2
+        spark, str(tmp_path / "b2"), key_col="key", ts_col="ts"
     )
     tbl2.create(spark.createDataFrame([Row(key=1, cnt=0, ts=100)]))
     idx2 = SecondaryIndex(
-        tbl2, path=str(tmp_path / "i2"), num_partitions=2,
+        tbl2, path=str(tmp_path / "i2"),
         expr={"kmod": F.col("key") % 10},
     ).build()
     idx2.increment(
@@ -1593,7 +1592,7 @@ def test_deep_scrutiny_distinguishes_null_from_sentinel_value(spark, tmp_path):
     ('\\x00') was invisible to deep scrutiny (fp collision, review-pass
     finding); per-field fixed-width hashing flags it."""
     tbl = KeyedTable(
-        spark, str(tmp_path / "b"), key_col="key", ts_col="ts", num_partitions=2
+        spark, str(tmp_path / "b"), key_col="key", ts_col="ts"
     )
     tbl.create(
         spark.createDataFrame(
@@ -1602,7 +1601,7 @@ def test_deep_scrutiny_distinguishes_null_from_sentinel_value(spark, tmp_path):
         )
     )
     idx = SecondaryIndex(
-        tbl, "color", str(tmp_path / "i"), include=["name"], num_partitions=2
+        tbl, "color", str(tmp_path / "i"), include=["name"]
     ).build()
     tbl.put(spark.createDataFrame([Row(key=1, name="\x00", ts=200)]))
     assert [r["status"] for r in idx.scrutiny(deep=True).collect()] == [
@@ -1619,13 +1618,13 @@ def test_constant_on_null_functional_index_maintains_row_creation(spark, tmp_pat
     mints an entry (fx='?'), so it must maintain — the key-reading-only
     gate missed this class (second review-pass repro)."""
     tbl = KeyedTable(
-        spark, str(tmp_path / "b"), key_col="key", ts_col="ts", num_partitions=2
+        spark, str(tmp_path / "b"), key_col="key", ts_col="ts"
     )
     tbl.create(
         spark.createDataFrame([Row(key=1, name="Alpha", other="x", ts=100)])
     )
     idx = SecondaryIndex(
-        tbl, path=str(tmp_path / "i"), num_partitions=2,
+        tbl, path=str(tmp_path / "i"),
         expr={"fx": F.coalesce(F.lower(F.col("name")), F.lit("?"))},
     ).build()
     idx.put(spark.createDataFrame([Row(key=9, other="y", ts=200)]))
@@ -1634,11 +1633,11 @@ def test_constant_on_null_functional_index_maintains_row_creation(spark, tmp_pat
     # null-on-null expressions keep their fast path: no index write for a
     # row the expression maps to NULL (no entry by the NULL convention)
     tbl2 = KeyedTable(
-        spark, str(tmp_path / "b2"), key_col="key", ts_col="ts", num_partitions=2
+        spark, str(tmp_path / "b2"), key_col="key", ts_col="ts"
     )
     tbl2.create(spark.createDataFrame([Row(key=1, name="Alpha", other="x", ts=100)]))
     idx2 = SecondaryIndex(
-        tbl2, path=str(tmp_path / "i2"), num_partitions=2,
+        tbl2, path=str(tmp_path / "i2"),
         expr=F.lower(F.col("name")),
     ).build()
     n_layers = len(idx2.tbl._layers())
@@ -1655,11 +1654,11 @@ def test_crashed_repair_rerun_converges(spark, tmp_path, monkeypatch):
     import pytest as _pytest
 
     tbl = KeyedTable(
-        spark, str(tmp_path / "b"), key_col="key", ts_col="ts", num_partitions=2
+        spark, str(tmp_path / "b"), key_col="key", ts_col="ts"
     )
     tbl.create(spark.createDataFrame([Row(key=1, name="a", color="red", ts=100)]))
     idx = SecondaryIndex(
-        tbl, "color", str(tmp_path / "i"), include=["name"], num_partitions=2
+        tbl, "color", str(tmp_path / "i"), include=["name"]
     ).build()
     tbl.delete(spark.createDataFrame([Row(key=1)], "key bigint"))
     tbl.compact()
@@ -1702,11 +1701,11 @@ def test_guidepost_tuples_probe_observed_tuples_not_cross_product(
         ]
     )
     tbl = KeyedTable(
-        spark, str(tmp_path / "b"), key_col="key", ts_col="ts", num_partitions=2
+        spark, str(tmp_path / "b"), key_col="key", ts_col="ts"
     )
     tbl.create(rows)
     idx = SecondaryIndex(
-        tbl, ["grp", "band", "score"], str(tmp_path / "i"), num_partitions=2
+        tbl, ["grp", "band", "score"], str(tmp_path / "i")
     ).build()
     _forbid_live_enumeration(monkeypatch)
 
@@ -1746,11 +1745,11 @@ def test_pre_tuple_sidecar_heals_from_the_full_index(spark, tmp_path, monkeypatc
         [Row(key=i, grp=f"g{i % 3}", band=i % 3, score=i % 2, ts=100) for i in range(9)]
     )
     tbl = KeyedTable(
-        spark, str(tmp_path / "b"), key_col="key", ts_col="ts", num_partitions=2
+        spark, str(tmp_path / "b"), key_col="key", ts_col="ts"
     )
     tbl.create(rows)
     idx = SecondaryIndex(
-        tbl, ["grp", "band", "score"], str(tmp_path / "i"), num_partitions=2
+        tbl, ["grp", "band", "score"], str(tmp_path / "i")
     ).build()
     gp = idx._load_guideposts()
     del gp["tuples"]  # simulate the r7-era sidecar
@@ -1779,7 +1778,7 @@ def test_oversized_uncovered_lookup_bounds_the_base_scan(spark, tmp_path, monkey
     from spark_on_hbase_spark import plans
 
     tbl = KeyedTable(
-        spark, str(tmp_path / "b"), key_col="key", ts_col="ts", num_partitions=4
+        spark, str(tmp_path / "b"), key_col="key", ts_col="ts"
     )
     tbl.create(
         spark.range(2000).select(
@@ -1790,7 +1789,7 @@ def test_oversized_uncovered_lookup_bounds_the_base_scan(spark, tmp_path, monkey
         )
     )
     idx = SecondaryIndex(
-        tbl, "color", str(tmp_path / "i"), num_partitions=4
+        tbl, "color", str(tmp_path / "i")
     ).build()
     monkeypatch.setattr(KeyedTable, "POINT_READ_CAP", 10)
     out = idx.lookup(2)
@@ -1822,7 +1821,6 @@ def test_lookup_in_matches_filter_and_survives_hundreds_of_values(spark, tmp_pat
 
     t = KeyedTable(
         spark, os.path.join(str(tmp_path), "t"), key_col="k", ts_col="ts",
-        num_partitions=4,
     )
     t.create(
         spark.range(0, 2000).select(
@@ -1861,7 +1859,6 @@ def test_lookup_in_never_resurrects_migrated_or_deleted_entries(spark, tmp_path)
 
     t = KeyedTable(
         spark, os.path.join(str(tmp_path), "t"), key_col="k", ts_col="ts",
-        num_partitions=2,
     )
     t.create(
         spark.range(0, 40).select(
@@ -1905,13 +1902,12 @@ def _multi_fixture(spark, tmp_path):
     )
     tbl = KeyedTable(
         spark, str(tmp_path / "mbase"), key_col="key", ts_col="ts",
-        num_partitions=2,
     )
     tbl.create(rows)
     idx = SecondaryIndex(
         tbl, path=str(tmp_path / "midx"),
         expr={"tag": F.filter(F.split(F.col("tags"), " "), lambda w: w != "")},
-        multi="tag", guideposts=False, num_partitions=2,
+        multi="tag", guideposts=False,
     ).build()
     return tbl, idx
 
@@ -1945,7 +1941,6 @@ def test_multi_index_maintenance_replaces_all_elements(spark, tmp_path):
 def test_multi_index_rejects_non_array_and_non_last(spark, tmp_path):
     tbl = KeyedTable(
         spark, str(tmp_path / "vbase"), key_col="key", ts_col="ts",
-        num_partitions=2,
     )
     tbl.create(spark.createDataFrame([Row(key=1, name="x", ts=100)]))
     import pytest as _pytest

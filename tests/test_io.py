@@ -12,7 +12,7 @@ from spark_on_hbase_spark.table import KeyedTable
 def test_snapshot_roundtrip_sorted(spark, tmp_path):
     df = spark.createDataFrame([Row(key=f"k{i:02d}", v=i) for i in range(40)])
     path = str(tmp_path / "snap")
-    EIO.snapshot(df, path, key_col="key", num_partitions=4)
+    EIO.snapshot(df, path, key_col="key")
     back = EIO.load_snapshot(spark, path)
     assert sorted(r["key"] for r in back.collect()) == sorted(r["key"] for r in df.collect())
 
@@ -31,7 +31,7 @@ def test_http_export_serves_tsv(spark):
 
 
 def test_alter_table_add_drop_column(spark, tmp_path):
-    t = KeyedTable(spark, str(tmp_path / "t"), num_partitions=2)
+    t = KeyedTable(spark, str(tmp_path / "t"))
     t.create(spark.createDataFrame([Row(key="a", ts=1, v=10)]))
     t.add_column("note", default="n/a", dtype="string")
     row = t.df().collect()[0]

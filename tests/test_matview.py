@@ -14,7 +14,6 @@ from spark_on_hbase_spark.table import KeyedTable
 def _base(spark, tmp_path, n=500):
     t = KeyedTable(
         spark, os.path.join(tmp_path, "base"), key_col="k", ts_col="ts",
-        num_partitions=4,
     )
     t.create(
         spark.range(0, n).select(
@@ -167,7 +166,6 @@ def test_contracts_refuse_floats_ttl_and_key_groups(spark, tmp_path):
 def _float_check(spark, tmp_path):
     t = KeyedTable(
         spark, os.path.join(tmp_path, "fbase"), key_col="k", ts_col="ts",
-        num_partitions=2,
     )
     t.create(
         spark.range(0, 10).select(

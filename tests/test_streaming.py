@@ -24,7 +24,7 @@ def source_dir(spark, tmp_path):
 
 
 def test_stream_merge_into_table(spark, tmp_path, source_dir):
-    table = KeyedTable(spark, str(tmp_path / "table"), num_partitions=2)
+    table = KeyedTable(spark, str(tmp_path / "table"))
     table.create(spark.createDataFrame([Row(key="b", ts=0, v=-1)]))
 
     schema = "key string, ts bigint, v bigint"
@@ -49,13 +49,13 @@ def test_stream_merge_through_secondary_index(spark, tmp_path):
     with the same batch id — the stream's replay IS the repair path."""
     from spark_on_hbase_spark.index import SecondaryIndex
 
-    table = KeyedTable(spark, str(tmp_path / "base"), key_col="key", ts_col="ts", num_partitions=2)
+    table = KeyedTable(spark, str(tmp_path / "base"), key_col="key", ts_col="ts")
     table.create(
         spark.createDataFrame(
             [Row(key="a", ts=0, color="red"), Row(key="b", ts=0, color="red")]
         )
     )
-    idx = SecondaryIndex(table, "color", str(tmp_path / "idx"), num_partitions=2).build()
+    idx = SecondaryIndex(table, "color", str(tmp_path / "idx")).build()
 
     src = tmp_path / "src"
     spark.createDataFrame(
@@ -467,7 +467,7 @@ def test_replayed_micro_batch_is_a_strict_noop(spark, tmp_path):
     same layer count (without the marker, a replay appends a duplicate
     delta layer; with a non-idempotent sink it would corrupt values)."""
     tbl = KeyedTable(
-        spark, str(tmp_path / "replay_tbl"), key_col="key", ts_col="ts", num_partitions=2
+        spark, str(tmp_path / "replay_tbl"), key_col="key", ts_col="ts"
     )
     tbl.create(spark.createDataFrame([Row(key="a", ts=1, v=10)]))
     upsert = ST.idempotent_upsert(tbl)
@@ -494,7 +494,7 @@ def test_streaming_counter_exactly_once_under_replay(spark, tmp_path):
     the applied-batch marker is correctness here, not hygiene."""
     d = tmp_path / "deltas"
     tbl = KeyedTable(
-        spark, str(tmp_path / "counter_tbl"), key_col="key", ts_col="ts", num_partitions=2
+        spark, str(tmp_path / "counter_tbl"), key_col="key", ts_col="ts"
     )
     tbl.create(spark.createDataFrame([Row(key="a", ts=0, hits=100), Row(key="b", ts=0, hits=5)]))
     spark.createDataFrame(
@@ -539,7 +539,7 @@ def test_crash_cannot_double_count_the_increment_sink(spark, tmp_path):
     (replay skipped) or left nothing (replay applies once). The old test
     asserted the double-count degradation; this one asserts exactly-once."""
     tbl = KeyedTable(
-        spark, str(tmp_path / "crash_tbl"), key_col="key", ts_col="ts", num_partitions=2
+        spark, str(tmp_path / "crash_tbl"), key_col="key", ts_col="ts"
     )
     tbl.create(spark.createDataFrame([Row(key="a", ts=0, hits=100)]))
     batch = spark.createDataFrame([Row(key="a", delta=3)])
@@ -573,7 +573,7 @@ def test_fresh_checkpoint_gets_a_fresh_guard_namespace(spark, tmp_path):
     default guard id is a checkpoint-dir digest, so distinct checkpoints
     give distinct namespaces."""
     tbl = KeyedTable(
-        spark, str(tmp_path / "ns_tbl"), key_col="key", ts_col="ts", num_partitions=2
+        spark, str(tmp_path / "ns_tbl"), key_col="key", ts_col="ts"
     )
     tbl.create(spark.createDataFrame([Row(key="a", ts=1, v=1)]))
     batch = spark.createDataFrame([Row(key="a", ts=2, v=2)])
@@ -606,7 +606,6 @@ def test_streaming_matview_replay_is_exactly_once_and_self_healing(spark, tmp_pa
 
     base = KeyedTable(
         spark, os.path.join(str(tmp_path), "b"), key_col="k", ts_col="ts",
-        num_partitions=2,
     )
     base.create(
         spark.range(0, 100).select(

@@ -3,6 +3,7 @@ last-writer-wins by ts, cell-level put, pre-aggregated increment, row/column
 deletes, copy — the HBase behaviors re-expressed as deterministic merge
 writes (table.py)."""
 
+import contextlib
 import itertools
 from pathlib import Path
 
@@ -24,7 +25,7 @@ from spark_on_hbase_spark.table import HistoryFoldedError, KeyedTable
 
 @pytest.fixture
 def table(spark, tmp_path):
-    t = KeyedTable(spark, str(tmp_path / "t"), key_col="key", ts_col="ts", num_partitions=4)
+    t = KeyedTable(spark, str(tmp_path / "t"), key_col="key", ts_col="ts")
     df = spark.createDataFrame(
         [Row(key=f"k{i:03d}", ts=100, height=i, tag=f"v{i}") for i in range(20)]
     )
@@ -193,7 +194,7 @@ def test_null_ts_update_applies_over_stored_ts(spark, tmp_path):
     schema = "key string, ts bigint, height bigint, tag string"
     for with_put in (False, True):
         t = KeyedTable(spark, str(tmp_path / f"t{int(with_put)}"),
-                       num_partitions=2, compact_threshold=99)
+                       compact_threshold=99)
         t.create(spark.createDataFrame(
             [("k1", 100, 1, "old"), ("k2", 100, 2, "old")], schema))
         t.update(spark.createDataFrame([("k1", None, 9, "new")], schema))
@@ -209,7 +210,7 @@ def test_null_ts_update_applies_over_stored_ts(spark, tmp_path):
 
 
 def test_copy_roundtrip(spark, table, tmp_path):
-    dest = KeyedTable(spark, str(tmp_path / "t2"), num_partitions=2)
+    dest = KeyedTable(spark, str(tmp_path / "t2"))
     table.copy(dest)
     assert sorted(rows(dest)) == sorted(rows(table))
 
@@ -241,7 +242,7 @@ def test_compaction_folds_layers_and_purges_tombstones(spark, table):
 
 
 def test_auto_compaction_bounds_delta_stack(spark, tmp_path):
-    t = KeyedTable(spark, str(tmp_path / "auto"), num_partitions=2, compact_threshold=3)
+    t = KeyedTable(spark, str(tmp_path / "auto"), compact_threshold=3)
     t.create(spark.createDataFrame([Row(key="a", ts=0, v=0)]))
     for i in range(1, 6):
         t.update(spark.createDataFrame([Row(key="a", ts=i, v=i)]))
@@ -256,6 +257,43 @@ def test_write_is_sorted_within_partitions(spark, table):
     for _, grp in pdf.groupby("pid"):
         keys = list(grp["key"])
         assert keys == sorted(keys)
+
+
+def test_layers_size_their_own_files(spark, tmp_path):
+    """A layer's file count follows its data, not a constant: at the
+    session's defaults a 300-row update lands in ONE part-file, the 20k-row
+    base keeps sorted, disjoint footer key ranges, and the updated keys
+    read back updated."""
+    import pyarrow.parquet as pq
+
+    t = KeyedTable(spark, str(tmp_path / "sized"), key_col="k", ts_col="ts")
+    t.create(spark.range(20000).select(
+        F.col("id").alias("k"), F.lit(0).cast("bigint").alias("v"),
+        F.lit(0).cast("bigint").alias("ts"),
+    ))
+    keys = list(range(0, 20000, 66))[:300]
+    t.update(spark.createDataFrame(
+        [(k, -k, 1) for k in keys], "k bigint, v bigint, ts bigint"
+    ))
+    base, delta = t._layers()
+    assert len(list(delta.glob("*.parquet"))) == 1
+
+    ranges = []
+    for f in base.glob("*.parquet"):
+        md = pq.read_metadata(str(f))
+        stats = [
+            md.row_group(g).column(c).statistics
+            for g in range(md.num_row_groups)
+            for c in range(md.num_columns)
+            if md.row_group(g).column(c).path_in_schema == "k"
+        ]
+        ranges.append((min(s.min for s in stats), max(s.max for s in stats)))
+    ranges.sort()
+    assert ranges and all(lo <= hi for lo, hi in ranges)
+    assert all(a[1] < b[0] for a, b in zip(ranges, ranges[1:]))
+
+    got = {r["k"]: (r["v"], r["ts"]) for r in t.point_read(keys).collect()}
+    assert got == {k: (-k, 1) for k in keys}
 
 
 # -- stateful model test ---------------------------------------------------
@@ -347,11 +385,11 @@ def _m_expect(visible: dict, keys=None) -> list:
     )
 
 
-def test_mutation_sequence_matches_model(spark, tmp_path):
+def test_mutation_sequence_matches_model(spark, tmp_path, layer_files):
     """Model-based check of the LSM fold: hypothesis drives random
     sequences of update / put / increment (stacked double increments
     included) / delete / cell delete / compaction (all, dirty, keep_since)
-    against a KeyedTable at 1-4 partitions with Bloom on or off. After
+    against a KeyedTable of 1-4 part-files per layer with Bloom on or off. After
     every mutation df() must equal the model, and random reads — df,
     point_read, range_read, semi_read, at the latest layer or as_of_layer
     a snapshot taken since the last compaction — must equal the model's
@@ -366,14 +404,22 @@ def test_mutation_sequence_matches_model(spark, tmp_path):
         return spark.createDataFrame([(k,) for k in keys], "key bigint")
 
     class KeyedTableMachine(RuleBasedStateMachine):
+        def __init__(self):
+            super().__init__()
+            self.confs = contextlib.ExitStack()
+
+        def teardown(self):
+            self.confs.close()
+
         @initialize(
             nparts=st.integers(1, 4), bloom=st.booleans(), base=_M_BATCH
         )
         def create(self, nparts, bloom, base):
+            # every layer of this run is up to nparts range part-files
+            self.confs.enter_context(layer_files(nparts))
             self.t = KeyedTable(
                 spark, str(tmp_path / f"m{next(dirs)}"), key_col="key",
-                ts_col="ts", num_partitions=nparts, compact_threshold=99,
-                bloom=bloom,
+                ts_col="ts", compact_threshold=99, bloom=bloom,
             )
             self.t.create(spark.createDataFrame(base, _m_schema(_M_COLS)))
             self.model = _FoldModel()
@@ -541,7 +587,7 @@ def test_ttl_filters_reads_and_compaction_purges(spark, tmp_path):
     HBaseTableSimple.scala:23-30): expired rows are invisible to reads and
     physically removed by compaction. now_fn injected for determinism."""
     t = KeyedTable(
-        spark, str(tmp_path / "ttl"), num_partitions=2, ttl=100, now_fn=lambda: 1000
+        spark, str(tmp_path / "ttl"), ttl=100, now_fn=lambda: 1000
     )
     t.create(
         spark.createDataFrame(
@@ -583,7 +629,7 @@ def test_layer_order_is_numeric_not_lexical(spark, tmp_path, monkeypatch):
     order delta-1000000 before delta-999999 and fold mutations out of order
     (ADVICE r2). Force a seq past the pad and check the fold still applies
     the later layer last."""
-    t = KeyedTable(spark, str(tmp_path / "big"), num_partitions=2, compact_threshold=99)
+    t = KeyedTable(spark, str(tmp_path / "big"), compact_threshold=99)
     t.create(spark.createDataFrame([Row(key="a", ts=10, v=1)]))
     # jump the sequence over the pad boundary; both updates share ts=20 so
     # the (ts, layer-seq) tie-break alone decides the winner — under a
@@ -602,7 +648,7 @@ def test_layer_order_is_numeric_not_lexical(spark, tmp_path, monkeypatch):
 def test_time_travel_reads_layer_prefix(spark, tmp_path):
     """LSM time travel: any historical state is a layer-prefix read; a
     snapshot taken before later mutations replays exactly."""
-    t = KeyedTable(spark, str(tmp_path / "tt"), num_partitions=2, compact_threshold=99)
+    t = KeyedTable(spark, str(tmp_path / "tt"), compact_threshold=99)
     t.create(spark.createDataFrame([Row(key="a", ts=10, v=1), Row(key="b", ts=10, v=2)]))
     s0 = t.snapshot_seq()
     t.update(spark.createDataFrame([Row(key="a", ts=20, v=100)]))
@@ -618,7 +664,7 @@ def test_time_travel_reads_layer_prefix(spark, tmp_path):
     assert at1 == {"a": 100, "b": 2}
 
 
-def test_keyed_table_range_scan_prunes_layer_files(spark, tmp_path):
+def test_keyed_table_range_scan_prunes_layer_files(spark, tmp_path, layer_files):
     """The HBase-core primitive, proven on real parquet footers: the sorted
     range-partitioned layout gives every layer file a narrow key min/max,
     so a key-range scan (HBase Scan(start, stop)) statistically overlaps
@@ -635,9 +681,9 @@ def test_keyed_table_range_scan_prunes_layer_files(spark, tmp_path):
         (F.col("id") % 97).alias("v"),
         F.lit(0).alias("ts"),
     )
-    tbl = KeyedTable(spark, str(tmp_path / "rt"), key_col="key", ts_col="ts",
-                     num_partitions=parts)
-    tbl.create(base)
+    tbl = KeyedTable(spark, str(tmp_path / "rt"), key_col="key", ts_col="ts")
+    with layer_files(parts):
+        tbl.create(base)
 
     files = glob.glob(f"{tbl.path}/base-*/**/*.parquet", recursive=True)
     assert len(files) >= parts
@@ -670,8 +716,7 @@ def test_update_rejects_partial_rows_before_writing(spark, tmp_path):
     layer the merge can never read again (every later scan dies on the
     unresolvable column) — it must fail fast with nothing written, and the
     table must stay fully readable. Partial rows are put()'s job."""
-    t = KeyedTable(spark, str(tmp_path / "wr"), key_col="key", ts_col="ts",
-                   num_partitions=2)
+    t = KeyedTable(spark, str(tmp_path / "wr"), key_col="key", ts_col="ts")
     t.create(spark.createDataFrame([(1, "a", 0), (2, "b", 0)],
                                    "key long, name string, ts int"))
     with pytest.raises(ValueError, match="whole-row"):
@@ -690,8 +735,7 @@ def test_ddl_guards(spark, tmp_path):
     overwrite stored values with the default); DROP of a missing column is
     a no-op per the reference's IfExists contract; DROP of the key or ts
     column refuses (structural)."""
-    t = KeyedTable(spark, str(tmp_path / "ddlg"), key_col="key", ts_col="ts",
-                   num_partitions=2)
+    t = KeyedTable(spark, str(tmp_path / "ddlg"), key_col="key", ts_col="ts")
     t.create(spark.createDataFrame([(1, "a", 0)], "key long, name string, ts int"))
     with pytest.raises(ValueError, match="already exists"):
         t.add_column("name", default="X")
@@ -707,8 +751,7 @@ def test_ddl_guards(spark, tmp_path):
 def test_create_refuses_existing_table(spark, tmp_path):
     """HBase's TableExistsException: a second create would silently union
     two base generations; it must raise with the original data intact."""
-    t = KeyedTable(spark, str(tmp_path / "ce"), key_col="key", ts_col="ts",
-                   num_partitions=2)
+    t = KeyedTable(spark, str(tmp_path / "ce"), key_col="key", ts_col="ts")
     t.create(spark.createDataFrame([(1, "a", 0)], "key long, name string, ts int"))
     with pytest.raises(FileExistsError):
         t.create(spark.createDataFrame([(9, "z", 1)], "key long, name string, ts int"))
@@ -718,7 +761,7 @@ def test_create_refuses_existing_table(spark, tmp_path):
     assert [r["key"] for r in t.df().collect()] == [9]
 
 
-def test_dirty_compaction_rewrites_only_delta_covered_ranges(spark, tmp_path):
+def test_dirty_compaction_rewrites_only_delta_covered_ranges(spark, tmp_path, layer_files):
     """compact(scope='dirty') must fold the delta stack into ONLY the base
     part-files whose footer key range overlaps the deltas: untouched base
     files survive BYTE-IDENTICAL at their original paths (at 100 TB a
@@ -730,10 +773,11 @@ def test_dirty_compaction_rewrites_only_delta_covered_ranges(spark, tmp_path):
 
     t = KeyedTable(
         spark, str(tmp_path / "dirty_tbl"), key_col="k", ts_col="ts",
-        num_partitions=4, compact_threshold=50,
+        compact_threshold=50,
     )
     base = spark.createDataFrame([Row(k=i, ts=0, v=i * 10) for i in range(1000)])
-    t.create(base)
+    with layer_files(4):
+        t.create(base)
     base_dir = t._layers()[0]
     before = {
         f: hashlib.md5(f.read_bytes()).hexdigest()
@@ -773,7 +817,7 @@ def test_dirty_compaction_rewrites_only_delta_covered_ranges(spark, tmp_path):
     assert [p.name for p in t._layers()] == names
 
 
-def test_dirty_compaction_spares_clean_files_for_string_keys(spark, tmp_path):
+def test_dirty_compaction_spares_clean_files_for_string_keys(spark, tmp_path, layer_files):
     """String keys get real file-sparing dirty compaction (not the old
     full-fold fallback): this engine's parquet writer stores string chunk
     stats exact-or-absent, so footer ranges are trusted and untouched
@@ -782,9 +826,10 @@ def test_dirty_compaction_spares_clean_files_for_string_keys(spark, tmp_path):
 
     t = KeyedTable(
         spark, str(tmp_path / "strkey_tbl"), key_col="k", ts_col="ts",
-        num_partitions=4, compact_threshold=50,
+        compact_threshold=50,
     )
-    t.create(spark.createDataFrame([Row(k=f"k{i:03d}", ts=0, v=i) for i in range(1000)]))
+    with layer_files(4):
+        t.create(spark.createDataFrame([Row(k=f"k{i:03d}", ts=0, v=i) for i in range(1000)]))
     base_dir = t._layers()[0]
     before = {
         f: hashlib.md5(f.read_bytes()).hexdigest()
@@ -810,7 +855,7 @@ def test_dirty_compaction_long_string_keys_widen_max_but_stay_correct(spark, tmp
     comparison path (interval sort/merge, overlap bisect)."""
     t = KeyedTable(
         spark, str(tmp_path / "longkey_tbl"), key_col="k", ts_col="ts",
-        num_partitions=2, compact_threshold=50,
+        compact_threshold=50,
     )
     pad = "x" * 80  # > _STR_STAT_GUARD chars
     t.create(
@@ -827,7 +872,7 @@ def test_dirty_compaction_long_string_keys_widen_max_but_stay_correct(spark, tmp
     assert all(not p.name.startswith("delta-") for p in t._layers())
 
 
-def test_dirty_compaction_interval_list_spares_middle_files(spark, tmp_path):
+def test_dirty_compaction_interval_list_spares_middle_files(spark, tmp_path, layer_files):
     """Two localized batches at OPPOSITE ends of the key space must not
     dirty the base files between them: dirty-file selection is per
     delta-part-file interval, not one [min,max] envelope over the whole
@@ -836,9 +881,10 @@ def test_dirty_compaction_interval_list_spares_middle_files(spark, tmp_path):
 
     t = KeyedTable(
         spark, str(tmp_path / "iv_tbl"), key_col="k", ts_col="ts",
-        num_partitions=8, compact_threshold=50,
+        compact_threshold=50,
     )
-    t.create(spark.createDataFrame([Row(k=i, ts=0, v=i) for i in range(8000)]))
+    with layer_files(8):
+        t.create(spark.createDataFrame([Row(k=i, ts=0, v=i) for i in range(8000)]))
     base_dir = t._layers()[0]
     before = {
         f: hashlib.md5(f.read_bytes()).hexdigest()
@@ -869,7 +915,7 @@ def test_dirty_compact_cell_delete_of_absent_keys_invents_no_rows(spark, tmp_pat
     for keys that never existed."""
     t = KeyedTable(
         spark, str(tmp_path / "cd_tbl"), key_col="k", ts_col="ts",
-        num_partitions=2, compact_threshold=50,
+        compact_threshold=50,
     )
     t.create(spark.createDataFrame([Row(k=i, ts=0, v=i) for i in range(10)]))
     # cell-delete keys far outside the base key range -> zero dirty files
@@ -886,7 +932,7 @@ def test_dirty_compact_lone_delta_dedups_in_batch_duplicates(spark, tmp_path):
     of a duplicated key into the folded base."""
     t = KeyedTable(
         spark, str(tmp_path / "dup_tbl"), key_col="k", ts_col="ts",
-        num_partitions=2, compact_threshold=50,
+        compact_threshold=50,
     )
     t.create(spark.createDataFrame([Row(k=i, ts=0, v=i) for i in range(10)]))
     t.update(
@@ -907,7 +953,7 @@ def test_dirty_compact_crash_before_delta_cleanup_resurrects_nothing(spark, tmp_
 
     t = KeyedTable(
         spark, str(tmp_path / "crash_tbl"), key_col="k", ts_col="ts",
-        num_partitions=4, compact_threshold=50,
+        compact_threshold=50,
     )
     t.create(spark.createDataFrame([Row(k=i, ts=0, v=i) for i in range(1000)]))
     t.delete(spark.createDataFrame([Row(k=5)]))
@@ -935,16 +981,17 @@ def test_dirty_compact_crash_before_delta_cleanup_resurrects_nothing(spark, tmp_
     assert all(not p.name.startswith("delta-") for p in t._layers())
 
 
-def test_time_travel_past_dirty_compaction_raises(spark, tmp_path):
+def test_time_travel_past_dirty_compaction_raises(spark, tmp_path, layer_files):
     """Dirty compaction unlinks part-files from old base layers, so a
     layer-prefix read predating it would be a silent PARTIAL snapshot —
     it must fail loudly instead (full compaction already does, by leaving
     no layers at the old seqs)."""
     t = KeyedTable(
         spark, str(tmp_path / "tt_tbl"), key_col="k", ts_col="ts",
-        num_partitions=4, compact_threshold=50,
+        compact_threshold=50,
     )
-    t.create(spark.createDataFrame([Row(k=i, ts=0, v=i) for i in range(1000)]))
+    with layer_files(4):
+        t.create(spark.createDataFrame([Row(k=i, ts=0, v=i) for i in range(1000)]))
     s0 = t.snapshot_seq()
     t.update(spark.createDataFrame([Row(k=i, ts=1, v=-i) for i in range(10)]))
     t.compact(scope="dirty")
@@ -970,7 +1017,7 @@ def test_dirty_compact_retry_after_crash_mid_write_is_idempotent(
 
     tbl = KeyedTable(
         spark, str(tmp_path / "t"), key_col="key", ts_col="ts",
-        num_partitions=2, compact_threshold=50,
+        compact_threshold=50,
     )
     tbl.create(
         spark.createDataFrame([Row(key=k, cnt=10, ts=100) for k in range(8)])
@@ -1011,7 +1058,7 @@ def test_dirty_compact_folds_stamped_layers_in_seq_order(spark, tmp_path, monkey
 
     tbl = KeyedTable(
         spark, str(tmp_path / "t"), key_col="key", ts_col="ts",
-        num_partitions=2, compact_threshold=50,
+        compact_threshold=50,
     )
     tbl.create(spark.createDataFrame([Row(key=k, v="A", ts=100) for k in range(4)]))
     # stamped layer first (suffix 'zz' sorts above any digit string)
@@ -1029,7 +1076,7 @@ def test_dirty_compact_folds_stamped_layers_in_seq_order(spark, tmp_path, monkey
     # stamped-increment crash retry stays idempotent too
     tbl2 = KeyedTable(
         spark, str(tmp_path / "t2"), key_col="key", ts_col="ts",
-        num_partitions=2, compact_threshold=50,
+        compact_threshold=50,
     )
     tbl2.create(spark.createDataFrame([Row(key=k, cnt=10, ts=100) for k in range(4)]))
     tbl2.increment(
@@ -1057,35 +1104,32 @@ def test_dirty_compact_folds_stamped_layers_in_seq_order(spark, tmp_path, monkey
 # -- ROW Bloom sidecars (BloomType.ROW, HBaseAdminUtils.scala:89-100) -------
 
 
-def _bloom_pair(spark, tmp_path, n=5000, nparts=4):
+def _bloom_pair(spark, tmp_path, layer_files, n=5000, nparts=4):
     """(bloomed, plain) handles over ONE on-disk table with a base + four
     full-keyspace delta layers + a tombstone batch — the layer shape where
     min/max footer stats prune nothing and only the Bloom can skip files."""
     root = str(tmp_path / "bt")
-    tbl = KeyedTable(
-        spark, root, key_col="k", ts_col="ts", num_partitions=nparts, bloom=True
-    )
+    tbl = KeyedTable(spark, root, key_col="k", ts_col="ts", bloom=True)
     rows = spark.range(n).select(
         F.col("id").alias("k"), (F.col("id") % 7).alias("v"),
         F.lit(0).cast("int").alias("ts"),
     )
-    tbl.create(rows)
-    for i in range(1, 4):
-        tbl.update(
-            rows.where(F.col("k") % 97 == i).select(
-                "k", (F.col("v") + 100 * i).alias("v"),
-                F.lit(i).cast("int").alias("ts"),
+    with layer_files(nparts):
+        tbl.create(rows)
+        for i in range(1, 4):
+            tbl.update(
+                rows.where(F.col("k") % 97 == i).select(
+                    "k", (F.col("v") + 100 * i).alias("v"),
+                    F.lit(i).cast("int").alias("ts"),
+                )
             )
-        )
-    tbl.delete(rows.where(F.col("k") % 101 == 5).select("k"))
-    plain = KeyedTable(
-        spark, root, key_col="k", ts_col="ts", num_partitions=nparts, bloom=False
-    )
+        tbl.delete(rows.where(F.col("k") % 101 == 5).select("k"))
+    plain = KeyedTable(spark, root, key_col="k", ts_col="ts", bloom=False)
     return tbl, plain
 
 
-def test_bloom_point_read_matches_plain_across_mutation_matrix(spark, tmp_path):
-    tbl, plain = _bloom_pair(spark, tmp_path)
+def test_bloom_point_read_matches_plain_across_mutation_matrix(spark, tmp_path, layer_files):
+    tbl, plain = _bloom_pair(spark, tmp_path, layer_files)
     keys = [97 * 1 + 1, 97 * 2 + 2, 101 * 5 + 5, 500, 4999, 9_999_999]
     got = {r["k"]: r["v"] for r in tbl.point_read(keys).collect()}
     want = {r["k"]: r["v"] for r in plain.point_read(keys).collect()}
@@ -1094,8 +1138,8 @@ def test_bloom_point_read_matches_plain_across_mutation_matrix(spark, tmp_path):
     assert 101 * 5 + 5 not in got
 
 
-def test_bloom_prunes_files_and_absent_keys_read_nothing(spark, tmp_path):
-    tbl, _ = _bloom_pair(spark, tmp_path)
+def test_bloom_prunes_files_and_absent_keys_read_nothing(spark, tmp_path, layer_files):
+    tbl, _ = _bloom_pair(spark, tmp_path, layer_files)
     layers = tbl._visible_layers(None)
     total = sum(len(list(p.glob("*.parquet"))) for p in layers)
     cands = tbl._bloom_candidates(layers, [500, 1500])
@@ -1109,23 +1153,23 @@ def test_bloom_prunes_files_and_absent_keys_read_nothing(spark, tmp_path):
     assert tbl.point_read([77_000_001]).count() == 0
 
 
-def test_bloom_never_false_negative(spark, tmp_path):
+def test_bloom_never_false_negative(spark, tmp_path, layer_files):
     """Every present key must be a candidate in the layer holding it —
     probed across the whole keyspace (fpp only ever ADDS candidates)."""
-    tbl, plain = _bloom_pair(spark, tmp_path, n=2000)
+    tbl, plain = _bloom_pair(spark, tmp_path, layer_files, n=2000)
     keys = list(range(0, 2000, 37))
     got = sorted(r["k"] for r in tbl.point_read(keys).collect())
     want = sorted(r["k"] for r in plain.point_read(keys).collect())
     assert got == want
 
 
-def test_bloom_stale_sidecar_degrades_to_full_read(spark, tmp_path):
+def test_bloom_stale_sidecar_degrades_to_full_read(spark, tmp_path, layer_files):
     """A layer whose file set changed under the sidecar (foreign file
     added) must be read in FULL — validity is the recorded (name, size)
     superset check, and correctness never rides on sidecar freshness."""
     import shutil as _sh
 
-    tbl, plain = _bloom_pair(spark, tmp_path, n=1000)
+    tbl, plain = _bloom_pair(spark, tmp_path, layer_files, n=1000)
     layers = tbl._visible_layers(None)
     base = layers[0]
     # clone a part-file into the layer: fingerprint no longer covers it
@@ -1139,20 +1183,21 @@ def test_bloom_stale_sidecar_degrades_to_full_read(spark, tmp_path):
     assert got == want
 
 
-def test_bloom_survives_dirty_compaction_without_patching(spark, tmp_path):
+def test_bloom_survives_dirty_compaction_without_patching(spark, tmp_path, layer_files):
     """Dirty compaction unlinks part-files from old base layers; the
     subset-tolerant fingerprint keeps the SURVIVORS' sidecar valid (rows
     for dead files match no live path), and the freshly folded layer gets
     its own sidecar through _write_layer."""
     root = str(tmp_path / "dc")
     tbl = KeyedTable(
-        spark, root, key_col="k", ts_col="ts", num_partitions=4, bloom=True
+        spark, root, key_col="k", ts_col="ts", bloom=True
     )
     rows = spark.range(4000).select(
         F.col("id").alias("k"),
         (F.col("id") % 5).alias("v"), F.lit(0).cast("int").alias("ts"),
     )
-    tbl.create(rows)
+    with layer_files(4):
+        tbl.create(rows)
     # localized batch: dirties only the low-key base files
     tbl.update(
         rows.where(F.col("k") < 200).select(
@@ -1175,7 +1220,7 @@ def test_bloom_lone_delta_frame_still_folds(spark, tmp_path):
     passthrough is only legal for a folded base)."""
     root = str(tmp_path / "ld")
     tbl = KeyedTable(
-        spark, root, key_col="k", ts_col="ts", num_partitions=2, bloom=True
+        spark, root, key_col="k", ts_col="ts", bloom=True
     )
     tbl.create(
         spark.createDataFrame([Row(k=i, v=0, ts=0) for i in range(50)])
@@ -1190,7 +1235,7 @@ def test_bloom_lone_delta_frame_still_folds(spark, tmp_path):
 
 def test_build_blooms_backfills_and_unblooms_read_identically(spark, tmp_path):
     root = str(tmp_path / "bf")
-    plain = KeyedTable(spark, root, key_col="k", ts_col="ts", num_partitions=4)
+    plain = KeyedTable(spark, root, key_col="k", ts_col="ts")
     rows = spark.range(1000).select(
         F.col("id").alias("k"), (F.col("id") * 3).alias("v"),
         F.lit(0).cast("int").alias("ts"),
@@ -1200,7 +1245,7 @@ def test_build_blooms_backfills_and_unblooms_read_identically(spark, tmp_path):
         "k", (F.col("v") + 7).alias("v"), F.lit(1).cast("int").alias("ts")
     ))
     bloomed = KeyedTable(
-        spark, root, key_col="k", ts_col="ts", num_partitions=4, bloom=True
+        spark, root, key_col="k", ts_col="ts", bloom=True
     )
     layers = bloomed._visible_layers(None)
     assert all(bloomed._bloom_meta(p) is None for p in layers)
@@ -1217,7 +1262,7 @@ def test_bloom_skips_unsupported_key_dtype(spark, tmp_path):
     must refuse (no sidecar) and reads fall back to the plain path."""
     root = str(tmp_path / "fd")
     tbl = KeyedTable(
-        spark, root, key_col="k", ts_col="ts", num_partitions=2, bloom=True
+        spark, root, key_col="k", ts_col="ts", bloom=True
     )
     tbl.create(
         spark.createDataFrame([Row(k=float(i), v=i, ts=0) for i in range(10)])
@@ -1235,7 +1280,7 @@ def test_bloom_build_failure_never_fails_the_write(spark, tmp_path, monkeypatch)
     (no sidecar -> full read) and the data is intact."""
     root = str(tmp_path / "sf")
     tbl = KeyedTable(
-        spark, root, key_col="k", ts_col="ts", num_partitions=2, bloom=True
+        spark, root, key_col="k", ts_col="ts", bloom=True
     )
     tbl.create(spark.createDataFrame([Row(k=i, v=i, ts=0) for i in range(20)]))
 
@@ -1253,12 +1298,12 @@ def test_bloom_build_failure_never_fails_the_write(spark, tmp_path, monkeypatch)
     assert got == {3: 10, 5: 5}
 
 
-def test_bloom_point_read_respects_as_of_layer(spark, tmp_path):
+def test_bloom_point_read_respects_as_of_layer(spark, tmp_path, layer_files):
     """Time-travel multigets consult only the visible layer prefix's
     sidecars: a key updated in later deltas must come back at its base
     version, and keys whose only rows live in pruned-away layers behave
     exactly like the plain path."""
-    tbl, plain = _bloom_pair(spark, tmp_path, n=1000)
+    tbl, plain = _bloom_pair(spark, tmp_path, layer_files, n=1000)
     k_updated = 97 * 2 + 2   # moved by the ts-2 update batch
     k_deleted = 101 * 5 + 5  # tombstoned at the end
     got = {
@@ -1313,7 +1358,7 @@ def test_changes_feed_types_every_mutation_kind(spark, table):
 def _mutation_stack(spark, path, n=200):
     """A table with every mutation kind spread across two epochs, split by
     a snapshot in the middle — the prefix-compaction test bed."""
-    t = KeyedTable(spark, path, key_col="k", ts_col="ts", num_partitions=4,
+    t = KeyedTable(spark, path, key_col="k", ts_col="ts",
                    compact_threshold=100)
     t.create(
         spark.range(0, n).select(
@@ -1387,8 +1432,7 @@ def test_full_compaction_breaks_a_stale_feed_loudly_not_silently(spark, tmp_path
 
 
 def test_prefix_compaction_preserves_consumed_stamps(spark, tmp_path):
-    t = KeyedTable(spark, str(tmp_path / "t"), key_col="k", ts_col="ts",
-                   num_partitions=2)
+    t = KeyedTable(spark, str(tmp_path / "t"), key_col="k", ts_col="ts")
     t.create(spark.range(0, 10).select(
         F.col("id").alias("k"), F.col("id").alias("v"),
         F.lit(0).cast("int").alias("ts")))
@@ -1413,8 +1457,7 @@ def test_prefix_compaction_crash_residue_never_double_applies(spark, tmp_path):
     would double-count — and the next prefix compaction sweeps it."""
     import shutil as _sh
 
-    t = KeyedTable(spark, str(tmp_path / "t"), key_col="k", ts_col="ts",
-                   num_partitions=2)
+    t = KeyedTable(spark, str(tmp_path / "t"), key_col="k", ts_col="ts")
     t.create(spark.range(0, 20).select(
         F.col("id").alias("k"), (F.col("id") * 10).alias("v"),
         F.lit(0).cast("int").alias("ts")))
@@ -1470,7 +1513,7 @@ def test_semi_read_matches_fold_then_semi_join(spark, tmp_path, monkeypatch):
     for cap in (KeyedTable.POINT_READ_CAP, 0):
         monkeypatch.setattr(KeyedTable, "POINT_READ_CAP", cap)
         t = KeyedTable(spark, str(tmp_path / f"t{cap}"), key_col="k",
-                       ts_col="ts", num_partitions=4)
+                       ts_col="ts")
         t.create(base)
         plan = plans.formatted_plan(t.semi_read(keys))
         assert ("In(k," in plan) == (cap > 0), plan
@@ -1514,8 +1557,7 @@ def test_semi_read_pushes_key_envelope_to_layer_scans(spark, tmp_path, monkeypat
 
     monkeypatch.setattr(KeyedTable, "POINT_READ_CAP", 100)
 
-    t = KeyedTable(spark, str(tmp_path / "t"), key_col="k", ts_col="ts",
-                   num_partitions=4)
+    t = KeyedTable(spark, str(tmp_path / "t"), key_col="k", ts_col="ts")
     base = spark.range(1000).select(
         F.col("id").alias("k"), (F.col("id") * 3).alias("v"),
         F.lit(100).cast("int").alias("ts"),
