@@ -24,8 +24,9 @@ tracks the batch, not the table. The transaction is NOT atomic: a crash
 between its writes leaves a stale index until the writer retries (global
 Phoenix indexes carry the same caveat; their repair is a WAL replay,
 ours is re-running the idempotent batch: pass ``stamp=`` and each write
-is guarded by its own derived layer stamp, so a retry re-runs only the
-writes that never committed and a full replay is a strict no-op).
+carries its own derived layer stamp, which KeyedTable applies at most
+once, so a retry writes only the missing sub-layers and a full replay
+is a strict no-op).
 Mutating the base DIRECTLY bypasses maintenance and stales the index,
 exactly as writing HBase rows behind Phoenix's back does.
 
@@ -164,7 +165,6 @@ class SecondaryIndex:
         path: str | None = None,
         include: list[str] | None = None,
         expr: "F.Column | dict[str, F.Column] | None" = None,
-        guideposts: bool = True,
         multi: str | None = None,
     ):
         """``include``: base columns COPIED into every index entry (Phoenix
@@ -217,7 +217,6 @@ class SecondaryIndex:
         self.cols += list(self.exprs)
         if not self.cols:
             raise ValueError("at least one indexed column or expr required")
-        self.col = self.cols[0]  # back-compat alias for single-column use
         self.multi = multi
         if multi is not None:
             if multi not in self.exprs:
@@ -229,7 +228,6 @@ class SecondaryIndex:
                     f"multi component {multi!r} must be the LAST component"
                 )
         self.include = list(include or [])
-        self.guideposts = guideposts
         self._inputs: set[str] | None = None  # lazy: base may not exist yet
         reserved = {"ikey", "ivalue", "base_key"}
         bad = [
@@ -518,7 +516,7 @@ class SecondaryIndex:
         if n_stale:
             self.tbl.delete(stale.select("ikey"))
             self.tbl.compact(scope="dirty")
-        n_upserted = self.tbl.update(self._noted_entries(lambda: upserts)())
+        n_upserted = self.tbl.update(self._noted_entries(upserts))
         return {
             "missing": n_upserted - n_stale,
             "orphaned": n_orphaned,
@@ -562,10 +560,11 @@ class SecondaryIndex:
         (an equal-ts ROW applies), so the entry stays live.
 
         ``stamp`` makes the transaction retry-idempotent: each of its
-        writes is guarded by its own derived stamp (``<stamp>_xd`` /
-        ``<stamp>`` / ``<stamp>_xi``), recorded atomically in that layer's
-        directory name, so a retry after a crash between any two writes
-        re-runs ONLY the writes that never committed.
+        writes carries its own derived stamp (``<stamp>_xd`` / ``<stamp>``
+        / ``<stamp>_xi``), recorded atomically in that layer's directory
+        name, and a KeyedTable write whose stamp already committed writes
+        nothing — so a retry after a crash between any two writes writes
+        only the missing sub-layers.
 
         Returns rows applied by THIS call's base write; on a stamped retry
         whose base write already committed in a previous attempt, the
@@ -645,59 +644,33 @@ class SecondaryIndex:
         2. the base ``write(batch, **kw)`` runs under the caller's stamp;
         3. ``_xi`` inserts the entries of the touched keys' POST-write rows.
 
-        Both reads are ``semi_read`` of the batch's keys. The ``_xd`` read
-        only ever executes before the base write has landed (afterwards
-        its stamp is present and the step is skipped), so it can never
-        tombstone the NEW entries; the ``_xi`` read is lazy, run after the
-        base write, so a stamped retry reads the same post-write state.
-        ``touches=False`` (the batch changes nothing the index reads) runs
-        the base write alone; ``reinsert=False`` (row deletes, nulled
-        plain components — the post-write rows carry no entry) skips
-        step 3."""
+        Both reads are ``semi_read`` of the batch's keys. With ``stamp``
+        each write carries its own sub-stamp, and the table skips a write
+        whose stamp already committed without running its input (see
+        ``KeyedTable._write_layer``), so a retry writes only the missing
+        sub-layers. The ``_xd`` read therefore only ever executes before
+        the base write has landed and can never tombstone the NEW entries;
+        the ``_xi`` read is built after the base write, so a retry reads
+        the same post-write state. ``touches=False`` (the batch changes
+        nothing the index reads) runs the base write alone;
+        ``reinsert=False`` (row deletes, nulled plain components — the
+        post-write rows carry no entry) skips step 3."""
+        xd, xi = (None, None) if stamp is None else (f"{stamp}_xd", f"{stamp}_xi")
         if touches:
-            self._guarded(self.tbl.delete, self._stale(batch), stamp, "_xd")
-        n = self._guarded(write, lambda: batch, stamp, "", **kw)
+            # lazy checkpoint: the layer write runs its input twice (range
+            # sampling, then the write), and the stale read must run once,
+            # inside this write — before the base write lands
+            self.tbl.delete(
+                self._stale_entry_keys(batch).localCheckpoint(eager=False),
+                stamp=xd,
+            )
+        n = write(batch, stamp=stamp, **kw)
         if touches and reinsert:
-            self._guarded(
-                self.tbl.update,
-                self._noted_entries(
-                    lambda: self._entries(self.base.semi_read(batch))
-                ),
-                stamp,
-                "_xi",
+            self.tbl.update(
+                self._noted_entries(self._entries(self.base.semi_read(batch))),
+                stamp=xi,
             )
         return n
-
-    def _stale(self, touched: DataFrame):
-        return self._once(lambda: self._stale_entry_keys(touched))
-
-    def _guarded(self, write, make_batch, stamp: str | None, suffix: str, **kw) -> int:
-        """Run one maintenance sub-write, skipping it (and reporting 0
-        rows) when its derived stamp already rides a layer (or the
-        compaction-preserved manifest) of the target table — `make_batch`
-        is lazy so a skipped step never evaluates its read either. Extra
-        kwargs forward to the write (e.g. ``columns=`` for cell deletes)."""
-        if stamp is None:
-            return write(make_batch(), **kw)
-        derived = f"{stamp}{suffix}" if suffix else stamp
-        table = write.__self__
-        if derived in table.applied_stamps():
-            return 0
-        return write(make_batch(), stamp=derived, **kw)
-
-    @staticmethod
-    def _once(make_batch):
-        """Wrap a lazy maintenance read so its result materializes ONCE:
-        every layer write executes its input twice (repartitionByRange
-        samples the batch to pick range bounds, then the write job runs it
-        again — table.py:_write_layer), so an _xd/_xi batch whose lineage
-        is a point-read fold re-ran that fold per write. The batches
-        are O(batch) rows by contract, so a lazy localCheckpoint (first
-        action materializes, the write re-reads blocks) halves the
-        maintenance read cost without changing when the read executes
-        (retry-idempotence depends on that timing — see ``_maintain``).
-        Guide §2.4: remove repeated passes."""
-        return lambda: make_batch().localCheckpoint(eager=False)
 
     # -- reads ---------------------------------------------------------------
 
@@ -895,13 +868,9 @@ class SecondaryIndex:
     def _guidepost_cols(self) -> list[str]:
         """Leading columns eligible for guidepost tracking: all components
         before the LAST one, restricted to exactly-JSON-round-tripping
-        dtypes (see _GUIDEPOST_DTYPES). Empty when the index was opened
-        with ``guideposts=False`` (the opt-out for write-heavy workloads
-        that never skip-scan: it removes the per-batch materialize+union
-        from every maintenance write AND disables sidecar reads — all
-        handles of one index must agree on the setting, or a non-
-        maintaining writer would stale the sidecar other handles trust)."""
-        if not self.guideposts or len(self.cols) < 2:
+        dtypes (see _GUIDEPOST_DTYPES). Empty for a one-component index,
+        which never skip-scans."""
+        if len(self.cols) < 2:
             return []
         return [
             c
@@ -1066,39 +1035,34 @@ class SecondaryIndex:
             out.update({c: list(row[c]) for c in keep})
         return out
 
-    def _noted_entries(self, make_entries):
-        """Wrap an entries-producing thunk so the guidepost sidecar is
-        unioned before the insert job runs. The entries are materialized
-        once (localCheckpoint) so the union's aggregation and the layer
-        write share a single evaluation of the maintenance read."""
-
-        def wrapped():
-            e = make_entries()
-            gcols = self._guidepost_cols()
-            if not gcols:
-                # no sidecar to union — still materialize once, lazily:
-                # the insert layer write would otherwise run the entries
-                # lineage (a point-read fold + expression derivation)
-                # twice (range-sampling + write; see _once)
-                return e.localCheckpoint(eager=False)
-            if self._load_guideposts() is None:
-                # missing sidecar (pre-guidepost index dir, or a build()
-                # that crashed between create and refresh): heal by
-                # deriving from the FULL pre-insert index — one column-
-                # pruned scan, once — so the union below extends a
-                # complete dictionary, never a batch-only one
-                self._refresh_guideposts()
-            e = e.localCheckpoint(eager=True)
-            tcols = self._tuple_cols()
-            self._union_guideposts(
-                self._collect_leading(e, gcols, small=True),
-                self._collect_leading_tuples(e, tcols, small=True)
-                if tcols
-                else self._NO_TUPLES,
-            )
-            return e
-
-        return wrapped
+    def _noted_entries(self, e: DataFrame) -> DataFrame:
+        """Union the guidepost sidecar with the entries ``e`` before the
+        insert job runs. The entries are materialized once
+        (localCheckpoint) so the union's aggregation and the layer write
+        share a single evaluation of the maintenance read."""
+        gcols = self._guidepost_cols()
+        if not gcols:
+            # no sidecar to union — still materialize once, lazily: the
+            # insert layer write would otherwise run the entries lineage
+            # (a point-read fold + expression derivation) twice
+            # (range-sampling + write)
+            return e.localCheckpoint(eager=False)
+        if self._load_guideposts() is None:
+            # missing sidecar (pre-guidepost index dir, or a build()
+            # that crashed between create and refresh): heal by
+            # deriving from the FULL pre-insert index — one column-
+            # pruned scan, once — so the union below extends a
+            # complete dictionary, never a batch-only one
+            self._refresh_guideposts()
+        e = e.localCheckpoint(eager=True)
+        tcols = self._tuple_cols()
+        self._union_guideposts(
+            self._collect_leading(e, gcols, small=True),
+            self._collect_leading_tuples(e, tcols, small=True)
+            if tcols
+            else self._NO_TUPLES,
+        )
+        return e
 
     def _refresh_guideposts(self) -> None:
         """Recompute the sidecar FROM the index table (one column-pruned
@@ -1131,8 +1095,6 @@ class SecondaryIndex:
         overflowed/untracked column, or a cross product past the probe
         budget — the caller then live-enumerates, whose fixed-column
         constraints may still fit the budget)."""
-        if not self.guideposts:
-            return None
         gp = self._load_guideposts()
         if gp is None:
             return None

@@ -5557,7 +5557,6 @@ def _nd_index_handles(spark: SparkSession, root: str) -> dict:
     idx = SecondaryIndex(
         base, path=_os.path.join(root, "nd_band_idx"),
         expr={"band": D.band_signature_array("text")}, multi="band",
-        guideposts=False,
     )
     return {"base": base, "idx": idx}
 

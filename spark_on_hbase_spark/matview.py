@@ -346,7 +346,7 @@ class MaterializedAgg:
 
             # ---- sums + count: one stamped multi-counter delta layer ----
             stamp = f"{_STAMP_PREFIX}{cur:06d}"
-            if cur > snap_sum and stamp not in self.mv.applied_stamps():
+            if cur > snap_sum:
                 old, new, _ = window(snap_sum)
                 if old is not None:
                     delta = (
@@ -370,11 +370,7 @@ class MaterializedAgg:
                     touched = self.mv.increment_many(delta, counters, stamp=stamp)
             # ---- extremes: recompute the touched groups, stamped put ----
             stamp_x = f"{_STAMP_PREFIX}{cur:06d}_x"
-            if (
-                has_ext
-                and cur > snap_ext
-                and stamp_x not in self.mv.applied_stamps()
-            ):
+            if has_ext and cur > snap_ext:
                 old, new, _ = window(snap_ext)
                 if old is not None:
                     groups = (
@@ -394,9 +390,9 @@ class MaterializedAgg:
                     # groups whose recomputed extreme is NULL (every value
                     # cell-deleted) need an explicit cell-delete. Those
                     # land BEFORE the put; the put's stamp is the
-                    # transaction's commit record (indexed_upsert's
-                    # sub-stamp discipline), and replaying a committed-
-                    # celldel half is harmlessly idempotent.
+                    # transaction's commit record (``_ext_applied``), and
+                    # a replayed cell-delete whose stamp committed writes
+                    # nothing (KeyedTable applies a stamp at most once).
                     for j, out in enumerate([*self.mins, *self.maxs]):
                         nulls = ext.where(F.col(out).isNull()).select(
                             self.group_col

@@ -245,7 +245,7 @@ def simhash_near_pairs(
     cut the signature computation — a full pass over every shingle
     weighing 64 bit votes — executes once per side (r12, measured: 2
     identical 0.8s jobs in edit_distance_dedup's profile). A lazy
-    localCheckpoint (index.py's _once discipline; guide §2.4) materializes
+    localCheckpoint (as index maintenance does; guide §2.4) materializes
     the per-doc (id, simhash) relation — one row per document, the
     storable simhash-index artifact at 100 TB — and both sides read the
     blocks."""

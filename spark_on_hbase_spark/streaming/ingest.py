@@ -113,26 +113,34 @@ def guard_id_for(checkpoint_dir: str) -> str:
     return hashlib.md5(checkpoint_dir.encode()).hexdigest()[:12]
 
 
-def _applied_batch_guard(table: KeyedTable, body, guard_id: str):
+def _applied_batch_guard(body, guard_id: str):
     """Shared foreachBatch replay guard, ATOMIC with the data: the
-    (guard_id, batch_id) pair is stamped into the delta layer's own
-    directory name (KeyedTable mutations take ``stamp=``; the layer commits
-    via one atomic rename), so there is no crash window between applying a
-    batch and marking it applied — a batch either committed its layer
-    (stamp visible, replay skipped) or did not (replay applies). Compaction
-    preserves consumed stamps in the table's ``_applied_stamps`` manifest,
-    so replays arriving after a fold are still recognized. Empty batches
-    write nothing and record nothing: a replayed batch re-reads the same
-    checkpointed offsets, so a formerly-empty batch replays empty."""
+    (guard_id, batch_id) pair is the stamp of the batch's write, and a
+    KeyedTable stamp rides the delta layer's own directory name (one
+    atomic rename) and applies at most once — a replayed stamp writes
+    nothing, compaction included (the table keeps consumed stamps in its
+    ``_applied_stamps`` manifest). So there is no crash window between
+    applying a batch and marking it applied, and no pre-check here. Empty
+    batches write nothing and record nothing: a replayed batch re-reads
+    the same checkpointed offsets, so a formerly-empty batch replays
+    empty."""
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
-        stamp = f"g{guard_id}_b{batch_id}"
-        if stamp in table.applied_stamps():
-            return
         if not batch_df.isEmpty():
-            body(batch_df, stamp)
+            body(batch_df, f"g{guard_id}_b{batch_id}")
 
     return apply
+
+
+def _start(stream: DataFrame, body, checkpoint_dir: str, available_now: bool):
+    """Start ``stream`` into the foreachBatch ``body``, checkpointed at
+    ``checkpoint_dir``; ``available_now`` drains what is there and stops."""
+    writer = stream.writeStream.foreachBatch(body).option(
+        "checkpointLocation", checkpoint_dir
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
 
 
 def idempotent_upsert(table: KeyedTable, guard_id: str = "default"):
@@ -147,7 +155,7 @@ def idempotent_upsert(table: KeyedTable, guard_id: str = "default"):
     increment sink below. ``guard_id`` namespaces the stamps per streaming
     query (see guard_id_for) — one table can host many guarded writers."""
     return _applied_batch_guard(
-        table, lambda b, stamp: table.update(b, stamp=stamp), guard_id
+        lambda b, stamp: table.update(b, stamp=stamp), guard_id
     )
 
 
@@ -163,7 +171,6 @@ def guarded_increment(
     point (the round-5 marker-after-increment scheme left a double-count
     window between the two writes; stamping the layer closes it)."""
     return _applied_batch_guard(
-        table,
         lambda b, stamp: table.increment(
             b, counter_col, delta_col=delta_col, stamp=stamp
         ),
@@ -191,14 +198,10 @@ def increment_stream_into_table(
     batch ids actually live in.
 
     Returns the StreamingQuery (caller awaits/stops)."""
-    writer = stream.writeStream.foreachBatch(
-        guarded_increment(
-            table, counter_col, delta_col, guard_id=guard_id_for(checkpoint_dir)
-        )
-    ).option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    body = guarded_increment(
+        table, counter_col, delta_col, guard_id=guard_id_for(checkpoint_dir)
+    )
+    return _start(stream, body, checkpoint_dir, available_now)
 
 
 def merge_stream_into_table(
@@ -211,12 +214,8 @@ def merge_stream_into_table(
     appends a duplicate delta layer.
 
     Returns the StreamingQuery (caller awaits/stops)."""
-    writer = stream.writeStream.foreachBatch(
-        idempotent_upsert(table, guard_id=guard_id_for(checkpoint_dir))
-    ).option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    body = idempotent_upsert(table, guard_id=guard_id_for(checkpoint_dir))
+    return _start(stream, body, checkpoint_dir, available_now)
 
 
 def indexed_upsert(idx, guard_id: str = "default"):
@@ -224,44 +223,35 @@ def indexed_upsert(idx, guard_id: str = "default"):
     exposed for direct testing: applies a micro-batch THROUGH a
     SecondaryIndex as one stamped maintenance transaction
     (``SecondaryIndex.update(batch, stamp=)`` — tombstone-old / base-merge
-    / insert-new, each sub-write guarded by its own derived layer stamp).
-    The batch-applied check reads the LAST sub-stamp (``<stamp>_xi``): the
-    insert only ever commits after the earlier jobs, so its stamp is the
-    transaction's commit record. A replayed batch whose earlier jobs
-    committed but whose insert did not re-runs exactly the missing jobs —
-    Structured Streaming's replay IS the index's documented repair path,
-    closing the stale window automatically at the next restart."""
-
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        stamp = f"g{guard_id}_b{batch_id}"
-        if f"{stamp}_xi" in idx.tbl.applied_stamps():
-            return
-        if not batch_df.isEmpty():
-            idx.update(batch_df, stamp=stamp)
-
-    return apply
+    / insert-new, each sub-write under its own derived layer stamp, which
+    KeyedTable applies at most once). A replayed batch whose earlier jobs
+    committed but whose insert did not writes exactly the missing layers,
+    and a replay of a fully applied batch writes none — Structured
+    Streaming's replay IS the index's documented repair path, closing the
+    stale window automatically at the next restart."""
+    return _applied_batch_guard(
+        lambda b, stamp: idx.update(b, stamp=stamp), guard_id
+    )
 
 
 def matview_maintained_upsert(mv, guard_id: str = "default"):
     """The foreachBatch body for ``merge_stream_into_matviewed_table``,
     exposed for direct testing: a guarded last-writer-wins upsert into the
-    view's BASE table followed by an incremental view refresh
-    (``MaterializedAgg.refresh`` — delta = agg(new) − agg(old) over the
-    changed keys, applied as one stamped multi-counter layer). Both halves
-    carry their own idempotence stamp in a layer directory name, so the
-    composition is exactly-once under replay with NO coordination between
-    them: a replayed batch skips the base write (batch stamp present) and
-    refresh() no-ops (view already at the base's snapshot seq); a crash
-    BETWEEN base write and refresh leaves the view merely behind, and the
-    stream's own replay of that batch id — or any later batch — catches it
-    up, because refresh always advances to the current snapshot, not to a
-    per-batch target."""
+    view's BASE table (``idempotent_upsert``) followed by an incremental
+    view refresh (``MaterializedAgg.refresh`` — delta = agg(new) − agg(old)
+    over the changed keys, applied as one stamped multi-counter layer).
+    Both halves carry their own idempotence stamp in a layer directory
+    name, so the composition is exactly-once under replay with NO
+    coordination between them: a replayed batch's base write writes
+    nothing (batch stamp applied) and refresh() no-ops (view already at
+    the base's snapshot seq); a crash BETWEEN base write and refresh
+    leaves the view merely behind, and the stream's own replay of that
+    batch id — or any later batch — catches it up, because refresh always
+    advances to the current snapshot, not to a per-batch target."""
+    upsert = idempotent_upsert(mv.base, guard_id)
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
-        stamp = f"g{guard_id}_b{batch_id}"
-        if stamp not in mv.base.applied_stamps():
-            if not batch_df.isEmpty():
-                mv.base.update(batch_df, stamp=stamp)
+        upsert(batch_df, batch_id)
         mv.refresh()
 
     return apply
@@ -280,12 +270,8 @@ def merge_stream_into_matviewed_table(
     point reads of the changed keys, one multi-counter delta append.
     Stamps are namespaced per checkpoint (see guard_id_for). Returns the
     StreamingQuery (caller awaits/stops)."""
-    writer = stream.writeStream.foreachBatch(
-        matview_maintained_upsert(mv, guard_id=guard_id_for(checkpoint_dir))
-    ).option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    body = matview_maintained_upsert(mv, guard_id=guard_id_for(checkpoint_dir))
+    return _start(stream, body, checkpoint_dir, available_now)
 
 
 def merge_stream_into_indexed_table(
@@ -298,12 +284,8 @@ def merge_stream_into_indexed_table(
     crash between the maintenance jobs self-repairs on the stream's own
     replay of that batch id. Stamps are namespaced per checkpoint (see
     guard_id_for). Returns the StreamingQuery (caller awaits/stops)."""
-    writer = stream.writeStream.foreachBatch(
-        indexed_upsert(idx, guard_id=guard_id_for(checkpoint_dir))
-    ).option("checkpointLocation", checkpoint_dir)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    body = indexed_upsert(idx, guard_id=guard_id_for(checkpoint_dir))
+    return _start(stream, body, checkpoint_dir, available_now)
 
 
 def windowed_agg(

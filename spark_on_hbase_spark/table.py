@@ -300,16 +300,23 @@ class KeyedTable:
 
         ``stamp``: an idempotence token recorded IN the layer directory name
         (``<kind>-<seq>-<stamp>``), so data and applied-marker commit in the
-        same atomic rename — there is no crash window between them. Used by
-        the streaming replay guards (streaming/ingest.py); query via
-        ``applied_stamps()``. Compaction preserves consumed stamps in the
-        ``_applied_stamps`` manifest (see ``_replace_all_layers``)."""
+        same atomic rename — there is no crash window between them. A delta
+        whose stamp is already in ``applied_stamps()`` (a live layer name or
+        the ``_applied_stamps`` manifest compaction keeps, see
+        ``_replace_all_layers``) is a retry of a committed write: nothing
+        runs on ``df`` and 0 is returned — the region server dropping a
+        retried Increment by its nonce. Every stamped mutation gets its
+        exactly-once guarantee here, so callers never pre-check. Base
+        layers are exempt: prefix compaction writes each folded base under
+        the same internal ``pfxfold`` stamp."""
         if stamp is not None and not _STAMP_RE.fullmatch(stamp):
             raise ValueError(
                 f"layer stamp must match [A-Za-z0-9_]+ (got {stamp!r}): the "
                 f"stamp rides the directory name, so separators would break "
                 f"seq parsing and suffix handling"
             )
+        if stamp is not None and kind == "delta" and stamp in self.applied_stamps():
+            return 0
         # ``seq``: explicit layer sequence — ONLY for prefix compaction,
         # whose folded base must order before the retained deltas (the
         # folded prefix's max seq is free: that layer is being replaced)
@@ -354,8 +361,8 @@ class KeyedTable:
         """All idempotence stamps this table has durably applied: stamps
         riding live layer names plus stamps preserved in the
         ``_applied_stamps`` manifest when compaction folded their layers
-        away. The streaming replay guards treat membership here as 'this
-        batch already committed'."""
+        away. ``_write_layer`` treats membership here as 'this stamped
+        delta already committed' and writes nothing."""
         stamps = {s for p in self._layers() if (s := self._stamp_of(p))}
         manifest = Path(self.path) / "_applied_stamps"
         if manifest.exists():
@@ -1007,7 +1014,11 @@ class KeyedTable:
         Whole-row means WHOLE row: the batch must carry exactly the
         table's columns. A missing column would write a layer the merge
         can no longer read (every subsequent scan fails) — fail fast
-        BEFORE writing instead; partial-row mutations are ``put``'s job."""
+        BEFORE writing instead; partial-row mutations are ``put``'s job.
+
+        ``stamp`` names the layer and makes the call apply at most once:
+        a retry with an applied stamp writes nothing and returns 0 (see
+        ``_write_layer``; the same holds for put, increment and delete)."""
         expected = set(self._schema())
         got = set(batch.columns) - {_TOMBSTONE}
         if got != expected:
@@ -1061,7 +1072,8 @@ class KeyedTable:
         values. O(batch): absent columns ride as typed nulls in one SPARSE
         delta layer and resolve per-column at merge/compaction — the table
         is neither read nor rewritten, matching HBase's per-cell memstore
-        append."""
+        append. A retry with an applied ``stamp`` returns 0 (see
+        ``update``)."""
         schema = self._schema()
         unknown = [c for c in batch.columns if c not in schema]
         if unknown:
@@ -1090,7 +1102,9 @@ class KeyedTable:
         table (a counter batch at 100 TB costs the batch, not a full-table
         shuffle). The single-counter case of ``increment_many`` — one body,
         one validation set (review finding: the two implementations had
-        already drifted on the key/ts-column guard)."""
+        already drifted on the key/ts-column guard). A retry with an applied
+        ``stamp`` adds nothing and returns 0 — the nonce check HBase runs
+        on a retried Increment (see ``update``)."""
         return self.increment_many(batch, {counter_col: delta_col}, stamp=stamp)
 
     def increment_many(
@@ -1157,7 +1171,8 @@ class KeyedTable:
         DeleteColumn) (S8/S11, HBaseTable.delete, HBaseTable.scala:181-212:
         null qualifier set => whole row, named qualifiers => those cells).
         O(batch): only the keys are written — the table is not read;
-        resolution happens at merge/compaction like every other mutation."""
+        resolution happens at merge/compaction like every other mutation.
+        A retry with an applied ``stamp`` returns 0 (see ``update``)."""
         schema = self._schema()
         keys = keys.select(self.key_col).distinct()
         skeleton = keys.select(

@@ -402,15 +402,15 @@ def test_composite_index_leading_edge_probes(spark, tmp_path):
 def test_stamped_maintenance_converges_under_crash_and_replay(spark, tmp_path):
     """The Phoenix repair story as code: a stamped idx.update is a
     retry-idempotent transaction. Crash it between every pair of its three
-    sub-writes (simulated by running the guarded steps directly), retry the
-    whole op with the same stamp, and the pair must converge — each
+    sub-writes (simulated by making its stamped sub-writes directly), retry
+    the whole op with the same stamp, and the pair must converge — each
     sub-write commits exactly once (stamps pin this), reads stay correct,
     and a full replay after success is a strict no-op (no new layers)."""
     tbl, idx = _fixture(spark, tmp_path)
     b1 = spark.createDataFrame([Row(key=1, name="a2", color="blue", ts=200)])
 
     # crash after sub-write 1 (stale entries tombstoned, base untouched)
-    idx._guarded(idx.tbl.delete, idx._stale(b1), "b1", "_xd")
+    idx.tbl.delete(idx._stale_entry_keys(b1), stamp="b1_xd")
     idx.update(b1, stamp="b1")  # retry
     assert {r["key"] for r in idx.lookup("red").collect()} == {2}
     assert 1 in {r["key"] for r in idx.lookup("blue").collect()}
@@ -420,8 +420,8 @@ def test_stamped_maintenance_converges_under_crash_and_replay(spark, tmp_path):
     # crash after sub-write 2 (base mutated, index insert missing: the
     # documented stale window — old entry gone, new entry absent)
     b2 = spark.createDataFrame([Row(key=2, name="b2", color="green", ts=300)])
-    idx._guarded(idx.tbl.delete, idx._stale(b2), "b2", "_xd")
-    idx._guarded(tbl.update, lambda: b2, "b2", "")
+    idx.tbl.delete(idx._stale_entry_keys(b2), stamp="b2_xd")
+    tbl.update(b2, stamp="b2")
     assert idx.lookup("green").count() == 0  # mid-crash staleness, honest
     idx.update(b2, stamp="b2")  # retry runs ONLY the index insert
     assert {r["key"] for r in idx.lookup("green").collect()} == {2}
@@ -473,9 +473,9 @@ def test_stamped_maintenance_converges_under_crash_and_replay(spark, tmp_path):
     for name, batch, write, kw in ops:
         for crash_after_base in (False, True):
             stamp = f"{name}{int(crash_after_base)}"
-            cidx._guarded(cidx.tbl.delete, cidx._stale(batch), stamp, "_xd")
+            cidx.tbl.delete(cidx._stale_entry_keys(batch), stamp=f"{stamp}_xd")
             if crash_after_base:
-                cidx._guarded(write, lambda: batch, stamp, "", **kw)
+                write(batch, stamp=stamp, **kw)
             getattr(cidx, "put" if name == "put" else "increment")(
                 batch, stamp=stamp, **kw
             )
@@ -1499,28 +1499,6 @@ def test_skip_scan_out_of_range_fixed_value_never_lies(spark, tmp_path):
     ]
 
 
-def test_guideposts_opt_out_disables_maintenance_and_reads(spark, tmp_path):
-    """guideposts=False: no sidecar is created or consulted; skip scans
-    use live enumeration and stay correct."""
-    rows = spark.createDataFrame(
-        [Row(key=i, grp=i % 3, band=i, ts=100) for i in range(6)]
-    )
-    tbl = KeyedTable(
-        spark, str(tmp_path / "b"), key_col="key", ts_col="ts"
-    )
-    tbl.create(rows)
-    idx = SecondaryIndex(
-        tbl, ["grp", "band"], str(tmp_path / "i"),
-        guideposts=False,
-    ).build()
-    import os
-
-    assert not os.path.exists(idx._guidepost_path())
-    idx.update(spark.createDataFrame([Row(key=10, grp=7, band=3, ts=200)]))
-    assert not os.path.exists(idx._guidepost_path())
-    assert sorted(r["key"] for r in idx.lookup_skip(band=3).collect()) == [3, 10]
-
-
 def test_repair_wins_even_when_base_ts_moved_backwards(spark, tmp_path):
     """Behind the back: delete -> compact (tombstone folded away) ->
     reinsert at a LOWER ts. The base is live at ts 50 while the stored
@@ -1907,7 +1885,7 @@ def _multi_fixture(spark, tmp_path):
     idx = SecondaryIndex(
         tbl, path=str(tmp_path / "midx"),
         expr={"tag": F.filter(F.split(F.col("tags"), " "), lambda w: w != "")},
-        multi="tag", guideposts=False,
+        multi="tag",
     ).build()
     return tbl, idx
 
@@ -1952,7 +1930,7 @@ def test_multi_index_rejects_non_array_and_non_last(spark, tmp_path):
     # scalar expression under multi= fails at dtype resolution
     bad = SecondaryIndex(
         tbl, path=str(tmp_path / "v2"),
-        expr={"u": F.upper(F.col("name"))}, multi="u", guideposts=False,
+        expr={"u": F.upper(F.col("name"))}, multi="u",
     )
     with _pytest.raises(ValueError, match="array expression"):
         bad.build()

@@ -85,7 +85,7 @@ def test_stream_merge_through_secondary_index(spark, tmp_path):
     # crash window: batch 1's stale-delete commits, then the "stream"
     # re-runs the guarded body for the same batch id — must converge
     batch1 = spark.createDataFrame([Row(key="b", ts=2, color="green")])
-    idx._guarded(idx.tbl.delete, idx._stale(batch1), f"g{guard}_b1", "_xd")
+    idx.tbl.delete(idx._stale_entry_keys(batch1), stamp=f"g{guard}_b1_xd")
     assert idx.lookup("green").count() == 0  # honest mid-crash staleness
     body(batch1, 1)
     assert {r["key"] for r in idx.lookup("green").collect()} == {"b"}

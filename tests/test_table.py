@@ -14,6 +14,7 @@ from hypothesis.stateful import (
     RuleBasedStateMachine,
     initialize,
     invariant,
+    precondition,
     rule,
     run_state_machine_as_test,
 )
@@ -393,9 +394,12 @@ def test_mutation_sequence_matches_model(spark, tmp_path, layer_files):
     every mutation df() must equal the model, and random reads — df,
     point_read, range_read, semi_read, at the latest layer or as_of_layer
     a snapshot taken since the last compaction — must equal the model's
-    state at that point. Derandomized with no example database, so every
-    run replays the same bounded set of sequences; shrinking is off to
-    keep a failure's cost bounded (the failing steps are still printed)."""
+    state at that point. Every mutation passes a fresh stamp, and a retry
+    of the last one — before or after a compaction — must return 0 and
+    change neither the snapshot seq nor the table's contents.
+    Derandomized with no example database, so every run replays the same
+    bounded set of sequences; shrinking is off to keep a failure's cost
+    bounded (the failing steps are still printed)."""
     dirs = itertools.count()
     key_sets = st.lists(st.sampled_from(_M_PROBE), max_size=3, unique=True)
     cell_sets = st.sets(st.sampled_from(_M_CELLS), min_size=1)
@@ -407,6 +411,14 @@ def test_mutation_sequence_matches_model(spark, tmp_path, layer_files):
         def __init__(self):
             super().__init__()
             self.confs = contextlib.ExitStack()
+            self.stamps = itertools.count()
+            self.last = None  # the last stamped mutation, as a thunk
+
+        def _stamped(self, mutate, *args, **kw):
+            """Run one mutation under a fresh stamp and remember the call."""
+            stamp = f"s{next(self.stamps)}"
+            self.last = lambda: mutate(*args, stamp=stamp, **kw)
+            return self.last()
 
         def teardown(self):
             self.confs.close()
@@ -442,7 +454,9 @@ def test_mutation_sequence_matches_model(spark, tmp_path, layer_files):
 
         @rule(batch=_M_BATCH)
         def update(self, batch):
-            self.t.update(spark.createDataFrame(batch, _m_schema(_M_COLS)))
+            self._stamped(
+                self.t.update, spark.createDataFrame(batch, _m_schema(_M_COLS))
+            )
             for k, ts, *cells in batch:
                 self.model.row(k, ts, dict(zip(_M_CELLS, cells)))
             self._snap(r[0] for r in batch)
@@ -452,7 +466,10 @@ def test_mutation_sequence_matches_model(spark, tmp_path, layer_files):
             cols = [c for c in _M_CELLS if c in cols]
             idx = [2 + _M_CELLS.index(c) for c in cols]
             rows_ = [(r[0], r[1], *(r[i] for i in idx)) for r in batch]
-            self.t.put(spark.createDataFrame(rows_, _m_schema(["key", "ts", *cols])))
+            self._stamped(
+                self.t.put,
+                spark.createDataFrame(rows_, _m_schema(["key", "ts", *cols])),
+            )
             for k, ts, *vals in rows_:
                 self.model.sparse(k, ts, dict(zip(cols, vals)))
             self._snap(r[0] for r in batch)
@@ -464,7 +481,8 @@ def test_mutation_sequence_matches_model(spark, tmp_path, layer_files):
             # carries no version timestamp
             choices = [7, 1, -3, 0] if counter == "cnt" else [0.1, 0.2, 0.7, -1.5, 0.0]
             rows_ = [(r[0], r[1], data.draw(st.sampled_from(choices))) for r in batch]
-            self.t.increment(
+            self._stamped(
+                self.t.increment,
                 spark.createDataFrame(
                     rows_, f"key bigint, ts bigint, delta {_M_TYPES[counter]}"
                 ),
@@ -482,7 +500,8 @@ def test_mutation_sequence_matches_model(spark, tmp_path, layer_files):
             # two stacked DELTA layers on one double cell: the fold must
             # add them in layer order (float addition does not associate)
             for d in (d1, d2):
-                self.t.increment(
+                self._stamped(
+                    self.t.increment,
                     spark.createDataFrame([(key, d)], "key bigint, delta double"),
                     counter_col="bal",
                 )
@@ -493,7 +512,7 @@ def test_mutation_sequence_matches_model(spark, tmp_path, layer_files):
         def delete(self, keys, cols):
             # cols None: whole-row tombstones; else a cell delete
             cols = sorted(cols) if cols else None
-            self.t.delete(keys_df(keys), columns=cols)
+            self._stamped(self.t.delete, keys_df(keys), columns=cols)
             for k in keys:
                 if cols:
                     self.model.celldel(k, cols)
@@ -535,6 +554,17 @@ def test_mutation_sequence_matches_model(spark, tmp_path, layer_files):
                 del self.model.state[k]
             self.deltas, self.snaps = [], []
             self._snap()
+
+        @precondition(lambda self: self.last is not None)
+        @rule()
+        def retry(self):
+            # the last mutation again, same stamp: it already applied (its
+            # layer may since have been compacted away), so nothing is
+            # written and the table still matches the unchanged model
+            seq = self.t.snapshot_seq()
+            assert self.last() == 0
+            assert self.t.snapshot_seq() == seq
+            self.checked = False
 
         # -- reads ----------------------------------------------------------
 
@@ -580,6 +610,41 @@ def test_mutation_sequence_matches_model(spark, tmp_path, layer_files):
             suppress_health_check=[HealthCheck.too_slow],
         ),
     )
+
+
+@pytest.mark.parametrize(
+    "kind", ["update", "put", "increment", "delete", "cell_delete"]
+)
+def test_stamped_mutation_applies_at_most_once(spark, table, kind):
+    """A mutation retried with an applied stamp writes no layer and
+    returns 0 — while the stamped layer is live, and after compaction
+    folded it away (the stamp then comes from the manifest)."""
+    one = spark.createDataFrame([Row(key="k001")])
+    mutate = {
+        "update": lambda: table.update(
+            spark.createDataFrame([Row(key="k001", ts=200, height=50, tag="u")]),
+            stamp="s1",
+        ),
+        "put": lambda: table.put(
+            spark.createDataFrame([Row(key="k001", ts=200, tag="p")]), stamp="s1"
+        ),
+        "increment": lambda: table.increment(
+            spark.createDataFrame([Row(key="k001", delta=5)]),
+            counter_col="height", stamp="s1",
+        ),
+        "delete": lambda: table.delete(one, stamp="s1"),
+        "cell_delete": lambda: table.delete(one, columns=["tag"], stamp="s1"),
+    }[kind]
+    assert mutate() == 1
+    seq, state = table.snapshot_seq(), rows(table)
+    assert mutate() == 0
+    assert table.snapshot_seq() == seq and rows(table) == state
+
+    table.compact()
+    seq = table.snapshot_seq()
+    assert "s1" not in {table._stamp_of(p) for p in table._layers()}
+    assert mutate() == 0
+    assert table.snapshot_seq() == seq and rows(table) == state
 
 
 def test_ttl_filters_reads_and_compaction_purges(spark, tmp_path):
