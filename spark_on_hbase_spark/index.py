@@ -13,20 +13,32 @@ storage engine's existing machinery, no new file format.
 
 Consistency model (Phoenix's, honestly): index maintenance is write-side
 — every base mutation routed through the index runs one transaction
-(``_maintain``): tombstone the entries of the touched keys' CURRENT rows,
-apply the base mutation, then insert the entries of the touched keys'
-POST-write rows, so the index holds exactly what the base fold kept. The
-base table is never rewritten, and both reads are ``KeyedTable.semi_read``
-of the touched keys: a batch within the multiget cap pushes into every
-base layer scan as an IN filter, so the sorted layout's footer stats
-prune to the few files covering the touched keys — maintenance I/O
-tracks the batch, not the table. The transaction is NOT atomic: a crash
-between its writes leaves a stale index until the writer retries (global
-Phoenix indexes carry the same caveat; their repair is a WAL replay,
-ours is re-running the idempotent batch: pass ``stamp=`` and each write
-carries its own derived layer stamp, which KeyedTable applies at most
-once, so a retry writes only the missing sub-layers and a full replay
-is a strict no-op).
+(``_maintain``), base first: the base mutation lands, ONE read of the
+touched keys at the snapshots just before and just after it
+(``KeyedTable.semi_read`` with an ``as_of_layer`` pair) yields their old
+and new rows, and ONE index layer holds the new rows' entries plus
+tombstones for the old entries the new rows do not re-insert, so the
+index holds exactly what the base fold kept. Two writes and one read per
+mutation; the base table is never rewritten, and a batch within the
+multiget cap pushes into every base layer scan as an IN filter, so the
+sorted layout's footer stats prune to the few files covering the touched
+keys — maintenance I/O tracks the batch, not the table.
+
+The transaction is NOT atomic: a crash between its two writes leaves the
+touched keys' old entries in place — STALE, pointing at rows that no
+longer carry the value — and their new entries MISSING, until the writer
+retries. Uncovered lookups therefore VERIFY: every lookup path re-applies
+its typed predicate to the base rows it returns (Apache Phoenix's
+read-time verification of global indexes), so a stale entry never
+surfaces a row that does not match; covered lookups answer from the index
+alone and can serve the stale values until the retry. The repair is
+re-running the idempotent batch (Phoenix's is a WAL replay): pass
+``stamp=`` and the base write and the index layer carry the layer stamps
+``<stamp>`` and ``<stamp>_xi``, which KeyedTable applies at most once. A
+retry whose base write already committed rebuilds the touched keys'
+entries from the current base and the index itself (``_recover``), so it
+converges whatever happened in between, and a full replay is a strict
+no-op.
 Mutating the base DIRECTLY bypasses maintenance and stales the index,
 exactly as writing HBase rows behind Phoenix's back does.
 
@@ -53,7 +65,7 @@ from decimal import Decimal
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from spark_on_hbase_spark.table import KeyedTable
+from spark_on_hbase_spark.table import _TOMBSTONE, KeyedTable, _in_list_pred
 
 # unit separator: sorts below every printable char, so entries for a value
 # group contiguously and never interleave with a longer value's entries
@@ -342,7 +354,7 @@ class SecondaryIndex:
     def _augment(self, rows: DataFrame) -> DataFrame:
         """Materialize the functional expression columns onto base rows —
         the one place expressions are computed, shared by build, every
-        maintenance read, and the scrutiny audit."""
+        maintenance read, the scrutiny audit and the verified lookups."""
         for n, e in self.exprs.items():
             rows = rows.withColumn(n, e)
         return rows
@@ -378,12 +390,6 @@ class SecondaryIndex:
             *[F.col(c) for c in self.cols],
             *[F.col(c) for c in self.include],
         )
-
-    def _stale_entry_keys(self, touched: DataFrame) -> DataFrame:
-        """Index keys of the touched base keys' CURRENT rows. Evaluated (by
-        the caller's delete job) BEFORE the base mutation lands, so the
-        read sees the pre-mutation state it must tombstone."""
-        return self._entries(self.base.semi_read(touched)).select("ikey")
 
     # -- consistency tooling -------------------------------------------------
 
@@ -555,21 +561,20 @@ class SecondaryIndex:
         maintenance transaction (see ``_maintain``). The new entries come
         from the rows the base fold KEPT, so a batch row that loses
         last-writer-wins, or one of two batch rows for the same key,
-        leaves no entry behind; a loser's unchanged entry is tombstoned and
-        re-inserted at its stored ts, which the index fold lets through
-        (an equal-ts ROW applies), so the entry stays live.
+        leaves no entry behind; a loser's unchanged entry is re-inserted
+        at its stored ts, which the index fold lets through (an equal-ts
+        ROW applies), so the entry stays live.
 
-        ``stamp`` makes the transaction retry-idempotent: each of its
-        writes carries its own derived stamp (``<stamp>_xd`` / ``<stamp>``
-        / ``<stamp>_xi``), recorded atomically in that layer's directory
-        name, and a KeyedTable write whose stamp already committed writes
-        nothing — so a retry after a crash between any two writes writes
-        only the missing sub-layers.
+        ``stamp`` makes the transaction retry-idempotent: the base write
+        carries ``<stamp>`` and the index layer ``<stamp>_xi``, each
+        recorded atomically in its layer's directory name, and a
+        KeyedTable write whose stamp already committed writes nothing — a
+        retry after a crash between the two writes only finishes the
+        index layer.
 
-        Returns rows applied by THIS call's base write; on a stamped retry
-        whose base write already committed in a previous attempt, the
-        skipped write reports 0 (the rows were counted when they actually
-        landed)."""
+        Returns rows applied by THIS call's base write; a stamped retry
+        whose base write already committed in a previous attempt returns
+        0 (the rows were counted when they actually landed)."""
         return self._maintain(self.base.update, batch, stamp)
 
     def delete(
@@ -578,23 +583,20 @@ class SecondaryIndex:
         columns: list[str] | None = None,
         stamp: str | None = None,
     ) -> int:
-        """Row delete through the index (entries first, then the rows), or
-        — with ``columns`` — a CELL delete (HBase DeleteColumn through the
-        index): nulling an INDEXED column removes the keys' entries (the
-        NULL convention — the rows become invisible to lookups), nulling
-        only COVERED columns or functional inputs re-points the entries at
-        the post-delete rows (an expression can stay non-null over a
-        nulled input, e.g. coalesce), and nulling columns the index never
-        reads is exactly ``base.delete``. ``stamp``: same
-        retry-idempotence contract as ``update``."""
-        if not columns:
-            return self._maintain(self.base.delete, keys, stamp, reinsert=False)
-        plain = {c for c in self.cols if c not in self.exprs}
+        """Row delete through the index (the rows, then one index layer
+        tombstoning their entries), or — with ``columns`` — a CELL delete
+        (HBase DeleteColumn through the index): nulling an INDEXED column
+        removes the keys' entries (the NULL convention — the rows become
+        invisible to lookups), nulling only COVERED columns or functional
+        inputs re-points the entries at the post-delete rows (an
+        expression can stay non-null over a nulled input, e.g. coalesce),
+        and nulling columns the index never reads is exactly
+        ``base.delete``. All of it falls out of ``_maintain``'s diff of
+        the old and new rows' entries. ``stamp``: same retry-idempotence
+        contract as ``update``."""
         return self._maintain(
             self.base.delete, keys, stamp,
-            touches=bool(set(columns) & self._maintained_inputs()),
-            # a null plain component drops the whole entry
-            reinsert=not set(columns) & plain,
+            touches=not columns or bool(set(columns) & self._maintained_inputs()),
             columns=columns,
         )
 
@@ -636,41 +638,90 @@ class SecondaryIndex:
 
     def _maintain(
         self, write, batch: DataFrame, stamp: str | None,
-        touches: bool = True, reinsert: bool = True, **kw,
+        touches: bool = True, **kw,
     ) -> int:
-        """The one maintenance transaction every indexed mutation runs:
+        """The one maintenance transaction every indexed mutation runs,
+        base first:
 
-        1. ``_xd`` tombstones the entries of the touched keys' CURRENT rows;
-        2. the base ``write(batch, **kw)`` runs under the caller's stamp;
-        3. ``_xi`` inserts the entries of the touched keys' POST-write rows.
+        1. note ``a = base.snapshot_seq()``;
+        2. run the base ``write(batch, **kw)`` under the caller's stamp,
+           its inline compaction held until step 4 has landed (it would
+           fold snapshot ``a`` away);
+        3. read the touched keys ONCE, at ``(a, latest)`` — one
+           ``semi_read`` with an ``as_of_layer`` pair;
+        4. write ONE index layer (stamp ``<stamp>_xi``): the entries of
+           the rows at the latest cut, plus null-ts tombstones for the
+           cut-``a`` entries they do not re-insert.
 
-        Both reads are ``semi_read`` of the batch's keys. With ``stamp``
-        each write carries its own sub-stamp, and the table skips a write
-        whose stamp already committed without running its input (see
-        ``KeyedTable._write_layer``), so a retry writes only the missing
-        sub-layers. The ``_xd`` read therefore only ever executes before
-        the base write has landed and can never tombstone the NEW entries;
-        the ``_xi`` read is built after the base write, so a retry reads
-        the same post-write state. ``touches=False`` (the batch changes
-        nothing the index reads) runs the base write alone;
-        ``reinsert=False`` (row deletes, nulled plain components — the
-        post-write rows carry no entry) skips step 3."""
-        xd, xi = (None, None) if stamp is None else (f"{stamp}_xd", f"{stamp}_xi")
-        if touches:
-            # lazy checkpoint: the layer write runs its input twice (range
-            # sampling, then the write), and the stale read must run once,
-            # inside this write — before the base write lands
-            self.tbl.delete(
-                self._stale_entry_keys(batch).localCheckpoint(eager=False),
-                stamp=xd,
-            )
-        n = write(batch, stamp=stamp, **kw)
-        if touches and reinsert:
-            self.tbl.update(
-                self._noted_entries(self._entries(self.base.semi_read(batch))),
-                stamp=xi,
+        Row deletes and nulled plain components simply have no new
+        entries. ``touches=False`` (the batch changes nothing the index
+        reads) runs the base write alone.
+
+        A stamped call whose base stamp is already applied is the retry of
+        a crash between steps 2 and 4: snapshot ``a`` is unknown and may be
+        folded away, so ``_recover`` finishes the index layer from the
+        index itself — unless that layer committed too, and nothing is
+        left to do."""
+        if not touches:
+            return write(batch, stamp=stamp, **kw)
+        # the base write reads the batch twice (range sampling, then the
+        # write) and the maintenance read's key collect once more: an
+        # O(batch) lazy checkpoint runs its lineage (for a driver-local
+        # batch, a Python worker pass) once
+        batch = batch.localCheckpoint(eager=False)
+        xi = None if stamp is None else f"{stamp}_xi"
+        if stamp is not None and stamp in self.base.applied_stamps():
+            if xi not in self.tbl.applied_stamps():
+                self._recover(batch, xi)
+            return 0
+        with self.base._holding_compaction():
+            a = self.base.snapshot_seq()
+            n = write(batch, stamp=stamp, **kw)
+            # lazy checkpoint: both cuts feed the layer, whose write runs
+            # its input twice (range sampling, then the write)
+            states = self.base.semi_read(
+                batch, as_of_layer=(a, self.base.snapshot_seq())
+            ).localCheckpoint(eager=False)
+            cut = F.col("__cut")
+            self._write_entries(
+                self._entries(states.where(cut > a).drop("__cut")),
+                self._entries(states.where(cut == a).drop("__cut")),
+                xi,
             )
         return n
+
+    def _recover(self, batch: DataFrame, stamp: str) -> None:
+        """Finish a stamped transaction whose base write committed and whose
+        index layer did not. The pre-write rows are gone or unknown (a
+        compaction, or another indexed write to the same keys, may have
+        run since the crash), so the old side is every STORED entry of a
+        touched base key: the ones the current rows do not re-insert get
+        tombstoned. That probe is by base key, which the value-ordered
+        index cannot prune — O(index), on the retry path only."""
+        current = self.base.semi_read(batch).localCheckpoint(eager=False)
+        keys = batch.select(F.col(self.base.key_col).alias("base_key")).distinct()
+        stored = self.tbl.df().join(F.broadcast(keys), "base_key", "left_semi")
+        self._write_entries(
+            self._entries(current), stored.localCheckpoint(eager=False), stamp
+        )
+
+    def _write_entries(self, new: DataFrame, old: DataFrame, stamp) -> None:
+        """ONE index layer: the ``new`` entries, plus null-ts tombstones for
+        the ``old`` ikeys that ``new`` does not re-insert (never both for
+        one ikey: rows of one layer fold in arbitrary order)."""
+        new = self._noted_entries(new)
+        gone = old.select("ikey").join(
+            F.broadcast(new.select("ikey")), "ikey", "left_anti"
+        )
+        tombs = gone.select(
+            "ikey",
+            *[F.lit(None).cast(t).alias(c) for c, t in new.dtypes if c != "ikey"],
+            F.lit(True).alias(_TOMBSTONE),
+        )
+        self.tbl.update(
+            new.withColumn(_TOMBSTONE, F.lit(False)).unionByName(tombs),
+            stamp=stamp,
+        )
 
     # -- reads ---------------------------------------------------------------
 
@@ -679,7 +730,8 @@ class SecondaryIndex:
         WITHOUT filtering the base: probe the index (the equality predicate
         reaches the index table's parquet scan, where the value-prefixed
         sorted layout prunes by footer stats), then read the matched keys
-        from the base with ``semi_read`` (see ``_finish``). At 100 TB the
+        from the base with ``semi_read`` and keep the rows that still hold
+        the value (see ``_finish``). At 100 TB the
         index probe reads a value's few files and the base side is a keyed
         multiget or semi-join — never a full-table predicate scan.
 
@@ -755,11 +807,10 @@ class SecondaryIndex:
         the typed IN re-applies POST-fold as the exactness truth."""
         import numbers
 
-        from spark_on_hbase_spark.table import _TOMBSTONE, _in_list_pred
-
         vals = list(dict.fromkeys(values))  # dedupe, keep caller order
         if not vals:  # empty IN-list: schema-correct empty result
-            return self._finish(self.tbl.df().where(F.lit(False)), covered)
+            nothing = F.lit(False)
+            return self._finish(self.tbl.df().where(nothing), covered, nothing)
         if all(
             isinstance(v, numbers.Integral) and not isinstance(v, bool)
             for v in vals
@@ -768,7 +819,7 @@ class SecondaryIndex:
             # literal is seconds at thousand-value batches); optimizes to
             # InSet + pushed parquet filter
             def pred():
-                return _in_list_pred(self.cols[0], vals)
+                return _in_list_pred(self.base.spark, self.cols[0], vals)
         else:
             # typed-equality balanced OR: exact for strings/floats (each
             # literal cast to the column dtype), depth log2 n
@@ -782,7 +833,7 @@ class SecondaryIndex:
 
         scan_pred = pred() | F.col(_TOMBSTONE)
         probe = self.tbl._layer_frames(scan_pred, None).where(pred())
-        return self._finish(probe, covered)
+        return self._finish(probe, covered, pred())
 
     def lookup_range(self, lo, hi, prefix: tuple = (), covered: bool = False) -> DataFrame:
         """Base rows whose indexed column is in ``[lo, hi]`` (inclusive) —
@@ -1037,16 +1088,12 @@ class SecondaryIndex:
 
     def _noted_entries(self, e: DataFrame) -> DataFrame:
         """Union the guidepost sidecar with the entries ``e`` before the
-        insert job runs. The entries are materialized once
-        (localCheckpoint) so the union's aggregation and the layer write
-        share a single evaluation of the maintenance read."""
+        insert job runs. Callers hand in entries derived from a
+        checkpointed read, so the union's aggregations and the layer
+        write re-run only the cheap entry derivation."""
         gcols = self._guidepost_cols()
         if not gcols:
-            # no sidecar to union — still materialize once, lazily: the
-            # insert layer write would otherwise run the entries lineage
-            # (a point-read fold + expression derivation) twice
-            # (range-sampling + write)
-            return e.localCheckpoint(eager=False)
+            return e
         if self._load_guideposts() is None:
             # missing sidecar (pre-guidepost index dir, or a build()
             # that crashed between create and refresh): heal by
@@ -1054,7 +1101,6 @@ class SecondaryIndex:
             # pruned scan, once — so the union below extends a
             # complete dictionary, never a batch-only one
             self._refresh_guideposts()
-        e = e.localCheckpoint(eager=True)
         tcols = self._tuple_cols()
         self._union_guideposts(
             self._collect_leading(e, gcols, small=True),
@@ -1206,7 +1252,7 @@ class SecondaryIndex:
                 *[fixed[c] for c in self.cols[: last + 1]], covered=covered
             )
         if not all(_order_preserving(self._dtype_of(i)) for i in range(last + 1)):
-            return self._finish(self.tbl.df().where(exact), covered)
+            return self._finish(self.tbl.df().where(exact), covered, exact)
         prefix_cols = self.cols[: last + 1]
         # prefix tuples from the GUIDEPOST sidecar when it can answer —
         # zero index I/O — else live-enumerate from the index itself
@@ -1214,9 +1260,9 @@ class SecondaryIndex:
         if tuples is None:
             tuples = self._enumerate_leading(prefix_cols, fixed, pos)
         if tuples is None:  # live enumeration over budget too
-            return self._finish(self.tbl.df().where(exact), covered)
+            return self._finish(self.tbl.df().where(exact), covered, exact)
         if not tuples:
-            return self._finish(self.tbl.df().where(exact & F.lit(False)), covered)
+            return self._finish(self.tbl.df().where(exact & F.lit(False)), covered, exact)
         k = F.col("ikey")
         ranges = []
         for vals in tuples:
@@ -1225,7 +1271,7 @@ class SecondaryIndex:
         # balanced OR (depth log2 n): a left-deep chain at the 1000-prefix
         # budget overflows the JVM stack in expression conversion
         probe = self.tbl._layer_frames(self._or_tree(ranges), None).where(exact)
-        return self._finish(probe, covered)
+        return self._finish(probe, covered, exact)
 
     def _enumerate_leading(self, prefix_cols: list[str], fixed: dict, pos: dict):
         """Live skip-scan enumeration: distinct leading tuples FROM THE
@@ -1271,7 +1317,7 @@ class SecondaryIndex:
             parts.append(self._enc(F.lit(v), i))
         return F.concat(*parts) if len(parts) > 1 else parts[0]
 
-    def _read(self, lo_enc, hi_enc, covered: bool, exact=None) -> DataFrame:
+    def _read(self, lo_enc, hi_enc, covered: bool, exact) -> DataFrame:
         """Probe the index: a conservative IKEY range prunes layers/files
         (range_read — the predicate MUST be on ikey, not ivalue: tombstone
         rows carry only the key, so a per-layer ivalue filter would drop
@@ -1291,14 +1337,17 @@ class SecondaryIndex:
             probe = self.tbl.df()
         else:
             probe = self.tbl.range_read(lo_enc, F.concat(hi_enc, F.lit("\x20")))
-        if exact is not None:
-            probe = probe.where(exact)
-        return self._finish(probe, covered)
+        return self._finish(probe.where(exact), covered, exact)
 
-    def _finish(self, probe: DataFrame, covered: bool) -> DataFrame:
+    def _finish(self, probe: DataFrame, covered: bool, exact) -> DataFrame:
         """Turn a resolved index-entry probe into the caller's result:
         covered -> answer from the entries alone; uncovered -> multiget
-        the base for the matched keys."""
+        the base for the matched keys and keep the rows that still match
+        ``exact``, the probe's typed predicate. That re-check is Apache
+        Phoenix's read-time verification: a crash between a maintenance
+        transaction's base write and its index layer leaves entries
+        pointing at rows that no longer carry the value (see the module
+        docstring), and the verified read never returns such a row."""
         if covered:
             return probe.select(
                 F.col("base_key").alias(self.base.key_col),
@@ -1316,6 +1365,18 @@ class SecondaryIndex:
         # InjectRuntimeFilter declines broadcast-side builds — so a
         # uniformly-spread match keeps a table-sized scan, which is the
         # honest cost of selecting that many uncovered rows.)
-        return self.base.semi_read(
+        rows = self.base.semi_read(
             probe.select(F.col("base_key").alias(self.base.key_col))
         )
+        if self.multi is not None:
+            # the predicate is on the exploded element: a row matches iff
+            # one of its entries does
+            hits = self._entries(rows).where(exact)
+            return rows.join(
+                hits.select(F.col("base_key").alias(self.base.key_col)),
+                self.base.key_col, "left_semi",
+            )
+        live = self._augment(rows)
+        for c in self.cols:  # the entries' NULL convention
+            live = live.where(F.col(c).isNotNull())
+        return live.where(exact).select(*rows.columns)

@@ -36,14 +36,16 @@ re-runs exactly the missing half on the next refresh.
 Scale posture, piece by piece:
 - change detection reads ONLY the post-snapshot layers (metadata-pruned —
   the feed is O(changed rows), the table is never scanned);
-- old/new states come from ``KeyedTable.semi_read`` of the changed keys:
-  a literal multiget (footer + Bloom pruning: O(changed keys) files)
-  while the key set fits the table's ``POINT_READ_CAP`` (8192), a
-  broadcast semi-join below each snapshot's version fold beyond it. The
-  refresh stacks the per-layer IN literal under the version fold AND two
-  signed aggregations: at ~94k literals the combined expression tree
-  OOMed a 20g driver inside Catalyst's ConstantFolding (measured at
-  sf0.1), while the semi-join plan runs the same delta in seconds;
+- old and new states come from ONE ``KeyedTable.semi_read`` of the
+  changed keys at both window edges (an ``as_of_layer`` pair: one key
+  collect, one scan per layer, one fold shuffle, each row tagged with its
+  snapshot): a literal multiget (footer + Bloom pruning: O(changed keys)
+  files) while the key set fits the table's ``POINT_READ_CAP`` (8192), a
+  broadcast semi-join below the version fold beyond it. The refresh
+  stacks the per-layer IN literal under the version fold AND two signed
+  aggregations: at ~94k literals the combined expression tree OOMed a
+  20g driver inside Catalyst's ConstantFolding (measured at sf0.1),
+  while the semi-join plan runs the same delta in seconds;
 - the group-delta aggregation shuffles Δ rows, never the base;
 - the apply is one appended layer: O(touched groups) rows written;
 - MIN/MAX recompute is O(affected groups' rows) with a group index.
@@ -284,30 +286,33 @@ class MaterializedAgg:
     def _changed_states(self, lo: int, hi: int):
         """(old, new, changed-keys) for the base window (lo, hi] — the
         shared read both sub-transactions derive from. old/new are folded
-        key states at the window edges, restricted to the changed keys
-        (``semi_read`` picks the multiget or the semi-join)."""
+        key states at the window edges, restricted to the changed keys,
+        from ONE two-cut ``semi_read`` (which picks the multiget or the
+        semi-join)."""
         feed = self.base.changes(since_layer=lo, until_layer=hi)
         # ONE pass over the feed: the changed-key relation is materialized
         # (localCheckpoint) because every consumer downstream re-reads it —
-        # the emptiness probe, both semi_reads and (for MIN/MAX views) the
+        # the emptiness probe, the semi_read and (for MIN/MAX views) the
         # touched-group derivation. Before r11 each of those re-executed
         # the feed scan + distinct from files (guide §2.4: remove repeated
         # passes).
         changed = feed.select(self.base.key_col).distinct().localCheckpoint()
         if changed.isEmpty():
             return None, None, changed
-        old = self.base.semi_read(changed, as_of_layer=lo)
-        new = self.base.semi_read(changed, as_of_layer=hi)
         # both states are read at least once by the sum delta and — for
         # MIN/MAX views — a second time by the touched-group derivation,
         # and the delta layer write itself executes its input twice
         # (repartitionByRange samples, then writes). Marking the O(Δ)
         # states lazily checkpointed folds all of that into ONE execution
-        # of each snapshot fold; before r11 the minmax refresh ran the
+        # of the two-snapshot fold; before r11 the minmax refresh ran the
         # full fold up to 4x (measured 13.8s at sf0.1, see
         # OPTIMIZATION_r11.md).
-        old = old.localCheckpoint(eager=False)
-        new = new.localCheckpoint(eager=False)
+        states = self.base.semi_read(changed, as_of_layer=(lo, hi)).localCheckpoint(
+            eager=False
+        )
+        cut = F.col("__cut")
+        old = states.where(cut == lo).drop("__cut")
+        new = states.where(cut == hi).drop("__cut")
         return old, new, changed
 
     def refresh(self) -> int:

@@ -222,13 +222,14 @@ def indexed_upsert(idx, guard_id: str = "default"):
     """The foreachBatch body for ``merge_stream_into_indexed_table``,
     exposed for direct testing: applies a micro-batch THROUGH a
     SecondaryIndex as one stamped maintenance transaction
-    (``SecondaryIndex.update(batch, stamp=)`` — tombstone-old / base-merge
-    / insert-new, each sub-write under its own derived layer stamp, which
-    KeyedTable applies at most once). A replayed batch whose earlier jobs
-    committed but whose insert did not writes exactly the missing layers,
-    and a replay of a fully applied batch writes none — Structured
-    Streaming's replay IS the index's documented repair path, closing the
-    stale window automatically at the next restart."""
+    (``SecondaryIndex.update(batch, stamp=)`` — base merge, then ONE index
+    layer of new entries and tombstones, each write under its own layer
+    stamp, which KeyedTable applies at most once). A replayed batch whose
+    base merge committed but whose index layer did not writes only the
+    index layer, rebuilt from the current base and index, and a replay of
+    a fully applied batch writes none — Structured Streaming's replay IS
+    the index's documented repair path, closing the stale window
+    automatically at the next restart."""
     return _applied_batch_guard(
         lambda b, stamp: idx.update(b, stamp=stamp), guard_id
     )

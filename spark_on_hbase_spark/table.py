@@ -51,6 +51,7 @@ sort — the same single-shuffle shape as the reference's HFile load.
 
 from __future__ import annotations
 
+import contextlib
 import os
 import re
 import shutil
@@ -100,21 +101,38 @@ _TOP = _TopType()
 _STAMP_RE = re.compile(r"[A-Za-z0-9_]+")
 
 
-def _in_list_pred(col_name: str, keys: list):
+def _sql_str(s: str) -> str:
+    """``s`` as a Spark SQL string literal that parses back to exactly
+    ``s``: backslashes are escaped first (the parser unescapes ``\\``
+    sequences), then quotes, and ``$`` is written as the unicode escape
+    ``\\u0024`` so variable substitution — which rewrites ``${...}`` in
+    the expression text before the parser runs — never sees one."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'").replace("$", "\\u0024") + "'"
+
+
+def _in_list_pred(spark: SparkSession, col_name: str, keys: list):
     """``col IN (<literals>)`` built as ONE parsed SQL expression for
-    integral key lists — ``Column.isin(ks)`` costs a py4j round-trip per
-    literal (seconds for thousand-key multigets, and point_read applies
-    the predicate once per layer), while a single ``F.expr`` parse is
-    milliseconds and yields the identical pushed In filter. Non-integral
-    keys (strings etc.) fall back to ``isin``, which also covers the
-    empty list (IN () is not valid SQL)."""
+    integral and string key lists — ``Column.isin(ks)`` costs a py4j
+    round-trip per literal (115 ms at 300 string keys, 3.8 s at 8192, and
+    point_read applies the predicate once per layer), while a single
+    ``F.expr`` parse is about a millisecond and yields the identical
+    pushed In filter. Other key types fall back to ``isin``, which also
+    covers the empty list (IN () is not valid SQL) and sessions with
+    ``spark.sql.parser.escapedStringLiterals`` on, whose parser would not
+    unescape ``_sql_str``'s escapes."""
     import numbers
 
-    if keys and all(
-        isinstance(k, numbers.Integral) and not isinstance(k, bool) for k in keys
+    if not keys:
+        return F.col(col_name).isin(keys)
+    if all(isinstance(k, numbers.Integral) and not isinstance(k, bool) for k in keys):
+        lits = [str(int(k)) for k in keys]
+    elif all(isinstance(k, str) for k in keys) and (
+        spark.conf.get("spark.sql.parser.escapedStringLiterals", "false") != "true"
     ):
-        return F.expr(f"`{col_name}` IN ({','.join(str(int(k)) for k in keys)})")
-    return F.col(col_name).isin(keys)
+        lits = [_sql_str(k) for k in keys]
+    else:
+        return F.col(col_name).isin(keys)
+    return F.expr(f"{_fold_q(col_name)} IN ({','.join(lits)})")
 
 
 class HistoryFoldedError(ValueError):
@@ -141,10 +159,11 @@ def _is_numeric_dtype(simple: str) -> bool:
 #: reused for the layer's lifetime. Every read path opens every visible
 #: layer, so a bench run re-opened the same directories thousands of times
 #: (r11 profile). The ONLY operations that mutate or remove layer contents
-#: in place (compaction unlinking dirty part-files, _replace_all_layers /
-#: drop removing dirs) call ``_invalidate_layer_cache`` on the table root
-#: first. Keyed by the live SparkContext object so a stop/start never
-#: serves plans from a dead JVM.
+#: in place (compaction unlinking dirty part-files or removing dirs,
+#: drop) invalidate those layers first (``_uncache``, or the table root
+#: for drop). ``_write_layer`` seeds each new layer's entry. Keyed by the
+#: live SparkContext object so a stop/start never serves plans from a
+#: dead JVM.
 _LAYER_DF_CACHE: dict = {}
 
 # fixture builders mutate INDEPENDENT tables from a thread pool (guide
@@ -154,12 +173,16 @@ _LAYER_DF_CACHE: dict = {}
 _LAYER_DF_CACHE_LOCK = threading.Lock()
 
 
-def _cached_layer_df(spark: SparkSession, path: str) -> DataFrame:
+def _cached_layer_df(spark: SparkSession, path: str, schema=None) -> DataFrame:
+    """The layer's DataFrame, opened once per SparkContext. ``schema``
+    (the writer's schema, every field nullable — what inference would
+    return) opens it without Spark's parquet schema-inference job."""
     key = (spark.sparkContext, path)
     with _LAYER_DF_CACHE_LOCK:
         df = _LAYER_DF_CACHE.get(key)
     if df is None:
-        df = spark.read.parquet(path)
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        df = reader.parquet(path)
         with _LAYER_DF_CACHE_LOCK:
             # prune entries pinned to OTHER (stopped) SparkContexts so a
             # session-restarting process never accumulates dead-JVM plan
@@ -232,6 +255,7 @@ class KeyedTable:
 
             now_fn = _time.time
         self.now_fn = now_fn
+        self._compaction_held = False  # see _holding_compaction
 
     # -- layer bookkeeping -------------------------------------------------
 
@@ -339,8 +363,11 @@ class KeyedTable:
         # a layer path can be REUSED within a session: kernels rmtree a
         # session-scoped table root directly (not via drop()) and recreate
         # it, so base-000000 comes back with new part-files — evict any
-        # cached DataFrame pinned to the old files at this path
+        # cached DataFrame pinned to the old files at this path, then open
+        # the new layer with the schema just written, so its first read
+        # skips the schema-inference job
         _invalidate_layer_cache(str(target))
+        _cached_layer_df(self.spark, str(target), _nullable(df.schema))
         n = int(obs.get["n"])
         if self.bloom:
             # SOFT-fail: the layer committed at the rename above, so a
@@ -384,10 +411,18 @@ class KeyedTable:
         # whose file listings point at dead files (caught by the dirty-
         # compaction crash test); dropping the cache early only costs a
         # re-open
-        _invalidate_layer_cache(self.path)
+        self._uncache(old)
         for p in old:
             shutil.rmtree(p, ignore_errors=True)
             self._drop_bloom(p)
+
+    def _uncache(self, layers: list[Path]) -> None:
+        """Drop the cached DataFrames of ``layers`` and of their Bloom
+        sidecars — the layers a compaction is about to remove or rewrite
+        in place. The layer it just wrote keeps its seeded entry."""
+        for p in layers:
+            _invalidate_layer_cache(str(p))
+            _invalidate_layer_cache(str(self._bloom_root() / p.name))
 
     def _persist_stamps(self, layers: list[Path]) -> None:
         stamps = [s for p in layers if (s := self._stamp_of(p))]
@@ -465,7 +500,7 @@ class KeyedTable:
             raise FileNotFoundError(f"no table at {self.path}")
         return max(int(p.name.split("-")[1]) for p in layers)
 
-    def df(self, as_of_layer: int | None = None) -> DataFrame:
+    def df(self, as_of_layer: int | tuple[int, int] | None = None) -> DataFrame:
         """Full typed scan — HBaseTable.rdd() (HBaseTable.scala:55-65): merge
         base ∪ deltas with last-writer-wins-by-(ts, layer) resolution and
         tombstone filtering — HBase's read path over HFiles. Catalyst column
@@ -475,14 +510,19 @@ class KeyedTable:
         LSM's free time travel (every mutation is an immutable layer, so any
         historical state is a layer-prefix read; pair with ``snapshot_seq``).
         Compaction folds history away, so travel reaches back to the last
-        compact — bound the horizon with ``compact_threshold``.
+        compact — bound the horizon with ``compact_threshold``. A pair
+        ``(a, b)`` with ``a < b`` reads both snapshots at once: every
+        visible row appears once per cut, tagged with that cut's seq in a
+        trailing ``__cut`` column (see ``semi_read``).
 
         With ``ttl`` set, rows whose resolved ``ts_col`` is older than
         ``now_fn() - ttl`` are filtered (and physically dropped at the next
         compaction, which rewrites only what this scan returns)."""
         return self._layer_frames(None, as_of_layer)
 
-    def _resolve(self, frames: list[DataFrame], force_fold: bool = False) -> DataFrame:
+    def _resolve(
+        self, frames: list[DataFrame], force_fold: bool = False, cuts=None
+    ) -> DataFrame:
         """Merge ordered layer frames into the visible-row relation: LWW /
         kind fold, tombstone removal, TTL filter. Shared by ``df()`` and
         the range-scoped compaction (which folds only the dirty slice).
@@ -495,14 +535,18 @@ class KeyedTable:
         live data), and a ROW delta may carry in-batch duplicate keys that
         need the within-layer LWW dedup. Callers that can hand over a bare
         delta (``_compact_dirty``) pass ``force_fold=True``; the _KIND
-        check below catches kind-stamped frames on every path."""
-        if len(frames) == 1 and not force_fold and _KIND not in frames[0].columns:
+        check below catches kind-stamped frames on every path. ``cuts``
+        (from ``_cuts``) makes it a two-snapshot fold, which always folds."""
+        if (
+            len(frames) == 1 and not force_fold and cuts is None
+            and _KIND not in frames[0].columns
+        ):
             merged = frames[0]
             if _TOMBSTONE in merged.columns:
                 # a prefix-compaction base keeps its tombstone rows
                 merged = merged.where(~F.col(_TOMBSTONE)).drop(_TOMBSTONE)
         else:
-            merged = _merge_layers_fold(frames, self.key_col, self.ts_col)
+            merged = _merge_layers_fold(frames, self.key_col, self.ts_col, cuts=cuts)
         if self.ttl is not None:
             cutoff = self.now_fn() - self.ttl
             merged = merged.where(
@@ -516,9 +560,17 @@ class KeyedTable:
 
         return select_required(self.df(), *columns)
 
-    def _visible_layers(self, as_of_layer: int | None) -> list[Path]:
+    def _visible_layers(self, as_of_layer) -> list[Path]:
         """Layers a read at ``as_of_layer`` may touch (all of them for
-        None), with the dirty-compaction horizon guard."""
+        None), with the dirty-compaction horizon guard. A pair ``(a, b)``
+        reads the layers visible at ``b`` once ``a`` passes the same
+        guards."""
+        if isinstance(as_of_layer, tuple):
+            a, b = as_of_layer
+            if not a < b:
+                raise ValueError(f"as_of_layer pair needs a < b, got {as_of_layer}")
+            self._visible_layers(a)
+            as_of_layer = b
         layers = self._layers()
         if as_of_layer is not None:
             # dirty compaction unlinks individual part-files from old base
@@ -538,7 +590,17 @@ class KeyedTable:
             raise FileNotFoundError(f"no table at {self.path}")
         return layers
 
-    def _layer_frames(self, pred, as_of_layer: int | None) -> DataFrame:
+    @staticmethod
+    def _cuts(layers: list[Path], as_of_layer):
+        """The fold's per-layer cut tags for a two-snapshot read ``(a, b)``:
+        a layer with seq <= a feeds both cuts, a later one only ``b``.
+        None for a one-snapshot read."""
+        if not isinstance(as_of_layer, tuple):
+            return None
+        a, b = as_of_layer
+        return [(a, b) if int(p.name.split("-")[1]) <= a else (b,) for p in layers]
+
+    def _layer_frames(self, pred, as_of_layer) -> DataFrame:
         """Layer frames with a KEY-DETERMINED predicate applied per layer
         BEFORE the merge, resolved into the visible-row relation. Shared by
         point_read / range_read (df() is the pred=None case): the caller
@@ -550,9 +612,9 @@ class KeyedTable:
         frames = [_cached_layer_df(self.spark, str(p)) for p in layers]
         if pred is not None:
             frames = [f.where(pred) for f in frames]
-        return self._resolve(frames)
+        return self._resolve(frames, cuts=self._cuts(layers, as_of_layer))
 
-    def point_read(self, keys: list, as_of_layer: int | None = None) -> DataFrame:
+    def point_read(self, keys: list, as_of_layer=None) -> DataFrame:
         """Multi-get: the merged view restricted to the given key LITERALS
         (HBase's Get/multiget — HBaseTable.scala's point-read path, the op
         the whole sorted-key layout exists to serve). The IN predicate is
@@ -577,18 +639,20 @@ class KeyedTable:
         an absent key touches no data file at all). Layers whose sidecar
         is missing or stale read in full; the result is identical either
         way (pinned by tests/test_table.py)."""
-        pred = _in_list_pred(self.key_col, keys)
+        pred = _in_list_pred(self.spark, self.key_col, keys)
         if self.bloom and keys:
             layers = self._visible_layers(as_of_layer)
             cands = self._bloom_candidates(layers, keys)
             if any(v is not None for v in cands.values()):
-                frames = []
-                for p in layers:
-                    c = cands[p]
-                    if c is None:
-                        frames.append(_cached_layer_df(self.spark, str(p)).where(pred))
-                    elif c:
-                        frames.append(self.spark.read.parquet(*c).where(pred))
+                kept = [p for p in layers if cands[p] is None or cands[p]]
+                frames = [
+                    (
+                        _cached_layer_df(self.spark, str(p))
+                        if cands[p] is None
+                        else self.spark.read.parquet(*cands[p])
+                    ).where(pred)
+                    for p in kept
+                ]
                 if not frames:
                     # every layer provably key-free: schema-correct empty
                     return self._layer_frames(pred, as_of_layer).where(
@@ -597,7 +661,9 @@ class KeyedTable:
                 # force_fold: bloom pruning can leave a LONE DELTA frame,
                 # whose kind markers / in-batch duplicates must still fold
                 # (the single-frame passthrough is only legal for a base)
-                return self._resolve(frames, force_fold=True)
+                return self._resolve(
+                    frames, force_fold=True, cuts=self._cuts(kept, as_of_layer)
+                )
         return self._layer_frames(pred, as_of_layer)
 
     # Largest key set ``semi_read`` hands to ``point_read`` as a literal IN
@@ -609,7 +675,7 @@ class KeyedTable:
     # key sets to the semi-join.
     POINT_READ_CAP = 8192
 
-    def semi_read(self, keys: DataFrame, as_of_layer: int | None = None) -> DataFrame:
+    def semi_read(self, keys: DataFrame, as_of_layer=None) -> DataFrame:
         """Merged view restricted to the keys PRESENT IN ``keys`` — the
         one keyed read for a key set given as a relation, identical to
         ``df(...).join(keys, key, 'semi')``. It collects at most
@@ -631,7 +697,15 @@ class KeyedTable:
           covering it; a spread-out batch prunes nothing and costs one
           extra small aggregation.
 
-        Either way the key set is resolved when ``semi_read`` is called."""
+        Either way the key set is resolved when ``semi_read`` is called.
+
+        ``as_of_layer=(a, b)`` (``a < b``) returns every key's state at
+        BOTH snapshots from one key collect, one scan per layer and one
+        shuffle, each row tagged with its snapshot's seq in a trailing
+        ``__cut`` column: layer rows with seq <= a feed both cuts, rows in
+        (a, b] feed only b, and the fold resolves each (key, cut) on its
+        own — the old and new states of a changed key set that
+        incremental maintenance diffs."""
         distinct = keys.select(self.key_col).distinct()
         head = [r[0] for r in distinct.limit(self.POINT_READ_CAP + 1).collect()]
         if len(head) <= self.POINT_READ_CAP:
@@ -650,9 +724,9 @@ class KeyedTable:
         ]
         # a lone visible layer is always the base (folded, unique keys) —
         # the semi-join preserves that, so the passthrough stays legal
-        return self._resolve(frames)
+        return self._resolve(frames, cuts=self._cuts(layers, as_of_layer))
 
-    def range_read(self, lower, upper, as_of_layer: int | None = None) -> DataFrame:
+    def range_read(self, lower, upper, as_of_layer=None) -> DataFrame:
         """Key-range scan: the merged view restricted to keys in
         ``[lower, upper]`` (inclusive; pass Columns or literals) — HBase's
         Scan(startRow, stopRow) over the sorted layout. Like ``point_read``,
@@ -852,7 +926,7 @@ class KeyedTable:
         # (cross-session fixtures publish via staging-dir rename — an
         # absolute path would point at the dead staging root and silently
         # prune every probe to zero files)
-        src = self.spark.read.parquet(str(layer)).select(
+        src = _cached_layer_df(self.spark, str(layer)).select(
             F.substring_index(F.col("_metadata.file_path"), "/", -1).alias(
                 "__bfile"
             ),
@@ -1206,8 +1280,23 @@ class KeyedTable:
     # -- compaction --------------------------------------------------------
 
     def _maybe_compact(self) -> None:
-        if len(self._layers()) > self.compact_threshold:
+        if not self._compaction_held and len(self._layers()) > self.compact_threshold:
             self.compact()
+
+    @contextlib.contextmanager
+    def _holding_compaction(self):
+        """Defer the mutations' inline compaction to the end of the block —
+        for a caller that reads, after its own write, a snapshot from
+        before it (index upkeep reads the touched keys at the pre-write
+        seq), which that compaction would fold away. The threshold check
+        runs once when the block completes; a block that raises leaves it
+        to the next mutation."""
+        self._compaction_held = True
+        try:
+            yield
+        finally:
+            self._compaction_held = False
+        self._maybe_compact()
 
     def compact(self, scope: str = "all", keep_since: int | None = None) -> None:
         """Major compaction: fold base ∪ deltas into one sorted base layer
@@ -1313,7 +1402,7 @@ class KeyedTable:
         horizon.write_text(str(max(prev, m)))
         # invalidate BEFORE the removals (crash safety — see
         # _replace_all_layers)
-        _invalidate_layer_cache(self.path)
+        self._uncache(fold)
         for p in fold:
             shutil.rmtree(p, ignore_errors=True)
             self._drop_bloom(p)
@@ -1480,7 +1569,7 @@ class KeyedTable:
         # in the cleanup below must leave a cache-consistent session (the
         # mid-crash on-disk state itself reads correctly — see the ordering
         # comment above — but a stale cached file listing would not).
-        _invalidate_layer_cache(self.path)
+        self._uncache(layers)
         for f in dirty_files:
             f.unlink(missing_ok=True)
         # a base dir whose every part-file was consumed is no longer a
@@ -1493,6 +1582,22 @@ class KeyedTable:
             shutil.rmtree(p, ignore_errors=True)
             self._drop_bloom(p)
         return True
+
+
+def _nullable(dt):
+    """``dt`` with every field, array element and map value nullable — the
+    schema Spark infers when it reads a parquet file back."""
+    from pyspark.sql.types import ArrayType, MapType, StructField, StructType
+
+    if isinstance(dt, StructType):
+        return StructType(
+            [StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in dt]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
 
 
 def _observed_count(df: DataFrame):
@@ -1522,7 +1627,8 @@ def _fold_s(c: str) -> str:
 
 
 def _merge_layers_fold(
-    frames: list[DataFrame], key_col: str, ts_col: str, keep_state: bool = False
+    frames: list[DataFrame], key_col: str, ts_col: str, keep_state: bool = False,
+    cuts: list[tuple] | None = None,
 ) -> DataFrame:
     """Merge ordered layer frames into the visible-row relation — the
     table's ONE version-resolution rule (HBase resolving a Get/Scan across
@@ -1550,6 +1656,12 @@ def _merge_layers_fold(
     every existing key with its resolved ``__tombstone`` instead (what a
     prefix compaction persists, so retained layers re-apply over the
     folded base exactly as over the original stack).
+
+    ``cuts`` folds several snapshots in the same pass: ``cuts[i]`` lists
+    the cut tags (snapshot seqs) frame i feeds, each row of the frame is
+    repeated once per tag into a ``__cut`` column, the window partitions
+    by (key, ``__cut``), and the result carries ``__cut`` last — one scan
+    per frame and one shuffle for every snapshot.
 
     Evaluated as ONE shuffle + sort + window/CASE resolution — no
     interpreted higher-order functions, so the per-version resolution runs
@@ -1600,10 +1712,17 @@ def _merge_layers_fold(
             + " AS __fdc",
             (q(_TOMBSTONE) if _TOMBSTONE in f.columns else "false") + " AS __ftb",
         ] + [q(c) for c in payload]
+        if cuts is not None:
+            tags = [f"CAST({int(c)} AS BIGINT)" for c in cuts[seq]]
+            sel.append(
+                (tags[0] if len(tags) == 1 else f"explode(array({', '.join(tags)}))")
+                + " AS __cut"
+            )
         t = f.selectExpr(*sel)
         tagged = t if tagged is None else tagged.unionByName(t)
 
-    wo = f"PARTITION BY {key_q} ORDER BY __fseq"
+    part = key_q if cuts is None else f"{key_q}, __cut"
+    wo = f"PARTITION BY {part} ORDER BY __fseq"
     wpart = f"{wo} ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING"
 
     # pass 1: position + the running ts max that decides the LWW gate
@@ -1686,6 +1805,8 @@ def _merge_layers_fold(
             )
         else:
             final_cols.append(f"__fv{i}.v AS {q(c)}")
+    if cuts is not None:
+        final_cols.append("__cut")
 
     one = w3.where(F.expr("__frn = 1"))
     if keep_state:

@@ -173,19 +173,109 @@ def test_point_read_matches_merged_view_and_pushes_in_filter(spark, tmp_path):
     assert "PushedFilters" in plan and "In(key" in plan
 
 
-def test_index_maintenance_reads_are_point_reads(spark, tmp_path):
-    """A bounded maintenance batch must NOT scan the base: the stale-entry
-    read's plan carries the pushed IN list (footer-pruned O(batch) files),
-    not a table-sized semi-join scan."""
+def _spy_semi_reads(monkeypatch) -> list:
+    """Record every ``KeyedTable.semi_read`` as (table, as_of_layer, result)."""
+    calls = []
+    real = KeyedTable.semi_read
+
+    def spy(self, keys, as_of_layer=None):
+        out = real(self, keys, as_of_layer)
+        calls.append((self, as_of_layer, out))
+        return out
+
+    monkeypatch.setattr(KeyedTable, "semi_read", spy)
+    return calls
+
+
+def test_index_maintenance_reads_are_point_reads(spark, tmp_path, monkeypatch):
+    """A bounded maintenance batch must NOT scan the base: the one
+    maintenance read — the touched keys at the pre-write and latest
+    snapshots — carries the pushed IN list (footer-pruned O(batch)
+    files), not a table-sized semi-join scan."""
     tbl, idx = _fixture(spark, tmp_path)
-    batch = spark.createDataFrame([Row(key=1, name="a2", color="blue", ts=200)])
-    plan = (
-        idx._stale_entry_keys(batch)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
+    reads = _spy_semi_reads(monkeypatch)
+    idx.update(spark.createDataFrame([Row(key=1, name="a2", color="blue", ts=200)]))
+    (read,) = [out for t, _, out in reads if t is tbl]
+    plan = read._jdf.queryExecution().executedPlan().toString()
     # pushed literal probe (Catalyst folds a 1-element IN to EqualTo),
     # not a join against the full df()
     assert "In(key" in plan or "EqualTo(key,1)" in plan
+
+
+def test_indexed_mutations_read_once_and_write_one_index_layer(
+    spark, tmp_path, monkeypatch
+):
+    """Deterministic cost pins of the maintenance transaction: an indexed
+    update of a multi-key batch, and an indexed delete, each make exactly
+    ONE base ``semi_read`` (a two-cut read) and add exactly ONE index
+    layer; a matview refresh after an update makes one ``semi_read``.
+    About 15 s of tier-1."""
+    from spark_on_hbase_spark.matview import MaterializedAgg
+
+    tbl, idx = _fixture(spark, tmp_path)
+    reads = _spy_semi_reads(monkeypatch)
+
+    def run(op):
+        reads.clear()
+        before = len(idx.tbl._layers())
+        op()
+        return [a for t, a, _ in reads if t is tbl], len(idx.tbl._layers()) - before
+
+    cuts, added = run(lambda: idx.update(spark.createDataFrame([
+        Row(key=1, name="a2", color="blue", ts=200),
+        Row(key=2, name="b2", color="gold", ts=200),
+        Row(key=9, name="z", color="red", ts=200),
+    ])))
+    assert len(cuts) == 1 and isinstance(cuts[0], tuple) and added == 1
+    cuts, added = run(lambda: idx.delete(
+        spark.createDataFrame([Row(key=2), Row(key=3)])
+    ))
+    assert len(cuts) == 1 and isinstance(cuts[0], tuple) and added == 1
+    assert idx.scrutiny().count() == 0
+
+    mt = KeyedTable(spark, str(tmp_path / "mvbase"), key_col="key", ts_col="ts")
+    schema = "key bigint, g int, v bigint, ts bigint"
+    mt.create(spark.createDataFrame([(1, 1, 10, 0), (2, 1, 20, 0), (3, 2, 30, 0)], schema))
+    mv = MaterializedAgg(spark, str(tmp_path / "mv"), mt, "g", sums={"sv": "v"}).build()
+    a = mt.snapshot_seq()
+    mt.update(spark.createDataFrame([(1, 2, 11, 1), (4, 3, 40, 1)], schema))
+    reads.clear()
+    assert mv.refresh() == 3
+    assert [cut for _, cut, _ in reads] == [(a, mt.snapshot_seq())]
+    assert {tuple(r) for r in mv.df().collect()} == {(1, 20, 1), (2, 41, 2), (3, 40, 1)}
+
+
+def test_uncrashed_maintenance_never_takes_the_retry_path(spark, tmp_path, monkeypatch):
+    """The O(index) retry path (``_recover``) is for a stamped retry whose
+    base write committed in an earlier attempt only: stamped indexed
+    mutations that carry the base across its ``compact_threshold`` — its
+    inline compaction held until each index layer lands, so the
+    pre-write snapshot is still readable — never take it, and the index
+    stays exact. About 15 s of tier-1."""
+    tbl = KeyedTable(spark, str(tmp_path / "base"), key_col="key", ts_col="ts",
+                     compact_threshold=2)
+    tbl.create(spark.createDataFrame(
+        [Row(key=k, name=f"n{k}", color="red", ts=100) for k in range(1, 5)]
+    ))
+    idx = SecondaryIndex(tbl, "color", str(tmp_path / "idx")).build()
+    monkeypatch.setattr(
+        SecondaryIndex, "_recover",
+        lambda *a, **k: pytest.fail("retry path on an uncrashed mutation"),
+    )
+    for i in range(4):
+        idx.update(
+            spark.createDataFrame([Row(key=1 + i, name="x", color=f"c{i}", ts=200 + i)]),
+            stamp=f"u{i}",
+        )
+    idx.delete(spark.createDataFrame([Row(key=2)]), stamp="d0")
+    # the base compacted inline at least once (a base layer past seq 0)
+    assert any(
+        p.name.startswith("base-") and int(p.name.split("-")[1]) > 0
+        for p in tbl._layers()
+    )
+    assert idx.scrutiny().count() == 0
+    assert {r["key"] for r in idx.lookup("c3").collect()} == {4}
+    assert idx.lookup("c1").count() == 0
 
 
 def test_put_through_index_maintains_entries(spark, tmp_path):
@@ -400,56 +490,86 @@ def test_composite_index_leading_edge_probes(spark, tmp_path):
 
 
 def test_stamped_maintenance_converges_under_crash_and_replay(spark, tmp_path):
-    """The Phoenix repair story as code: a stamped idx.update is a
-    retry-idempotent transaction. Crash it between every pair of its three
-    sub-writes (simulated by making its stamped sub-writes directly), retry
-    the whole op with the same stamp, and the pair must converge — each
-    sub-write commits exactly once (stamps pin this), reads stay correct,
-    and a full replay after success is a strict no-op (no new layers)."""
+    """The Phoenix repair story as code: a stamped indexed mutation is a
+    retry-idempotent transaction of two writes, base first. Crash it
+    between them (simulated by making its stamped base write directly):
+    the index then holds stale entries for the old values and lacks the
+    new ones — an uncovered lookup of an old value returns nothing (the
+    verified read), a covered one still serves it. Retrying the whole op
+    with the same stamp converges (scrutiny empty) for update, put,
+    increment, row delete and cell delete — also when another indexed
+    write to the same key, or a compaction that folded the stamped base
+    layer, ran between the crash and the retry — and a full replay after
+    success adds no layer to either table."""
     tbl, idx = _fixture(spark, tmp_path)
+
+    def keys(df):
+        return {r["key"] for r in df.collect()}
+
+    # crash after the base write: key 1 moved red -> blue in the base only
     b1 = spark.createDataFrame([Row(key=1, name="a2", color="blue", ts=200)])
+    tbl.update(b1, stamp="b1")
+    assert keys(idx.lookup("red")) == {2}  # the stale entry is verified away
+    assert keys(idx.lookup("red", covered=True)) == {1, 2}  # served stale
+    assert keys(idx.lookup("blue")) == {3}  # the new entry is missing
+    assert idx.update(b1, stamp="b1") == 0  # retry: the base write landed
+    assert keys(idx.lookup("red", covered=True)) == {2}
+    assert keys(idx.lookup("blue")) == {1, 3}
+    assert idx.scrutiny().count() == 0
+    assert sum(1 for p in tbl._layers() if p.name.endswith("-b1")) == 1
+    assert sum(1 for p in idx.tbl._layers() if p.name.endswith("-b1_xi")) == 1
 
-    # crash after sub-write 1 (stale entries tombstoned, base untouched)
-    idx.tbl.delete(idx._stale_entry_keys(b1), stamp="b1_xd")
-    idx.update(b1, stamp="b1")  # retry
-    assert {r["key"] for r in idx.lookup("red").collect()} == {2}
-    assert 1 in {r["key"] for r in idx.lookup("blue").collect()}
-    assert "b1_xd" in idx.tbl.applied_stamps()  # committed once, not twice
-    assert sum(1 for p in idx.tbl._layers() if "b1_xd" in p.name) == 1
-
-    # crash after sub-write 2 (base mutated, index insert missing: the
-    # documented stale window — old entry gone, new entry absent)
+    # another indexed write to the same key between the crash and the retry
     b2 = spark.createDataFrame([Row(key=2, name="b2", color="green", ts=300)])
-    idx.tbl.delete(idx._stale_entry_keys(b2), stamp="b2_xd")
     tbl.update(b2, stamp="b2")
-    assert idx.lookup("green").count() == 0  # mid-crash staleness, honest
-    idx.update(b2, stamp="b2")  # retry runs ONLY the index insert
-    assert {r["key"] for r in idx.lookup("green").collect()} == {2}
-    assert sum(1 for p in tbl._layers() if p.name.endswith("-b2")) == 1
+    idx.update(
+        spark.createDataFrame([Row(key=2, name="b3", color="gold", ts=400)]),
+        stamp="b2x",
+    )
+    assert keys(idx.lookup("red", covered=True)) == {2}  # still stale
+    idx.update(b2, stamp="b2")
+    assert idx.scrutiny().count() == 0
+    assert keys(idx.lookup("gold")) == {2}
+    assert idx.lookup("green").count() == 0 and idx.lookup("red").count() == 0
+
+    # a compaction folded the stamped base layer before the retry
+    b3 = spark.createDataFrame([Row(key=3, name="c2", color="red", ts=500)])
+    tbl.update(b3, stamp="b3")
+    tbl.compact()
+    assert "b3" in tbl.applied_stamps()
+    idx.update(b3, stamp="b3")
+    assert idx.scrutiny().count() == 0
+    assert keys(idx.lookup("red")) == {3} and idx.lookup("blue").count() == 1
+
+    # row delete and cell delete of the indexed column: same crash point
+    tbl.delete(spark.createDataFrame([Row(key=1)]), stamp="d1")
+    assert idx.lookup("blue").count() == 0
+    idx.delete(spark.createDataFrame([Row(key=1)]), stamp="d1")
+    tbl.delete(spark.createDataFrame([Row(key=3)]), columns=["color"], stamp="d2")
+    assert idx.lookup("red").count() == 0
+    idx.delete(spark.createDataFrame([Row(key=3)]), columns=["color"], stamp="d2")
+    assert idx.scrutiny().count() == 0
+    assert idx.tbl.df().where(F.col("base_key").isin(1, 3)).count() == 0
 
     # full replay after success: strict no-op on both tables
     seqs = (tbl.snapshot_seq(), idx.tbl.snapshot_seq())
-    idx.update(b1, stamp="b1")
-    idx.update(b2, stamp="b2")
+    for b, stamp in ((b1, "b1"), (b2, "b2"), (b3, "b3")):
+        assert idx.update(b, stamp=stamp) == 0
+    idx.delete(spark.createDataFrame([Row(key=1)]), stamp="d1")
+    idx.delete(spark.createDataFrame([Row(key=3)]), columns=["color"], stamp="d2")
     assert (tbl.snapshot_seq(), idx.tbl.snapshot_seq()) == seqs
 
-    # stamped delete: same contract
-    idx.delete(spark.createDataFrame([Row(key=3)]), stamp="b3")
-    assert idx.lookup("blue").count() == 1  # key 1 only; 3 deleted
-    seqs = (tbl.snapshot_seq(), idx.tbl.snapshot_seq())
-    idx.delete(spark.createDataFrame([Row(key=3)]), stamp="b3")
-    assert (tbl.snapshot_seq(), idx.tbl.snapshot_seq()) == seqs
-
-    # a stale-ts update loses LWW: its key's entry is tombstoned and
-    # re-inserted at the stored ts, and stays live
+    # a stale-ts update loses LWW: its key's entry is re-inserted at the
+    # stored ts, and stays live
     idx.update(spark.createDataFrame([Row(key=2, name="x", color="red", ts=250)]))
-    assert {r["key"] for r in idx.lookup("green").collect()} == {2}
+    assert keys(idx.lookup("gold")) == {2}
     assert idx.lookup("red").count() == 0
     assert idx.scrutiny().count() == 0
 
     # put and increment run the same transaction: crash a put that moves
-    # the indexed column and an increment of a covered counter after _xd
-    # and after the base write, then retry each with the same stamp
+    # the indexed column and an increment of a covered counter after the
+    # base write and retry each with the same stamp, then apply each once
+    # more uncrashed
     ctbl = KeyedTable(
         spark, str(tmp_path / "cbase"), key_col="key", ts_col="ts"
     )
@@ -466,20 +586,21 @@ def test_stamped_maintenance_converges_under_crash_and_replay(spark, tmp_path):
         [(1, "gold", 200), (3, "gold", 200)], "key bigint, color string, ts bigint"
     )
     inc = spark.createDataFrame([(2, 5), (3, 7)], "key bigint, delta bigint")
-    ops = [
-        ("put", p, ctbl.put, {}),
-        ("inc", inc, ctbl.increment, {"counter_col": "cnt"}),
-    ]
-    for name, batch, write, kw in ops:
-        for crash_after_base in (False, True):
-            stamp = f"{name}{int(crash_after_base)}"
-            cidx.tbl.delete(cidx._stale_entry_keys(batch), stamp=f"{stamp}_xd")
-            if crash_after_base:
-                write(batch, stamp=stamp, **kw)
-            getattr(cidx, "put" if name == "put" else "increment")(
-                batch, stamp=stamp, **kw
-            )
-            assert cidx.scrutiny().count() == 0, (name, crash_after_base)
+
+    ctbl.put(p, stamp="put0")
+    assert keys(cidx.lookup("red")) == {2} and cidx.lookup("blue").count() == 0
+    cidx.put(p, stamp="put0")
+    assert cidx.scrutiny().count() == 0
+    cidx.put(p, stamp="put1")
+    ctbl.increment(inc, counter_col="cnt", stamp="inc0")
+    # a covered read serves the pre-increment counter until the retry
+    assert {(r["key"], r["cnt"]) for r in cidx.lookup("red", covered=True).collect()} == {
+        (2, 20)
+    }
+    cidx.increment(inc, "cnt", stamp="inc0")
+    assert cidx.scrutiny().count() == 0
+    cidx.increment(inc, "cnt", stamp="inc1")
+    assert cidx.scrutiny().count() == 0
     # each batch applied exactly once per stamp: two puts, two increments
     got = {
         (r["key"], r["color"], r["cnt"])
@@ -859,13 +980,17 @@ def test_scrutiny_detects_and_repair_reconciles_a_staled_index(spark, tmp_path):
 
 def test_direct_base_write_stales_the_index_as_documented(spark, tmp_path):
     """Mutating the base WITHOUT the index (HBase-behind-Phoenix's-back)
-    leaves the index stale: the old-value lookup still returns the moved
-    key's (current) base row. Pins the documented consistency contract —
-    if maintenance ever became storage-enforced this should start failing."""
+    leaves the index stale: the old entry survives — a covered lookup of
+    the old value still serves it, and scrutiny reports it orphaned —
+    while the uncovered lookup's read-time verification drops the moved
+    row. Pins the documented consistency contract — if maintenance ever
+    became storage-enforced this should start failing."""
     tbl, idx = _fixture(spark, tmp_path)
     tbl.update(spark.createDataFrame([Row(key=1, name="a2", color="blue", ts=200)]))
-    stale = {r["key"] for r in idx.lookup("red").collect()}
+    stale = {r["key"] for r in idx.lookup("red", covered=True).collect()}
     assert 1 in stale  # stale entry survives
+    assert 1 not in {r["key"] for r in idx.lookup("red").collect()}  # verified
+    assert {r["status"] for r in idx.scrutiny().collect()} == {"orphaned", "missing"}
     # and the fresh-value lookup misses the move entirely
     assert 1 not in {r["key"] for r in idx.lookup("blue").collect()}
 

@@ -44,9 +44,10 @@ def test_stream_merge_through_secondary_index(spark, tmp_path):
     """Streaming ingest THROUGH a secondary index: a real availableNow
     micro-batch stream of value-moving upserts keeps the base table AND
     the index exactly-once consistent; a replayed batch is a strict no-op
-    on both tables; and a crash between the maintenance jobs (only the
-    stale-delete committed) self-repairs when the guarded body re-runs
-    with the same batch id — the stream's replay IS the repair path."""
+    on both tables; and a crash between the maintenance writes (the base
+    merge committed, the index layer not) self-repairs when the guarded
+    body re-runs with the same batch id — the stream's replay IS the
+    repair path."""
     from spark_on_hbase_spark.index import SecondaryIndex
 
     table = KeyedTable(spark, str(tmp_path / "base"), key_col="key", ts_col="ts")
@@ -82,14 +83,17 @@ def test_stream_merge_through_secondary_index(spark, tmp_path):
     body(batch0, 0)
     assert (table.snapshot_seq(), idx.tbl.snapshot_seq()) == seqs
 
-    # crash window: batch 1's stale-delete commits, then the "stream"
+    # crash window: batch 1's base merge commits, then the "stream"
     # re-runs the guarded body for the same batch id — must converge
     batch1 = spark.createDataFrame([Row(key="b", ts=2, color="green")])
-    idx.tbl.delete(idx._stale_entry_keys(batch1), stamp=f"g{guard}_b1_xd")
+    table.update(batch1, stamp=f"g{guard}_b1")
     assert idx.lookup("green").count() == 0  # honest mid-crash staleness
+    # b's stale red entry is still stored; the verified lookup drops it
+    assert {r["key"] for r in idx.lookup("red").collect()} == {"c"}
     body(batch1, 1)
     assert {r["key"] for r in idx.lookup("green").collect()} == {"b"}
     assert idx.lookup("red").count() == 1  # c only
+    assert idx.scrutiny().count() == 0
     # and replaying batch 1 once more is a no-op
     seqs = (table.snapshot_seq(), idx.tbl.snapshot_seq())
     body(batch1, 1)

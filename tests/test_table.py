@@ -394,7 +394,8 @@ def test_mutation_sequence_matches_model(spark, tmp_path, layer_files):
     every mutation df() must equal the model, and random reads — df,
     point_read, range_read, semi_read, at the latest layer or as_of_layer
     a snapshot taken since the last compaction — must equal the model's
-    state at that point. Every mutation passes a fresh stamp, and a retry
+    state at that point; a two-cut semi_read over two such snapshots must
+    equal the model's state at each cut. Every mutation passes a fresh stamp, and a retry
     of the last one — before or after a compaction — must return 0 and
     change neither the snapshot seq nor the table's contents.
     Derandomized with no example database, so every run replays the same
@@ -578,9 +579,20 @@ def test_mutation_sequence_matches_model(spark, tmp_path, layer_files):
             assert _m_canon(df.collect()) == _m_expect(self.model.visible())
             self.checked = True
 
-        @rule(how=st.sampled_from(["df", "point", "range", "semi"]),
+        @rule(how=st.sampled_from(["df", "point", "range", "semi", "cuts"]),
               keys=key_sets, data=st.data())
         def read(self, how, keys, data):
+            if how == "cuts" and len(self.snaps) >= 2:
+                # two snapshots since the last compaction, in one read
+                (a, va), (b, vb) = sorted(data.draw(st.lists(
+                    st.sampled_from(self.snaps), min_size=2, max_size=2,
+                    unique_by=lambda s: s[0],
+                )), key=lambda s: s[0])
+                rows_ = self.t.semi_read(keys_df(keys), as_of_layer=(a, b)).collect()
+                for cut, visible in ((a, va), (b, vb)):
+                    got = _m_canon(r[:-1] for r in rows_ if r["__cut"] == cut)
+                    assert got == _m_expect(visible, set(keys)), cut
+                return
             # the latest state, or a snapshot since the last compaction
             seq, visible = data.draw(st.sampled_from(self.snaps[::-1]))
             if seq == self.snaps[-1][0]:
@@ -1643,3 +1655,129 @@ def test_semi_read_pushes_key_envelope_to_layer_scans(spark, tmp_path, monkeypat
     # empty key set: schema-correct empty result, no job over the table
     empty = t.semi_read(keys.where(F.lit(False)))
     assert empty.columns == sr.columns and empty.count() == 0
+
+
+@pytest.mark.parametrize("path", ["multiget", "bloom", "semi_join"])
+def test_two_cut_semi_read_returns_both_snapshots(spark, tmp_path, monkeypatch, path):
+    """``semi_read(keys, as_of_layer=(a, b))`` returns each key's state at
+    both snapshots, tagged by cut in ``__cut``, on all three read paths
+    (the literal multiget, its Bloom-pruned form, and the over-cap
+    semi-join): each cut equals the one-snapshot read of the same keys,
+    layers after ``a`` feed only cut ``b``, and one fold shuffle serves
+    both cuts. A pair out of order is rejected. About 20 s of tier-1 for
+    the three paths."""
+    from spark_on_hbase_spark import plans
+
+    if path == "semi_join":
+        monkeypatch.setattr(KeyedTable, "POINT_READ_CAP", 0)
+    t = KeyedTable(spark, str(tmp_path / "t"), key_col="k", ts_col="ts",
+                   bloom=path == "bloom")
+    base = spark.range(60).select(
+        F.col("id").alias("k"), (F.col("id") * 10).alias("v"),
+        F.lit(100).cast("int").alias("ts"),
+    )
+    t.create(base)
+    t.increment(base.where("k % 2 = 0").select(
+        "k", F.lit(7).cast("bigint").alias("delta")), counter_col="v")
+    a = t.snapshot_seq()
+    t.update(base.where("k % 3 = 0").select(
+        "k", F.lit(-1).cast("bigint").alias("v"), F.lit(200).cast("int").alias("ts")))
+    t.delete(base.where("k % 5 = 0").select("k"))
+    t.update(spark.createDataFrame([(1000, 1, 300)], "k bigint, v bigint, ts int"))
+    b = t.snapshot_seq()
+    t.delete(base.where("k % 4 = 0").select("k"))  # after b: in neither cut
+    keys = spark.createDataFrame([(k,) for k in (0, 2, 3, 5, 9, 30, 1000, 2000)], "k bigint")
+    both = t.semi_read(keys, as_of_layer=(a, b))
+    assert both.columns == ["k", "v", "ts", "__cut"]
+    scans, shuffles, _, _ = plans.plan_budget(both)
+    assert scans <= len(t._visible_layers(b)) and shuffles == 1
+    rows_ = both.collect()
+    for cut in (a, b):
+        got = {tuple(r)[:3] for r in rows_ if r["__cut"] == cut}
+        want = {tuple(r) for r in t.df(as_of_layer=cut).join(keys, "k", "semi").collect()}
+        assert got == want and got, cut
+    assert {r["k"] for r in rows_ if r["__cut"] == a} != {r["k"] for r in rows_ if r["__cut"] == b}
+    with pytest.raises(ValueError, match="a < b"):
+        t.semi_read(keys, as_of_layer=(b, a))
+
+
+_ADVERSARIAL_KEYS = [
+    "plain", "quo'te", "''", "back\\slash", "\\", "trail\\", "${x}", "$${x}",
+    "$", "nul\x00byte", "tab\there", "new\nline", "cr\rlf", "emoji\U0001F600",
+    "\\u0041", "A", "%s", "`tick`", '"dq"', ";--",
+]
+
+
+def test_string_point_read_is_one_parsed_in_list(spark, tmp_path, monkeypatch):
+    """String key lists become ONE parsed ``IN`` expression, never
+    ``Column.isin``'s round-trip per literal: adversarial keys (quotes,
+    backslashes, ``${...}`` that variable substitution would rewrite,
+    NUL, tab, newline, an astral emoji, the six-character text ``\\u0041``)
+    read back exactly what ``df()`` filtered by ``isin`` holds, the key
+    predicate reaches the scan as a pushed In, and a 300-key multiget
+    builds with ``isin`` made to raise. About 9 s of tier-1."""
+    from pyspark.sql import Column
+
+    from spark_on_hbase_spark import plans
+
+    t = KeyedTable(spark, str(tmp_path / "s"), key_col="key", ts_col="ts")
+    filler = [f"k{i:04d}" for i in range(300)]
+    t.create(spark.createDataFrame(
+        [(k, 1, i) for i, k in enumerate(_ADVERSARIAL_KEYS + filler)],
+        "key string, ts int, v int",
+    ))
+    t.update(spark.createDataFrame([("quo'te", 2, -1), ("${x}", 2, -2)], "key string, ts int, v int"))
+    probe = _ADVERSARIAL_KEYS[::2] + ["absent'", "$${y}"]
+    want = sorted(map(tuple, t.df().where(F.col("key").isin(probe)).collect()))
+    monkeypatch.setattr(Column, "isin", lambda *a, **k: pytest.fail("isin called"))
+    for keys in (probe, _ADVERSARIAL_KEYS[1::2]):
+        df = t.point_read(keys)
+        assert sorted(r["key"] for r in df.collect()) == sorted(
+            k for k in keys if k in _ADVERSARIAL_KEYS
+        )
+        plan = plans.formatted_plan(df)
+        assert "PushedFilters: [In(key," in plan or "PushedFilters: [InSet(key," in plan
+    assert sorted(map(tuple, t.point_read(probe).collect())) == want
+    for k in _ADVERSARIAL_KEYS:  # each key alone (a one-element IN)
+        assert [r["key"] for r in t.point_read([k]).collect()] == [k], repr(k)
+    assert len(t.point_read(filler).collect()) == 300
+
+
+def test_write_layer_seeds_the_layer_cache_with_the_read_schema(spark, tmp_path):
+    """Every layer ``_write_layer`` renames into place is cached with the
+    schema it was written with (every field nullable), so its first read
+    skips parquet schema inference: the seeded schema must equal what
+    ``spark.read.parquet`` infers, for create, update, put, increment, row
+    and cell delete, the bases of full, dirty and prefix compaction, index
+    layers and matview layers. About 15 s of tier-1."""
+    from spark_on_hbase_spark.index import SecondaryIndex
+    from spark_on_hbase_spark.matview import MaterializedAgg
+    from spark_on_hbase_spark.table import _LAYER_DF_CACHE
+
+    def check(tbl):
+        for p in tbl._layers():
+            seeded = _LAYER_DF_CACHE[(spark.sparkContext, str(p))]
+            assert seeded.schema == spark.read.parquet(str(p)).schema, p.name
+
+    t = KeyedTable(spark, str(tmp_path / "t"), key_col="key", ts_col="ts",
+                   compact_threshold=99)
+    t.create(spark.createDataFrame(
+        [(f"k{i}", 100, i, f"g{i % 3}", [i]) for i in range(10)],
+        "key string, ts int, v bigint, g string, arr array<int>",
+    ))
+    idx = SecondaryIndex(t, "g", str(tmp_path / "i"), include=["v"]).build()
+    mv = MaterializedAgg(spark, str(tmp_path / "mv"), t, "g", sums={"sv": "v"}).build()
+    idx.update(spark.createDataFrame([("k1", 200, 5, "g9", [1, 2])], t.df().schema))
+    idx.put(spark.createDataFrame([("k2", 300, "g8")], "key string, ts int, g string"))
+    idx.increment(spark.createDataFrame([("k3", 4)], "key string, delta bigint"), "v")
+    idx.delete(spark.createDataFrame([("k4",)], "key string"))
+    idx.delete(spark.createDataFrame([("k5",)], "key string"), columns=["g"])
+    mv.refresh()
+    for tbl in (t, idx.tbl, mv.mv):
+        check(tbl)
+    t.compact(keep_since=t.snapshot_seq() - 2)
+    check(t)
+    t.compact(scope="dirty")
+    check(t)
+    t.compact()
+    check(t)
