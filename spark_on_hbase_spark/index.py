@@ -541,13 +541,7 @@ class SecondaryIndex:
             os.remove(self._guidepost_path())
         except OSError:
             pass
-        # materialize the entry relation once (lazily): create()'s layer
-        # write executes its input twice (range-sampling + write), and a
-        # functional/multi-valued index's entry derivation (e.g. the
-        # near-dup index's per-document MinHash banding) is the expensive
-        # half of a bulk build. localCheckpoint spills to disk past
-        # memory, so the pattern holds at any build size (guide §2.4).
-        self.tbl.create(self._entries(self.base.df()).localCheckpoint(eager=False))
+        self.tbl.create(self._entries(self.base.df()))
         self._refresh_guideposts()
         return self
 
@@ -567,7 +561,7 @@ class SecondaryIndex:
 
         ``stamp`` makes the transaction retry-idempotent: the base write
         carries ``<stamp>`` and the index layer ``<stamp>_xi``, each
-        recorded atomically in its layer's directory name, and a
+        committed in the same log swap as its layer, and a
         KeyedTable write whose stamp already committed writes nothing — a
         retry after a crash between the two writes only finishes the
         index layer.
@@ -664,10 +658,9 @@ class SecondaryIndex:
         left to do."""
         if not touches:
             return write(batch, stamp=stamp, **kw)
-        # the base write reads the batch twice (range sampling, then the
-        # write) and the maintenance read's key collect once more: an
-        # O(batch) lazy checkpoint runs its lineage (for a driver-local
-        # batch, a Python worker pass) once
+        # the base write and the maintenance read's key collect each read
+        # the batch: an O(batch) lazy checkpoint runs its lineage (for a
+        # driver-local batch, a Python worker pass) once
         batch = batch.localCheckpoint(eager=False)
         xi = None if stamp is None else f"{stamp}_xi"
         if stamp is not None and stamp in self.base.applied_stamps():
@@ -677,8 +670,8 @@ class SecondaryIndex:
         with self.base._holding_compaction():
             a = self.base.snapshot_seq()
             n = write(batch, stamp=stamp, **kw)
-            # lazy checkpoint: both cuts feed the layer, whose write runs
-            # its input twice (range sampling, then the write)
+            # lazy checkpoint: the new and the old entries each read both
+            # cuts' states
             states = self.base.semi_read(
                 batch, as_of_layer=(a, self.base.snapshot_seq())
             ).localCheckpoint(eager=False)

@@ -1451,7 +1451,7 @@ def grouped_topk_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SEC_IDX_FIXTURE_DONE: set[str] = set()
 
 
-_SEC_IDX_FIXTURE_VERSION = 3  # bump when tables/mutations/layout change
+_SEC_IDX_FIXTURE_VERSION = 4  # bump when tables/mutations/layout change
 
 
 def _sec_index_handles(spark: SparkSession, root: str) -> dict:
@@ -2206,7 +2206,7 @@ def _stream_mv_handles(spark: SparkSession, root: str):
     return base, mv
 
 
-_STREAM_MV_VERSION = 2  # bump when rows/mutations/layout change
+_STREAM_MV_VERSION = 3  # bump when rows/mutations/layout change
 _STREAM_MV_DONE: set[str] = set()
 
 
@@ -2374,7 +2374,7 @@ warmer("stream_mv_fixture")(
 )
 
 
-_BLOOM_PR_VERSION = 3  # bump when rows/mutations/layout change
+_BLOOM_PR_VERSION = 4  # bump when rows/mutations/layout change
 
 
 def _bloom_pr_fixture(spark: SparkSession, sf_dir: str) -> KeyedTable:

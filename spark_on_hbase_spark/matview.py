@@ -57,9 +57,9 @@ order); MIN/MAX accept any numeric column (no accumulation — the extreme
 of a set is deterministic on every engine).
 
 Consistency + crash story:
-- refresh work is idempotent: the sum-delta layer carries the stamp
-  ``mv_upto_{seq}`` and the extremes put ``mv_upto_{seq}_x`` in their
-  directory names (data + applied-marker commit in one rename,
+- refresh work is idempotent: the sum-delta layer commits with the stamp
+  ``mv_upto_{seq}`` and the extremes put with ``mv_upto_{seq}_x`` (data
+  and applied-marker commit in one swap of the view table's log,
   ``KeyedTable._write_layer``); each half's applied horizon is recovered
   as max(meta sidecar, its stamps), so a crash anywhere re-runs exactly
   the missing work and never double-applies;
@@ -300,13 +300,11 @@ class MaterializedAgg:
         if changed.isEmpty():
             return None, None, changed
         # both states are read at least once by the sum delta and — for
-        # MIN/MAX views — a second time by the touched-group derivation,
-        # and the delta layer write itself executes its input twice
-        # (repartitionByRange samples, then writes). Marking the O(Δ)
-        # states lazily checkpointed folds all of that into ONE execution
-        # of the two-snapshot fold; before r11 the minmax refresh ran the
-        # full fold up to 4x (measured 13.8s at sf0.1, see
-        # OPTIMIZATION_r11.md).
+        # MIN/MAX views — a second time by the touched-group derivation.
+        # Marking the O(Δ) states lazily checkpointed folds all of that
+        # into ONE execution of the two-snapshot fold; before r11 the
+        # minmax refresh ran the full fold up to 4x (measured 13.8s at
+        # sf0.1, see OPTIMIZATION_r11.md).
         states = self.base.semi_read(changed, as_of_layer=(lo, hi)).localCheckpoint(
             eager=False
         )
@@ -329,12 +327,9 @@ class MaterializedAgg:
         if cur <= lo:
             self._write_meta(cur)
             return 0
-        post = [
-            p
-            for p in self.base._visible_layers(None)
-            if int(p.name.split("-")[1]) > lo
-        ]
-        if any(p.name.startswith("base-") for p in post):
+        if any(
+            L.kind == "base" and L.seq > lo for L in self.base._visible_layers(None)
+        ):
             # a compaction folded unprocessed history: the feed no longer
             # carries the individual mutations (and deleted keys are
             # physically gone from the new base), so a delta would be wrong
@@ -365,10 +360,6 @@ class MaterializedAgg:
                             ],
                             F.sum("__dx_n").alias("__d_n"),
                         )
-                        # O(touched groups) rows; the delta layer write
-                        # executes its input twice (range-sampling + write),
-                        # so materialize the aggregation once
-                        .localCheckpoint(eager=False)
                     )
                     counters = {out: f"__d_{out}" for out in self.sums}
                     counters[self.count_col] = "__d_n"

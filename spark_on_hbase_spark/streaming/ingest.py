@@ -116,14 +116,13 @@ def guard_id_for(checkpoint_dir: str) -> str:
 def _applied_batch_guard(body, guard_id: str):
     """Shared foreachBatch replay guard, ATOMIC with the data: the
     (guard_id, batch_id) pair is the stamp of the batch's write, and a
-    KeyedTable stamp rides the delta layer's own directory name (one
-    atomic rename) and applies at most once — a replayed stamp writes
-    nothing, compaction included (the table keeps consumed stamps in its
-    ``_applied_stamps`` manifest). So there is no crash window between
-    applying a batch and marking it applied, and no pre-check here. Empty
-    batches write nothing and record nothing: a replayed batch re-reads
-    the same checkpointed offsets, so a formerly-empty batch replays
-    empty."""
+    KeyedTable stamp commits in the same log swap as its delta layer and
+    applies at most once — a replayed stamp writes nothing, compaction
+    included (the table log keeps a stamp after its layer folds away).
+    So there is no crash window between applying a batch and marking it
+    applied, and no pre-check here. Empty batches write nothing and
+    record nothing: a replayed batch re-reads the same checkpointed
+    offsets, so a formerly-empty batch replays empty."""
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
         if not batch_df.isEmpty():
@@ -146,10 +145,10 @@ def _start(stream: DataFrame, body, checkpoint_dir: str, available_now: bool):
 def idempotent_upsert(table: KeyedTable, guard_id: str = "default"):
     """The foreachBatch body for ``merge_stream_into_table``, exposed for
     direct testing: applies a micro-batch as one last-writer-wins keyed
-    merge whose delta layer carries the (guard, batch) stamp in its
-    directory name — replaying an applied batch id is a strict no-op, and
-    because stamp and data commit in one rename there is no partial state
-    to reason about. The last-writer-wins fold is already semantically
+    merge whose delta layer commits with the (guard, batch) stamp —
+    replaying an applied batch id is a strict no-op, and because stamp
+    and data commit in one log swap there is no partial state to reason
+    about. The last-writer-wins fold is already semantically
     idempotent, so for update the stamp is storage hygiene (no duplicate
     delta layers); it is the CORRECTNESS gate for the non-idempotent
     increment sink below. ``guard_id`` namespaces the stamps per streaming
@@ -165,9 +164,9 @@ def guarded_increment(
 ):
     """The foreachBatch body for ``increment_stream_into_table``, exposed
     for direct testing (cf. ``idempotent_upsert``): applies a micro-batch
-    of additive deltas with the (guard, batch) stamp riding the delta
-    layer's directory name — increment is NOT idempotent, and the atomic
-    stamp+data rename makes it exactly-once even across a crash at any
+    of additive deltas with the (guard, batch) stamp committed alongside
+    the delta layer — increment is NOT idempotent, and the atomic
+    stamp+data commit makes it exactly-once even across a crash at any
     point (the round-5 marker-after-increment scheme left a double-count
     window between the two writes; stamping the layer closes it)."""
     return _applied_batch_guard(
@@ -190,8 +189,8 @@ def increment_stream_into_table(
     of S7, HBaseTable.increment): every micro-batch pre-aggregates per key
     and appends ONE additive delta layer. Unlike the last-writer-wins
     merge, increment is NOT idempotent — a replayed micro-batch would
-    double-count — so the (guard, batch) stamp riding the layer name is
-    the CORRECTNESS gate: stamp and data commit in one atomic rename, so a
+    double-count — so the (guard, batch) stamp of the layer's commit is
+    the CORRECTNESS gate: stamp and data commit in one log swap, so a
     crash at ANY point either committed the batch (replay skipped) or
     didn't (replay applies) — exactly-once with no residual window.
     Stamps are namespaced by a digest of ``checkpoint_dir``, the scope

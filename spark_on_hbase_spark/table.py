@@ -9,8 +9,22 @@ cell timestamp, and compaction folds the layers back together.
 
 This table re-expresses that **same LSM design on columnar storage**:
 
-- layout: ``<path>/base-NNNNNN`` plus ordered ``<path>/delta-NNNNNN`` dirs,
-  every layer range-partitioned and sorted by key (the HFile invariant;
+- layout: one log file, ``<path>/_log.json``, IS the table — the Delta
+  Lake / Iceberg design (a table is the file list in its latest log entry,
+  never a directory listing; HBase's StoreFileTracker moved its own
+  store-file list the same way). It lists every live layer (seq, kind
+  base/delta, directory name, part-file basenames, Bloom sidecar meta),
+  the applied idempotence stamps and the time-travel horizon, by names
+  relative to ``<path>`` so a root renamed whole still reads. Every change
+  writes new files, swaps in a new log with ONE ``os.replace``
+  (``_commit``), then sweeps what the log no longer lists (``_sweep``):
+  nothing a write or compaction produced is visible before the swap, and
+  everything it replaced is invisible after it, so a crash at any point
+  leaves either the old table or the new one plus unlisted files the
+  next commit deletes. Layer directories are ``base-NNNNNN-<token>`` and
+  ``delta-NNNNNN-<token>`` (the token keeps a retried write from ever
+  reusing a crashed one's directory); every layer is range-partitioned
+  and sorted by key (the HFile invariant;
   ``repartitionByRange + sortWithinPartitions`` is the DataFrame twin of the
   reference's HFile bulk pipeline, HBaseTable.scala:242,296-352). The
   repartition carries no count: AQE coalesces adjacent sampled ranges to
@@ -52,11 +66,13 @@ sort — the same single-shuffle shape as the reference's HFile load.
 from __future__ import annotations
 
 import contextlib
+import json
 import os
-import re
 import shutil
 import threading
+import uuid
 from pathlib import Path
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -67,7 +83,23 @@ _DELCOLS = "__delcols"
 
 # row kinds (see module docstring); layers without a __kind column are ROW
 _ROW, _SPARSE, _DELTA, _CELLDEL = 0, 1, 2, 3
-_PFXFOLD = "pfxfold"  # stamp marking a prefix-compaction base (see _layers)
+
+_LOG = "_log.json"  # the table log (see module docstring)
+
+
+class _Layer(NamedTuple):
+    """One live layer as the table log lists it. ``seq`` orders the fold;
+    ``name`` is the layer's directory under the table root and ``files``
+    its part-file basenames — the layer IS those files, whatever else the
+    directory holds; ``bloom`` is the sidecar meta (nwords, k, fmt), or
+    None when the layer has no sidecar."""
+
+    seq: int
+    kind: str  # "base" | "delta"
+    name: str
+    files: tuple
+    bloom: dict | None = None
+
 
 _NUMERIC_TYPES = frozenset({"tinyint", "smallint", "int", "bigint", "float", "double"})
 
@@ -96,9 +128,6 @@ class _TopType:
 
 
 _TOP = _TopType()
-
-# idempotence-stamp charset: rides layer dir names (see _write_layer)
-_STAMP_RE = re.compile(r"[A-Za-z0-9_]+")
 
 
 def _sql_str(s: str) -> str:
@@ -152,37 +181,37 @@ def _is_numeric_dtype(simple: str) -> bool:
     return simple in _NUMERIC_TYPES or simple.startswith("decimal(")
 
 
-#: (SparkContext, layer path) -> full-layer DataFrame. Layer directories are
-#: IMMUTABLE once renamed into place (mutations append new seq-named dirs),
-#: so the DataFrame — whose file index and schema are resolved at
-#: ``read.parquet`` time, ~50ms of py4j + footer listing per open — can be
-#: reused for the layer's lifetime. Every read path opens every visible
-#: layer, so a bench run re-opened the same directories thousands of times
-#: (r11 profile). The ONLY operations that mutate or remove layer contents
-#: in place (compaction unlinking dirty part-files or removing dirs,
-#: drop) invalidate those layers first (``_uncache``, or the table root
-#: for drop). ``_write_layer`` seeds each new layer's entry. Keyed by the
-#: live SparkContext object so a stop/start never serves plans from a
-#: dead JVM.
+#: (SparkContext, part-file paths) -> DataFrame over exactly those files: a
+#: layer (or a Bloom sidecar directory). Files are IMMUTABLE once the log
+#: lists them, so the DataFrame — whose file index and schema are resolved
+#: at ``read.parquet`` time, ~50ms of py4j + footer reads per open — is
+#: valid for as long as its key is; a dirty compaction that drops files
+#: from a layer's list changes that layer's key instead of mutating an
+#: entry. Every read path opens every visible layer, so a bench run
+#: re-opened the same layers thousands of times (r11 profile).
+#: ``_write_layer`` seeds each new layer's entry; ``_commit`` evicts the
+#: entries its new log no longer lists, and ``drop`` the whole table's.
+#: Keyed by the live SparkContext object so a stop/start never serves
+#: plans from a dead JVM.
 _LAYER_DF_CACHE: dict = {}
 
 # fixture builders mutate INDEPENDENT tables from a thread pool (guide
 # §2.6); the lock keeps the cache's iterate-and-delete safe against a
 # concurrent insert (the reads/writes themselves are GIL-atomic, but
-# invalidation iterates)
+# eviction iterates)
 _LAYER_DF_CACHE_LOCK = threading.Lock()
 
 
-def _cached_layer_df(spark: SparkSession, path: str, schema=None) -> DataFrame:
-    """The layer's DataFrame, opened once per SparkContext. ``schema``
-    (the writer's schema, every field nullable — what inference would
-    return) opens it without Spark's parquet schema-inference job."""
-    key = (spark.sparkContext, path)
+def _cached_layer_df(spark: SparkSession, paths: tuple, schema=None) -> DataFrame:
+    """The DataFrame over ``paths``, opened once per SparkContext.
+    ``schema`` (the writer's schema, every field nullable — what inference
+    would return) opens it without Spark's parquet schema-inference job."""
+    key = (spark.sparkContext, paths)
     with _LAYER_DF_CACHE_LOCK:
         df = _LAYER_DF_CACHE.get(key)
     if df is None:
         reader = spark.read if schema is None else spark.read.schema(schema)
-        df = reader.parquet(path)
+        df = reader.parquet(*paths)
         with _LAYER_DF_CACHE_LOCK:
             # prune entries pinned to OTHER (stopped) SparkContexts so a
             # session-restarting process never accumulates dead-JVM plan
@@ -193,18 +222,16 @@ def _cached_layer_df(spark: SparkSession, path: str, schema=None) -> DataFrame:
     return df
 
 
-def _invalidate_layer_cache(root: str) -> None:
-    """Drop every cached layer DataFrame under ``root`` — called by the
-    operations that delete or rewrite layer contents in place. Matches on
-    the directory boundary so a table at /data/t never invalidates a
-    sibling at /data/t2 (ADVICE r11; over-invalidation only costs a
-    re-open, but the coupling was silent)."""
-    pref = str(root)
+def _evict_layer_cache(root: str, live: set) -> None:
+    """Drop the cached DataFrames under table ``root`` whose file list is
+    not in ``live``. Matches on the directory boundary so a table at
+    /data/t never evicts a sibling at /data/t2."""
+    pref = str(root) + os.sep
     with _LAYER_DF_CACHE_LOCK:
         for k in [
             k
             for k in _LAYER_DF_CACHE
-            if k[1] == pref or k[1].startswith(pref + os.sep)
+            if k[1][0].startswith(pref) and k[1] not in live
         ]:
             del _LAYER_DF_CACHE[k]
 
@@ -239,10 +266,9 @@ class KeyedTable:
         (misc/HBaseAdminUtils.scala:89-100; the demo tables all declare
         ROW or ROWCOL blooms), realized for the LSM-on-Parquet layout.
         See the Bloom section below for the design; reads NEVER depend on
-        sidecar freshness (a stale or missing sidecar only means less
-        pruning). ROWCOL has no separate realization: qualifier-level
-        pruning is what Parquet's columnar layout + column pruning already
-        give every read."""
+        a sidecar (a missing one only means less pruning). ROWCOL has no
+        separate realization: qualifier-level pruning is what Parquet's
+        columnar layout + column pruning already give every read."""
         self.spark = spark
         self.path = str(path)
         self.key_col = key_col
@@ -257,97 +283,136 @@ class KeyedTable:
         self.now_fn = now_fn
         self._compaction_held = False  # see _holding_compaction
 
-    # -- layer bookkeeping -------------------------------------------------
+    # -- the table log -----------------------------------------------------
 
-    def _layers(self) -> list[Path]:
+    def _log(self) -> dict:
+        """The committed table state, ``{"horizon", "stamps", "layers"}``
+        with the layers as ``_Layer`` in seq order — the empty table when
+        no log is here. A root holding layer directories but no log was
+        written before the table log existed: it has no reader, and
+        reading it as an absent table would let ``create()`` bury it."""
         root = Path(self.path)
-        if not root.exists():
-            return []
-        # numeric sort on the seq: layer seqs never reset across compactions,
-        # so a lexical sort would order 'delta-1000000' before 'delta-999999'
-        # once the {:06d} pad overflows and fold mutations out of order
-        # (base always holds the lowest surviving seq, so the seq alone is a
-        # sufficient key)
-        layers = sorted(
-            (
-                p for p in root.iterdir()
-                if p.name.startswith(("base-", "delta-")) and not p.name.endswith(".tmp")
-            ),
-            key=lambda p: int(p.name.split("-")[1]),
-        )
-        # crash-residue precedence: a prefix compaction writes its folded
-        # base AT the folded prefix's max seq (stamped ``pfxfold`` so it is
-        # distinguishable from a DIRTY-compaction base, which legitimately
-        # coexists with the original base layer's surviving clean files),
-        # so a crash between that rename and the removal of the consumed
-        # layers leaves base-{m}-pfxfold next to the layers it folded
-        # (seq <= m, including a delta-{m} twin). The stamped base is the
-        # committed truth — it IS the fold of everything at or below its
-        # seq — so those layers are provably consumed and must never
-        # re-apply (a re-applied delta would double-count its increments).
-        # Reads filter them out here; _compact_prefix sweeps the dirs.
-        pfx_max = max(
-            (
-                int(p.name.split("-")[1])
-                for p in layers
-                if p.name.startswith("base-") and self._stamp_of(p) == _PFXFOLD
-            ),
-            default=None,
-        )
-        if pfx_max is None:
-            return layers
-        return [
-            p
-            for p in layers
-            if int(p.name.split("-")[1]) > pfx_max
-            or (p.name.startswith("base-") and int(p.name.split("-")[1]) == pfx_max)
+        try:
+            log = json.loads((root / _LOG).read_text())
+        except FileNotFoundError:
+            if root.is_dir() and any(
+                p.name.startswith(("base-", "delta-")) for p in root.iterdir()
+            ):
+                raise RuntimeError(
+                    f"{self.path} holds layer directories but no {_LOG}: a "
+                    f"table in the layout before the table log, which has "
+                    f"no reader — rebuild it from its source"
+                ) from None
+            return {"horizon": 0, "stamps": [], "layers": []}
+        log["layers"] = [
+            _Layer(**{**d, "files": tuple(d["files"])}) for d in log["layers"]
         ]
+        return log
 
-    def _next_seq(self) -> int:
-        layers = self._layers()
-        return 1 + max((int(p.name.split("-")[1]) for p in layers), default=-1)
+    def _layers(self) -> list[_Layer]:
+        return self._log()["layers"]
+
+    def _paths(self, layer: _Layer) -> tuple:
+        """Absolute paths of the layer's listed part-files."""
+        return tuple(os.path.join(self.path, layer.name, f) for f in layer.files)
+
+    def _layer_df(self, layer: _Layer) -> DataFrame:
+        return _cached_layer_df(self.spark, self._paths(layer))
+
+    def _commit(
+        self, layers: list[_Layer], stamp: str | None = None, horizon: int = 0
+    ) -> None:
+        """THE commit point of every table change: swap in a log listing
+        ``layers``, with ``stamp`` added to the applied stamps and the
+        time-travel horizon raised to ``horizon``, by one atomic
+        ``os.replace``. Before it the change is invisible, after it
+        complete; the files it stops listing are ``_sweep``'s."""
+        root = Path(self.path)
+        log = self._log()
+        layers = sorted(layers, key=lambda L: L.seq)
+        tmp = root / f"{_LOG}.tmp"
+        tmp.write_text(json.dumps({
+            "horizon": max(log["horizon"], horizon),
+            "stamps": sorted({*log["stamps"], *([stamp] if stamp else [])}),
+            "layers": [L._asdict() for L in layers],
+        }))
+        os.replace(tmp, root / _LOG)
+        _evict_layer_cache(
+            self.path,
+            {self._paths(L) for L in layers}
+            | {(str(self._bloom_root() / L.name),) for L in layers},
+        )
+
+    def _sweep(self) -> None:
+        """Delete what the log does not list: layer directories a commit
+        replaced or a crashed write left behind, part-files a dirty
+        compaction dropped from a live layer, sidecars of dead layers."""
+        live = {L.name: set(L.files) for L in self._layers()}
+        for p in Path(self.path).iterdir():
+            if not p.name.startswith(("base-", "delta-")):
+                continue
+            if p.name not in live:
+                shutil.rmtree(p, ignore_errors=True)
+                continue
+            for f in p.glob("*.parquet"):
+                if f.name not in live[p.name]:
+                    f.unlink(missing_ok=True)
+        if self._bloom_root().is_dir():
+            for p in self._bloom_root().iterdir():
+                if p.name not in live:
+                    shutil.rmtree(p, ignore_errors=True)
 
     def _write_layer(
         self, df: DataFrame, kind: str, row_kind: int | None = None,
         stamp: str | None = None, seq: int | None = None,
+        keep: list[_Layer] | None = None, horizon: int = 0,
     ) -> int:
-        """Write one sorted layer atomically (write to .tmp, rename), in as
-        many range part-files as AQE coalesces its size to (see the module
-        docstring). Returns rows written, observed inside the write job (A16
+        """Write one sorted layer, in as many range part-files as AQE
+        coalesces its size to (see the module docstring), and commit it
+        next to ``keep`` — every live layer by default (a mutation
+        appends); a compaction passes the layers its output does not
+        replace. Returns rows written, observed inside the write job (A16
         accumulator parity) — the observe node sits ABOVE the range
         exchange, so the sampling pass repartitionByRange runs to pick
         bounds does not double-count.
+
+        The input runs ONCE: it is lazily checkpointed, so the
+        range-sampling job materializes it and the write job reads the
+        checkpoint — a batch built from Python rows would otherwise pay
+        two Python-worker passes. A compaction's input needs no lineage
+        cut of its own: nothing it reads is deleted before the commit.
 
         ``row_kind`` stamps a __kind column (sparse put / additive delta /
         cell delete / ROW tombstones); plain upsert layers omit it and the
         fold reads a missing __kind as ROW.
 
-        ``stamp``: an idempotence token recorded IN the layer directory name
-        (``<kind>-<seq>-<stamp>``), so data and applied-marker commit in the
-        same atomic rename — there is no crash window between them. A delta
-        whose stamp is already in ``applied_stamps()`` (a live layer name or
-        the ``_applied_stamps`` manifest compaction keeps, see
-        ``_replace_all_layers``) is a retry of a committed write: nothing
-        runs on ``df`` and 0 is returned — the region server dropping a
-        retried Increment by its nonce. Every stamped mutation gets its
-        exactly-once guarantee here, so callers never pre-check. Base
-        layers are exempt: prefix compaction writes each folded base under
-        the same internal ``pfxfold`` stamp."""
-        if stamp is not None and not _STAMP_RE.fullmatch(stamp):
-            raise ValueError(
-                f"layer stamp must match [A-Za-z0-9_]+ (got {stamp!r}): the "
-                f"stamp rides the directory name, so separators would break "
-                f"seq parsing and suffix handling"
-            )
-        if stamp is not None and kind == "delta" and stamp in self.applied_stamps():
+        ``stamp``: an idempotence token committed in the SAME log swap as
+        the layer, so data and applied-marker can never disagree. A stamp
+        already in ``applied_stamps()`` marks a retry of a committed
+        write: nothing runs on ``df`` and 0 is returned — the region
+        server dropping a retried Increment by its nonce. Every stamped
+        mutation gets its exactly-once guarantee here, so callers never
+        pre-check.
+
+        ``seq``: explicit layer sequence — ONLY for prefix compaction,
+        whose folded base takes the folded prefix's max seq so it orders
+        before the retained deltas. ``horizon`` raises the time-travel
+        horizon (see ``_visible_layers``) in the same commit."""
+        log = self._log()
+        if stamp is not None and stamp in log["stamps"]:
             return 0
-        # ``seq``: explicit layer sequence — ONLY for prefix compaction,
-        # whose folded base must order before the retained deltas (the
-        # folded prefix's max seq is free: that layer is being replaced)
-        n_seq = self._next_seq() if seq is None else seq
-        name = f"{kind}-{n_seq:06d}" + (f"-{stamp}" if stamp else "")
-        target = Path(self.path) / name
-        tmp = target.with_suffix(".tmp")
+        root = Path(self.path)
+        if not (root / _LOG).exists():
+            # the first write commits an empty log before any layer
+            # directory exists: a crash inside it leaves an empty table,
+            # never a log-less root that reads as the old layout
+            root.mkdir(parents=True, exist_ok=True)
+            self._commit([])
+        live = log["layers"]
+        if seq is None:
+            seq = 1 + max((L.seq for L in live), default=-1)
+        name = f"{kind}-{seq:06d}-{uuid.uuid4().hex[:8]}"
+        df = df.localCheckpoint(eager=False)
         if _TOMBSTONE not in df.columns:
             df = df.withColumn(_TOMBSTONE, F.lit(False))
         if row_kind is not None and _KIND not in df.columns:
@@ -358,80 +423,30 @@ class KeyedTable:
             self.key_col
         )
         out, obs = _observed_count(out)
-        out.write.mode("overwrite").parquet(str(tmp))
-        tmp.rename(target)
-        # a layer path can be REUSED within a session: kernels rmtree a
-        # session-scoped table root directly (not via drop()) and recreate
-        # it, so base-000000 comes back with new part-files — evict any
-        # cached DataFrame pinned to the old files at this path, then open
-        # the new layer with the schema just written, so its first read
-        # skips the schema-inference job
-        _invalidate_layer_cache(str(target))
-        _cached_layer_df(self.spark, str(target), _nullable(df.schema))
+        out.write.parquet(str(root / name))
+        layer = _Layer(
+            seq, kind, name,
+            tuple(sorted(f.name for f in (root / name).glob("*.parquet"))),
+        )
+        # open the new layer with the schema just written, so its first
+        # read skips the schema-inference job
+        _cached_layer_df(self.spark, self._paths(layer), _nullable(df.schema))
         n = int(obs.get["n"])
         if self.bloom:
-            # SOFT-fail: the layer committed at the rename above, so a
-            # sidecar-build error must not surface as a failed write — the
-            # caller would retry and double-apply a non-idempotent batch
-            # (increments). A missing sidecar only costs pruning.
-            try:
-                self._write_bloom(target, n)
-            except Exception:  # noqa: BLE001 — bloom is an optimization
-                self._drop_bloom(target)
+            # SOFT-fail: a sidecar only prunes, so a build error commits
+            # the layer without one instead of failing the write
+            with contextlib.suppress(Exception):
+                layer = layer._replace(bloom=self._write_bloom(layer, n))
+        self._commit((live if keep is None else keep) + [layer], stamp, horizon)
+        self._sweep()
         return n
 
-    def _stamp_of(self, layer: Path) -> str | None:
-        parts = layer.name.split("-", 2)
-        return parts[2] if len(parts) == 3 else None
-
     def applied_stamps(self) -> set[str]:
-        """All idempotence stamps this table has durably applied: stamps
-        riding live layer names plus stamps preserved in the
-        ``_applied_stamps`` manifest when compaction folded their layers
-        away. ``_write_layer`` treats membership here as 'this stamped
-        delta already committed' and writes nothing."""
-        stamps = {s for p in self._layers() if (s := self._stamp_of(p))}
-        manifest = Path(self.path) / "_applied_stamps"
-        if manifest.exists():
-            stamps.update(p.name for p in manifest.iterdir())
-        return stamps
-
-    def _replace_all_layers(self, df: DataFrame) -> None:
-        """Materialize ``df`` as the sole base layer and drop every old
-        layer (major compaction / eager rewrite). Idempotence stamps riding
-        the dropped layer names are preserved in the ``_applied_stamps``
-        manifest FIRST — the folded base carries their data, so forgetting
-        the stamps would let a post-compaction replay double-apply."""
-        df = df.localCheckpoint()  # sever lineage from the files being removed
-        old = self._layers()
-        self._persist_stamps(old)
-        self._write_layer(df, "base")
-        # invalidate BEFORE the destructive removals: a crash between an
-        # rmtree and a trailing invalidation would leave cached DataFrames
-        # whose file listings point at dead files (caught by the dirty-
-        # compaction crash test); dropping the cache early only costs a
-        # re-open
-        self._uncache(old)
-        for p in old:
-            shutil.rmtree(p, ignore_errors=True)
-            self._drop_bloom(p)
-
-    def _uncache(self, layers: list[Path]) -> None:
-        """Drop the cached DataFrames of ``layers`` and of their Bloom
-        sidecars — the layers a compaction is about to remove or rewrite
-        in place. The layer it just wrote keeps its seeded entry."""
-        for p in layers:
-            _invalidate_layer_cache(str(p))
-            _invalidate_layer_cache(str(self._bloom_root() / p.name))
-
-    def _persist_stamps(self, layers: list[Path]) -> None:
-        stamps = [s for p in layers if (s := self._stamp_of(p))]
-        if not stamps:
-            return
-        manifest = Path(self.path) / "_applied_stamps"
-        manifest.mkdir(parents=True, exist_ok=True)
-        for s in stamps:
-            (manifest / s).touch()
+        """Every idempotence stamp this table has committed — the log
+        keeps a stamp after compaction folds its layer away.
+        ``_write_layer`` treats membership here as 'this stamped delta
+        already committed' and writes nothing."""
+        return set(self._log()["stamps"])
 
     # -- DDL (S16, HBaseAdminUtils.scala:86-214) ---------------------------
 
@@ -447,22 +462,18 @@ class KeyedTable:
         merge or ``drop`` first to replace."""
         if self.exists():
             raise FileExistsError(f"table already exists at {self.path}")
-        Path(self.path).mkdir(parents=True, exist_ok=True)
         self._write_layer(df, "base")
         return self
 
     def drop(self) -> None:
-        # invalidate first: crash-mid-rmtree must not leave cached plans
-        # over partially-deleted layer dirs
-        _invalidate_layer_cache(self.path)
+        _evict_layer_cache(self.path, set())
         shutil.rmtree(self.path, ignore_errors=True)
 
     def copy(self, dest: "KeyedTable") -> None:
         """S12 — scan source, write it as the destination's sole base in
         sorted key ranges sized to the data (HBaseAdminUtils.copy,
         misc/HBaseAdminUtils.scala:146-176)."""
-        Path(dest.path).mkdir(parents=True, exist_ok=True)
-        dest._replace_all_layers(self.df())
+        dest._write_layer(self.df(), "base", keep=[])
 
     def add_column(self, name: str, default=None, dtype: str = "string") -> None:
         """S16 — ALTER TABLE ADD column with a default (HBaseAdminUtils.
@@ -476,7 +487,9 @@ class KeyedTable:
                 f"add_column: column {name!r} already exists (adding it would "
                 f"overwrite stored values with the default)"
             )
-        self._replace_all_layers(current.withColumn(name, F.lit(default).cast(dtype)))
+        self._write_layer(
+            current.withColumn(name, F.lit(default).cast(dtype)), "base", keep=[]
+        )
 
     def drop_column(self, name: str) -> None:
         """S16 — ALTER TABLE DROP column (HBaseAdminUtils.dropColumnIfExists,
@@ -488,7 +501,7 @@ class KeyedTable:
                 f"drop_column: {name!r} is the table's "
                 f"{'key' if name == self.key_col else 'timestamp'} column"
             )
-        self._replace_all_layers(self.df().drop(name))
+        self._write_layer(self.df().drop(name), "base", keep=[])
 
     # -- scan / select (S2/S3) ---------------------------------------------
 
@@ -498,7 +511,7 @@ class KeyedTable:
         layers = self._layers()
         if not layers:
             raise FileNotFoundError(f"no table at {self.path}")
-        return max(int(p.name.split("-")[1]) for p in layers)
+        return layers[-1].seq
 
     def df(self, as_of_layer: int | tuple[int, int] | None = None) -> DataFrame:
         """Full typed scan — HBaseTable.rdd() (HBaseTable.scala:55-65): merge
@@ -560,45 +573,44 @@ class KeyedTable:
 
         return select_required(self.df(), *columns)
 
-    def _visible_layers(self, as_of_layer) -> list[Path]:
+    def _visible_layers(self, as_of_layer) -> list[_Layer]:
         """Layers a read at ``as_of_layer`` may touch (all of them for
-        None), with the dirty-compaction horizon guard. A pair ``(a, b)``
-        reads the layers visible at ``b`` once ``a`` passes the same
-        guards."""
+        None), with the horizon guard. A pair ``(a, b)`` reads the layers
+        visible at ``b`` once ``a`` passes the same guards."""
         if isinstance(as_of_layer, tuple):
             a, b = as_of_layer
             if not a < b:
                 raise ValueError(f"as_of_layer pair needs a < b, got {as_of_layer}")
             self._visible_layers(a)
             as_of_layer = b
-        layers = self._layers()
+        log = self._log()
+        layers = log["layers"]
         if as_of_layer is not None:
-            # dirty compaction unlinks individual part-files from old base
-            # layers, so any layer-prefix read predating it would be a
-            # PARTIAL snapshot (the surviving files of a mutilated layer) —
-            # fail loudly, like full compaction does when history folds away
-            horizon = Path(self.path) / "_history_horizon"
-            if horizon.exists() and as_of_layer < int(horizon.read_text()):
+            # dirty compaction drops part-files from old base layers, so
+            # any layer-prefix read predating it would be a PARTIAL
+            # snapshot (the surviving files of a mutilated layer) — fail
+            # loudly, like full compaction does when history folds away
+            if as_of_layer < log["horizon"]:
                 raise HistoryFoldedError(
                     f"as_of_layer={as_of_layer} predates the last dirty "
-                    f"compaction (horizon {horizon.read_text()}): the "
+                    f"compaction (horizon {log['horizon']}): the "
                     f"compaction rewrote part of that snapshot's base "
                     f"layer, so the historical state is no longer readable"
                 )
-            layers = [p for p in layers if int(p.name.split("-")[1]) <= as_of_layer]
+            layers = [L for L in layers if L.seq <= as_of_layer]
         if not layers:
             raise FileNotFoundError(f"no table at {self.path}")
         return layers
 
     @staticmethod
-    def _cuts(layers: list[Path], as_of_layer):
+    def _cuts(layers: list[_Layer], as_of_layer):
         """The fold's per-layer cut tags for a two-snapshot read ``(a, b)``:
         a layer with seq <= a feeds both cuts, a later one only ``b``.
         None for a one-snapshot read."""
         if not isinstance(as_of_layer, tuple):
             return None
         a, b = as_of_layer
-        return [(a, b) if int(p.name.split("-")[1]) <= a else (b,) for p in layers]
+        return [(a, b) if L.seq <= a else (b,) for L in layers]
 
     def _layer_frames(self, pred, as_of_layer) -> DataFrame:
         """Layer frames with a KEY-DETERMINED predicate applied per layer
@@ -609,7 +621,7 @@ class KeyedTable:
         each surviving key's full history — including tombstones, which
         carry the key."""
         layers = self._visible_layers(as_of_layer)
-        frames = [_cached_layer_df(self.spark, str(p)) for p in layers]
+        frames = [self._layer_df(L) for L in layers]
         if pred is not None:
             frames = [f.where(pred) for f in frames]
         return self._resolve(frames, cuts=self._cuts(layers, as_of_layer))
@@ -636,22 +648,22 @@ class KeyedTable:
         but the Bloom proves most of their files key-free, so the multiget
         reads only the files that MAY hold a probed key — HBase's reason
         for per-HFile blooms, and the negative-lookup fast path (a get of
-        an absent key touches no data file at all). Layers whose sidecar
-        is missing or stale read in full; the result is identical either
-        way (pinned by tests/test_table.py)."""
+        an absent key touches no data file at all). Layers without a
+        sidecar read in full; the result is identical either way (pinned
+        by tests/test_table.py)."""
         pred = _in_list_pred(self.spark, self.key_col, keys)
         if self.bloom and keys:
             layers = self._visible_layers(as_of_layer)
             cands = self._bloom_candidates(layers, keys)
             if any(v is not None for v in cands.values()):
-                kept = [p for p in layers if cands[p] is None or cands[p]]
+                kept = [L for L in layers if cands[L.name] is None or cands[L.name]]
                 frames = [
                     (
-                        _cached_layer_df(self.spark, str(p))
-                        if cands[p] is None
-                        else self.spark.read.parquet(*cands[p])
+                        self._layer_df(L)
+                        if cands[L.name] is None
+                        else self.spark.read.parquet(*cands[L.name])
                     ).where(pred)
-                    for p in kept
+                    for L in kept
                 ]
                 if not frames:
                     # every layer provably key-free: schema-correct empty
@@ -717,10 +729,8 @@ class KeyedTable:
         pred = (k >= F.lit(lo)) & (k <= F.lit(hi))
         kb = F.broadcast(kd)
         frames = [
-            _cached_layer_df(self.spark, str(p))
-            .where(pred)
-            .join(kb, self.key_col, "left_semi")
-            for p in layers
+            self._layer_df(L).where(pred).join(kb, self.key_col, "left_semi")
+            for L in layers
         ]
         # a lone visible layer is always the base (folded, unique keys) —
         # the semi-join preserves that, so the passthrough stays legal
@@ -770,12 +780,10 @@ class KeyedTable:
         compaction; a fully-compacted range simply has no delta layers
         left to report)."""
         layers = [
-            p
-            for p in self._visible_layers(until_layer)
-            if int(p.name.split("-")[1]) > since_layer
+            L for L in self._visible_layers(until_layer) if L.seq > since_layer
         ]
-        for p in layers:
-            if p.name.startswith("base-"):
+        for L in layers:
+            if L.kind == "base":
                 # a base layer inside the feed window means a compaction
                 # folded the individual mutations (and physically removed
                 # deleted keys) — a feed from here would silently misreport
@@ -784,15 +792,14 @@ class KeyedTable:
                 # only up to the slowest consumer's offset.
                 raise HistoryFoldedError(
                     f"changes(since_layer={since_layer}) predates a "
-                    f"compaction ({p.name} folded the mutation history "
+                    f"compaction ({L.name} folded the mutation history "
                     f"away): consume the feed before compacting, or use "
                     f"compact(keep_since=...) to retain the consumer's "
                     f"suffix"
                 )
         frames = []
-        for p in layers:
-            seq = int(p.name.split("-")[1])
-            f = _cached_layer_df(self.spark, str(p))
+        for L in layers:
+            f = self._layer_df(L)
             if _KIND in f.columns:
                 op = (
                     F.when(F.col(_KIND) == _SPARSE, F.lit("put"))
@@ -806,7 +813,7 @@ class KeyedTable:
                     F.lit("upsert")
                 )
             f = f.withColumn("op", op).withColumn(
-                "__seq", F.lit(seq).cast("bigint")
+                "__seq", F.lit(L.seq).cast("bigint")
             )
             f = f.withColumn(
                 "deleted_cells",
@@ -853,23 +860,19 @@ class KeyedTable:
     #   to O(probe) row groups: consulting the Bloom costs O(keys), never
     #   O(table), which is what lets it stand in front of a 100 TB layout.
     # - Correctness NEVER depends on the sidecar: a probe only ever SHRINKS
-    #   the file set a point read scans, and a layer whose sidecar is
-    #   missing or stale is simply read in full. Validity is a fingerprint
-    #   check — every part-file currently in the layer must appear in the
-    #   sidecar's recorded (name, size) map. The rule is subset-tolerant on
-    #   purpose: dirty compaction UNLINKS part-files from old base layers
-    #   without touching the survivors, and the survivors' Bloom rows stay
-    #   exactly right (rows for dead files match no existing path), so the
-    #   O(delta) compaction contract holds with zero sidecar patching. Any
-    #   path that ADDS files writes a fresh layer through _write_layer,
-    #   which rebuilds the sidecar when blooms are on.
+    #   the file set a point read scans, and a layer the log lists without
+    #   sidecar meta is simply read in full. The sidecar is written before
+    #   its layer commits and its meta rides the same log entry, so a
+    #   listed sidecar always describes its layer. A dirty compaction that
+    #   drops part-files from an old base layer leaves that layer's sidecar
+    #   as it is: its rows for the dropped files name files the log no
+    #   longer lists, and the probe keeps only listed files, so the O(delta)
+    #   compaction contract holds with zero sidecar patching.
 
     _BLOOM_BITS_PER_KEY = 10
     _BLOOM_K = 4
     # sidecar format: 2 = part-file BASENAMES in `file` (rename-relocatable).
-    # _bloom_meta requires an exact match, so a sidecar written by an older
-    # format (absolute URIs, whose existence check would silently drop every
-    # candidate = FALSE NEGATIVES) degrades to a full read instead.
+    # A sidecar is probed only when its logged fmt and k match these.
     _BLOOM_FMT = 2
     _BLOOM_DTYPES = frozenset(
         {"tinyint", "smallint", "int", "bigint", "string"}
@@ -877,12 +880,6 @@ class KeyedTable:
 
     def _bloom_root(self) -> Path:
         return Path(self.path) / "_bloom"
-
-    def _drop_bloom(self, layer: Path) -> None:
-        """Remove a dropped layer's sidecar (pure hygiene — a sidecar whose
-        layer is gone can never be consulted)."""
-        shutil.rmtree(self._bloom_root() / layer.name, ignore_errors=True)
-        (self._bloom_root() / f"{layer.name}.json").unlink(missing_ok=True)
 
     def _bloom_cols(self, key_expr: str, nwords: int) -> list:
         """(word, mask) Column expressions for one key — shared verbatim by
@@ -904,36 +901,33 @@ class KeyedTable:
             F.expr(mask).alias("__bmask"),
         ]
 
-    def _write_bloom(self, layer: Path, rows: int | None = None) -> None:
-        """Build the layer's Bloom sidecar: one distributed pass over the
-        layer's key column grouped by (part-file, word) with a bit_or
-        combine — O(layer) at write time, the same moment the layer itself
-        was just paid for; its files are word ranges sized, like the
-        layer's, by AQE. Skipped for key dtypes whose string cast is not
-        canonical across engines and probes (float/decimal/binary)."""
-        import json
-
+    def _write_bloom(self, layer: _Layer, rows: int | None = None) -> dict | None:
+        """Build the layer's Bloom sidecar and return its log meta: one
+        distributed pass over the layer's key column grouped by
+        (part-file, word) with a bit_or combine — O(layer) at write time,
+        the same moment the layer itself was just paid for; its files are
+        word ranges sized, like the layer's, by AQE. None (no sidecar) for
+        key dtypes whose string cast is not canonical across engines and
+        probes (float/decimal/binary)."""
         import pyarrow.parquet as pq
 
-        if self._schema().get(self.key_col) not in self._BLOOM_DTYPES:
-            return
-        files = sorted(p for p in layer.glob("*.parquet"))
+        src = self._layer_df(layer)
+        if dict(src.dtypes)[self.key_col] not in self._BLOOM_DTYPES:
+            return None
         if rows is None:
-            rows = sum(pq.read_metadata(str(f)).num_rows for f in files)
+            rows = sum(pq.read_metadata(f).num_rows for f in self._paths(layer))
         nwords = max(64, (rows * self._BLOOM_BITS_PER_KEY + 63) // 64)
         # store the part-file's BASENAME, never its absolute path: the
         # sidecar must survive a rename of the whole table directory
-        # (cross-session fixtures publish via staging-dir rename — an
-        # absolute path would point at the dead staging root and silently
-        # prune every probe to zero files)
-        src = _cached_layer_df(self.spark, str(layer)).select(
-            F.substring_index(F.col("_metadata.file_path"), "/", -1).alias(
-                "__bfile"
-            ),
-            *self._bloom_cols(f"`{self.key_col}`", nwords),
-        )
+        # (cross-session fixtures publish via staging-dir rename)
         side = (
-            src.groupBy("__bfile", "__bword")
+            src.select(
+                F.substring_index(F.col("_metadata.file_path"), "/", -1).alias(
+                    "__bfile"
+                ),
+                *self._bloom_cols(f"`{self.key_col}`", nwords),
+            )
+            .groupBy("__bfile", "__bword")
             .agg(F.bit_or("__bmask").alias("bits"))
             .select(
                 F.col("__bword").alias("word"),
@@ -943,65 +937,28 @@ class KeyedTable:
             .repartitionByRange("word")
             .sortWithinPartitions("word")
         )
-        root = self._bloom_root()
-        root.mkdir(parents=True, exist_ok=True)
-        target = root / layer.name
-        tmp = target.with_suffix(".tmp")
-        side.write.mode("overwrite").parquet(str(tmp))
-        # a backfill may rewrite an existing sidecar in place; drop any
-        # cached plan handle for it before the swap (r12 — sidecar frames
-        # now ride the layer-DF cache)
-        _invalidate_layer_cache(str(target))
-        shutil.rmtree(target, ignore_errors=True)
-        tmp.rename(target)
-        meta = {
-            "fmt": self._BLOOM_FMT,
-            "nwords": nwords,
-            "k": self._BLOOM_K,
-            "files": {f.name: f.stat().st_size for f in files},
-        }
-        mtmp = root / f"{layer.name}.json.tmp"
-        with open(mtmp, "w") as fh:
-            json.dump(meta, fh)
-        os.replace(mtmp, root / f"{layer.name}.json")
+        # overwrite: only a crashed earlier build of this sidecar can be
+        # there, and the log never listed it
+        side.write.mode("overwrite").parquet(str(self._bloom_root() / layer.name))
+        return {"nwords": nwords, "k": self._BLOOM_K, "fmt": self._BLOOM_FMT}
 
     def build_blooms(self) -> None:
-        """Backfill sidecars for every layer that lacks a valid one —
-        opt-in migration path for tables created before blooms were
-        switched on (row counts come from parquet footers, metadata-only)."""
-        for layer in self._layers():
-            if self._bloom_meta(layer) is None:
-                self._write_bloom(layer)
+        """Backfill sidecars for every layer that lacks one — opt-in
+        migration path for tables created before blooms were switched on
+        (row counts come from parquet footers, metadata-only) — committed
+        in one log swap."""
+        layers = self._layers()
+        built = [
+            L if L.bloom else L._replace(bloom=self._write_bloom(L))
+            for L in layers
+        ]
+        if built != layers:
+            self._commit(built)
+            self._sweep()
 
-    def _bloom_meta(self, layer: Path) -> dict | None:
-        """The layer's sidecar meta iff it is VALID: sidecar + meta exist
-        and every part-file currently in the layer appears in the recorded
-        (name, size) map. Subset-tolerant — see the section comment."""
-        import json
-
-        root = self._bloom_root()
-        meta_p = root / f"{layer.name}.json"
-        if not meta_p.exists() or not (root / layer.name).exists():
-            return None
-        try:
-            meta = json.loads(meta_p.read_text())
-        except (OSError, ValueError):
-            return None
-        recorded = meta.get("files", {})
-        if (
-            meta.get("fmt") != self._BLOOM_FMT
-            or meta.get("k") != self._BLOOM_K
-            or not isinstance(meta.get("nwords"), int)
-        ):
-            return None
-        for f in layer.glob("*.parquet"):
-            if recorded.get(f.name) != f.stat().st_size:
-                return None
-        return meta
-
-    def _bloom_candidates(self, layers: list[Path], keys: list):
-        """Per-layer candidate part-file paths from the Bloom sidecars, or
-        None for a layer without a valid sidecar (read it in full). ONE
+    def _bloom_candidates(self, layers: list[_Layer], keys: list):
+        """Per-layer (by name) candidate part-file paths from the Bloom
+        sidecars, or None for a layer without one (read it in full). ONE
         probe job for every layer (r12; guide §1.2/§2.6): word indices are
         nwords-relative, so the probe keys become (word, mask) rows through
         the SAME expressions the build used once per distinct nwords, each
@@ -1009,20 +966,18 @@ class KeyedTable:
         returns every candidate — a multi-layer mixed-size table used to
         pay one 0.5s driver round trip PER distinct sidecar size (4 of
         bloom_point_read's ~5s). Sidecar frames come from the layer-DF
-        cache (plan handles; the sidecars live under the table root, so
-        the destructive-op invalidation already covers them). A file is a
-        candidate iff some probed key's whole mask is present in its word
-        — `bits & mask = mask`; absent (file, word) rows mean bits=0,
-        i.e. provably key-free."""
-        metas = {p: self._bloom_meta(p) for p in layers}
-        out: dict[Path, list[str] | None] = {
-            p: None for p, m in metas.items() if m is None
-        }
-        by_nwords: dict[int, list[Path]] = {}
-        for p, m in metas.items():
-            if m is not None:
-                by_nwords.setdefault(m["nwords"], []).append(p)
-                out[p] = []  # provisional: no candidate files
+        cache (plan handles). A file is a candidate iff some probed key's
+        whole mask is present in its word — `bits & mask = mask`; absent
+        (file, word) rows mean bits=0, i.e. provably key-free."""
+        out: dict[str, list[str] | None] = {}
+        by_nwords: dict[int, list[_Layer]] = {}
+        for L in layers:
+            b = L.bloom
+            if b and b["fmt"] == self._BLOOM_FMT and b["k"] == self._BLOOM_K:
+                by_nwords.setdefault(b["nwords"], []).append(L)
+                out[L.name] = []  # provisional: no candidate files
+            else:
+                out[L.name] = None
         if not by_nwords:
             return out
         kdtype = self._schema()[self.key_col]
@@ -1037,10 +992,10 @@ class KeyedTable:
             # sidecars store part-file BASENAMES (rename-relocatable), so
             # each sidecar frame is tagged with its layer name here
             side = None
-            for p in group:
+            for L in group:
                 f = _cached_layer_df(
-                    self.spark, str(self._bloom_root() / p.name)
-                ).withColumn("__blayer", F.lit(p.name))
+                    self.spark, (str(self._bloom_root() / L.name),)
+                ).withColumn("__blayer", F.lit(L.name))
                 side = f if side is None else side.unionByName(f)
             hit = (
                 side.join(
@@ -1058,22 +1013,15 @@ class KeyedTable:
             all_hits = hit if all_hits is None else all_hits.unionByName(hit)
         # layer names are distinct across nwords groups, so one global
         # distinct equals the old per-group distinct
-        root = Path(self.path)
+        listed = {L.name: set(L.files) for L in layers}
         for r in all_hits.distinct().collect():
-            # The existence check is load-bearing, not hygiene: the
-            # subset-tolerant fingerprint deliberately keeps a sidecar
-            # valid after dirty compaction UNLINKS part-files, so its
-            # rows can still bloom-positive a dead file — reading that
-            # path would throw, and the dead file's keys (if any were
-            # probed) are served by the folded layer that replaced it.
-            layer_dir = root / r["__blayer"]
-            local = str(layer_dir / r["file"])
-            if (
-                layer_dir in out
-                and out[layer_dir] is not None
-                and os.path.exists(local)
-            ):
-                out[layer_dir].append(local)
+            # only files the log lists: a dirty compaction may have dropped
+            # a bloom-positive file from its layer (its keys are served by
+            # the folded layer that replaced it)
+            if r["file"] in listed[r["__blayer"]]:
+                out[r["__blayer"]].append(
+                    os.path.join(self.path, r["__blayer"], r["file"])
+                )
         return out
 
     # -- mutations ---------------------------------------------------------
@@ -1126,7 +1074,7 @@ class KeyedTable:
         layers = self._layers()
         if not layers:
             raise FileNotFoundError(f"no table at {self.path}")
-        first = _cached_layer_df(self.spark, str(layers[0]))
+        first = self._layer_df(layers[0])
         data = {
             c: t
             for c, t in first.dtypes
@@ -1187,7 +1135,7 @@ class KeyedTable:
     ) -> int:
         """Atomic multi-cell add: ``counters`` maps counter column ->
         delta column in ``batch``; all cells of a key commit in ONE additive
-        DELTA layer (single rename), so a consumer can never observe one
+        DELTA layer (one commit), so a consumer can never observe one
         counter updated and a sibling not — HBase's Increment carrying
         several qualifiers of a row in one atomic mutation
         (HBaseTable.increment folds a whole Increment per row,
@@ -1337,7 +1285,12 @@ class KeyedTable:
         snapshot expiration apply to their logs, grafted onto the LSM:
         compact up to the slowest consumer's offset, never past it.
         History BELOW keep_since folds away (time travel there raises, as
-        for dirty compaction). Mutually exclusive with scope='dirty'."""
+        for dirty compaction). Mutually exclusive with scope='dirty'.
+
+        Every scope commits as ONE log swap (``_commit``) that lists the
+        folded layer in place of what it folded, so a crash before the
+        swap leaves the table as it was and one after it the compacted
+        table; the replaced files go in the sweep that follows."""
         if keep_since is not None:
             if scope != "all":
                 raise ValueError("keep_since requires scope='all'")
@@ -1347,10 +1300,10 @@ class KeyedTable:
             return
         if scope not in ("all", "dirty"):
             raise ValueError(f"compact scope must be 'all' or 'dirty', got {scope!r}")
-        self._replace_all_layers(self.df())
+        self._write_layer(self.df(), "base", keep=[])
 
     def _compact_prefix(self, keep_since: int) -> None:
-        """Fold layers with ``seq <= keep_since`` into one base named with
+        """Fold layers with ``seq <= keep_since`` into one base that takes
         the prefix's max seq (free: that layer is being replaced), so the
         folded base orders before every retained delta and all later reads
         — folds, feeds, time travel at or after keep_since — are
@@ -1365,47 +1318,23 @@ class KeyedTable:
         (HBase's rule — deletes survive minor compaction, purge at major)
         so a retained increment resurrects a deleted key with exactly the
         pre-compaction ghost-ts semantics, and TTL-expired rows stay on
-        disk (reads filter them; full compact() purges). Consumed stamps
-        persist to the manifest first, exactly like full compaction."""
-        # sweep crash residue from an earlier interrupted prefix compaction:
-        # directories _layers() already excludes (consumed layers below the
-        # committed base, same-seq delta twins) are dead weight — remove
-        # them BEFORE folding so the new base's name cannot collide
-        live = {p.name for p in self._layers()}
-        for p in Path(self.path).iterdir():
-            if (
-                p.name.startswith(("base-", "delta-"))
-                and not p.name.endswith(".tmp")
-                and p.name not in live
-            ):
-                shutil.rmtree(p, ignore_errors=True)
-                self._drop_bloom(p)
+        disk (reads filter them; full compact() purges). The commit raises
+        the time-travel horizon to the folded seq."""
         layers = self._layers()
-        fold = [p for p in layers if int(p.name.split("-")[1]) <= keep_since]
-        if not fold or (len(fold) == 1 and fold[0].name.startswith("base-")):
+        fold = [L for L in layers if L.seq <= keep_since]
+        if not fold or (len(fold) == 1 and fold[0].kind == "base"):
             return  # prefix already a single base (or nothing to fold)
         # enforce any earlier dirty-compaction horizon before folding: a
         # prefix snapshot that is no longer readable must raise, not fold
         self._visible_layers(keep_since)
-        m = max(int(p.name.split("-")[1]) for p in fold)
-        frames = [_cached_layer_df(self.spark, str(p)) for p in fold]
+        m = fold[-1].seq
         folded = _merge_layers_fold(
-            frames, self.key_col, self.ts_col, keep_state=True
-        ).localCheckpoint()
-        self._persist_stamps(fold)
-        self._write_layer(folded, "base", seq=m, stamp=_PFXFOLD)
-        # the folded base is committed: from here _layers() already serves
-        # correct reads (residue precedence), so horizon-then-cleanup can
-        # crash at any point and only leave sweepable directories behind
-        horizon = Path(self.path) / "_history_horizon"
-        prev = int(horizon.read_text()) if horizon.exists() else 0
-        horizon.write_text(str(max(prev, m)))
-        # invalidate BEFORE the removals (crash safety — see
-        # _replace_all_layers)
-        self._uncache(fold)
-        for p in fold:
-            shutil.rmtree(p, ignore_errors=True)
-            self._drop_bloom(p)
+            [self._layer_df(L) for L in fold], self.key_col, self.ts_col,
+            keep_state=True,
+        )
+        self._write_layer(
+            folded, "base", seq=m, keep=layers[len(fold):], horizon=m
+        )
 
     # a string key whose footer max is this long (UTF-8 chars) is treated
     # as possibly-truncated and widened to +inf — defense in depth: the
@@ -1415,18 +1344,15 @@ class KeyedTable:
     # parquet.statistics.truncate.length could hand us a shortened max,
     # and a max that under-reports would silently strand delta keys in a
     # "clean" base file whose deltas are about to be deleted
-    # Why 64 is sound HERE and only here: every layer under a KeyedTable
-    # path is written by _write_layer (this engine's Spark writer, whose
+    # Why 64 is sound HERE and only here: every file the table log lists
+    # was written by _write_layer (this engine's Spark writer, whose
     # parquet stats truncation threshold is 64) — layers are not an
-    # interchange format. A FOREIGN file dropped into the layer dir could
-    # carry a max truncated at a shorter length and defeat the guard
-    # (spared base file -> resurrected deletes); that is out of contract,
-    # same as hand-editing a layer, and create()/copy() never import
-    # foreign parquet verbatim.
+    # interchange format, a foreign file dropped into a layer dir is never
+    # read, and create()/copy() never import foreign parquet verbatim.
     _STR_STAT_GUARD = 64
 
-    def _file_key_ranges(self, layer: Path):
-        """Per part-file (path, key_min, key_max) from parquet footers —
+    def _file_key_ranges(self, layer: _Layer):
+        """Per part-file (basename, key_min, key_max) from parquet footers —
         metadata only, no job. None when any keyed file lacks min/max
         stats (caller falls back to full compaction). For string keys a
         suspiciously long max widens to _TOP (+inf — see _STR_STAT_GUARD);
@@ -1435,8 +1361,8 @@ class KeyedTable:
         import pyarrow.parquet as pq
 
         out = []
-        for f in sorted(layer.glob("*.parquet")):
-            md = pq.read_metadata(str(f))
+        for f, path in zip(layer.files, self._paths(layer)):
+            md = pq.read_metadata(path)
             lo = hi = None
             for rg in range(md.num_row_groups):
                 group = md.row_group(rg)
@@ -1473,7 +1399,7 @@ class KeyedTable:
         import bisect
 
         layers = self._layers()
-        deltas = [p for p in layers if p.name.startswith("delta-")]
+        deltas = [L for L in layers if L.kind == "delta"]
         if not deltas:
             return True  # base only: nothing to fold
         if self._schema()[self.key_col] not in (
@@ -1481,7 +1407,7 @@ class KeyedTable:
         ):
             return False  # binary/other: no trusted footer-range story
         base_ranges = []
-        for b in (p for p in layers if p.name.startswith("base-")):
+        for b in (L for L in layers if L.kind == "base"):
             r = self._file_key_ranges(b)
             if r is None:
                 return False
@@ -1509,78 +1435,42 @@ class KeyedTable:
             i = bisect.bisect_right(starts, hi) if hi is not _TOP else len(starts)
             return i > 0 and merged_iv[i - 1][1] >= lo
 
-        dirty_by_layer: list[tuple[Path, list[Path]]] = []
-        dirty_files: list[Path] = []
-        for b, r in base_ranges:
-            files = [f for f, lo, hi in r if lo is not None and is_dirty(lo, hi)]
-            if files:
-                dirty_by_layer.append((b, files))
-                dirty_files += files
+        dirty = {
+            b.name: {f for f, lo, hi in r if lo is not None and is_dirty(lo, hi)}
+            for b, r in base_ranges
+        }
         # fold the dirty slice exactly like df(): every contributing layer
-        # is ITS OWN frame, interleaved with the deltas in true layer-seq
-        # order. Merging all dirty base files into one oldest frame was
-        # wrong across GENERATIONS (review-pass finding): a crash between
-        # the folded-base write and the dirty-file unlinks leaves the old
-        # base file AND the already-folded base both present, and a retry
-        # that reads them as one frame picks a nondeterministic ROW winner
-        # between the ts-equal generations, then re-applies the still-
-        # present deltas on top (double-applied increments). Per-layer
-        # frames in seq order keep the retry idempotent: old base -> delta
-        # -> folded base resolves to the folded value. force_fold: a lone
-        # delta frame (no dirty base file) must still run the kind fold —
-        # its markers are instructions, not rows
-        # `layers` (from _layers()) is already NUMERICALLY seq-sorted —
-        # reuse that order rather than re-deriving it from dir names: a
-        # name-suffix sort would key STAMPED layers (delta-NNNNNN-<stamp>)
-        # by their stamp string, folding them out of order (silent LWW
-        # flips, double-applied increments on stamped-batch retries)
-        dirty_for = dict(dirty_by_layer)
+        # is ITS OWN frame, in layer-seq order — a dirty base layer as a
+        # frame over just its dirty files. force_fold: a lone delta frame
+        # (no dirty base file) must still run the kind fold — its markers
+        # are instructions, not rows
         frames = []
-        for p in layers:
-            if p in dirty_for:
-                frames.append(
-                    self.spark.read.parquet(*[str(f) for f in dirty_for[p]])
-                )
-            elif p in deltas:
-                frames.append(_cached_layer_df(self.spark, str(p)))
+        for L in layers:
+            if L.kind == "delta":
+                frames.append(self._layer_df(L))
+            elif dirty[L.name]:
+                frames.append(self.spark.read.parquet(*[
+                    p for f, p in zip(L.files, self._paths(L)) if f in dirty[L.name]
+                ]))
         merged = self._resolve(frames, force_fold=True)
-        merged = merged.localCheckpoint()  # sever lineage from removed files
-        self._persist_stamps(deltas)
-        # always write the folded layer, even when the fold emptied the
-        # dirty slice (all-tombstone case): an empty base layer is readable
-        # (zero-row part-files carry the schema) and keeps the horizon seq
-        # recorded below pointing at a real layer, so snapshot_seq() and
+        # ONE commit swaps the deltas and the dirty files for the folded
+        # layer: the base layers keep only their clean files (a base left
+        # with none drops out), and history before the new layer becomes
+        # unreadable (horizon). The folded layer is written even when the
+        # fold emptied the dirty slice (all-tombstone case): an empty base
+        # layer is readable (zero-row part-files carry the schema) and
+        # keeps the horizon pointing at a real layer, so snapshot_seq() and
         # df(as_of_layer=snapshot_seq()) stay consistent
-        horizon = self._next_seq()
-        self._write_layer(merged, "base")
-        # history before this point is now partially folded away: record the
-        # horizon BEFORE removing anything, so a crash mid-cleanup can never
-        # serve a silent partial snapshot to df(as_of_layer=<old seq>)
-        (Path(self.path) / "_history_horizon").write_text(str(horizon))
-        # cleanup order is crash-safety-critical: the superseded dirty base
-        # part-files must go BEFORE the delta layers that tombstone them —
-        # the reverse order, interrupted between the two, would leave an old
-        # base row visible with its tombstone gone (deleted-row resurrection).
-        # Crash after the unlinks: old clean base + deltas + folded base
-        # reads correctly (the folded base, highest seq, wins the fold).
-        # dirty compaction unlinks part-files INSIDE surviving base layer
-        # dirs — any cached layer DataFrame for this table would reference
-        # dead files. Invalidate BEFORE the first unlink: a crash anywhere
-        # in the cleanup below must leave a cache-consistent session (the
-        # mid-crash on-disk state itself reads correctly — see the ordering
-        # comment above — but a stale cached file listing would not).
-        self._uncache(layers)
-        for f in dirty_files:
-            f.unlink(missing_ok=True)
-        # a base dir whose every part-file was consumed is no longer a
-        # readable parquet directory — drop the husk
-        for b, _r in base_ranges:
-            if not any(b.glob("*.parquet")):
-                shutil.rmtree(b, ignore_errors=True)
-                self._drop_bloom(b)
-        for p in deltas:
-            shutil.rmtree(p, ignore_errors=True)
-            self._drop_bloom(p)
+        clean = [
+            L._replace(files=tuple(f for f in L.files if f not in dirty[L.name]))
+            for L in layers
+            if L.kind == "base"
+        ]
+        seq = layers[-1].seq + 1
+        self._write_layer(
+            merged, "base", seq=seq, keep=[L for L in clean if L.files],
+            horizon=seq,
+        )
         return True
 
 

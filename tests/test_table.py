@@ -111,7 +111,7 @@ def test_increment_writes_only_a_delta_layer(spark, table):
     layers = table._layers()
     assert layers[0] == base_before[0]  # base layer untouched
     assert len(layers) == 2 and layers[1].name.startswith("delta-")
-    raw = spark.read.parquet(str(layers[1]))
+    raw = spark.read.parquet(*table._paths(layers[1]))
     rows_ = raw.collect()
     # the delta layer holds ONLY the batch keys, as additive kind-2 rows
     # with the summed delta in the counter column and nulls elsewhere
@@ -128,7 +128,7 @@ def test_put_writes_sparse_delta_without_table_read(spark, table):
     table.put(spark.createDataFrame([Row(key="k004", ts=300, height=1234)]))
     layers = table._layers()
     assert layers[0] == base_before[0]
-    raw = spark.read.parquet(str(layers[-1])).collect()
+    raw = spark.read.parquet(*table._paths(layers[-1])).collect()
     assert raw[0]["tag"] is None  # NOT backfilled from the base => no read
     assert raw[0]["__kind"] == 1
     assert rows(table)["k004"]["tag"] == "v4"  # ...but merge-on-read resolves
@@ -138,10 +138,10 @@ def test_delete_writes_keys_only(spark, table):
     """O(batch) invariant: deletes write key-only tombstone / cell-delete
     rows; the table is not scanned at write time."""
     table.delete(spark.createDataFrame([Row(key="k008")]))
-    raw = spark.read.parquet(str(table._layers()[-1])).collect()
+    raw = spark.read.parquet(*table._paths(table._layers()[-1])).collect()
     assert len(raw) == 1 and raw[0]["__tombstone"] and raw[0]["tag"] is None
     table.delete(spark.createDataFrame([Row(key="k010")]), columns=["tag"])
-    raw = spark.read.parquet(str(table._layers()[-1])).collect()
+    raw = spark.read.parquet(*table._paths(table._layers()[-1])).collect()
     assert raw[0]["__kind"] == 3 and raw[0]["__delcols"] == ["tag"]
 
 
@@ -277,11 +277,11 @@ def test_layers_size_their_own_files(spark, tmp_path):
         [(k, -k, 1) for k in keys], "k bigint, v bigint, ts bigint"
     ))
     base, delta = t._layers()
-    assert len(list(delta.glob("*.parquet"))) == 1
+    assert len(delta.files) == 1
 
     ranges = []
-    for f in base.glob("*.parquet"):
-        md = pq.read_metadata(str(f))
+    for f in t._paths(base):
+        md = pq.read_metadata(f)
         stats = [
             md.row_group(g).column(c).statistics
             for g in range(md.num_row_groups)
@@ -386,6 +386,38 @@ def _m_expect(visible: dict, keys=None) -> list:
     )
 
 
+class _Crash(RuntimeError):
+    pass
+
+
+def _crash_next_commit(monkeypatch, when: str) -> None:
+    """Make the next ``KeyedTable._commit`` — the one log swap every table
+    change commits with — die just before the swap (``when="before"``) or
+    just after it, before the sweep of what it replaced (``"after"``)."""
+    real = KeyedTable._commit
+
+    def commit(self, *a, **kw):
+        monkeypatch.setattr(KeyedTable, "_commit", real)
+        if when == "after":
+            real(self, *a, **kw)
+        raise _Crash(f"crash {when} the log swap")
+
+    monkeypatch.setattr(KeyedTable, "_commit", commit)
+
+
+def _assert_disk_is_the_log(t) -> None:
+    """The table root holds the log, the live layer directories with
+    exactly their listed part-files, and sidecars of live layers only."""
+    root = Path(t.path)
+    layers = t._layers()
+    names = {L.name for L in layers}
+    assert {p.name for p in root.iterdir()} - {"_log.json", "_bloom"} == names
+    for L in layers:
+        assert {f.name for f in (root / L.name).glob("*.parquet")} == set(L.files)
+    if (root / "_bloom").exists():
+        assert {p.name for p in (root / "_bloom").iterdir()} <= names
+
+
 def test_mutation_sequence_matches_model(spark, tmp_path, layer_files):
     """Model-based check of the LSM fold: hypothesis drives random
     sequences of update / put / increment (stacked double increments
@@ -395,9 +427,16 @@ def test_mutation_sequence_matches_model(spark, tmp_path, layer_files):
     point_read, range_read, semi_read, at the latest layer or as_of_layer
     a snapshot taken since the last compaction — must equal the model's
     state at that point; a two-cut semi_read over two such snapshots must
-    equal the model's state at each cut. Every mutation passes a fresh stamp, and a retry
-    of the last one — before or after a compaction — must return 0 and
-    change neither the snapshot seq nor the table's contents.
+    equal the model's state at each cut. Every mutation passes a fresh
+    stamp, and a retry of the last one — before or after a compaction —
+    must return 0 and change neither the snapshot seq nor the table's
+    contents. A crash rule makes the next mutation or compaction die at
+    its log swap: crashed before it, the table must still read as the
+    model before the op, and the retry (same stamp) applies it; crashed
+    after it, the table reads as the model after the op and a stamped
+    retry returns 0. After every commit the root holds only what the log
+    lists; an after-swap crash leaves the replaced files until the next
+    commit sweeps them.
     Derandomized with no example database, so every run replays the same
     bounded set of sequences; shrinking is off to keep a failure's cost
     bounded (the failing steps are still printed)."""
@@ -414,12 +453,35 @@ def test_mutation_sequence_matches_model(spark, tmp_path, layer_files):
             self.confs = contextlib.ExitStack()
             self.stamps = itertools.count()
             self.last = None  # the last stamped mutation, as a thunk
+            self.crash = None  # "before" / "after": the next commit dies
+            self.unswept = None  # the log an after-swap crash left
 
         def _stamped(self, mutate, *args, **kw):
             """Run one mutation under a fresh stamp and remember the call."""
             stamp = f"s{next(self.stamps)}"
             self.last = lambda: mutate(*args, stamp=stamp, **kw)
-            return self.last()
+            self._run(self.last, stamped=True)
+
+        def _run(self, op, stamped=False):
+            """Run a mutation or compaction; with a crash pending, it dies
+            at its log swap and runs again. An op that commits nothing
+            leaves the crash pending for the next one."""
+            if self.crash is None:
+                return op()
+            with pytest.MonkeyPatch.context() as mp:
+                _crash_next_commit(mp, self.crash)
+                try:
+                    return op()
+                except _Crash:
+                    pass
+            when, self.crash = self.crash, None
+            if when == "before":
+                # nothing committed: the table reads as before the op
+                self._assert_df(self.model.visible())
+                return op()
+            self.unswept = (Path(self.t.path) / "_log.json").read_text()
+            if stamped:
+                assert op() == 0  # committed: the retry applies nothing
 
         def teardown(self):
             self.confs.close()
@@ -525,7 +587,7 @@ def test_mutation_sequence_matches_model(spark, tmp_path, layer_files):
         def compact(self, scope, data):
             if scope == "keep_since":
                 seq = data.draw(st.sampled_from([s for s, _ in self.snaps]))
-                self.t.compact(keep_since=seq)
+                self._run(lambda: self.t.compact(keep_since=seq))
                 # tombstones survive a prefix compaction; history below
                 # the checkpoint folds away, so older snapshots go
                 old = [s for s, _ in self.snaps if s < seq]
@@ -536,7 +598,7 @@ def test_mutation_sequence_matches_model(spark, tmp_path, layer_files):
                 self.snaps = [(s, v) for s, v in self.snaps if s >= seq]
                 self.checked = False
                 return
-            self.t.compact(scope=scope)
+            self._run(lambda: self.t.compact(scope=scope))
             tombs = {k for k, v in self.model.state.items() if v["tomb"]}
             if scope == "dirty":
                 # dirty scope purges the tombstones its rewritten ranges
@@ -545,7 +607,7 @@ def test_mutation_sequence_matches_model(spark, tmp_path, layer_files):
                 left = {
                     r["key"]
                     for p in self.t._layers()
-                    for r in spark.read.parquet(str(p))
+                    for r in spark.read.parquet(*self.t._paths(p))
                     .where("__tombstone").select("key").collect()
                 }
                 touched = set().union(*(ks for _, ks in self.deltas))
@@ -567,17 +629,53 @@ def test_mutation_sequence_matches_model(spark, tmp_path, layer_files):
             assert self.t.snapshot_seq() == seq
             self.checked = False
 
+        def _crash(self, when, op, data):
+            # the next commit dies at its log swap (see _run): run a
+            # mutation or compaction now (a compaction that commits
+            # nothing leaves the crash to the next op)
+            self.crash = when
+            if op == "update":
+                self.update(data.draw(_M_BATCH))
+            elif op == "delete":
+                self.delete(data.draw(key_sets.filter(bool)), None)
+            elif op == "increment":
+                self.increment(data.draw(_M_BATCH), "cnt", data)
+            else:
+                self.compact(
+                    data.draw(st.sampled_from(["all", "dirty", "keep_since"])), data
+                )
+
+        crash_ops = st.sampled_from(["update", "delete", "increment", "compact"])
+
+        @rule(op=crash_ops, data=st.data())
+        def crash_before_swap(self, op, data):
+            self._crash("before", op, data)
+
+        @rule(op=crash_ops, data=st.data())
+        def crash_after_swap(self, op, data):
+            self._crash("after", op, data)
+
         # -- reads ----------------------------------------------------------
+
+        def _assert_df(self, visible):
+            df = self.t.df()
+            assert tuple(df.columns) == _M_COLS
+            assert _m_canon(df.collect()) == _m_expect(visible)
 
         @invariant()
         def df_matches_model(self):
             # full read after every mutation and compaction
             if self.checked:
                 return
-            df = self.t.df()
-            assert tuple(df.columns) == _M_COLS
-            assert _m_canon(df.collect()) == _m_expect(self.model.visible())
+            self._assert_df(self.model.visible())
             self.checked = True
+
+        @invariant()
+        def disk_holds_only_the_log(self):
+            # every commit sweeps what the log stopped listing
+            log = (Path(self.t.path) / "_log.json").read_text()
+            if log != self.unswept:
+                _assert_disk_is_the_log(self.t)
 
         @rule(how=st.sampled_from(["df", "point", "range", "semi", "cuts"]),
               keys=key_sets, data=st.data())
@@ -630,7 +728,7 @@ def test_mutation_sequence_matches_model(spark, tmp_path, layer_files):
 def test_stamped_mutation_applies_at_most_once(spark, table, kind):
     """A mutation retried with an applied stamp writes no layer and
     returns 0 — while the stamped layer is live, and after compaction
-    folded it away (the stamp then comes from the manifest)."""
+    folded it away (the log keeps the stamp)."""
     one = spark.createDataFrame([Row(key="k001")])
     mutate = {
         "update": lambda: table.update(
@@ -654,7 +752,7 @@ def test_stamped_mutation_applies_at_most_once(spark, table, kind):
 
     table.compact()
     seq = table.snapshot_seq()
-    assert "s1" not in {table._stamp_of(p) for p in table._layers()}
+    assert len(table._layers()) == 1 and "s1" in table.applied_stamps()
     assert mutate() == 0
     assert table.snapshot_seq() == seq and rows(table) == state
 
@@ -677,7 +775,7 @@ def test_ttl_filters_reads_and_compaction_purges(spark, tmp_path):
     )
     assert {r["key"] for r in t.df().collect()} == {"fresh", "edge"}
     t.compact()
-    raw = spark.read.parquet(str(t._layers()[0]))
+    raw = spark.read.parquet(*t._paths(t._layers()[0]))
     assert {r["key"] for r in raw.collect()} == {"fresh", "edge"}  # purged
 
 
@@ -701,24 +799,23 @@ def test_column_delete_rejects_key_and_ts(spark, table):
         table.delete(keys, columns=["key"])
 
 
-def test_layer_order_is_numeric_not_lexical(spark, tmp_path, monkeypatch):
-    """Layer seqs never reset, so past the 6-digit pad a lexical sort would
-    order delta-1000000 before delta-999999 and fold mutations out of order
-    (ADVICE r2). Force a seq past the pad and check the fold still applies
-    the later layer last."""
+def test_layer_order_is_numeric_not_lexical(spark, tmp_path):
+    """Layer seqs never reset, so past the 6-digit pad of the directory
+    names a lexical order would put delta-1000000 before delta-999999 and
+    fold mutations out of order (ADVICE r2). Commit a log whose delta sits
+    at seq 999999 and check that the next write lands at 1000000 and that
+    the fold applies it last."""
     t = KeyedTable(spark, str(tmp_path / "big"), compact_threshold=99)
     t.create(spark.createDataFrame([Row(key="a", ts=10, v=1)]))
-    # jump the sequence over the pad boundary; both updates share ts=20 so
-    # the (ts, layer-seq) tie-break alone decides the winner — under a
-    # lexical layer sort delta-1000000 would count as OLDER than
-    # delta-999999 and the stale value would win
-    monkeypatch.setattr(t, "_next_seq", lambda: 999999)
+    # both updates share ts=20, so the (ts, layer-seq) tie-break alone
+    # decides the winner
     t.update(spark.createDataFrame([Row(key="a", ts=20, v=50)]))
-    monkeypatch.undo()
-    assert t._next_seq() == 1000000
+    base, delta = t._layers()
+    t._commit([base, delta._replace(seq=999999)])
     t.update(spark.createDataFrame([Row(key="a", ts=20, v=99)]))
-    names = [p.name for p in t._layers()]
-    assert names[-1] == "delta-1000000" and names[-2] == "delta-999999"
+    layers = t._layers()
+    assert [L.seq for L in layers] == [0, 999999, 1000000]
+    assert layers[-1].name.startswith("delta-1000000-")
     assert {r["key"]: r["v"] for r in t.df().collect()} == {"a": 99}
 
 
@@ -845,7 +942,7 @@ def test_dirty_compaction_rewrites_only_delta_covered_ranges(spark, tmp_path, la
     localized mutation batch must not trigger the one table-sized job),
     the read after equals the full-compaction result, tombstones in the
     dirty range are physically purged, and consumed idempotence stamps
-    survive into the manifest."""
+    stay in the log."""
     import hashlib
 
     t = KeyedTable(
@@ -855,10 +952,9 @@ def test_dirty_compaction_rewrites_only_delta_covered_ranges(spark, tmp_path, la
     base = spark.createDataFrame([Row(k=i, ts=0, v=i * 10) for i in range(1000)])
     with layer_files(4):
         t.create(base)
-    base_dir = t._layers()[0]
     before = {
         f: hashlib.md5(f.read_bytes()).hexdigest()
-        for f in sorted(base_dir.glob("*.parquet"))
+        for f in map(Path, t._paths(t._layers()[0]))
     }
     assert len(before) == 4
 
@@ -884,9 +980,9 @@ def test_dirty_compaction_rewrites_only_delta_covered_ranges(spark, tmp_path, la
     assert {(r["k"], r["ts"], r["v"]) for r in t.df().collect()} == expected
     raw_keys = set()
     for p in layers:
-        raw_keys |= {r["k"] for r in spark.read.parquet(str(p)).collect()}
+        raw_keys |= {r["k"] for r in spark.read.parquet(*t._paths(p)).collect()}
     assert 19 not in raw_keys
-    # the consumed delta's stamp moved into the manifest
+    # the log keeps the consumed delta's stamp
     assert "gq1_b0" in t.applied_stamps()
     # and a second dirty compact with no deltas is a no-op
     names = [p.name for p in t._layers()]
@@ -907,10 +1003,9 @@ def test_dirty_compaction_spares_clean_files_for_string_keys(spark, tmp_path, la
     )
     with layer_files(4):
         t.create(spark.createDataFrame([Row(k=f"k{i:03d}", ts=0, v=i) for i in range(1000)]))
-    base_dir = t._layers()[0]
     before = {
         f: hashlib.md5(f.read_bytes()).hexdigest()
-        for f in sorted(base_dir.glob("*.parquet"))
+        for f in map(Path, t._paths(t._layers()[0]))
     }
     t.update(spark.createDataFrame([Row(k=f"k{i:03d}", ts=1, v=-i) for i in range(10, 18)]))
     t.delete(spark.createDataFrame([Row(k="k019")]))
@@ -962,10 +1057,9 @@ def test_dirty_compaction_interval_list_spares_middle_files(spark, tmp_path, lay
     )
     with layer_files(8):
         t.create(spark.createDataFrame([Row(k=i, ts=0, v=i) for i in range(8000)]))
-    base_dir = t._layers()[0]
     before = {
         f: hashlib.md5(f.read_bytes()).hexdigest()
-        for f in sorted(base_dir.glob("*.parquet"))
+        for f in map(Path, t._paths(t._layers()[0]))
     }
     assert len(before) == 8
     # one batch at the bottom of the key space, one at the top
@@ -1020,42 +1114,34 @@ def test_dirty_compact_lone_delta_dedups_in_batch_duplicates(spark, tmp_path):
     assert len(got) == 1 and got[0]["v"] == -2 and got[0]["ts"] == 2
 
 
-def test_dirty_compact_crash_before_delta_cleanup_resurrects_nothing(spark, tmp_path, monkeypatch):
-    """Cleanup order is crash-safety-critical: superseded dirty base files
-    go BEFORE the delta layers that tombstone them. Simulate a crash after
-    the unlinks but before the delta rmtree — the deleted key must stay
-    deleted (old order left the base row visible with its tombstone gone),
-    and a re-run finishes the job."""
-    import spark_on_hbase_spark.table as tbl
-
+def test_dirty_compact_crash_before_delta_cleanup_resurrects_nothing(
+    spark, tmp_path, monkeypatch, layer_files
+):
+    """A dirty compaction commits as one log swap. Crashed just before it,
+    the table reads as before; crashed just after it — the superseded
+    dirty base file and the tombstone delta still on disk, unswept — it
+    reads as compacted. Either way the deleted key stays deleted, and the
+    next commit leaves only the log's files on disk."""
     t = KeyedTable(
         spark, str(tmp_path / "crash_tbl"), key_col="k", ts_col="ts",
         compact_threshold=50,
     )
-    t.create(spark.createDataFrame([Row(k=i, ts=0, v=i) for i in range(1000)]))
+    with layer_files(4):
+        t.create(spark.createDataFrame([Row(k=i, ts=0, v=i) for i in range(1000)]))
     t.delete(spark.createDataFrame([Row(k=5)]))
     expected = {r["k"] for r in t.df().collect()}
     assert 5 not in expected
 
-    real_rmtree = tbl.shutil.rmtree
-
-    def crashing_rmtree(path, *a, **kw):
-        if Path(path).name.startswith("delta-"):
-            raise RuntimeError("simulated crash before delta cleanup")
-        return real_rmtree(path, *a, **kw)
-
-    monkeypatch.setattr(tbl.shutil, "rmtree", crashing_rmtree)
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        t.compact(scope="dirty")
-    monkeypatch.undo()
-
-    # mid-crash state reads correctly: tombstone delta still present, the
-    # superseded base file already gone -> no resurrection
-    assert {r["k"] for r in t.df().collect()} == expected
-    # and the interrupted compaction is re-runnable to a clean state
-    t.compact(scope="dirty")
-    assert {r["k"] for r in t.df().collect()} == expected
-    assert all(not p.name.startswith("delta-") for p in t._layers())
+    for when, deltas_left in (("before", True), ("after", False)):
+        _crash_next_commit(monkeypatch, when)
+        with pytest.raises(_Crash):
+            t.compact(scope="dirty")
+        assert {r["k"] for r in t.df().collect()} == expected, when
+        assert any(L.kind == "delta" for L in t._layers()) == deltas_left
+    assert len(list(Path(t.path).glob("delta-*"))) == 1, "unswept delta"
+    t.update(spark.createDataFrame([Row(k=2000, ts=1, v=0)]))
+    _assert_disk_is_the_log(t)
+    assert {r["k"] for r in t.df().collect()} == expected | {2000}
 
 
 def test_time_travel_past_dirty_compaction_raises(spark, tmp_path, layer_files):
@@ -1082,16 +1168,11 @@ def test_time_travel_past_dirty_compaction_raises(spark, tmp_path, layer_files):
 def test_dirty_compact_retry_after_crash_mid_write_is_idempotent(
     spark, tmp_path, monkeypatch
 ):
-    """Crash between the folded-base write and the dirty-file unlinks:
-    the old base generation, the delta stack, AND the freshly-folded base
-    all coexist. A retry must fold them per-layer in seq order — the old
-    one-frame merge picked a nondeterministic winner between the ts-equal
-    generations and re-applied the increment delta on top (counter 15
-    becoming 20, review-pass finding)."""
-    import pytest as _pytest
-
-    from pyspark.sql import Row
-
+    """Crash a dirty compaction with an increment in the folded stack at
+    its log swap — before it, then (on the retry) after it: the counter
+    reads 15 in both crashed states and after a clean re-run — the
+    increment applies exactly once (a one-frame merge of old and folded
+    base generations once made it 20, review-pass finding)."""
     tbl = KeyedTable(
         spark, str(tmp_path / "t"), key_col="key", ts_col="ts",
         compact_threshold=50,
@@ -1102,37 +1183,23 @@ def test_dirty_compact_retry_after_crash_mid_write_is_idempotent(
     tbl.increment(
         spark.createDataFrame([Row(key=1, delta=5, ts=200)]), counter_col="cnt"
     )
-
-    real = KeyedTable._write_layer
-
-    def crash_after_base_write(self, df, kind, **kw):
-        n = real(self, df, kind, **kw)
-        if kind == "base":
-            raise RuntimeError("crash after folded-base write")
-        return n
-
-    monkeypatch.setattr(KeyedTable, "_write_layer", crash_after_base_write)
-    with _pytest.raises(RuntimeError, match="crash"):
-        tbl.compact(scope="dirty")
-    monkeypatch.setattr(KeyedTable, "_write_layer", real)
-
-    # the crashed state still reads correctly...
-    assert {r["key"]: r["cnt"] for r in tbl.df().collect()}[1] == 15
-    # ...and the RETRY converges to the same answer, exactly once
+    for when in ("before", "after"):
+        _crash_next_commit(monkeypatch, when)
+        with pytest.raises(_Crash):
+            tbl.compact(scope="dirty")
+        assert {r["key"]: r["cnt"] for r in tbl.df().collect()}[1] == 15, when
     tbl.compact(scope="dirty")
     got = {r["key"]: r["cnt"] for r in tbl.df().collect()}
     assert got[1] == 15 and all(got[k] == 10 for k in got if k != 1)
 
 
 def test_dirty_compact_folds_stamped_layers_in_seq_order(spark, tmp_path, monkeypatch):
-    """Layer frames must order by SEQ even when layer dirs carry stamp
-    suffixes (delta-NNNNNN-<stamp>, the streaming sink's shape): a
-    name-suffix sort keyed stamped layers by their stamp string, folding
-    them out of order — a ts-tie then resolved to the WRONG writer, and a
-    stamped-batch crash retry double-applied increments (second
-    review-pass repro)."""
-    from pyspark.sql import Row
-
+    """Layer frames order by SEQ whatever the layers' stamps (a
+    name-suffix sort once keyed stamped layers by their stamp string,
+    folding them out of order — a ts-tie then resolved to the WRONG
+    writer, second review-pass repro), and a stamped increment folded by
+    a dirty compaction that crashed at its commit applies once on the
+    retry."""
     tbl = KeyedTable(
         spark, str(tmp_path / "t"), key_col="key", ts_col="ts",
         compact_threshold=50,
@@ -1150,7 +1217,6 @@ def test_dirty_compact_folds_stamped_layers_in_seq_order(spark, tmp_path, monkey
         "out of seq order"
     )
 
-    # stamped-increment crash retry stays idempotent too
     tbl2 = KeyedTable(
         spark, str(tmp_path / "t2"), key_col="key", ts_col="ts",
         compact_threshold=50,
@@ -1160,22 +1226,12 @@ def test_dirty_compact_folds_stamped_layers_in_seq_order(spark, tmp_path, monkey
         spark.createDataFrame([Row(key=1, delta=5, ts=200)]),
         counter_col="cnt", stamp="g7",
     )
-    real = KeyedTable._write_layer
-
-    def crash_after_base_write(self, df, kind, **kw):
-        n = real(self, df, kind, **kw)
-        if kind == "base":
-            raise RuntimeError("crash after folded-base write")
-        return n
-
-    monkeypatch.setattr(KeyedTable, "_write_layer", crash_after_base_write)
-    import pytest as _pytest
-
-    with _pytest.raises(RuntimeError, match="crash"):
+    _crash_next_commit(monkeypatch, "before")
+    with pytest.raises(_Crash):
         tbl2.compact(scope="dirty")
-    monkeypatch.setattr(KeyedTable, "_write_layer", real)
     tbl2.compact(scope="dirty")
     assert {r["key"]: r["cnt"] for r in tbl2.df().collect()}[1] == 15
+    assert "g7" in tbl2.applied_stamps()
 
 
 # -- ROW Bloom sidecars (BloomType.ROW, HBaseAdminUtils.scala:89-100) -------
@@ -1218,7 +1274,7 @@ def test_bloom_point_read_matches_plain_across_mutation_matrix(spark, tmp_path, 
 def test_bloom_prunes_files_and_absent_keys_read_nothing(spark, tmp_path, layer_files):
     tbl, _ = _bloom_pair(spark, tmp_path, layer_files)
     layers = tbl._visible_layers(None)
-    total = sum(len(list(p.glob("*.parquet"))) for p in layers)
+    total = sum(len(L.files) for L in layers)
     cands = tbl._bloom_candidates(layers, [500, 1500])
     assert all(v is not None for v in cands.values()), "every sidecar valid"
     n_cand = sum(len(v) for v in cands.values())
@@ -1240,31 +1296,35 @@ def test_bloom_never_false_negative(spark, tmp_path, layer_files):
     assert got == want
 
 
-def test_bloom_stale_sidecar_degrades_to_full_read(spark, tmp_path, layer_files):
-    """A layer whose file set changed under the sidecar (foreign file
-    added) must be read in FULL — validity is the recorded (name, size)
-    superset check, and correctness never rides on sidecar freshness."""
-    import shutil as _sh
-
+def test_unlisted_part_file_is_never_read(spark, tmp_path, layer_files):
+    """A layer is the part-files the log lists, not its directory: a
+    parquet file copied into a layer directory — here one holding an
+    extra key — is invisible to every read, bloomed or plain, and absent
+    from their ``inputFiles()``."""
     tbl, plain = _bloom_pair(spark, tmp_path, layer_files, n=1000)
-    layers = tbl._visible_layers(None)
-    base = layers[0]
-    # clone a part-file into the layer: fingerprint no longer covers it
-    part = next(base.glob("*.parquet"))
-    _sh.copy(part, base / "part-foreign.parquet")
-    assert tbl._bloom_meta(base) is None
-    cands = tbl._bloom_candidates(layers, [500])
-    assert cands[base] is None, "stale layer must fall back to full read"
-    got = {r["k"]: r["v"] for r in tbl.point_read([500]).collect()}
-    want = {r["k"]: r["v"] for r in plain.point_read([500]).collect()}
-    assert got == want
+    base = tbl._layers()[0]
+    want = {r["k"]: r["v"] for r in plain.df().collect()}
+    foreign = tmp_path / "foreign"
+    spark.createDataFrame(
+        [(77_000_001, 1, 0, False)], tbl._layer_df(base).schema
+    ).coalesce(1).write.parquet(str(foreign))
+    Path(tbl.path, base.name, "part-foreign.parquet").write_bytes(
+        next(foreign.glob("*.parquet")).read_bytes()
+    )
+    probe = [500, 77_000_001]
+    for t in (tbl, plain):
+        for df in (t.point_read(probe), t.df()):
+            assert not any("part-foreign" in f for f in df.inputFiles())
+        got = {r["k"]: r["v"] for r in t.point_read(probe).collect()}
+        assert got == {k: want[k] for k in probe if k in want}
+        assert {r["k"]: r["v"] for r in t.df().collect()} == want
 
 
 def test_bloom_survives_dirty_compaction_without_patching(spark, tmp_path, layer_files):
-    """Dirty compaction unlinks part-files from old base layers; the
-    subset-tolerant fingerprint keeps the SURVIVORS' sidecar valid (rows
-    for dead files match no live path), and the freshly folded layer gets
-    its own sidecar through _write_layer."""
+    """Dirty compaction drops part-files from old base layers' lists; the
+    survivors' layer keeps its sidecar meta unchanged (the probe keeps
+    only listed files), and the freshly folded layer gets its own
+    sidecar through _write_layer."""
     root = str(tmp_path / "dc")
     tbl = KeyedTable(
         spark, root, key_col="k", ts_col="ts", bloom=True
@@ -1275,6 +1335,7 @@ def test_bloom_survives_dirty_compaction_without_patching(spark, tmp_path, layer
     )
     with layer_files(4):
         tbl.create(rows)
+    base = tbl._layers()[0]
     # localized batch: dirties only the low-key base files
     tbl.update(
         rows.where(F.col("k") < 200).select(
@@ -1282,11 +1343,9 @@ def test_bloom_survives_dirty_compaction_without_patching(spark, tmp_path, layer
         )
     )
     tbl.compact(scope="dirty")
-    layers = tbl._visible_layers(None)
-    metas = {p: tbl._bloom_meta(p) for p in layers}
-    assert all(m is not None for m in metas.values()), (
-        "survivor + folded layers must all carry valid sidecars"
-    )
+    survivor, folded = tbl._visible_layers(None)
+    assert survivor.name == base.name and survivor.bloom == base.bloom
+    assert len(survivor.files) < len(base.files) and folded.bloom is not None
     got = {r["k"]: r["v"] for r in tbl.point_read([50, 3000]).collect()}
     assert got[50] == (50 % 5) + 1000 and got[3000] == 3000 % 5
 
@@ -1324,10 +1383,9 @@ def test_build_blooms_backfills_and_unblooms_read_identically(spark, tmp_path):
     bloomed = KeyedTable(
         spark, root, key_col="k", ts_col="ts", bloom=True
     )
-    layers = bloomed._visible_layers(None)
-    assert all(bloomed._bloom_meta(p) is None for p in layers)
+    assert all(L.bloom is None for L in bloomed._layers())
     bloomed.build_blooms()
-    assert all(bloomed._bloom_meta(p) is not None for p in layers)
+    assert all(L.bloom is not None for L in bloomed._layers())
     keys = [3, 13, 500, 12345]
     got = {r["k"]: r["v"] for r in bloomed.point_read(keys).collect()}
     want = {r["k"]: r["v"] for r in plain.point_read(keys).collect()}
@@ -1351,10 +1409,9 @@ def test_bloom_skips_unsupported_key_dtype(spark, tmp_path):
 
 
 def test_bloom_build_failure_never_fails_the_write(spark, tmp_path, monkeypatch):
-    """The layer commits at its rename; a sidecar-build error after that
-    must not surface as a failed write — the caller would retry and
-    double-apply a non-idempotent batch. The write soft-fails the bloom
-    (no sidecar -> full read) and the data is intact."""
+    """A sidecar only prunes, so a sidecar-build error must not fail the
+    write: the layer commits without Bloom meta (a full read) and the
+    data is intact."""
     root = str(tmp_path / "sf")
     tbl = KeyedTable(
         spark, root, key_col="k", ts_col="ts", bloom=True
@@ -1370,7 +1427,9 @@ def test_bloom_build_failure_never_fails_the_write(spark, tmp_path, monkeypatch)
     )  # must NOT raise
     monkeypatch.undo()
     layers = tbl._visible_layers(None)
-    assert tbl._bloom_meta(layers[-1]) is None, "failed sidecar must be absent"
+    assert layers[-1].kind == "delta" and layers[-1].bloom is None, (
+        "failed sidecar must be absent"
+    )
     got = {r["k"]: r["v"] for r in tbl.point_read([3, 5]).collect()}
     assert got == {3: 10, 5: 5}
 
@@ -1526,14 +1585,15 @@ def test_prefix_compaction_preserves_consumed_stamps(spark, tmp_path):
     assert "epoch2_batch" in stamps  # retained: still riding its layer
 
 
-def test_prefix_compaction_crash_residue_never_double_applies(spark, tmp_path):
-    """Review finding (r9): the folded base reuses the folded prefix's max
-    seq, so a crash before the consumed layers' removal leaves base-{m}
-    next to its already-folded delta-{m} twin. The twin (and everything
-    below the base) must be invisible to reads — a re-applied increment
-    would double-count — and the next prefix compaction sweeps it."""
-    import shutil as _sh
-
+def test_prefix_compaction_crash_residue_never_double_applies(
+    spark, tmp_path, monkeypatch
+):
+    """Review finding (r9), on the log: a prefix compaction crashed at its
+    log swap leaves residue next to the live layers — the uncommitted
+    folded base (crash before the swap), or the folded layers themselves,
+    including the delta the base shares its seq with (crash after it).
+    Reads follow the log alone, so the increment never applies twice, and
+    the next commit sweeps every unlisted directory."""
     t = KeyedTable(spark, str(tmp_path / "t"), key_col="k", ts_col="ts")
     t.create(spark.range(0, 20).select(
         F.col("id").alias("k"), (F.col("id") * 10).alias("v"),
@@ -1543,29 +1603,18 @@ def test_prefix_compaction_crash_residue_never_double_applies(spark, tmp_path):
         counter_col="v")
     snap = t.snapshot_seq()
     expected = {tuple(r) for r in t.df().collect()}
-    # stash the to-be-folded layers, compact, then restore them — exactly
-    # the on-disk state of a crash after the base rename, before cleanup
-    stash = tmp_path / "stash"
-    stash.mkdir()
-    for p in t._layers():
-        _sh.copytree(p, stash / p.name)
-    t.compact(keep_since=snap)
-    for p in stash.iterdir():
-        if not (tmp_path / "t" / p.name).exists():
-            _sh.copytree(p, tmp_path / "t" / p.name)
-    names_on_disk = sorted(
-        p.name for p in (tmp_path / "t").iterdir() if p.name.startswith(("base-", "delta-"))
-    )
-    assert any(n.startswith("delta-") for n in names_on_disk), "residue staged"
-    # reads: residue invisible, no double-applied increment
-    assert {tuple(r) for r in t.df().collect()} == expected
-    # the next prefix compaction sweeps the residue directories
-    t.compact(keep_since=t.snapshot_seq())
-    survivors = sorted(
-        p.name for p in (tmp_path / "t").iterdir() if p.name.startswith(("base-", "delta-"))
-    )
-    assert len(survivors) == 1 and survivors[0].startswith(f"base-{snap:06d}")
-    assert {tuple(r) for r in t.df().collect()} == expected
+    for when, live in (("before", 2), ("after", 1)):
+        _crash_next_commit(monkeypatch, when)
+        with pytest.raises(_Crash):
+            t.compact(keep_since=snap)
+        assert len(t._layers()) == live
+        assert {tuple(r) for r in t.df().collect()} == expected, when
+    on_disk = [p for p in (tmp_path / "t").iterdir() if p.name.startswith(("base-", "delta-"))]
+    assert len(on_disk) == 4, "residue staged"
+    t.update(spark.createDataFrame([Row(k=100, v=1, ts=1)], "k bigint, v bigint, ts int"))
+    _assert_disk_is_the_log(t)
+    assert [L.kind for L in t._layers()] == ["base", "delta"]
+    assert {tuple(r) for r in t.df().collect()} == expected | {(100, 1, 1)}
 
 
 def test_semi_read_matches_fold_then_semi_join(spark, tmp_path, monkeypatch):
@@ -1744,20 +1793,22 @@ def test_string_point_read_is_one_parsed_in_list(spark, tmp_path, monkeypatch):
 
 
 def test_write_layer_seeds_the_layer_cache_with_the_read_schema(spark, tmp_path):
-    """Every layer ``_write_layer`` renames into place is cached with the
-    schema it was written with (every field nullable), so its first read
-    skips parquet schema inference: the seeded schema must equal what
-    ``spark.read.parquet`` infers, for create, update, put, increment, row
-    and cell delete, the bases of full, dirty and prefix compaction, index
-    layers and matview layers. About 15 s of tier-1."""
+    """Every layer ``_write_layer`` commits is cached, under its listed
+    file paths, with the schema it was written with (every field
+    nullable), so its first read skips parquet schema inference: the
+    seeded schema must equal what ``spark.read.parquet`` infers, for
+    create, update, put, increment, row and cell delete, the bases of
+    full, dirty and prefix compaction, index layers and matview layers.
+    About 15 s of tier-1."""
     from spark_on_hbase_spark.index import SecondaryIndex
     from spark_on_hbase_spark.matview import MaterializedAgg
     from spark_on_hbase_spark.table import _LAYER_DF_CACHE
 
     def check(tbl):
         for p in tbl._layers():
-            seeded = _LAYER_DF_CACHE[(spark.sparkContext, str(p))]
-            assert seeded.schema == spark.read.parquet(str(p)).schema, p.name
+            paths = tbl._paths(p)
+            seeded = _LAYER_DF_CACHE[(spark.sparkContext, paths)]
+            assert seeded.schema == spark.read.parquet(*paths).schema, p.name
 
     t = KeyedTable(spark, str(tmp_path / "t"), key_col="key", ts_col="ts",
                    compact_threshold=99)
@@ -1781,3 +1832,113 @@ def test_write_layer_seeds_the_layer_cache_with_the_read_schema(spark, tmp_path)
     check(t)
     t.compact()
     check(t)
+
+
+def test_direct_write_runs_its_input_once(spark, tmp_path):
+    """A layer write's range-sampling job and its write job share one run
+    of the input (a lazy checkpoint): a direct ``update`` of a batch made
+    through a counting Python UDF evaluates the UDF once per row, not
+    once per job. About 5 s of tier-1."""
+    calls = spark.sparkContext.accumulator(0)
+
+    @F.udf("bigint")
+    def counted(x):
+        calls.add(1)
+        return x
+
+    t = KeyedTable(spark, str(tmp_path / "t"), key_col="k", ts_col="ts")
+    t.create(spark.createDataFrame([(0, 0, 0)], "k bigint, v bigint, ts bigint"))
+    batch = spark.range(50).select(
+        counted(F.col("id")).alias("k"), F.col("id").alias("v"),
+        F.lit(1).cast("bigint").alias("ts"),
+    )
+    assert t.update(batch) == 50
+    assert calls.value == 50
+
+
+def test_log_less_layer_directories_raise_not_read_as_absent(spark, tmp_path):
+    """A root with layer directories but no table log was written in the
+    layout before the log; it has no reader, and must not read as an
+    absent table (``create()`` would bury it). Costs no Spark job."""
+    root = tmp_path / "old"
+    (root / "base-000000").mkdir(parents=True)
+    (root / "delta-000001-s1").mkdir()
+    t = KeyedTable(spark, str(root))
+    for op in (t.df, t.exists, t.snapshot_seq, t.applied_stamps,
+               lambda: t.create(spark.range(1).select(F.col("id").alias("key")))):
+        with pytest.raises(RuntimeError, match="no _log.json"):
+            op()
+    # an empty directory is an absent table
+    assert not KeyedTable(spark, str(tmp_path / "empty")).exists()
+
+
+def test_renamed_root_reads_identically_with_bloom(spark, tmp_path, layer_files):
+    """The log names layers and files relative to the root, so a root
+    renamed whole (how cross-session fixtures publish) reads the same rows
+    through the same Bloom-pruned files, after mutations and a dirty
+    compaction. About 15 s of tier-1."""
+    import shutil as _sh
+
+    t = KeyedTable(spark, str(tmp_path / "a"), key_col="k", ts_col="ts", bloom=True)
+    rows_ = spark.range(2000).select(
+        F.col("id").alias("k"), (F.col("id") % 7).alias("v"),
+        F.lit(0).cast("int").alias("ts"),
+    )
+    with layer_files(4):
+        t.create(rows_)
+        t.update(rows_.where(F.col("k") < 100).select(
+            "k", (F.col("v") + 1).alias("v"), F.lit(1).cast("int").alias("ts")))
+        t.compact(scope="dirty")
+        t.increment(rows_.where(F.col("k") % 50 == 0).select(
+            "k", F.lit(3).cast("bigint").alias("delta")), counter_col="v")
+        t.delete(rows_.where(F.col("k") % 90 == 1).select("k"))
+    probe = [0, 1, 50, 91, 1500, 1999, 5000]
+
+    def state(tbl):
+        df = tbl.point_read(probe)
+        files = {tuple(f.split("/")[-2:]) for f in df.inputFiles()}
+        return sorted(map(tuple, df.collect())), files, sorted(map(tuple, tbl.df().collect()))
+
+    before = state(t)
+    assert 0 < len(before[1]) < sum(len(L.files) for L in t._layers())
+    _sh.move(t.path, str(tmp_path / "b"))
+    moved = KeyedTable(spark, str(tmp_path / "b"), key_col="k", ts_col="ts", bloom=True)
+    assert state(moved) == before
+
+
+def test_reads_list_no_directories(spark, tmp_path, monkeypatch, layer_files):
+    """Reads take the table from its log: with every Python directory
+    listing made to raise, warm point (Bloom on), range, semi (under and
+    over the multiget cap), two-cut, feed and snapshot reads all run.
+    About 10 s of tier-1."""
+    import os as _os
+
+    t = KeyedTable(spark, str(tmp_path / "t"), key_col="k", ts_col="ts", bloom=True)
+    with layer_files(2):
+        t.create(spark.range(200).select(
+            F.col("id").alias("k"), F.col("id").alias("v"),
+            F.lit(0).cast("int").alias("ts")))
+        a = t.snapshot_seq()
+        t.update(spark.createDataFrame([(5, 50, 1)], "k bigint, v bigint, ts int"))
+        t.delete(spark.createDataFrame([(6,)], "k bigint"))
+    b = t.snapshot_seq()
+    keys = spark.createDataFrame([(k,) for k in (4, 5, 6)], "k bigint")
+    reads = [
+        lambda: t.point_read([4, 5, 6]),
+        lambda: t.range_read(3, 7),
+        lambda: t.semi_read(keys),
+        lambda: t.df(as_of_layer=(a, b)),
+        lambda: t.changes(since_layer=a),
+    ]
+    for cap in (KeyedTable.POINT_READ_CAP, 0):
+        monkeypatch.setattr(KeyedTable, "POINT_READ_CAP", cap)
+        warm = [sorted(map(tuple, r().collect())) for r in reads]  # warm caches
+        with pytest.MonkeyPatch.context() as mp:
+            def no_listing(*a, **k):
+                raise AssertionError("a read listed a directory")
+
+            for obj, name in ((Path, "iterdir"), (Path, "glob"),
+                              (_os, "listdir"), (_os, "scandir")):
+                mp.setattr(obj, name, no_listing)
+            assert [sorted(map(tuple, r().collect())) for r in reads] == warm
+            assert t.snapshot_seq() == b
