@@ -739,7 +739,8 @@ def session_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     "is split into 3 batch files, a file stream (maxFilesPerTrigger=1, "
     "availableNow) drives 3 micro-batches through "
     "increment_stream_into_table — the exactly-once counter sink whose "
-    "(guard, batch) stamp rides each delta layer's directory name — and "
+    "(guard, batch) stamp commits in the same table-log swap as its delta "
+    "layer — and "
     "the folded table is read back. Deltas are exact integers "
     "(floor(value*100), the embeddings quantization trick), so the "
     "batch-computed oracle SUM matches bit-for-bit regardless of how the "
@@ -1888,8 +1889,8 @@ def table_changefeed(spark: SparkSession, sf_dir: str) -> DataFrame:
     "mutation kind (whole-row upsert WITH group migration, partial put, "
     "counter increment, row delete, fresh inserts) and refresh() — the "
     "delta is agg(new state of changed keys) minus agg(old state via time "
-    "travel), applied as ONE atomic multi-counter layer "
-    "(KeyedTable.increment_many, stamp-idempotent). The oracle is the full "
+    "travel), applied as the DELTA rows of the view's ONE stamped layer per "
+    "refresh (one commit of the view table's log). The oracle is the full "
     "GROUP BY over the reconstructed final base state, so the hash match "
     "proves incremental == recompute across five mutation semantics "
     "including groups gaining/losing members and keys that migrate "
@@ -2001,9 +2002,10 @@ warmer("matview_fixture")(_matview_fixture)
     doc="MIN/MAX materialized-view maintenance — the NON-self-maintainable "
     "aggregates (a deleted maximum cannot be fixed from the delta alone; "
     "Gupta & Mumick's classic result): the view recomputes ONLY the "
-    "groups the refresh touched, as a second stamped sub-transaction "
-    "(SPARSE put commit record; NULL extremes via explicit cell-deletes, "
-    "since a sparse put's NULL means keep-stored). Graded with every "
+    "groups the refresh touched, as SPARSE rows in the same stamped layer "
+    "as the sum deltas (NULL extremes as CELLDEL rows, since a sparse "
+    "put's NULL means keep-stored), so sums and extremes commit in one "
+    "swap of the view table's log. Graded with every "
     "mutation kind including group migration, value cell-deletes (the "
     "aggregate must SKIP nulls on both engines) and deletes that remove "
     "group extremes. The oracle is the full GROUP BY with MIN/MAX over "
@@ -2206,7 +2208,7 @@ def _stream_mv_handles(spark: SparkSession, root: str):
     return base, mv
 
 
-_STREAM_MV_VERSION = 3  # bump when rows/mutations/layout change
+_STREAM_MV_VERSION = 4  # bump when rows/mutations/layout change
 _STREAM_MV_DONE: set[str] = set()
 
 

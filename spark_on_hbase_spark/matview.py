@@ -16,9 +16,10 @@ and Applications", IEEE DE Bulletin 1995) with O(Δ) work per refresh:
     delta(group) = agg(new state of changed keys)
                  − agg(old state of changed keys)
 
-applied to the stored aggregate as ONE atomic multi-counter DELTA layer
-(``KeyedTable.increment_many``). SUM and COUNT are self-maintainable under
-insert/update/delete (the delta is computable from the changed rows alone).
+applied to the stored aggregate as DELTA rows (one per touched group,
+every sum and the count in the same row) of the refresh's ONE view layer.
+SUM and COUNT are self-maintainable under insert/update/delete (the delta
+is computable from the changed rows alone).
 
 MIN/MAX are NOT self-maintainable (a deleted minimum forces re-reading its
 group — the classic result), so they get the textbook alternative:
@@ -27,11 +28,13 @@ pluggable: with a ``group_index`` (a ``SecondaryIndex`` on the group
 column) the affected groups' current rows come from ONE multi-range index
 read (``lookup_in`` — O(|groups| + result) files); without one, a single
 base scan semi-joined to the affected groups (the honest degradation,
-documented cost O(table) per refresh). Extreme results land as one stamped
-SPARSE put, so sums and extremes are two independently-idempotent
-sub-transactions — the same sub-stamp discipline the secondary index uses
-for its maintenance jobs, with the same property: a crash between them
-re-runs exactly the missing half on the next refresh.
+documented cost O(table) per refresh). The recomputed extremes ride the
+same layer as the sum deltas: a SPARSE row per group holding its non-NULL
+extremes, and a CELLDEL row naming the extremes that came out NULL (a
+SPARSE NULL means "keep stored", so a NULL result needs a cell delete).
+The rows of one group touch disjoint cells and at most one of them is
+SPARSE, so they commute inside the layer (``_merge_layers_fold``), and
+sums and extremes commit together.
 
 Scale posture, piece by piece:
 - change detection reads ONLY the post-snapshot layers (metadata-pruned —
@@ -57,38 +60,49 @@ order); MIN/MAX accept any numeric column (no accumulation — the extreme
 of a set is deterministic on every engine).
 
 Consistency + crash story:
-- refresh work is idempotent: the sum-delta layer commits with the stamp
-  ``mv_upto_{seq}`` and the extremes put with ``mv_upto_{seq}_x`` (data
-  and applied-marker commit in one swap of the view table's log,
-  ``KeyedTable._write_layer``); each half's applied horizon is recovered
-  as max(meta sidecar, its stamps), so a crash anywhere re-runs exactly
-  the missing work and never double-applies;
-- a base compaction that folded unprocessed history away (new ``base-``
-  layer after the horizon, or the time-travel guard raising) is detected
-  and answered with a full rebuild — never a silent partial delta;
+- a build or refresh is ONE commit of the view table: its one layer and
+  its stamp ``mv_upto_{seq}`` (the base snapshot it reached) land in the
+  same swap of the view table's log (``KeyedTable._commit``). The view's
+  applied horizon is the highest such stamp, so there is no second
+  commit point: a crash before the swap leaves the view as it was and
+  the next refresh redoes the whole window; a crash after it leaves a
+  current view, and the next refresh finds nothing to do;
+- a base compaction that folded unprocessed history away (a base layer
+  inside the refresh window, or the time-travel horizon passing it) makes
+  the read raise ``HistoryFoldedError``, answered with a full rebuild —
+  never a silent partial delta;
   ``KeyedTable.compact(keep_since=view.applied_upto())`` is the retention
   discipline that avoids the rebuild entirely;
+- a view root holding ``_mv_meta.json`` is the layout before the view
+  log carried the horizon: reading its horizon raises, ``build()``
+  replaces it;
 - TTL tables are rejected: rows expire by wall clock without writing a
   layer, so no changefeed can see the retraction.
 """
 
 from __future__ import annotations
 
-import json
-from pathlib import Path
+import contextlib
+import functools
+import operator
+import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from spark_on_hbase_spark.table import (
+    _CELLDEL,
+    _DELCOLS,
+    _DELTA,
+    _KIND,
+    _SPARSE,
     HistoryFoldedError,
     KeyedTable,
     _is_numeric_dtype,
 )
 
-import os
-
-_META = "_mv_meta.json"
+#: a view root of the layout before the view log carried the horizon
+_OLD_META = "_mv_meta.json"
 _STAMP_PREFIX = "mv_upto_"
 
 #: integer dtypes whose sums are exact and order-independent
@@ -160,66 +174,29 @@ class MaterializedAgg:
 
     # -- bookkeeping ---------------------------------------------------------
 
-    def _meta_path(self) -> Path:
-        return Path(self.path) / _META
-
-    def _meta_applied(self) -> int | None:
-        p = self._meta_path()
-        if not p.exists():
-            return None
-        return int(json.loads(p.read_text())["applied_upto"])
-
-    def _write_meta(self, applied_upto: int) -> None:
-        p = self._meta_path()
-        tmp = p.with_suffix(".tmp")
-        tmp.write_text(json.dumps({"applied_upto": int(applied_upto)}))
-        tmp.replace(p)
-
-    def _stamped_upto(self, suffix: str) -> int:
-        """Highest refresh seq whose ``mv_upto_{seq}{suffix}`` stamp rides a
-        committed layer — the durable truth a lost meta write can't lose."""
-        best = 0
-        for s in self.mv.applied_stamps():
-            if not s.startswith(_STAMP_PREFIX):
-                continue
-            rest = s[len(_STAMP_PREFIX):]
-            if suffix:
-                if not rest.endswith(suffix):
-                    continue
-                rest = rest[: -len(suffix)]
-            elif not rest.isdigit():
-                continue
-            if rest.isdigit():
-                best = max(best, int(rest))
-        return best
-
-    def _sum_applied(self) -> int:
-        meta = self._meta_applied()
-        if meta is None:
-            raise FileNotFoundError(f"no materialized view at {self.path}")
-        return max(meta, self._stamped_upto(""))
-
-    def _ext_applied(self) -> int:
-        meta = self._meta_applied()
-        if meta is None:
-            raise FileNotFoundError(f"no materialized view at {self.path}")
-        return max(meta, self._stamped_upto("_x"))
-
     def applied_upto(self) -> int:
-        """The base snapshot_seq this view FULLY reflects (both the sum and
-        the extremes sub-transactions) — the checkpoint to hand
-        ``compact(keep_since=...)``."""
-        if self.mins or self.maxs:
-            return min(self._sum_applied(), self._ext_applied())
-        return self._sum_applied()
+        """The base snapshot_seq this view reflects — the checkpoint to hand
+        ``compact(keep_since=...)``: the highest ``mv_upto_{seq}`` stamp in
+        the view table's log, committed in the same swap as the layer that
+        reached it."""
+        if os.path.exists(os.path.join(self.path, _OLD_META)):
+            raise RuntimeError(
+                f"{self.path} holds {_OLD_META}: a view in the layout before "
+                f"the view table's log carried its horizon, which has no "
+                f"reader — rebuild it with build()"
+            )
+        stamps = self.mv.applied_stamps()
+        if not stamps:
+            raise FileNotFoundError(f"no materialized view at {self.path}")
+        return max(int(s.removeprefix(_STAMP_PREFIX)) for s in stamps)
 
     def exists(self) -> bool:
-        return self._meta_path().exists() and self.mv.exists()
+        return self.mv.exists()
 
     # -- aggregation ---------------------------------------------------------
 
     def _check_exact(self) -> None:
-        dtypes = dict(self.base.df().dtypes)
+        dtypes = self.base._schema()
         for out, src in self.sums.items():
             if src not in dtypes:
                 raise ValueError(f"no such base column: {src}")
@@ -267,150 +244,153 @@ class MaterializedAgg:
             "__mv_ts", F.lit(0).cast("int")
         )
 
+    @staticmethod
+    def _layer_rows(df: DataFrame, schema: dict, kind: int) -> DataFrame:
+        """``df`` as view-layer rows of one ``__kind``: the view columns
+        (and ``__delcols``) ``df`` carries, every other cell NULL."""
+        return df.select(
+            *[
+                (F.col(c) if c in df.columns else F.lit(None)).cast(t).alias(c)
+                for c, t in schema.items()
+            ],
+            F.lit(kind).alias(_KIND),
+            (F.col(_DELCOLS) if _DELCOLS in df.columns else F.lit(None))
+            .cast("array<string>")
+            .alias(_DELCOLS),
+        )
+
+    def _delta_rows(self, old: DataFrame, new: DataFrame, schema: dict) -> DataFrame:
+        """DELTA rows of agg(new) − agg(old): each touched group's sum and
+        count deltas, groups whose deltas are all zero dropped."""
+        delta = (
+            self._contrib(new, 1)
+            .unionByName(self._contrib(old, -1))
+            .groupBy(self.group_col)
+            .agg(
+                *[F.sum(f"__dx_{out}").alias(out) for out in self.sums],
+                F.sum("__dx_n").alias(self.count_col),
+            )
+        )
+        nonzero = functools.reduce(
+            operator.or_,
+            [F.coalesce(F.col(c), F.lit(0)) != 0 for c in [*self.sums, self.count_col]],
+        )
+        return self._layer_rows(delta.where(nonzero), schema, _DELTA)
+
+    def _extreme_rows(
+        self, old: DataFrame, new: DataFrame, schema: dict, cur: int
+    ) -> DataFrame:
+        """The touched groups' MIN/MAX recomputed from their current rows:
+        a SPARSE row of the non-NULL extremes (``__mv_ts = cur``) and a
+        CELLDEL row naming the NULL ones."""
+        g = F.col(self.group_col)
+        groups = (
+            old.select(g).unionByName(new.select(g)).where(g.isNotNull()).distinct()
+        )
+        # lazily checkpointed: the SPARSE and the CELLDEL rows both derive
+        # from it, and the group rows behind it are read once
+        ext = (
+            self._group_rows(groups)
+            .where(g.isNotNull())
+            .groupBy(self.group_col)
+            .agg(*self._ext_aggs())
+            .localCheckpoint(eager=False)
+        )
+        cols = [*self.mins, *self.maxs]
+        nulls = F.array_compact(
+            F.array(*[F.when(F.col(c).isNull(), F.lit(c)) for c in cols])
+        )
+        put = ext.where(F.size(nulls) < len(cols)).withColumn("__mv_ts", F.lit(cur))
+        dropped = ext.select(g, nulls.alias(_DELCOLS)).where(F.size(_DELCOLS) > 0)
+        return self._layer_rows(put, schema, _SPARSE).unionByName(
+            self._layer_rows(dropped, schema, _CELLDEL)
+        )
+
     # -- lifecycle -----------------------------------------------------------
 
     def build(self) -> "MaterializedAgg":
-        """Full (re)build: one aggregate scan of the base, then the view is
-        maintained incrementally. Also the fallback when incremental
-        maintenance is provably impossible (compaction folded the needed
-        history away)."""
+        """Full (re)build: one aggregate scan of the base, committed as a
+        fresh view table's base layer under the stamp of the base snapshot
+        it read; then the view is maintained incrementally. Also the
+        fallback when incremental maintenance is provably impossible
+        (compaction folded the needed history away), and the way to
+        replace a view of the old layout."""
         self._check_exact()
         upto = self.base.snapshot_seq()
-        if self.mv.exists():
-            self.mv.drop()
-        self._meta_path().unlink(missing_ok=True)
-        self.mv.create(self._full_agg())
-        self._write_meta(upto)
+        self.mv.drop()  # a fresh log: the stamp below always commits
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(os.path.join(self.path, _OLD_META))
+        self.mv._write_layer(
+            self._full_agg(), "base", stamp=f"{_STAMP_PREFIX}{upto:06d}"
+        )
         return self
 
     def _changed_states(self, lo: int, hi: int):
-        """(old, new, changed-keys) for the base window (lo, hi] — the
-        shared read both sub-transactions derive from. old/new are folded
-        key states at the window edges, restricted to the changed keys,
-        from ONE two-cut ``semi_read`` (which picks the multiget or the
-        semi-join)."""
+        """(old, new): the folded states, at the window edges, of the keys
+        the base window (lo, hi] changed — from ONE two-cut ``semi_read``
+        (which picks the multiget or the semi-join). None when the window
+        changed no key."""
         feed = self.base.changes(since_layer=lo, until_layer=hi)
         # ONE pass over the feed: the changed-key relation is materialized
-        # (localCheckpoint) because every consumer downstream re-reads it —
-        # the emptiness probe, the semi_read and (for MIN/MAX views) the
-        # touched-group derivation. Before r11 each of those re-executed
-        # the feed scan + distinct from files (guide §2.4: remove repeated
-        # passes).
+        # (localCheckpoint) because two consumers read it — the emptiness
+        # probe and the semi_read's key collect. Before r11 each of them
+        # re-executed the feed scan + distinct from files (guide §2.4:
+        # remove repeated passes).
         changed = feed.select(self.base.key_col).distinct().localCheckpoint()
         if changed.isEmpty():
-            return None, None, changed
-        # both states are read at least once by the sum delta and — for
-        # MIN/MAX views — a second time by the touched-group derivation.
-        # Marking the O(Δ) states lazily checkpointed folds all of that
-        # into ONE execution of the two-snapshot fold; before r11 the
-        # minmax refresh ran the full fold up to 4x (measured 13.8s at
-        # sf0.1, see OPTIMIZATION_r11.md).
+            return None
+        # both states are read by the sum delta and — for MIN/MAX views —
+        # a second time by the touched-group derivation. Marking the O(Δ)
+        # states lazily checkpointed folds all of that into ONE execution
+        # of the two-snapshot fold; before r11 the minmax refresh ran the
+        # full fold up to 4x (measured 13.8s at sf0.1, see
+        # OPTIMIZATION_r11.md).
         states = self.base.semi_read(changed, as_of_layer=(lo, hi)).localCheckpoint(
             eager=False
         )
         cut = F.col("__cut")
-        old = states.where(cut == lo).drop("__cut")
-        new = states.where(cut == hi).drop("__cut")
-        return old, new, changed
+        return states.where(cut == lo).drop("__cut"), states.where(cut == hi).drop("__cut")
 
     def refresh(self) -> int:
         """Apply every base mutation after the last refresh to the stored
-        aggregate. Returns the number of group rows touched by the sum
-        delta (0 when the view is already current, -1 when a compaction
-        forced a full rebuild). O(Δ) — see the module docstring."""
+        aggregate, as ONE view layer committed with the stamp of the base
+        snapshot it reaches. Returns the number of group rows touched by
+        the sum delta (0 when the view is already current or the window
+        changed no key — nothing is written then — and -1 when a
+        compaction forced a full rebuild). O(Δ) — see the module
+        docstring."""
         self._check_exact()
-        snap_sum = self._sum_applied()
-        has_ext = bool(self.mins or self.maxs)
-        snap_ext = self._ext_applied() if has_ext else snap_sum
-        cur = self.base.snapshot_seq()
-        lo = min(snap_sum, snap_ext)
+        lo, cur = self.applied_upto(), self.base.snapshot_seq()
         if cur <= lo:
-            self._write_meta(cur)
             return 0
-        if any(
-            L.kind == "base" and L.seq > lo for L in self.base._visible_layers(None)
-        ):
-            # a compaction folded unprocessed history: the feed no longer
-            # carries the individual mutations (and deleted keys are
-            # physically gone from the new base), so a delta would be wrong
-            self.build()
-            return -1
         try:
-            touched = 0
-            states: dict[int, tuple] = {}
-
-            def window(from_seq: int):
-                if from_seq not in states:
-                    states[from_seq] = self._changed_states(from_seq, cur)
-                return states[from_seq]
-
-            # ---- sums + count: one stamped multi-counter delta layer ----
-            stamp = f"{_STAMP_PREFIX}{cur:06d}"
-            if cur > snap_sum:
-                old, new, _ = window(snap_sum)
-                if old is not None:
-                    delta = (
-                        self._contrib(new, 1)
-                        .unionByName(self._contrib(old, -1))
-                        .groupBy(self.group_col)
-                        .agg(
-                            *[
-                                F.sum(f"__dx_{out}").alias(f"__d_{out}")
-                                for out in self.sums
-                            ],
-                            F.sum("__dx_n").alias("__d_n"),
-                        )
-                    )
-                    counters = {out: f"__d_{out}" for out in self.sums}
-                    counters[self.count_col] = "__d_n"
-                    touched = self.mv.increment_many(delta, counters, stamp=stamp)
-            # ---- extremes: recompute the touched groups, stamped put ----
-            stamp_x = f"{_STAMP_PREFIX}{cur:06d}_x"
-            if has_ext and cur > snap_ext:
-                old, new, _ = window(snap_ext)
-                if old is not None:
-                    groups = (
-                        old.select(self.group_col)
-                        .unionByName(new.select(self.group_col))
-                        .where(F.col(self.group_col).isNotNull())
-                        .distinct()
-                    )
-                    rows = self._group_rows(groups)
-                    ext = (
-                        rows.where(F.col(self.group_col).isNotNull())
-                        .groupBy(self.group_col)
-                        .agg(*self._ext_aggs())
-                        .localCheckpoint()  # small; reused below per column
-                    )
-                    # a SPARSE put cannot store NULL (null = keep stored):
-                    # groups whose recomputed extreme is NULL (every value
-                    # cell-deleted) need an explicit cell-delete. Those
-                    # land BEFORE the put; the put's stamp is the
-                    # transaction's commit record (``_ext_applied``), and
-                    # a replayed cell-delete whose stamp committed writes
-                    # nothing (KeyedTable applies a stamp at most once).
-                    for j, out in enumerate([*self.mins, *self.maxs]):
-                        nulls = ext.where(F.col(out).isNull()).select(
-                            self.group_col
-                        )
-                        if not nulls.isEmpty():
-                            self.mv.delete(
-                                nulls, columns=[out], stamp=f"{stamp_x}c{j}"
-                            )
-                    self.mv.put(
-                        ext.withColumn("__mv_ts", F.lit(cur).cast("int")),
-                        stamp=stamp_x,
-                    )
+            states = self._changed_states(lo, cur)
+            if states is None:
+                return 0
+            schema = self.mv._schema()
+            layer = self._delta_rows(*states, schema)
+            deltas = None
+            if self.mins or self.maxs:
+                # the return counts the DELTA rows alone: observe them while
+                # the layer materializes here, once (an observation below
+                # the write's lazy checkpoint would read 0)
+                deltas = Observation()
+                layer = (
+                    layer.unionByName(self._extreme_rows(*states, schema, cur))
+                    .observe(deltas, F.count(F.when(F.col(_KIND) == _DELTA, 1)).alias("n"))
+                    .localCheckpoint()
+                )
+            n = self.mv._write_layer(layer, "delta", stamp=f"{_STAMP_PREFIX}{cur:06d}")
         except HistoryFoldedError:
-            # a compaction folded the snapshot a read needed (time-travel
-            # horizon / feed-window guard): incremental is impossible,
-            # rebuild. ONLY this type — a bare ValueError is a real bug or
-            # a bad argument and must surface, not silently cost an
-            # O(table) rebuild on every refresh
+            # a compaction folded the history the window needs (a base
+            # layer inside it, or the time-travel horizon past it):
+            # incremental is impossible, rebuild. ONLY this type — a bare
+            # ValueError is a real bug or a bad argument and must surface,
+            # not silently cost an O(table) rebuild on every refresh
             self.build()
             return -1
-        self._write_meta(cur)
-        return touched
+        self.mv._maybe_compact()
+        return n if deltas is None else deltas.get["n"]
 
     def _group_rows(self, groups: DataFrame) -> DataFrame:
         """Current base rows of the given groups — the MIN/MAX recompute

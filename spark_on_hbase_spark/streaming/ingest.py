@@ -239,9 +239,9 @@ def matview_maintained_upsert(mv, guard_id: str = "default"):
     exposed for direct testing: a guarded last-writer-wins upsert into the
     view's BASE table (``idempotent_upsert``) followed by an incremental
     view refresh (``MaterializedAgg.refresh`` — delta = agg(new) − agg(old)
-    over the changed keys, applied as one stamped multi-counter layer).
-    Both halves carry their own idempotence stamp in a layer directory
-    name, so the composition is exactly-once under replay with NO
+    over the changed keys, applied as one stamped view layer). Each half
+    commits its own idempotence stamp in the same table-log swap as its
+    layer, so the composition is exactly-once under replay with NO
     coordination between them: a replayed batch's base write writes
     nothing (batch stamp applied) and refresh() no-ops (view already at
     the base's snapshot seq); a crash BETWEEN base write and refresh
@@ -267,7 +267,7 @@ def merge_stream_into_matviewed_table(
     micro-batch replay — the streaming face of the coprocessor-maintained
     summary tables HBase deployments pair with their primaries. Per batch
     the view work is O(batch): metadata-pruned changefeed, footer-pruned
-    point reads of the changed keys, one multi-counter delta append.
+    point reads of the changed keys, one view-layer append.
     Stamps are namespaced per checkpoint (see guard_id_for). Returns the
     StreamingQuery (caller awaits/stops)."""
     body = matview_maintained_upsert(mv, guard_id=guard_id_for(checkpoint_dir))

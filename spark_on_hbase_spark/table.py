@@ -1143,9 +1143,7 @@ class KeyedTable:
         non-null numeric DELTA cell independently (``_merge_layers_fold``),
         so multi-cell layers need no new merge rule. Same O(batch) contract
         as ``increment``: pre-aggregated per key, zero-delta keys skipped,
-        the table is never read. This is the write primitive incremental
-        materialized-view refresh rides (matview.py): sum and count deltas
-        of a group must land atomically or a crash leaves a torn aggregate."""
+        the table is never read."""
         schema = self._schema()
         for col in counters:
             if col not in schema:
@@ -1580,7 +1578,12 @@ def _merge_layers_fold(
        sequential rule does (bit-identical doubles).
 
     In-layer duplicate keys share a seq; their relative order is arbitrary
-    (row_number's tie-break), so a batch must not rely on it."""
+    (row_number's tie-break), so a batch must not rely on it. Rows of one
+    layer for one key commute when at most one of them is ROW or SPARSE
+    and no two touch the same cell (a ROW touches every cell, a SPARSE or
+    DELTA its non-null cells, a CELLDEL the cells it names) — the shape
+    of a ``MaterializedAgg`` refresh layer's DELTA, SPARSE and CELLDEL
+    rows of one group."""
     data_cols = [c for c in frames[0].columns if c not in (_TOMBSTONE, _KIND, _DELCOLS)]
     payload = [c for c in data_cols if c != key_col]
     dtypes = dict(frames[0].dtypes)

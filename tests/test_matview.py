@@ -1,6 +1,6 @@
 """MaterializedAgg: incremental view maintenance == full recompute, under
-every mutation kind, the crash/idempotence contract, the degraded big-delta
-path, and the compaction-fallback guard."""
+every mutation kind, the one-commit refresh and its crash points, the
+degraded big-delta path, and the compaction-fallback guard."""
 
 import os
 
@@ -89,27 +89,6 @@ def test_incremental_matches_recompute_across_every_mutation_kind(spark, tmp_pat
     touched = mv.refresh()
     assert touched > 0
     assert _view(mv) == _recompute(base)
-
-
-def test_refresh_is_idempotent_and_meta_crash_heals_from_the_stamp(spark, tmp_path):
-    base = _base(spark, str(tmp_path))
-    mv = _mv(spark, str(tmp_path), base).build()
-    base.increment(
-        spark.range(0, 50).select(
-            F.col("id").alias("k"), F.lit(5).cast("bigint").alias("delta")
-        ),
-        counter_col="val",
-    )
-    assert mv.refresh() > 0
-    assert mv.refresh() == 0  # already current
-    expected = _recompute(base)
-    # crash window: the delta layer committed but the meta write was lost —
-    # the stamp riding the layer name is the durable truth, so a re-refresh
-    # must NOT double-apply
-    mv._write_meta(1)
-    assert mv.applied_upto() == base.snapshot_seq()
-    assert mv.refresh() == 0
-    assert _view(mv) == expected
 
 
 def test_big_delta_degrades_to_the_semi_join_path_and_stays_exact(
@@ -344,51 +323,112 @@ def test_minmax_with_a_group_index_uses_lookup_in_and_stays_exact(spark, tmp_pat
     assert got == expect
 
 
-def test_minmax_crash_between_sum_and_extremes_self_heals(spark, tmp_path):
-    """Sub-transaction recovery: simulate a crash after the sum delta
-    committed but before the extremes put — the next refresh must redo
-    ONLY the extremes (sums not double-applied) and converge."""
-    base = _base(spark, str(tmp_path))
-    mv = MaterializedAgg(
-        spark, os.path.join(str(tmp_path), "mv"), base, "grp",
-        {"sum_val": "val"}, maxs={"max_val": "val"},
+def _minmax_mv(spark, tmp_path, base):
+    return MaterializedAgg(
+        spark, os.path.join(tmp_path, "mv"), base, "grp",
+        {"sum_val": "val"}, mins={"min_val": "val"}, maxs={"max_val": "val"},
     ).build()
-    base.update(
-        spark.range(0, 30).select(
-            F.col("id").alias("k"), (F.col("id") % 23).alias("grp"),
-            (F.col("id") * 1000).alias("val"),
-            F.lit(500).cast("int").alias("ts"),
-        )
-    )
-    # replicate ONLY the sum half of what refresh would do, with its stamp
-    cur = base.snapshot_seq()
-    old, new, _ = mv._changed_states(mv._sum_applied(), cur)
-    delta = (
-        mv._contrib(new, 1)
-        .unionByName(mv._contrib(old, -1))
-        .groupBy("grp")
-        .agg(
-            F.sum("__dx_sum_val").alias("__d_sum_val"),
-            F.sum("__dx_n").alias("__d_n"),
-        )
-    )
-    mv.mv.increment_many(
-        delta, {"sum_val": "__d_sum_val", "n_rows": "__d_n"},
-        stamp=f"mv_upto_{cur:06d}",
-    )
-    # crash here: extremes stamp missing, meta stale. refresh() must redo
-    # only the extremes — if it re-applied the sums the totals double
-    mv.refresh()
-    got = {tuple(r) for r in mv.df().collect()}
-    expect = {
-        tuple(r)
-        for r in base.df()
-        .groupBy("grp")
-        .agg(
-            F.sum("val").cast("bigint").alias("sum_val"),
-            F.max("val").alias("max_val"),
-            F.count("*").alias("n_rows"),
-        )
-        .collect()
+
+
+class _Crash(RuntimeError):
+    pass
+
+
+def _crash_next_commit(monkeypatch, when: str) -> None:
+    """The next ``KeyedTable._commit`` dies just before its log swap
+    (``when="before"``) or just after it (``"after"``)."""
+    real = KeyedTable._commit
+
+    def commit(self, *a, **kw):
+        monkeypatch.setattr(KeyedTable, "_commit", real)
+        if when == "after":
+            real(self, *a, **kw)
+        raise _Crash(when)
+
+    monkeypatch.setattr(KeyedTable, "_commit", commit)
+
+
+def test_refresh_crash_at_the_view_commit_heals(spark, tmp_path, monkeypatch):
+    """A refresh commits once: its one view layer and its stamp in one
+    swap of the view table's log. Crashed just before the swap, the view
+    and its horizon are unchanged and the next refresh applies the whole
+    window; crashed just after it, the view is current and the next
+    refresh returns 0 and writes nothing. A SUM+MIN+MAX view, so sums and
+    extremes share the crash. About 20 s of tier-1."""
+    base = _base(spark, str(tmp_path))
+    mv = _minmax_mv(spark, str(tmp_path), base)
+    _mutate_every_kind(spark, base)
+    view, upto = _view(mv), mv.applied_upto()
+    _crash_next_commit(monkeypatch, "before")
+    with pytest.raises(_Crash):
+        mv.refresh()
+    assert _view(mv) == view and mv.applied_upto() == upto
+    assert mv.refresh() > 0
+    assert _view(mv) == _recompute_ext(base)
+
+    base.delete(spark.createDataFrame([(499,)], "k long"))  # a group's max row
+    _crash_next_commit(monkeypatch, "after")
+    with pytest.raises(_Crash):
+        mv.refresh()
+    layers = mv.mv._layers()
+    assert mv.applied_upto() == base.snapshot_seq()
+    assert mv.refresh() == 0
+    assert mv.mv._layers() == layers
+    assert _view(mv) == _recompute_ext(base)
+
+
+def test_refresh_commits_one_view_layer(spark, tmp_path, monkeypatch):
+    """The cost pin of a refresh: whatever the view aggregates, it makes
+    one base ``semi_read``, one view-table commit and adds one view layer.
+    The window cell-deletes one group's every extreme (a CELLDEL row) and
+    moves another group's max (a SPARSE row) next to its sum delta (a
+    DELTA row). About 15 s of tier-1."""
+    t = KeyedTable(spark, str(tmp_path / "base"), key_col="k", ts_col="ts")
+    schema = "k bigint, g bigint, v bigint, w bigint, ts int"
+    t.create(spark.createDataFrame(
+        [(k, k % 3, k, 10 * k, 0) for k in range(1, 7)], schema
+    ))
+    mm = MaterializedAgg(
+        spark, str(tmp_path / "mm"), t, "g", {"sv": "v"},
+        mins={"lo": "w"}, maxs={"hi": "w"},
+    ).build()
+    sums = MaterializedAgg(spark, str(tmp_path / "sums"), t, "g", {"sv": "v"}).build()
+    t.delete(spark.createDataFrame([(3,), (6,)], "k bigint"), columns=["w"])
+    t.update(spark.createDataFrame([(4, 1, 7, 5, 1)], schema))
+    reads, commits = [], []
+    real_read, real_commit = KeyedTable.semi_read, KeyedTable._commit
+
+    def semi_read(self, *a, **kw):
+        reads.append(self.path)
+        return real_read(self, *a, **kw)
+
+    def commit(self, *a, **kw):
+        commits.append(self.path)
+        return real_commit(self, *a, **kw)
+
+    monkeypatch.setattr(KeyedTable, "semi_read", semi_read)
+    monkeypatch.setattr(KeyedTable, "_commit", commit)
+    for mv, touched in ((mm, 1), (sums, 1)):
+        reads.clear(), commits.clear()
+        before = len(mv.mv._layers())
+        assert mv.refresh() == touched  # only g=1's sum and count moved
+        assert reads == [t.path] and commits == [mv.mv.path]
+        assert len(mv.mv._layers()) == before + 1
+    assert {tuple(r) for r in mm.df().collect()} == {
+        (0, 9, None, None, 2), (1, 8, 5, 10, 2), (2, 7, 20, 50, 2)
     }
-    assert got == expect
+    assert {tuple(r) for r in sums.df().collect()} == {(0, 9, 2), (1, 8, 2), (2, 7, 2)}
+
+
+def test_view_root_of_the_old_layout_raises_until_rebuilt(spark, tmp_path):
+    """A view root holding ``_mv_meta.json`` was written before the view
+    table's log carried the horizon: refresh raises instead of guessing
+    a horizon, and ``build()`` replaces it."""
+    base = _base(spark, str(tmp_path), n=50)
+    mv = _mv(spark, str(tmp_path), base).build()
+    (tmp_path / "mv" / "_mv_meta.json").write_text('{"applied_upto": 0}')
+    with pytest.raises(RuntimeError, match="_mv_meta.json"):
+        mv.refresh()
+    mv.build()
+    assert mv.refresh() == 0
+    assert _view(mv) == _recompute(base)

@@ -3,7 +3,10 @@ last-writer-wins by ts, cell-level put, pre-aggregated increment, row/column
 deletes, copy — the HBase behaviors re-expressed as deterministic merge
 writes (table.py)."""
 
+import collections
 import contextlib
+import copy
+import functools
 import itertools
 from pathlib import Path
 
@@ -21,7 +24,13 @@ from hypothesis.stateful import (
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from spark_on_hbase_spark.table import HistoryFoldedError, KeyedTable
+from spark_on_hbase_spark.table import (
+    _CELLDEL,
+    _DELTA,
+    _SPARSE,
+    HistoryFoldedError,
+    KeyedTable,
+)
 
 
 @pytest.fixture
@@ -436,13 +445,29 @@ def test_mutation_sequence_matches_model(spark, tmp_path, layer_files):
     after it, the table reads as the model after the op and a stamped
     retry returns 0. After every commit the root holds only what the log
     lists; an after-swap crash leaves the replaced files until the next
-    commit sweeps them.
+    commit sweeps them. A mixed layer holds a DELTA, a SPARSE and a
+    CELLDEL row of one key over disjoint cells; the model applies them in
+    both orders, and both must equal df().
     Derandomized with no example database, so every run replays the same
     bounded set of sequences; shrinking is off to keep a failure's cost
-    bounded (the failing steps are still printed)."""
+    bounded (the failing steps are still printed). Which rules run depends
+    on the machine's source (hypothesis derandomizes from it, and its swarm
+    testing disables rules per example), so the run ends by asserting that
+    every rule ran and that the commit crashed both before and after its
+    swap."""
     dirs = itertools.count()
     key_sets = st.lists(st.sampled_from(_M_PROBE), max_size=3, unique=True)
     cell_sets = st.sets(st.sampled_from(_M_CELLS), min_size=1)
+    fired = collections.Counter()  # rule -> steps hypothesis drew it for
+    crashes = collections.Counter()  # "before" / "after" -> _Crash raised
+
+    def counted(step):
+        @functools.wraps(step)
+        def drawn(self, **kw):
+            fired[step.__name__] += 1
+            return step(self, **kw)
+
+        return drawn
 
     def keys_df(keys):
         return spark.createDataFrame([(k,) for k in keys], "key bigint")
@@ -473,7 +498,7 @@ def test_mutation_sequence_matches_model(spark, tmp_path, layer_files):
                 try:
                     return op()
                 except _Crash:
-                    pass
+                    crashes[self.crash] += 1
             when, self.crash = self.crash, None
             if when == "before":
                 # nothing committed: the table reads as before the op
@@ -514,9 +539,16 @@ def test_mutation_sequence_matches_model(spark, tmp_path, layer_files):
             self.snaps.append((seq, self.model.visible()))
 
         # -- mutations ------------------------------------------------------
+        #
+        # update, increment, delete and compact run their bodies (_update,
+        # ...), which the crash rules run too, so `fired` counts draws only
 
         @rule(batch=_M_BATCH)
+        @counted
         def update(self, batch):
+            self._update(batch)
+
+        def _update(self, batch):
             self._stamped(
                 self.t.update, spark.createDataFrame(batch, _m_schema(_M_COLS))
             )
@@ -525,6 +557,7 @@ def test_mutation_sequence_matches_model(spark, tmp_path, layer_files):
             self._snap(r[0] for r in batch)
 
         @rule(batch=_M_BATCH, cols=cell_sets)
+        @counted
         def put(self, batch, cols):
             cols = [c for c in _M_CELLS if c in cols]
             idx = [2 + _M_CELLS.index(c) for c in cols]
@@ -539,7 +572,11 @@ def test_mutation_sequence_matches_model(spark, tmp_path, layer_files):
 
         @rule(batch=_M_BATCH, counter=st.sampled_from(["cnt", "bal"]),
               data=st.data())
+        @counted
         def increment(self, batch, counter, data):
+            self._increment(batch, counter, data)
+
+        def _increment(self, batch, counter, data):
             # the batch's ts rides along and must be ignored: an increment
             # carries no version timestamp
             choices = [7, 1, -3, 0] if counter == "cnt" else [0.1, 0.2, 0.7, -1.5, 0.0]
@@ -559,6 +596,7 @@ def test_mutation_sequence_matches_model(spark, tmp_path, layer_files):
 
         @rule(key=st.sampled_from(_M_KEYS),
               d1=st.sampled_from([0.1, 0.2, 0.7]), d2=st.sampled_from([0.1, 0.3, 1e-3]))
+        @counted
         def double_increment(self, key, d1, d2):
             # two stacked DELTA layers on one double cell: the fold must
             # add them in layer order (float addition does not associate)
@@ -572,7 +610,11 @@ def test_mutation_sequence_matches_model(spark, tmp_path, layer_files):
                 self._snap([key])
 
         @rule(keys=key_sets.filter(bool), cols=st.one_of(st.none(), cell_sets))
+        @counted
         def delete(self, keys, cols):
+            self._delete(keys, cols)
+
+        def _delete(self, keys, cols):
             # cols None: whole-row tombstones; else a cell delete
             cols = sorted(cols) if cols else None
             self._stamped(self.t.delete, keys_df(keys), columns=cols)
@@ -583,8 +625,51 @@ def test_mutation_sequence_matches_model(spark, tmp_path, layer_files):
                     self.model.row(k, None, dict.fromkeys(_M_CELLS), tomb=True)
             self._snap(keys)
 
+        @rule(key=st.sampled_from(_M_KEYS),
+              cells=st.permutations(_M_CELLS).filter(lambda c: c[0] != "tag"),
+              ts=st.sampled_from([None, 5, 10, 20, 30]))
+        @counted
+        def mixed_layer(self, key, cells, ts):
+            # one layer, one key: a DELTA, a SPARSE and a CELLDEL row over
+            # disjoint cells. Their in-layer order is arbitrary, so the
+            # rows must commute: the model applies them in both orders
+            add, put, drop = cells
+            d = {"cnt": 4, "bal": 0.25}[add]
+            v = {"cnt": 11, "bal": 3.5, "tag": "m"}[put]
+            rows_ = [
+                {"key": key, add: d, "__kind": _DELTA},
+                {"key": key, "ts": ts, put: v, "__kind": _SPARSE},
+                {"key": key, "__kind": _CELLDEL, "__delcols": [drop]},
+            ]
+            cols = [*_M_COLS, "__kind", "__delcols"]
+            self._stamped(
+                self.t._write_layer,
+                spark.createDataFrame(
+                    [tuple(r.get(c) for c in cols) for r in rows_],
+                    _m_schema(_M_COLS) + ", __kind int, __delcols array<string>",
+                ),
+                "delta",
+            )
+            steps = [
+                lambda m: m.delta(key, add, d, 0 if add == "cnt" else 0.0),
+                lambda m: m.sparse(key, ts, {put: v}),
+                lambda m: m.celldel(key, [drop]),
+            ]
+            models = []
+            for order in (steps, steps[::-1]):
+                models.append(copy.deepcopy(self.model))
+                for apply in order:
+                    apply(models[-1])
+            assert models[0].visible() == models[1].visible()
+            self.model = models[0]
+            self._snap([key])
+
         @rule(scope=st.sampled_from(["all", "dirty", "keep_since"]), data=st.data())
+        @counted
         def compact(self, scope, data):
+            self._compact(scope, data)
+
+        def _compact(self, scope, data):
             if scope == "keep_since":
                 seq = data.draw(st.sampled_from([s for s, _ in self.snaps]))
                 self._run(lambda: self.t.compact(keep_since=seq))
@@ -620,6 +705,7 @@ def test_mutation_sequence_matches_model(spark, tmp_path, layer_files):
 
         @precondition(lambda self: self.last is not None)
         @rule()
+        @counted
         def retry(self):
             # the last mutation again, same stamp: it already applied (its
             # layer may since have been compacted away), so nothing is
@@ -635,23 +721,25 @@ def test_mutation_sequence_matches_model(spark, tmp_path, layer_files):
             # nothing leaves the crash to the next op)
             self.crash = when
             if op == "update":
-                self.update(data.draw(_M_BATCH))
+                self._update(data.draw(_M_BATCH))
             elif op == "delete":
-                self.delete(data.draw(key_sets.filter(bool)), None)
+                self._delete(data.draw(key_sets.filter(bool)), None)
             elif op == "increment":
-                self.increment(data.draw(_M_BATCH), "cnt", data)
+                self._increment(data.draw(_M_BATCH), "cnt", data)
             else:
-                self.compact(
+                self._compact(
                     data.draw(st.sampled_from(["all", "dirty", "keep_since"])), data
                 )
 
         crash_ops = st.sampled_from(["update", "delete", "increment", "compact"])
 
         @rule(op=crash_ops, data=st.data())
+        @counted
         def crash_before_swap(self, op, data):
             self._crash("before", op, data)
 
         @rule(op=crash_ops, data=st.data())
+        @counted
         def crash_after_swap(self, op, data):
             self._crash("after", op, data)
 
@@ -679,6 +767,7 @@ def test_mutation_sequence_matches_model(spark, tmp_path, layer_files):
 
         @rule(how=st.sampled_from(["df", "point", "range", "semi", "cuts"]),
               keys=key_sets, data=st.data())
+        @counted
         def read(self, how, keys, data):
             if how == "cuts" and len(self.snaps) >= 2:
                 # two snapshots since the last compaction, in one read
@@ -720,6 +809,12 @@ def test_mutation_sequence_matches_model(spark, tmp_path, layer_files):
             suppress_health_check=[HealthCheck.too_slow],
         ),
     )
+    assert set(fired) == {
+        "update", "put", "increment", "double_increment", "delete",
+        "mixed_layer", "compact", "retry", "crash_before_swap",
+        "crash_after_swap", "read",
+    }, fired
+    assert crashes["before"] and crashes["after"], crashes
 
 
 @pytest.mark.parametrize(
