@@ -348,13 +348,14 @@ def _crash_next_commit(monkeypatch, when: str) -> None:
     monkeypatch.setattr(KeyedTable, "_commit", commit)
 
 
-def test_refresh_crash_at_the_view_commit_heals(spark, tmp_path, monkeypatch):
-    """A refresh commits once: its one view layer and its stamp in one
-    swap of the view table's log. Crashed just before the swap, the view
-    and its horizon are unchanged and the next refresh applies the whole
-    window; crashed just after it, the view is current and the next
-    refresh returns 0 and writes nothing. A SUM+MIN+MAX view, so sums and
-    extremes share the crash. About 20 s of tier-1."""
+def test_minmax_crash_between_sum_and_extremes_self_heals(
+    spark, tmp_path, monkeypatch
+):
+    """A refresh commits its sums and its extremes together: one view
+    layer and its stamp in one swap of the view table's log, so the only
+    crash point between them is that swap. Crashed just before it, the
+    view and its horizon are unchanged, and the next refresh applies the
+    whole window once — sums not double-applied, extremes recomputed."""
     base = _base(spark, str(tmp_path))
     mv = _minmax_mv(spark, str(tmp_path), base)
     _mutate_every_kind(spark, base)
@@ -366,6 +367,24 @@ def test_refresh_crash_at_the_view_commit_heals(spark, tmp_path, monkeypatch):
     assert mv.refresh() > 0
     assert _view(mv) == _recompute_ext(base)
 
+
+def test_refresh_is_idempotent_and_meta_crash_heals_from_the_stamp(
+    spark, tmp_path, monkeypatch
+):
+    """The horizon is the highest stamp in the view table's log, written
+    by the same swap as the refresh's layer. A current view refreshes to
+    0; crashed just after the swap, the stamp is durable, so the next
+    refresh returns 0 and writes nothing instead of re-applying."""
+    base = _base(spark, str(tmp_path))
+    mv = _minmax_mv(spark, str(tmp_path), base)
+    base.increment(
+        spark.range(0, 50).select(
+            F.col("id").alias("k"), F.lit(5).cast("bigint").alias("delta")
+        ),
+        counter_col="val",
+    )
+    assert mv.refresh() > 0
+    assert mv.refresh() == 0  # already current
     base.delete(spark.createDataFrame([(499,)], "k long"))  # a group's max row
     _crash_next_commit(monkeypatch, "after")
     with pytest.raises(_Crash):
