@@ -54,9 +54,9 @@ def main() -> None:
           sorted(r["name"] for r in idx.lookup_range(-200, 40).collect()))
 
     # composite index + SKIP SCAN: probe the second column without fixing
-    # the first — leading tuples come from the guidepost sidecar (a stats
-    # dictionary maintained by every insert), so enumeration is a metadata
-    # read, not an index scan
+    # the first — leading tuples come from the guidepost record (a stats
+    # dictionary in the index table's log, committed with every entries
+    # write), so enumeration is a metadata read, not an index scan
     cidx = SecondaryIndex(tbl, ["name", "balance"], f"{work}/idx_nb").build()
     print("skip scan balance == 40 (no name fixed) ->",
           sorted(r["key"] for r in cidx.lookup_skip(balance=40).collect()))

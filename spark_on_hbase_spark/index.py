@@ -24,6 +24,14 @@ multiget cap pushes into every base layer scan as an IN filter, so the
 sorted layout's footer stats prune to the few files covering the touched
 keys — maintenance I/O tracks the batch, not the table.
 
+Every index change — ``build``, maintenance, its retry and ``repair`` —
+is ONE commit of the index table's log (``_write_entries``), which also
+carries the skip-scan guideposts (see that section). Entries carry a
+NULL ts: each index layer is derived from the base fold's result after
+the base write committed, so the index resolves by layer order alone —
+the later layer wins, whatever ts the base rows carry (a base row
+re-inserted below a deleted row's ts after a compaction stays indexed).
+
 The transaction is NOT atomic: a crash between its two writes leaves the
 touched keys' old entries in place — STALE, pointing at rows that no
 longer carry the value — and their new entries MISSING, until the writer
@@ -57,8 +65,6 @@ exact for derived components too.
 from __future__ import annotations
 
 import itertools
-import json
-import os
 import re
 from decimal import Decimal
 
@@ -157,9 +163,8 @@ def _ord_encode(col, dtype: str):
 
 class SecondaryIndex:
     """Index ``base[cols]`` -> base keys, stored as its own KeyedTable at
-    ``path`` with schema (ikey, ivalue, base_key, ts). ``ts`` mirrors the
-    base row's timestamp so last-writer-wins resolves index entries the
-    same way it resolves the rows they point at.
+    ``path`` with schema (ikey, ivalue, base_key, ts). ``ts`` is always
+    NULL: index layers resolve by layer order (see the module docstring).
 
     ``col`` may be a single column name or a LIST — a composite index
     (Phoenix multi-column indexes): ikey is the SEP-joined sequence of the
@@ -383,7 +388,7 @@ class SecondaryIndex:
             F.concat(*parts, F.col(self.base.key_col).cast("string")).alias("ikey"),
             F.concat_ws(_SEP, *[self._enc(F.col(c), i) for i, c in enumerate(self.cols)]).alias("ivalue"),
             F.col(self.base.key_col).alias("base_key"),
-            F.col(self.base.ts_col),
+            F.lit(None).cast(dict(live.dtypes)[self.base.ts_col]).alias(self.base.ts_col),
             # the indexed columns again, ORIGINAL names and types: ivalue is
             # a string (composite-key material); covered reads must return
             # the base's typed values without a lossy string round-trip
@@ -405,15 +410,8 @@ class SecondaryIndex:
         finding); likewise a value equal to a null-sentinel literal
         collided with NULL. NULL fields become a 32-char token outside
         the hex alphabet, unambiguous by construction. ivalue and
-        base_key are functions of ikey, so they add nothing — and the
-        entry's stored ts is deliberately EXCLUDED (advisor finding):
-        no read path serves it (covered reads return indexed + covered
-        columns only), and the put/increment fast paths legitimately
-        skip maintenance for batches touching no maintained column
-        while still bumping the base row's resolved ts, so a ts-bearing
-        fingerprint branded every such ordinary write 'stale_covered'
-        and sent repair() into a needless tombstone + dirty compaction
-        of a consistent index. Two entries with equal fingerprints are
+        base_key are functions of ikey and the ts is always NULL, so
+        they add nothing. Two entries with equal fingerprints are
         interchangeable to every read path, including
         ``lookup(covered=True)``."""
         cols = ["ikey", *self.cols, *self.include]
@@ -438,10 +436,8 @@ class SecondaryIndex:
         duplicate), or — with ``deep`` (the default) — 'stale_covered'
         (the ikey matches but the entry's typed indexed or covered values
         diverge from the base row: ``lookup(covered=True)`` would serve
-        the stale value even though the key set looks consistent; ts
-        divergence alone is NOT staleness — no read serves the entry's
-        ts, and fast-path writes bump the base ts without touching the
-        index by design). ``deep=False``
+        the stale value even though the key set looks consistent).
+        ``deep=False``
         restricts the audit to key existence — no tuple is hashed at all
         (a review pass caught the old code computing the full fingerprint
         and merely ignoring it), same two scans. Empty result ==
@@ -466,33 +462,17 @@ class SecondaryIndex:
 
     def repair(self) -> dict:
         """Reconcile the index to the CURRENT base (Phoenix's scrutiny
-        repair): tombstone orphaned entries, upsert missing AND
-        stale_covered ones — two audit scans but O(divergence) writes for
-        the orphan/missing classes, so fixing a few behind-the-back rows
-        never rewrites the index. Stale entries additionally tombstone +
-        COMPACT the index first: a behind-the-back delete + compact +
-        lower-ts reinsert leaves the base live at a ts BELOW the stored
-        entry's (found by a review pass — the old docstring claimed
-        expected ts 'always ties-or-beats', which delete+compact breaks),
-        and the index fold would reject the lower-ts upsert while a bare
-        tombstone (null ts = now) would beat the reinsert too; folding
-        the tombstone away first lets the expected entry land as a fresh
-        row whatever its ts. The fold is compact(scope='dirty') — only
-        index files overlapping the stale tombstones rewrite — and runs
-        only when staleness was actually found, so repair stays
-        O(divergence) (plus the two audit scans) whenever the index's
-        parquet footers can prove key ranges; ikeys too long for footer
-        stats inherit dirty compaction's full-fold fallback, making a
-        stale-covered repair O(index) on such tables (orphan/missing
-        repairs never compact and stay O(divergence) regardless).
+        repair) in ONE index commit (``_write_entries``): upserts of the
+        missing and stale_covered entries plus tombstones of the orphaned
+        ones — two audit scans but O(divergence) writes, so fixing a few
+        behind-the-back rows never rewrites the index. Entries carry no
+        ts (see the module docstring), so an upsert lands whatever ts the
+        base row has — also after a behind-the-back delete, compaction
+        and lower-ts reinsert. A consistent index writes nothing.
 
-        NOT atomic (Phoenix's scrutiny repair is an offline MR job for
-        the same reason): a crash between the stale-slice fold and the
-        upsert leaves the affected rows invisible to index reads — worse
-        than the stale values they had — until repair RE-RUNS, which
-        converges: the crashed state re-classifies as plain 'missing'
-        and takes the upsert-only path (pinned by
-        test_crashed_repair_rerun_converges). Returns
+        The commit is the only crash point: before the swap the index is
+        unchanged and a re-run repairs it, after it the index is repaired
+        (pinned by test_crashed_repair_rerun_converges). Returns
         {'missing': n, 'orphaned': n, 'stale_covered': n}."""
         fp = self._entry_fingerprint()
         expected = self._entries(self.base.df()).withColumn("__efp", fp)
@@ -502,47 +482,41 @@ class SecondaryIndex:
             | F.col("__efp").isNull()
             | (F.col("__efp") != F.col("__afp"))
         )
-        # localCheckpoint BEFORE writing: the diff plan is pinned to the
-        # index table's current layer directories, and the delete below
-        # can trigger auto-compaction, which removes those directories —
-        # the un-checkpointed plan would then fail (or worse, silently
-        # re-read folded state). Divergence is O(small) by assumption, so
-        # materializing it is cheap — and it also means ONE audit join
-        # feeds all three fix-up classes.
+        # one audit join feeds the counts, the upserts, the tombstones and
+        # the guidepost union: divergence is O(small) by assumption, so
+        # materializing it once is cheap
         diff = diff.localCheckpoint()
-        orphaned = diff.where(F.col("__efp").isNull()).select("ikey")
-        upserts = diff.where(F.col("__efp").isNotNull()).drop("__efp", "__afp")
-        stale = diff.where(
-            F.col("__efp").isNotNull()
-            & F.col("__afp").isNotNull()
-            & (F.col("__efp") != F.col("__afp"))
-        )
-        n_stale = stale.count()
-        n_orphaned = self.tbl.delete(orphaned)
-        if n_stale:
-            self.tbl.delete(stale.select("ikey"))
-            self.tbl.compact(scope="dirty")
-        n_upserted = self.tbl.update(self._noted_entries(upserts))
-        return {
-            "missing": n_upserted - n_stale,
-            "orphaned": n_orphaned,
-            "stale_covered": n_stale,
-        }
+        efp, afp = F.col("__efp"), F.col("__afp")
+        counts = diff.agg(
+            F.count(F.when(afp.isNull(), 1)).alias("missing"),
+            F.count(F.when(efp.isNull(), 1)).alias("orphaned"),
+            F.count(F.when(efp.isNotNull() & afp.isNotNull(), 1)).alias("stale_covered"),
+        ).first().asDict()
+        if any(counts.values()):
+            self._write_entries(
+                diff.where(efp.isNotNull()).drop("__efp", "__afp"),
+                diff.where(efp.isNull()).select("ikey"),
+                None,
+            )
+        return counts
 
     # -- lifecycle ---------------------------------------------------------
 
     def build(self) -> "SecondaryIndex":
         """One shuffle over the base's merged view — the bulk index build
-        (Phoenix's CREATE INDEX ASYNC + IndexTool MR job, as one write).
-        The skip-scan guidepost sidecar is reset first (a crash mid-build
-        leaves no stale dictionary lying around) and derived fresh from
-        the built index after — one column-pruned scan, build-time only."""
-        try:
-            os.remove(self._guidepost_path())
-        except OSError:
-            pass
-        self.tbl.create(self._entries(self.base.df()))
-        self._refresh_guideposts()
+        (Phoenix's CREATE INDEX ASYNC + IndexTool MR job, as one write) —
+        committed in ONE swap of the index log together with the
+        skip-scan guidepost record derived from the same entries. Raises
+        on an existing index, as ``KeyedTable.create`` does: ``drop``
+        first to rebuild."""
+        if self.tbl.exists():
+            raise FileExistsError(f"index already exists at {self.tbl.path}")
+        entries, record = self._entries(self.base.df()), None
+        if self._guidepost_cols():
+            # the record's aggregations and the write read the entries once
+            entries = entries.localCheckpoint(eager=False)
+            record = self._leading(entries, small=False)
+        self.tbl._write_layer(entries, "base", extra=record)
         return self
 
     def drop(self) -> None:
@@ -556,8 +530,7 @@ class SecondaryIndex:
         from the rows the base fold KEPT, so a batch row that loses
         last-writer-wins, or one of two batch rows for the same key,
         leaves no entry behind; a loser's unchanged entry is re-inserted
-        at its stored ts, which the index fold lets through (an equal-ts
-        ROW applies), so the entry stays live.
+        as it was.
 
         ``stamp`` makes the transaction retry-idempotent: the base write
         carries ``<stamp>`` and the index layer ``<stamp>_xi``, each
@@ -643,9 +616,10 @@ class SecondaryIndex:
            fold snapshot ``a`` away);
         3. read the touched keys ONCE, at ``(a, latest)`` — one
            ``semi_read`` with an ``as_of_layer`` pair;
-        4. write ONE index layer (stamp ``<stamp>_xi``): the entries of
-           the rows at the latest cut, plus null-ts tombstones for the
-           cut-``a`` entries they do not re-insert.
+        4. commit ONE index layer (stamp ``<stamp>_xi``,
+           ``_write_entries``): the entries of the rows at the latest
+           cut, plus null-ts tombstones for the cut-``a`` entries they do
+           not re-insert.
 
         Row deletes and nulled plain components simply have no new
         entries. ``touches=False`` (the batch changes nothing the index
@@ -699,10 +673,13 @@ class SecondaryIndex:
         )
 
     def _write_entries(self, new: DataFrame, old: DataFrame, stamp) -> None:
-        """ONE index layer: the ``new`` entries, plus null-ts tombstones for
-        the ``old`` ikeys that ``new`` does not re-insert (never both for
-        one ikey: rows of one layer fold in arbitrary order)."""
-        new = self._noted_entries(new)
+        """ONE index commit: a layer of the ``new`` entries plus null-ts
+        tombstones for the ``old`` ikeys that ``new`` does not re-insert
+        (never both for one ikey: rows of one layer fold in arbitrary
+        order), and in the same log swap the guidepost record unioned
+        with ``new``'s leading values. Callers hand in entries derived
+        from a checkpointed read, so the record's aggregation and the
+        layer write re-run only the cheap entry derivation."""
         gone = old.select("ikey").join(
             F.broadcast(new.select("ikey")), "ikey", "left_anti"
         )
@@ -711,10 +688,11 @@ class SecondaryIndex:
             *[F.lit(None).cast(t).alias(c) for c, t in new.dtypes if c != "ikey"],
             F.lit(True).alias(_TOMBSTONE),
         )
-        self.tbl.update(
+        self.tbl._write_layer(
             new.withColumn(_TOMBSTONE, F.lit(False)).unionByName(tombs),
-            stamp=stamp,
+            "delta", stamp=stamp, extra=self._noted(new),
         )
+        self.tbl._maybe_compact()
 
     # -- reads ---------------------------------------------------------------
 
@@ -882,32 +860,33 @@ class SecondaryIndex:
     # full index scan with the exact typed predicate (still index-only)
     MAX_SKIP_PREFIXES = 1000
 
-    # guidepost dictionary cap PER COLUMN: a leading column with more
-    # distinct values than this stops being tracked (overflow) — skip
-    # scans on it fall back to live enumeration, which has its own budget
+    # guidepost record cap PER SET (a column's values, or the tuples): a
+    # set with more distinct members than this stops being tracked
+    # (overflow) — skip scans needing it fall back to live enumeration,
+    # which has its own budget
     GUIDEPOST_CAP = 4096
 
     # -- skip-scan guideposts ------------------------------------------------
     #
     # Phoenix keeps table statistics ("guideposts", SYSTEM.STATS) so its
     # SkipScanFilter can enumerate leading-column values without scanning.
-    # Ours is a tiny JSON sidecar next to the index table's layers: the
-    # distinct values of every ENUMERABLE leading column (everything
-    # before the last component — the only positions a skip scan ever
-    # enumerates), maintained union-only. The invariant that makes it
-    # safe: the sidecar is ALWAYS a superset of the leading values present
-    # in live entries, because (a) every entries-insert path unions the
-    # batch's values BEFORE the entries layer lands — a crash between the
-    # two leaves only harmless extra prefixes (empty probe ranges), never
-    # an entry the skip scan cannot find — and (b) deletes never shrink it
-    # (stale values probe empty ranges, pruned for free by footer stats).
-    # Supersets cost nothing correctness-wise: the exact typed predicate
-    # re-filters every probe. At 100 TB this turns the skip scan's
-    # enumeration from one column-pruned index scan per probe into a
-    # metadata read — O(|dict| x fixed + result) total.
-
-    def _guidepost_path(self) -> str:
-        return os.path.join(self.tbl.path, "_guideposts.json")
+    # Ours is a small JSON record in the index table's own log (its
+    # ``extra``): the distinct values of every ENUMERABLE leading column
+    # (everything before the last component — the only positions a skip
+    # scan ever enumerates) and the distinct observed leading TUPLES, each
+    # None once past GUIDEPOST_CAP. ``build`` derives it from the entries
+    # it writes; every later index commit either unions into it the
+    # leading values of the entries it writes (``_write_entries``) or keeps
+    # it as it is (compaction), always in the same log swap as those
+    # entries. So at every commit point the record is a superset of the
+    # leading values present in live entries: deletes never shrink it (a
+    # stale value probes an empty range, pruned for free by footer stats),
+    # and the exact typed predicate re-filters every probe. An index whose
+    # log holds no record (built before the record existed) enumerates
+    # live; maintenance never starts a record from a batch alone, which
+    # would drop every older row from skip scans. At 100 TB this turns the
+    # skip scan's enumeration from one column-pruned index scan per probe
+    # into a metadata read — O(|record| x fixed + result) total.
 
     def _guidepost_cols(self) -> list[str]:
         """Leading columns eligible for guidepost tracking: all components
@@ -922,220 +901,83 @@ class SecondaryIndex:
             if self._dtype_of(i) in _GUIDEPOST_DTYPES
         ]
 
-    def _load_guideposts(self) -> dict | None:
-        try:
-            with open(self._guidepost_path()) as f:
-                return json.load(f)
-        except (OSError, ValueError):
-            return None
-
-    def _save_guideposts(self, gp: dict) -> None:
-        tmp = self._guidepost_path() + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(gp, f)
-        os.replace(tmp, self._guidepost_path())
-
     def _tuple_cols(self) -> list[str]:
-        """Leading columns eligible for TUPLE tracking: the sidecar's
-        per-column value sets answer a skip scan with their CROSS PRODUCT,
-        which over-probes when the live tuple set is sparse (advisor
-        finding: two ~30-value leading columns ⇒ ~900 mostly-empty probe
-        ranges where live enumeration would find the few real tuples — or
-        worse, a budget overflow that pushes a tiny-tuple index onto the
-        slower live/full-scan paths). So the sidecar ALSO records the
-        distinct observed leading-column TUPLES, maintained by the same
-        union-first discipline, and the skip scan prefers them. Tuples are
-        tracked only when EVERY enumerable leading position round-trips
-        JSON exactly — a partial tuple cannot be probed."""
+        """Leading columns of the TUPLE record: the per-column value sets
+        answer a skip scan with their CROSS PRODUCT, which over-probes
+        when the live tuple set is sparse (two ~30-value leading columns
+        give ~900 mostly-empty probe ranges — or a budget overflow — where
+        live enumeration would find the few real tuples), so the record
+        also holds the observed leading tuples and the skip scan prefers
+        them. Tracked only when EVERY leading position round-trips JSON
+        exactly — a partial tuple cannot be probed."""
         gcols = self._guidepost_cols()
-        if gcols and gcols == list(self.cols[:-1]):
-            return gcols
-        return []
+        return gcols if gcols == list(self.cols[:-1]) else []
 
-    def _collect_leading_tuples(
-        self, df: DataFrame, tcols: list[str], small: bool = False
-    ):
-        """Distinct leading tuples of ``df`` (entry rows) as value-lists,
-        or ``None`` on cardinality overflow. The table-sized path caps via
-        limit(CAP+1); maintenance batches (O(batch) by contract) collect
-        one set-aggregate of the struct."""
+    def _leading(self, e: DataFrame, small: bool) -> dict:
+        """The guidepost record of entry rows ``e``: ``{"cols": {col:
+        values}, "tuples": value-lists}`` ("tuples" only when
+        ``_tuple_cols`` tracks any), None for a set past GUIDEPOST_CAP.
+        ``small`` (maintenance batches, O(batch) by contract) collects
+        everything in ONE aggregation and caps driver-side; the
+        table-sized path (``build``) runs a countDistinct pre-pass so
+        collect_set never materializes a high-cardinality column's full
+        distinct set, and caps its tuples with limit(CAP + 1)."""
+        gcols, tcols = self._guidepost_cols(), self._tuple_cols()
+        cap = self.GUIDEPOST_CAP
+
+        def capped(vals):
+            vals = [list(v) if isinstance(v, tuple) else v for v in vals]
+            return None if len(vals) > cap else vals
+
         if small:
-            row = df.agg(
-                F.collect_set(F.struct(*[F.col(c) for c in tcols])).alias("t")
+            row = e.agg(
+                *[F.collect_set(c).alias(c) for c in gcols],
+                *([F.collect_set(F.struct(*tcols)).alias("__t")] if tcols else []),
             ).first()
-            if len(row["t"]) > self.GUIDEPOST_CAP:
-                return None
-            return [[r[c] for c in tcols] for r in row["t"]]
-        rows = (
-            df.select(*tcols).distinct().limit(self.GUIDEPOST_CAP + 1).collect()
-        )
-        if len(rows) > self.GUIDEPOST_CAP:
+            rec = {"cols": {c: capped(row[c]) for c in gcols}}
+            if tcols:
+                rec["tuples"] = capped(row["__t"])
+            return rec
+        counts = e.agg(*[F.countDistinct(c).alias(c) for c in gcols]).first()
+        keep = [c for c in gcols if counts[c] <= cap]
+        row = e.agg(*[F.collect_set(c).alias(c) for c in keep]).first() if keep else {}
+        rec = {"cols": {c: list(row[c]) if c in keep else None for c in gcols}}
+        if tcols:
+            rec["tuples"] = capped(
+                e.select(*tcols).distinct().limit(cap + 1).collect()
+            )
+        return rec
+
+    def _noted(self, e: DataFrame) -> dict | None:
+        """The guidepost record to commit with entries ``e``: the
+        committed record unioned with ``e``'s leading values (a set past
+        GUIDEPOST_CAP, or already past it, becomes None), or None — keep
+        what the log holds — for an index without a record."""
+        rec = self.tbl._log()["extra"]
+        if rec is None:
             return None
-        return [[r[c] for c in tcols] for r in rows]
+        add = self._leading(e, small=True)
 
-    _NO_TUPLES = object()  # sentinel: caller tracks no tuple record
+        def union(old, new):
+            if old is None or new is None:
+                return None
+            out = {(tuple(v) if isinstance(v, list) else v): v for v in old + new}
+            return None if len(out) > self.GUIDEPOST_CAP else list(out.values())
 
-    def _union_guideposts(
-        self, new_vals: dict[str, list | None], new_tuples=_NO_TUPLES
-    ) -> None:
-        """Union freshly-observed leading-column values into the sidecar
-        (``None`` for a column = cardinality overflow: mark it untracked),
-        plus — when tuple tracking is on — the observed leading TUPLES
-        (``None`` = overflow; the _NO_TUPLES default leaves the tuple
-        record untouched). Called BEFORE the entries that carry these
-        values land — see the section comment for why that order is the
-        safe one.
-
-        REFUSES to create a sidecar that does not exist: a batch-only
-        dictionary would be treated as authoritative and silently drop
-        every pre-existing row from skip scans (the caller heals a
-        missing sidecar by deriving it from the FULL index first — see
-        _noted_entries). Single-writer contract: the sidecar is a
-        read-modify-write file, like the rest of the engine's layer-
-        sequence allocation — concurrent writers to one index are
-        unsupported engine-wide."""
-        gp = self._load_guideposts()
-        if gp is None:
-            return
-        changed = False
-        for c, vals in new_vals.items():
-            ent = gp["cols"].setdefault(c, {"values": [], "overflow": False})
-            if ent["overflow"]:
-                continue
-            if vals is None:
-                gp["cols"][c] = {"values": [], "overflow": True}
-                changed = True
-                continue
-            seen = set(ent["values"])
-            add = [v for v in vals if v not in seen]
-            if not add:
-                continue
-            if len(seen) + len(add) > self.GUIDEPOST_CAP:
-                gp["cols"][c] = {"values": [], "overflow": True}
-            else:
-                ent["values"].extend(add)
-            changed = True
-        if new_tuples is not self._NO_TUPLES:
-            tcols = self._tuple_cols()
-            trec = gp.get("tuples")
-            if trec is None or trec.get("cols") != tcols:
-                # pre-tuple sidecar (or a component change): no complete
-                # tuple history exists and a batch-only record would be a
-                # NON-superset (silently dropping pre-existing rows from
-                # skip scans) — heal by deriving the record from the FULL
-                # pre-insert index, one column-pruned scan, once (the same
-                # discipline _noted_entries applies to a missing sidecar);
-                # the batch's own tuples union in below
-                tvals = self._collect_leading_tuples(self.tbl.df(), tcols)
-                trec = (
-                    {"cols": tcols, "values": [], "overflow": True}
-                    if tvals is None
-                    else {"cols": tcols, "values": tvals, "overflow": False}
-                )
-                gp["tuples"] = trec
-                changed = True
-            if not trec["overflow"]:
-                if new_tuples is None:
-                    gp["tuples"] = {"cols": tcols, "values": [], "overflow": True}
-                    changed = True
-                else:
-                    seen_t = {tuple(t) for t in trec["values"]}
-                    add_t = [t for t in new_tuples if tuple(t) not in seen_t]
-                    if add_t:
-                        if len(seen_t) + len(add_t) > self.GUIDEPOST_CAP:
-                            gp["tuples"] = {
-                                "cols": tcols, "values": [], "overflow": True,
-                            }
-                        else:
-                            trec["values"].extend(add_t)
-                        changed = True
-        if changed:
-            self._save_guideposts(gp)
-
-    def _collect_leading(
-        self, df: DataFrame, gcols: list[str], small: bool = False
-    ) -> dict:
-        """Distinct values per guidepost column of ``df`` (entry rows),
-        ``None`` = overflow. ``small`` (maintenance batches, O(batch) by
-        contract) collects everything in ONE aggregation and caps driver-
-        side; the table-sized path (_refresh_guideposts) runs a
-        countDistinct pre-pass first so collect_set never materializes a
-        high-cardinality column's full distinct set."""
-        if small:
-            row = df.agg(
-                *[F.collect_set(F.col(c)).alias(c) for c in gcols]
-            ).first()
-            return {
-                c: (None if len(row[c]) > self.GUIDEPOST_CAP else list(row[c]))
-                for c in gcols
-            }
-        counts = df.agg(
-            *[F.countDistinct(F.col(c)).alias(c) for c in gcols]
-        ).first()
-        keep = [c for c in gcols if counts[c] <= self.GUIDEPOST_CAP]
-        out: dict[str, list | None] = {c: None for c in gcols if c not in keep}
-        if keep:
-            row = df.agg(*[F.collect_set(F.col(c)).alias(c) for c in keep]).first()
-            out.update({c: list(row[c]) for c in keep})
+        out = {"cols": {c: union(rec["cols"].get(c), v) for c, v in add["cols"].items()}}
+        if "tuples" in add:
+            out["tuples"] = union(rec.get("tuples"), add["tuples"])
         return out
 
-    def _noted_entries(self, e: DataFrame) -> DataFrame:
-        """Union the guidepost sidecar with the entries ``e`` before the
-        insert job runs. Callers hand in entries derived from a
-        checkpointed read, so the union's aggregations and the layer
-        write re-run only the cheap entry derivation."""
-        gcols = self._guidepost_cols()
-        if not gcols:
-            return e
-        if self._load_guideposts() is None:
-            # missing sidecar (pre-guidepost index dir, or a build()
-            # that crashed between create and refresh): heal by
-            # deriving from the FULL pre-insert index — one column-
-            # pruned scan, once — so the union below extends a
-            # complete dictionary, never a batch-only one
-            self._refresh_guideposts()
-        tcols = self._tuple_cols()
-        self._union_guideposts(
-            self._collect_leading(e, gcols, small=True),
-            self._collect_leading_tuples(e, tcols, small=True)
-            if tcols
-            else self._NO_TUPLES,
-        )
-        return e
-
-    def _refresh_guideposts(self) -> None:
-        """Recompute the sidecar FROM the index table (one column-pruned
-        scan) — build-time only; maintenance uses the O(batch) union."""
-        gcols = self._guidepost_cols()
-        if not gcols:
-            return
-        vals = self._collect_leading(self.tbl.df(), gcols)
-        gp = {"cols": {}}
-        for c in gcols:
-            gp["cols"][c] = (
-                {"values": [], "overflow": True}
-                if vals[c] is None
-                else {"values": vals[c], "overflow": False}
-            )
-        tcols = self._tuple_cols()
-        if tcols:
-            tvals = self._collect_leading_tuples(self.tbl.df(), tcols)
-            gp["tuples"] = (
-                {"cols": tcols, "values": [], "overflow": True}
-                if tvals is None
-                else {"cols": tcols, "values": tvals, "overflow": False}
-            )
-        self._save_guideposts(gp)
-
     def _guidepost_tuples(self, prefix_cols: list[str], fixed: dict):
-        """Skip-scan prefix tuples from the sidecar alone — zero index
-        I/O. Returns a list of value-lists ordered like ``prefix_cols``,
-        or ``None`` when the sidecar cannot answer (missing, an
-        overflowed/untracked column, or a cross product past the probe
-        budget — the caller then live-enumerates, whose fixed-column
-        constraints may still fit the budget)."""
-        gp = self._load_guideposts()
-        if gp is None:
+        """Skip-scan prefix tuples from the guidepost record alone — zero
+        index I/O. Returns a list of value-lists ordered like
+        ``prefix_cols``, or ``None`` when the record cannot answer
+        (absent, an overflowed column, or past the probe budget — the
+        caller then live-enumerates, whose fixed-column constraints may
+        still fit the budget)."""
+        rec = self.tbl._log()["extra"]
+        if rec is None:
             return None
         for c in prefix_cols:
             if c in fixed and not _fits_dtype(
@@ -1147,52 +989,34 @@ class SecondaryIndex:
                 # value's entries never occupy — let the live path
                 # (which filters by the cast value) answer instead
                 return None
-        # Preferred source: the observed-TUPLE record (advisor finding —
-        # the per-column cross product over-probes sparse tuple sets:
-        # two ~30-value leading columns give ~900 mostly-empty ranges, or
-        # a budget overflow, where the live tuple set may be tiny). The
-        # record covers cols[:-1]; project it onto prefix_cols, filter by
-        # the fixed equalities, dedupe — exactly the live enumeration's
-        # answer, from metadata alone.
-        trec = gp.get("tuples")
-        if trec and not trec.get("overflow") and trec.get("cols"):
-            tcols = trec["cols"]
-            if all(c in tcols or c in fixed for c in prefix_cols):
-                seen, out = set(), []
-                pos_in = {c: i for i, c in enumerate(tcols)}
-                for t in trec["values"]:
-                    if any(
-                        c in pos_in and t[pos_in[c]] != fixed[c] for c in fixed
-                    ):
-                        continue
-                    proj = tuple(
-                        t[pos_in[c]] if c in pos_in else fixed[c]
-                        for c in prefix_cols
-                    )
-                    if proj not in seen:
-                        seen.add(proj)
-                        out.append(list(proj))
-                if len(out) > self.MAX_SKIP_PREFIXES:
-                    return None
-                out.sort(key=lambda vs: tuple((v is None, v) for v in vs))
-                return out
+        if rec.get("tuples") is not None:
+            # the observed tuples cover cols[:-1], and the last prefix
+            # column is always fixed: project onto prefix_cols, filter by
+            # the fixed equalities, dedupe — exactly the live
+            # enumeration's answer, from metadata alone
+            pos_in = {c: i for i, c in enumerate(self._tuple_cols())}
+            out = {
+                tuple(t[pos_in[c]] if c in pos_in else fixed[c] for c in prefix_cols)
+                for t in rec["tuples"]
+                if all(t[pos_in[c]] == v for c, v in fixed.items() if c in pos_in)
+            }
+            if len(out) > self.MAX_SKIP_PREFIXES:
+                return None
+            return [list(t) for t in sorted(out)]
         per_col, total = [], 1
         for c in prefix_cols:
             if c in fixed:
                 per_col.append([fixed[c]])
                 continue
-            ent = gp.get("cols", {}).get(c)
-            if ent is None or ent.get("overflow"):
+            vals = rec["cols"].get(c)
+            if vals is None:
                 return None
-            vals = sorted(ent["values"])
-            per_col.append(vals)
+            per_col.append(sorted(vals))
             total *= len(vals)
             if total > self.MAX_SKIP_PREFIXES:
                 return None
-        if any(not v for v in per_col):
-            # a tracked column with zero recorded values: no live entry
-            # can carry it (every insert unions first) — empty result
-            return []
+        # a tracked column with zero recorded values has no live entry, so
+        # the product is empty — and so is the result
         return [list(t) for t in itertools.product(*per_col)]
 
     def lookup_skip(self, covered: bool = False, **fixed) -> DataFrame:
@@ -1210,13 +1034,14 @@ class SecondaryIndex:
         the last fixed one are enumerated, trailing unfixed columns match
         everything (leading-edge semantics on each enumerated prefix).
 
-        The enumeration itself is normally FREE: the guidepost sidecar
-        (Phoenix's SYSTEM.STATS guideposts — see the guidepost section
-        below) records every leading column's distinct values as index
-        metadata, maintained union-first by every entries insert, so the
-        prefix set is a metadata read, not an index scan. Live
-        enumeration (one column-pruned index scan) remains the fallback
-        for missing/overflowed sidecars and non-JSON-exact dtypes.
+        The enumeration itself is normally FREE: the guidepost record in
+        the index log (Phoenix's SYSTEM.STATS guideposts — see the
+        guidepost section above) holds the observed leading tuples and
+        every leading column's distinct values, committed with every
+        entries write, so the prefix set is a metadata read, not an index
+        scan. Live enumeration (one column-pruned index scan) remains the
+        fallback for an index without a record, overflowed sets and
+        non-JSON-exact dtypes.
 
         Degradations, all index-only (the base is still never predicate-
         scanned): more than MAX_SKIP_PREFIXES distinct leading tuples, or
@@ -1247,7 +1072,7 @@ class SecondaryIndex:
         if not all(_order_preserving(self._dtype_of(i)) for i in range(last + 1)):
             return self._finish(self.tbl.df().where(exact), covered, exact)
         prefix_cols = self.cols[: last + 1]
-        # prefix tuples from the GUIDEPOST sidecar when it can answer —
+        # prefix tuples from the GUIDEPOST record when it can answer —
         # zero index I/O — else live-enumerate from the index itself
         tuples = self._guidepost_tuples(prefix_cols, fixed)
         if tuples is None:

@@ -1452,7 +1452,7 @@ def grouped_topk_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SEC_IDX_FIXTURE_DONE: set[str] = set()
 
 
-_SEC_IDX_FIXTURE_VERSION = 4  # bump when tables/mutations/layout change
+_SEC_IDX_FIXTURE_VERSION = 5  # bump when tables/mutations/layout change
 
 
 def _sec_index_handles(spark: SparkSession, root: str) -> dict:
@@ -2208,7 +2208,7 @@ def _stream_mv_handles(spark: SparkSession, root: str):
     return base, mv
 
 
-_STREAM_MV_VERSION = 4  # bump when rows/mutations/layout change
+_STREAM_MV_VERSION = 5  # bump when rows/mutations/layout change
 _STREAM_MV_DONE: set[str] = set()
 
 

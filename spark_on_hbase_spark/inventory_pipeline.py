@@ -5535,7 +5535,7 @@ def containment_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # dedup.band_signature_array) — VERDICT r10 item 2
 # ---------------------------------------------------------------------------
 
-_ND_IDX_VERSION = 3
+_ND_IDX_VERSION = 4
 _ND_IDX_DONE: set = set()
 
 
@@ -5803,7 +5803,7 @@ def incremental_near_dup_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 # VERDICT r10 item 3
 # ---------------------------------------------------------------------------
 
-_CURI_VERSION = 3
+_CURI_VERSION = 4
 _CURI_DONE: set = set()
 _CURI_BASE_CACHE: dict = {}
 _CURI_KEPT_CACHE: dict = {}

@@ -19,7 +19,11 @@ and Applications", IEEE DE Bulletin 1995) with O(Δ) work per refresh:
 applied to the stored aggregate as DELTA rows (one per touched group,
 every sum and the count in the same row) of the refresh's ONE view layer.
 SUM and COUNT are self-maintainable under insert/update/delete (the delta
-is computable from the changed rows alone).
+is computable from the changed rows alone). Each SUM also keeps the
+count of its non-NULL inputs in the view state: a DELTA row cannot store
+NULL, so a group whose summed values all became NULL would read 0 where
+a recomputed GROUP BY reads NULL; ``df()`` returns NULL where that count
+is 0.
 
 MIN/MAX are NOT self-maintainable (a deleted minimum forces re-reading its
 group — the classic result), so they get the textbook alternative:
@@ -66,7 +70,9 @@ Consistency + crash story:
   applied horizon is the highest such stamp, so there is no second
   commit point: a crash before the swap leaves the view as it was and
   the next refresh redoes the whole window; a crash after it leaves a
-  current view, and the next refresh finds nothing to do;
+  current view, and the next refresh finds nothing to do. ``build()``
+  drops the view before its one commit, so a crash inside a build leaves
+  a view with no stamp, which the next refresh builds;
 - a base compaction that folded unprocessed history away (a base layer
   inside the refresh window, or the time-travel horizon passing it) makes
   the read raise ``HistoryFoldedError``, answered with a full rebuild —
@@ -75,7 +81,8 @@ Consistency + crash story:
   discipline that avoids the rebuild entirely;
 - a view root holding ``_mv_meta.json`` is the layout before the view
   log carried the horizon: reading its horizon raises, ``build()``
-  replaces it;
+  replaces it; a view stored without the non-NULL count per SUM is
+  rebuilt by the next refresh;
 - TTL tables are rejected: rows expire by wall clock without writing a
   layer, so no changefeed can see the retraction.
 """
@@ -216,13 +223,18 @@ class MaterializedAgg:
                     f"maintained for numeric columns"
                 )
 
+    @staticmethod
+    def _nn(out: str) -> str:
+        """The view column counting the non-NULL inputs of sum ``out``."""
+        return f"__nn_{out}"
+
     def _contrib(self, state: DataFrame, sign: int) -> DataFrame:
         """Per-group (signed) aggregate of a key-state relation."""
         g = state.where(F.col(self.group_col).isNotNull())
-        aggs = [
-            F.sum(F.col(src).cast("bigint") * sign).alias(f"__dx_{out}")
-            for out, src in self.sums.items()
-        ]
+        aggs = []
+        for out, src in self.sums.items():
+            aggs.append(F.sum(F.col(src).cast("bigint") * sign).alias(f"__dx_{out}"))
+            aggs.append((F.count(F.col(src)) * sign).alias(f"__dx_{self._nn(out)}"))
         aggs.append(F.sum(F.lit(sign).cast("bigint")).alias("__dx_n"))
         return g.groupBy(self.group_col).agg(*aggs)
 
@@ -239,6 +251,9 @@ class MaterializedAgg:
             for out, src in self.sums.items()
         ]
         aggs.append(F.count("*").alias(self.count_col))
+        aggs += [
+            F.count(F.col(src)).alias(self._nn(out)) for out, src in self.sums.items()
+        ]
         aggs.extend(self._ext_aggs())
         return g.groupBy(self.group_col).agg(*aggs).withColumn(
             "__mv_ts", F.lit(0).cast("int")
@@ -260,20 +275,22 @@ class MaterializedAgg:
         )
 
     def _delta_rows(self, old: DataFrame, new: DataFrame, schema: dict) -> DataFrame:
-        """DELTA rows of agg(new) − agg(old): each touched group's sum and
-        count deltas, groups whose deltas are all zero dropped."""
+        """DELTA rows of agg(new) − agg(old): each touched group's sum,
+        non-NULL count and count deltas, groups whose deltas are all zero
+        dropped."""
+        counted = [*self.sums, *map(self._nn, self.sums)]
         delta = (
             self._contrib(new, 1)
             .unionByName(self._contrib(old, -1))
             .groupBy(self.group_col)
             .agg(
-                *[F.sum(f"__dx_{out}").alias(out) for out in self.sums],
+                *[F.sum(f"__dx_{c}").alias(c) for c in counted],
                 F.sum("__dx_n").alias(self.count_col),
             )
         )
         nonzero = functools.reduce(
             operator.or_,
-            [F.coalesce(F.col(c), F.lit(0)) != 0 for c in [*self.sums, self.count_col]],
+            [F.coalesce(F.col(c), F.lit(0)) != 0 for c in [*counted, self.count_col]],
         )
         return self._layer_rows(delta.where(nonzero), schema, _DELTA)
 
@@ -356,18 +373,26 @@ class MaterializedAgg:
         aggregate, as ONE view layer committed with the stamp of the base
         snapshot it reaches. Returns the number of group rows touched by
         the sum delta (0 when the view is already current or the window
-        changed no key — nothing is written then — and -1 when a
-        compaction forced a full rebuild). O(Δ) — see the module
-        docstring."""
+        changed no key — nothing is written then — and -1 when it ran a
+        full rebuild instead: a compaction folded the window's history
+        away, the view has no stamp — a build crashed after dropping it,
+        or none ran — or it stores no non-NULL count per SUM). O(Δ) — see
+        the module docstring."""
         self._check_exact()
-        lo, cur = self.applied_upto(), self.base.snapshot_seq()
+        try:
+            lo, schema = self.applied_upto(), self.mv._schema()
+        except FileNotFoundError:
+            schema = None
+        if schema is None or any(self._nn(out) not in schema for out in self.sums):
+            self.build()
+            return -1
+        cur = self.base.snapshot_seq()
         if cur <= lo:
             return 0
         try:
             states = self._changed_states(lo, cur)
             if states is None:
                 return 0
-            schema = self.mv._schema()
             layer = self._delta_rows(*states, schema)
             deltas = None
             if self.mins or self.maxs:
@@ -410,9 +435,11 @@ class MaterializedAgg:
     def df(self) -> DataFrame:
         """The maintained aggregate: one row per group with a live row —
         groups folded to zero rows (every member deleted) are invisible,
-        exactly like a recomputed GROUP BY."""
+        and a sum over no non-NULL value is NULL, exactly like a
+        recomputed GROUP BY."""
         out = self.mv.df()
         return out.where(F.col(self.count_col) > 0).select(
-            self.group_col, *self.sums, *self.mins, *self.maxs,
-            self.count_col,
+            self.group_col,
+            *[F.when(F.col(self._nn(c)) > 0, F.col(c)).alias(c) for c in self.sums],
+            *self.mins, *self.maxs, self.count_col,
         )

@@ -14,14 +14,15 @@ This table re-expresses that **same LSM design on columnar storage**:
   never a directory listing; HBase's StoreFileTracker moved its own
   store-file list the same way). It lists every live layer (seq, kind
   base/delta, directory name, part-file basenames, Bloom sidecar meta),
-  the applied idempotence stamps and the time-travel horizon, by names
-  relative to ``<path>`` so a root renamed whole still reads. Every change
-  writes new files, swaps in a new log with ONE ``os.replace``
-  (``_commit``), then sweeps what the log no longer lists (``_sweep``):
-  nothing a write or compaction produced is visible before the swap, and
-  everything it replaced is invisible after it, so a crash at any point
-  leaves either the old table or the new one plus unlisted files the
-  next commit deletes. Layer directories are ``base-NNNNNN-<token>`` and
+  the applied idempotence stamps, the time-travel horizon and an opaque
+  record the table's owner keeps there (a ``SecondaryIndex``'s skip-scan
+  guideposts), by names relative to ``<path>`` so a root renamed whole
+  still reads. Every change writes new files, swaps in a new log with ONE
+  ``os.replace`` (``_commit``), then sweeps what the log no longer lists
+  (``_sweep``): nothing a write or compaction produced is visible before
+  the swap, and everything it replaced is invisible after it, so a crash
+  at any point leaves either the old table or the new one plus unlisted
+  files the next commit deletes. Layer directories are ``base-NNNNNN-<token>`` and
   ``delta-NNNNNN-<token>`` (the token keeps a retried write from ever
   reusing a crashed one's directory); every layer is range-partitioned
   and sorted by key (the HFile invariant;
@@ -286,9 +287,9 @@ class KeyedTable:
     # -- the table log -----------------------------------------------------
 
     def _log(self) -> dict:
-        """The committed table state, ``{"horizon", "stamps", "layers"}``
-        with the layers as ``_Layer`` in seq order — the empty table when
-        no log is here. A root holding layer directories but no log was
+        """The committed table state, ``{"horizon", "stamps", "layers",
+        "extra"}`` with the layers as ``_Layer`` in seq order — the empty
+        table when no log is here. A root holding layer directories but no log was
         written before the table log existed: it has no reader, and
         reading it as an absent table would let ``create()`` bury it."""
         root = Path(self.path)
@@ -303,10 +304,11 @@ class KeyedTable:
                     f"table in the layout before the table log, which has "
                     f"no reader — rebuild it from its source"
                 ) from None
-            return {"horizon": 0, "stamps": [], "layers": []}
+            return {"horizon": 0, "stamps": [], "layers": [], "extra": None}
         log["layers"] = [
             _Layer(**{**d, "files": tuple(d["files"])}) for d in log["layers"]
         ]
+        log.setdefault("extra", None)
         return log
 
     def _layers(self) -> list[_Layer]:
@@ -320,13 +322,17 @@ class KeyedTable:
         return _cached_layer_df(self.spark, self._paths(layer))
 
     def _commit(
-        self, layers: list[_Layer], stamp: str | None = None, horizon: int = 0
+        self, layers: list[_Layer], stamp: str | None = None, horizon: int = 0,
+        extra: dict | None = None,
     ) -> None:
         """THE commit point of every table change: swap in a log listing
-        ``layers``, with ``stamp`` added to the applied stamps and the
-        time-travel horizon raised to ``horizon``, by one atomic
-        ``os.replace``. Before it the change is invisible, after it
-        complete; the files it stops listing are ``_sweep``'s."""
+        ``layers``, with ``stamp`` added to the applied stamps, the
+        time-travel horizon raised to ``horizon`` and the owner's record
+        replaced by ``extra`` (None keeps the committed one, so every
+        commit that does not name a record — compaction included —
+        carries it over), by one atomic ``os.replace``. Before it the
+        change is invisible, after it complete; the files it stops
+        listing are ``_sweep``'s."""
         root = Path(self.path)
         log = self._log()
         layers = sorted(layers, key=lambda L: L.seq)
@@ -335,6 +341,7 @@ class KeyedTable:
             "horizon": max(log["horizon"], horizon),
             "stamps": sorted({*log["stamps"], *([stamp] if stamp else [])}),
             "layers": [L._asdict() for L in layers],
+            "extra": log["extra"] if extra is None else extra,
         }))
         os.replace(tmp, root / _LOG)
         _evict_layer_cache(
@@ -365,7 +372,7 @@ class KeyedTable:
     def _write_layer(
         self, df: DataFrame, kind: str, row_kind: int | None = None,
         stamp: str | None = None, seq: int | None = None,
-        keep: list[_Layer] | None = None, horizon: int = 0,
+        keep: list[_Layer] | None = None, extra: dict | None = None,
     ) -> int:
         """Write one sorted layer, in as many range part-files as AQE
         coalesces its size to (see the module docstring), and commit it
@@ -396,8 +403,10 @@ class KeyedTable:
 
         ``seq``: explicit layer sequence — ONLY for prefix compaction,
         whose folded base takes the folded prefix's max seq so it orders
-        before the retained deltas. ``horizon`` raises the time-travel
-        horizon (see ``_visible_layers``) in the same commit."""
+        before the retained deltas. A base layer folds (or replaces)
+        every layer below its seq, so its commit raises the time-travel
+        horizon (see ``_visible_layers``) to that seq. ``extra``: the
+        owner's record, committed in the same swap (see ``_commit``)."""
         log = self._log()
         if stamp is not None and stamp in log["stamps"]:
             return 0
@@ -437,7 +446,10 @@ class KeyedTable:
             # the layer without one instead of failing the write
             with contextlib.suppress(Exception):
                 layer = layer._replace(bloom=self._write_bloom(layer, n))
-        self._commit((live if keep is None else keep) + [layer], stamp, horizon)
+        self._commit(
+            (live if keep is None else keep) + [layer], stamp,
+            seq if kind == "base" else 0, extra,
+        )
         self._sweep()
         return n
 
@@ -523,7 +535,8 @@ class KeyedTable:
         LSM's free time travel (every mutation is an immutable layer, so any
         historical state is a layer-prefix read; pair with ``snapshot_seq``).
         Compaction folds history away, so travel reaches back to the last
-        compact — bound the horizon with ``compact_threshold``. A pair
+        compact and raises ``HistoryFoldedError`` before it — bound the
+        horizon with ``compact_threshold``. A pair
         ``(a, b)`` with ``a < b`` reads both snapshots at once: every
         visible row appears once per cut, tagged with that cut's seq in a
         trailing ``__cut`` column (see ``semi_read``).
@@ -534,24 +547,23 @@ class KeyedTable:
         return self._layer_frames(None, as_of_layer)
 
     def _resolve(
-        self, frames: list[DataFrame], force_fold: bool = False, cuts=None
+        self, frames: list[DataFrame], layers: list[_Layer], cuts=None
     ) -> DataFrame:
-        """Merge ordered layer frames into the visible-row relation: LWW /
-        kind fold, tombstone removal, TTL filter. Shared by ``df()`` and
-        the range-scoped compaction (which folds only the dirty slice).
+        """Merge ordered layer frames (``frames[i]`` read from
+        ``layers[i]``) into the visible-row relation: LWW / kind fold,
+        tombstone removal, TTL filter. Shared by every read and the
+        range-scoped compaction (which folds only the dirty slice).
 
-        The single-frame passthrough is legal ONLY when the frame is a
-        folded base layer (unique keys, ROW kind) — the df() path, where a
-        lone layer is always the base. A lone DELTA layer must still fold:
-        its __kind markers are instructions, not rows (a CELLDEL frame
-        passed through verbatim would surface its all-null marker rows as
-        live data), and a ROW delta may carry in-batch duplicate keys that
-        need the within-layer LWW dedup. Callers that can hand over a bare
-        delta (``_compact_dirty``) pass ``force_fold=True``; the _KIND
-        check below catches kind-stamped frames on every path. ``cuts``
-        (from ``_cuts``) makes it a two-snapshot fold, which always folds."""
+        A lone frame passes through unfolded ONLY when it is one ``base``
+        layer without ``__kind`` — a folded base holds unique keys of ROW
+        kind. A lone DELTA layer must still fold: its __kind markers are
+        instructions, not rows (a CELLDEL frame passed through verbatim
+        would surface its all-null marker rows as live data), and a ROW
+        delta may carry in-batch duplicate keys that need the within-layer
+        LWW dedup. ``cuts`` (from ``_cuts``) makes it a two-snapshot fold,
+        which always folds."""
         if (
-            len(frames) == 1 and not force_fold and cuts is None
+            len(layers) == 1 and layers[0].kind == "base" and cuts is None
             and _KIND not in frames[0].columns
         ):
             merged = frames[0]
@@ -586,16 +598,17 @@ class KeyedTable:
         log = self._log()
         layers = log["layers"]
         if as_of_layer is not None:
-            # dirty compaction drops part-files from old base layers, so
-            # any layer-prefix read predating it would be a PARTIAL
-            # snapshot (the surviving files of a mutilated layer) — fail
-            # loudly, like full compaction does when history folds away
+            # every compaction commits its base's seq as the horizon: the
+            # layers below it are folded away (full, prefix) or survive
+            # only as the clean part-files of a mutilated base (dirty), so
+            # a read predating it would be missing or PARTIAL — fail loudly
             if as_of_layer < log["horizon"]:
                 raise HistoryFoldedError(
-                    f"as_of_layer={as_of_layer} predates the last dirty "
-                    f"compaction (horizon {log['horizon']}): the "
-                    f"compaction rewrote part of that snapshot's base "
-                    f"layer, so the historical state is no longer readable"
+                    f"as_of_layer={as_of_layer} predates the last "
+                    f"compaction (horizon {log['horizon']}): a full or "
+                    f"prefix compaction folded that snapshot's layers "
+                    f"away, a dirty one rewrote part of its base layer, "
+                    f"so the historical state is no longer readable"
                 )
             layers = [L for L in layers if L.seq <= as_of_layer]
         if not layers:
@@ -624,7 +637,7 @@ class KeyedTable:
         frames = [self._layer_df(L) for L in layers]
         if pred is not None:
             frames = [f.where(pred) for f in frames]
-        return self._resolve(frames, cuts=self._cuts(layers, as_of_layer))
+        return self._resolve(frames, layers, self._cuts(layers, as_of_layer))
 
     def point_read(self, keys: list, as_of_layer=None) -> DataFrame:
         """Multi-get: the merged view restricted to the given key LITERALS
@@ -670,12 +683,7 @@ class KeyedTable:
                     return self._layer_frames(pred, as_of_layer).where(
                         F.lit(False)
                     )
-                # force_fold: bloom pruning can leave a LONE DELTA frame,
-                # whose kind markers / in-batch duplicates must still fold
-                # (the single-frame passthrough is only legal for a base)
-                return self._resolve(
-                    frames, force_fold=True, cuts=self._cuts(kept, as_of_layer)
-                )
+                return self._resolve(frames, kept, self._cuts(kept, as_of_layer))
         return self._layer_frames(pred, as_of_layer)
 
     # Largest key set ``semi_read`` hands to ``point_read`` as a literal IN
@@ -732,9 +740,7 @@ class KeyedTable:
             self._layer_df(L).where(pred).join(kb, self.key_col, "left_semi")
             for L in layers
         ]
-        # a lone visible layer is always the base (folded, unique keys) —
-        # the semi-join preserves that, so the passthrough stays legal
-        return self._resolve(frames, cuts=self._cuts(layers, as_of_layer))
+        return self._resolve(frames, layers, self._cuts(layers, as_of_layer))
 
     def range_read(self, lower, upper, as_of_layer=None) -> DataFrame:
         """Key-range scan: the merged view restricted to keys in
@@ -776,9 +782,9 @@ class KeyedTable:
         applied after the snapshot, exactly once, never reordered within a
         key (layer seq is the order). Compaction folds history away, so a
         feed must be consumed before its layers compact — same horizon
-        contract as time travel (``_visible_layers`` raises past a dirty
-        compaction; a fully-compacted range simply has no delta layers
-        left to report)."""
+        contract as time travel (``_visible_layers`` raises for an
+        ``until_layer`` below the last compaction, and a base layer
+        inside the window raises below)."""
         layers = [
             L for L in self._visible_layers(until_layer) if L.seq > since_layer
         ]
@@ -1264,10 +1270,7 @@ class KeyedTable:
         interval by construction, so resolution is complete. Falls back
         to a full compaction when footer stats can't prove ranges (absent
         stats, binary keys; a possibly-truncated string max widens to
-        +inf instead — see _file_key_ranges). NOTE: dirty compaction
-        invalidates time travel to snapshots that predate it —
-        ``df(as_of_layer=...)`` past the recorded horizon raises instead
-        of serving a partial base layer. Post-conditions
+        +inf instead — see _file_key_ranges). Post-conditions
         match full compaction for the dirty ranges (tombstones purged,
         TTL-expired rows dropped); clean ranges keep expired rows on disk
         until a compaction rewrites them (reads filter them either way).
@@ -1282,13 +1285,17 @@ class KeyedTable:
         retention idea Kafka log compaction / Delta VACUUM / Iceberg
         snapshot expiration apply to their logs, grafted onto the LSM:
         compact up to the slowest consumer's offset, never past it.
-        History BELOW keep_since folds away (time travel there raises, as
-        for dirty compaction). Mutually exclusive with scope='dirty'.
+        History BELOW keep_since folds away. Mutually exclusive with
+        scope='dirty'.
 
         Every scope commits as ONE log swap (``_commit``) that lists the
         folded layer in place of what it folded, so a crash before the
         swap leaves the table as it was and one after it the compacted
-        table; the replaced files go in the sweep that follows."""
+        table; the replaced files go in the sweep that follows. The same
+        swap raises the time-travel horizon to the folded layer's seq:
+        ``df(as_of_layer=...)`` of an earlier snapshot raises
+        ``HistoryFoldedError`` instead of serving a missing or partial
+        base."""
         if keep_since is not None:
             if scope != "all":
                 raise ValueError("keep_since requires scope='all'")
@@ -1322,7 +1329,7 @@ class KeyedTable:
         fold = [L for L in layers if L.seq <= keep_since]
         if not fold or (len(fold) == 1 and fold[0].kind == "base"):
             return  # prefix already a single base (or nothing to fold)
-        # enforce any earlier dirty-compaction horizon before folding: a
+        # enforce any earlier compaction's horizon before folding: a
         # prefix snapshot that is no longer readable must raise, not fold
         self._visible_layers(keep_since)
         m = fold[-1].seq
@@ -1330,9 +1337,7 @@ class KeyedTable:
             [self._layer_df(L) for L in fold], self.key_col, self.ts_col,
             keep_state=True,
         )
-        self._write_layer(
-            folded, "base", seq=m, keep=layers[len(fold):], horizon=m
-        )
+        self._write_layer(folded, "base", seq=m, keep=layers[len(fold):])
 
     # a string key whose footer max is this long (UTF-8 chars) is treated
     # as possibly-truncated and widened to +inf — defense in depth: the
@@ -1439,18 +1444,15 @@ class KeyedTable:
         }
         # fold the dirty slice exactly like df(): every contributing layer
         # is ITS OWN frame, in layer-seq order — a dirty base layer as a
-        # frame over just its dirty files. force_fold: a lone delta frame
-        # (no dirty base file) must still run the kind fold — its markers
-        # are instructions, not rows
-        frames = []
-        for L in layers:
-            if L.kind == "delta":
-                frames.append(self._layer_df(L))
-            elif dirty[L.name]:
-                frames.append(self.spark.read.parquet(*[
-                    p for f, p in zip(L.files, self._paths(L)) if f in dirty[L.name]
-                ]))
-        merged = self._resolve(frames, force_fold=True)
+        # frame over just its dirty files
+        folded = [L for L in layers if L.kind == "delta" or dirty[L.name]]
+        frames = [
+            self._layer_df(L) if L.kind == "delta" else self.spark.read.parquet(*[
+                p for f, p in zip(L.files, self._paths(L)) if f in dirty[L.name]
+            ])
+            for L in folded
+        ]
+        merged = self._resolve(frames, folded)
         # ONE commit swaps the deltas and the dirty files for the folded
         # layer: the base layers keep only their clean files (a base left
         # with none drops out), and history before the new layer becomes
@@ -1464,11 +1466,7 @@ class KeyedTable:
             for L in layers
             if L.kind == "base"
         ]
-        seq = layers[-1].seq + 1
-        self._write_layer(
-            merged, "base", seq=seq, keep=[L for L in clean if L.files],
-            horizon=seq,
-        )
+        self._write_layer(merged, "base", keep=[L for L in clean if L.files])
         return True
 
 

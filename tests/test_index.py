@@ -1267,10 +1267,30 @@ def _forbid_live_enumeration(monkeypatch):
     monkeypatch.setattr(SecondaryIndex, "_enumerate_leading", boom)
 
 
+class _Crash(RuntimeError):
+    pass
+
+
+def _crash_index_commit(monkeypatch, idx, when: str) -> None:
+    """The next ``KeyedTable._commit`` of the index table dies just before
+    its log swap (``when="before"``) or just after it (``"after"``)."""
+    real = KeyedTable._commit
+
+    def commit(self, *a, **kw):
+        if self.path != idx.tbl.path:
+            return real(self, *a, **kw)
+        monkeypatch.setattr(KeyedTable, "_commit", real)
+        if when == "after":
+            real(self, *a, **kw)
+        raise _Crash(when)
+
+    monkeypatch.setattr(KeyedTable, "_commit", commit)
+
+
 def test_skip_scan_guideposts_answer_without_scanning_the_index(
     spark, tmp_path, monkeypatch
 ):
-    """The guidepost sidecar makes skip-scan enumeration a metadata read:
+    """The guidepost record makes skip-scan enumeration a metadata read:
     with live enumeration disabled outright, the probe still answers —
     and stays correct after every maintenance path introduces NEW leading
     values (the union-first invariant), including a value with a control
@@ -1319,19 +1339,17 @@ def test_skip_scan_guideposts_answer_without_scanning_the_index(
     )
     idx.repair()
     check(1)
-    # row delete shrinks answers but never the (superset-safe) sidecar
+    # row delete shrinks answers but never the (superset-safe) record
     idx.delete(spark.createDataFrame([Row(key=10)]))
     check(1)
 
 
 def test_guidepost_union_lands_before_the_entries(spark, tmp_path, monkeypatch):
-    """Crash between the sidecar union and the entries insert leaves only
-    a harmless extra value (an empty probe range) — never an entry the
-    skip scan cannot enumerate. Pinned at the exact boundary: the index
-    table's insert raises AFTER the union ran; the sidecar already knows
-    the value, and the stamped retry converges."""
-    import pytest as _pytest
-
+    """The guidepost record rides the index commit of the entries whose
+    leading values it unions: a stamped indexed update crashed just
+    before that log swap leaves the index entries and the record both
+    unchanged, and the stamped retry commits them together, so the skip
+    scan finds the new row from the record alone. About 10 s of tier-1."""
     rows = spark.createDataFrame(
         [Row(key=i, name=f"n{i}", color="red", score=i % 2, ts=100) for i in range(4)]
     )
@@ -1342,27 +1360,18 @@ def test_guidepost_union_lands_before_the_entries(spark, tmp_path, monkeypatch):
     idx = SecondaryIndex(
         tbl, ["color", "score"], str(tmp_path / "i")
     ).build()
-
-    real = KeyedTable.update
-    state = {"crashed": False}
-
-    def flaky(self, *a, **k):
-        if self is idx.tbl and not state["crashed"]:
-            state["crashed"] = True
-            raise RuntimeError("crash in _xi")
-        return real(self, *a, **k)
-
-    monkeypatch.setattr(KeyedTable, "update", flaky)
+    log = idx.tbl._log()
+    assert log["extra"]["tuples"] == [["red"]]
+    _crash_index_commit(monkeypatch, idx, "before")
     batch = spark.createDataFrame(
         [Row(key=20, name="z", color="teal", score=1, ts=100)]
     )
-    with _pytest.raises(RuntimeError, match="crash"):
+    with pytest.raises(_Crash):
         idx.update(batch, stamp="gp1")
-    gp = idx._load_guideposts()
-    assert "teal" in gp["cols"]["color"]["values"], (
-        "sidecar must be unioned BEFORE the entries insert"
-    )
-    idx.update(batch, stamp="gp1")  # retry re-runs only the crashed job
+    assert idx.tbl._log() == log  # entries and record both unchanged
+    assert "gp1" in tbl.applied_stamps()
+    idx.update(batch, stamp="gp1")  # the retry finishes the index commit
+    assert ["teal"] in idx.tbl._log()["extra"]["tuples"]
     _forbid_live_enumeration(monkeypatch)
     want = sorted(r["key"] for r in tbl.df().where(F.col("score") == 1).collect())
     assert sorted(r["key"] for r in idx.lookup_skip(score=1).collect()) == want
@@ -1371,7 +1380,7 @@ def test_guidepost_union_lands_before_the_entries(spark, tmp_path, monkeypatch):
 
 def test_guidepost_overflow_falls_back_to_live_enumeration(spark, tmp_path):
     """A leading column past GUIDEPOST_CAP distinct values is marked
-    overflowed (tracking stops — the sidecar stays tiny) and skip scans
+    overflowed (tracking stops — the record stays tiny) and skip scans
     on it fall back to live enumeration, answers unchanged."""
     rows = spark.createDataFrame(
         [
@@ -1388,8 +1397,8 @@ def test_guidepost_overflow_falls_back_to_live_enumeration(spark, tmp_path):
     )
     idx.GUIDEPOST_CAP = 4  # 9 distinct colors > 4
     idx.build()
-    gp = idx._load_guideposts()
-    assert gp["cols"]["color"]["overflow"] and not gp["cols"]["color"]["values"]
+    rec = idx.tbl._log()["extra"]
+    assert rec == {"cols": {"color": None}, "tuples": None}
     want = sorted(r["key"] for r in tbl.df().where(F.col("score") == 1).collect())
     assert sorted(r["key"] for r in idx.lookup_skip(score=1).collect()) == want
     # maintenance on an overflowed column stays a no-op (and correct)
@@ -1398,21 +1407,25 @@ def test_guidepost_overflow_falls_back_to_live_enumeration(spark, tmp_path):
             [Row(key=30, name="w", color="c999", score=1, ts=100)]
         )
     )
-    assert idx._load_guideposts()["cols"]["color"]["overflow"]
+    assert idx.tbl._log()["extra"] == rec
     want = sorted(r["key"] for r in tbl.df().where(F.col("score") == 1).collect())
     assert sorted(r["key"] for r in idx.lookup_skip(score=1).collect()) == want
 
 
-def test_build_resets_a_stale_guidepost_sidecar(spark, tmp_path, monkeypatch):
-    """Rebuilding derives the sidecar fresh from the built index — a
-    corrupt or stale dictionary (e.g. missing a live value, which would
-    silently drop rows) cannot survive a build."""
+def test_record_less_index_enumerates_live_and_maintenance_adds_no_record(
+    spark, tmp_path
+):
+    """An index whose log holds no guidepost record (one built before the
+    record moved into the index log) answers skip scans correctly by live
+    enumeration, and maintenance never starts a record from its batch
+    alone — a batch-only record would drop every older row from skip
+    scans. About 10 s of tier-1."""
     import json as _json
 
     rows = spark.createDataFrame(
         [
-            Row(key=i, name=f"n{i}", color=c, score=i % 2, ts=100)
-            for i, c in enumerate(["red", "blue", "green", "red"])
+            Row(key=i, name=f"n{i}", color=c, score=1, ts=100)
+            for i, c in enumerate(["red", "blue", "green"])
         ]
     )
     tbl = KeyedTable(
@@ -1422,16 +1435,22 @@ def test_build_resets_a_stale_guidepost_sidecar(spark, tmp_path, monkeypatch):
     idx = SecondaryIndex(
         tbl, ["color", "score"], str(tmp_path / "i")
     ).build()
-    with open(idx._guidepost_path(), "w") as f:
-        _json.dump({"cols": {"color": {"values": ["bogus"], "overflow": False}}}, f)
-    idx.drop()
-    idx.build()
-    _forbid_live_enumeration(monkeypatch)
-    want = sorted(r["key"] for r in tbl.df().where(F.col("score") == 0).collect())
-    assert sorted(r["key"] for r in idx.lookup_skip(score=0).collect()) == want
-    assert set(idx._load_guideposts()["cols"]["color"]["values"]) == {
-        "red", "blue", "green"
-    }
+    log_path = tmp_path / "i" / "_log.json"
+    log = _json.loads(log_path.read_text())
+    del log["extra"]
+    log_path.write_text(_json.dumps(log))
+    assert idx._guidepost_tuples(["color", "score"], {"score": 1}) is None
+
+    idx.update(
+        spark.createDataFrame([Row(key=10, name="x", color="violet", score=1, ts=200)])
+    )
+    idx.put(spark.createDataFrame([Row(key=11, color="amber", score=1, ts=200)]))
+    tbl.update(spark.createDataFrame([Row(key=12, name="y", color="ochre", score=1, ts=200)]))
+    idx.repair()
+    idx.tbl.compact()
+    assert idx.tbl._log()["extra"] is None
+    got = sorted(r["key"] for r in idx.lookup_skip(score=1).collect())
+    assert got == [0, 1, 2, 10, 11, 12]
 
 
 def test_guidepost_skip_scan_survives_mutation_storm(spark, tmp_path, monkeypatch):
@@ -1439,7 +1458,7 @@ def test_guidepost_skip_scan_survives_mutation_storm(spark, tmp_path, monkeypatc
     a seeded random sequence of updates, partial puts, row deletes, cell
     deletes and compactions against a COMPOSITE (band, score) index, then
     lookup_skip(score=v) — with live enumeration disabled, so only the
-    sidecar can answer — must equal the dict model's filter for every
+    record can answer — must equal the dict model's filter for every
     probed value. Any insert path that forgets to union its leading
     values first shows up here as silently missing rows."""
     import random
@@ -1506,7 +1525,7 @@ def test_guidepost_skip_scan_survives_mutation_storm(spark, tmp_path, monkeypatc
             idx.tbl.compact()
 
     def boom(self, *a, **k):
-        raise AssertionError("live enumeration ran — sidecar must answer")
+        raise AssertionError("live enumeration ran — record must answer")
 
     monkeypatch.setattr(SecondaryIndex, "_enumerate_leading", boom)
     for v in (-20, -3, 0, 7, 20, rng.randint(-20, 20)):
@@ -1519,7 +1538,7 @@ def test_guidepost_skip_scan_survives_mutation_storm(spark, tmp_path, monkeypatc
 
 def test_guidepost_skip_scan_over_functional_component(spark, tmp_path, monkeypatch):
     """Skip scan fixing a FUNCTIONAL second component — probe by the
-    derived value, enumerate the plain leading column from the sidecar
+    derived value, enumerate the plain leading column from the record
     (live enumeration disabled). Maintenance through update() recomputes
     the derivation AND unions the new leading value first."""
     rows = spark.createDataFrame(
@@ -1562,37 +1581,6 @@ def test_guidepost_skip_scan_over_functional_component(spark, tmp_path, monkeypa
     check("p")
 
 
-def test_maintenance_heals_a_missing_guidepost_sidecar(spark, tmp_path, monkeypatch):
-    """An index with live entries but NO sidecar (pre-guidepost dir, or a
-    build() that crashed between create and refresh): the first
-    maintenance write must derive the dictionary from the FULL index
-    before unioning its batch — a batch-only bootstrap would silently
-    drop every pre-existing row from skip scans (review-pass repro)."""
-    import os
-
-    rows = spark.createDataFrame(
-        [
-            Row(key=i, name=f"n{i}", color=c, score=1, ts=100)
-            for i, c in enumerate(["red", "blue", "green"])
-        ]
-    )
-    tbl = KeyedTable(
-        spark, str(tmp_path / "b"), key_col="key", ts_col="ts"
-    )
-    tbl.create(rows)
-    idx = SecondaryIndex(
-        tbl, ["color", "score"], str(tmp_path / "i")
-    ).build()
-    os.remove(idx._guidepost_path())  # simulate the crash window
-
-    idx.update(
-        spark.createDataFrame([Row(key=10, name="x", color="violet", score=1, ts=200)])
-    )
-    _forbid_live_enumeration(monkeypatch)
-    got = sorted(r["key"] for r in idx.lookup_skip(score=1).collect())
-    assert got == [0, 1, 2, 10], "pre-existing rows must survive the heal"
-
-
 def test_skip_scan_out_of_range_fixed_value_never_lies(spark, tmp_path):
     """A probe value outside the fixed column's dtype domain: under ANSI
     (this session's default) the exact predicate's cast RAISES — in both
@@ -1617,7 +1605,7 @@ def test_skip_scan_out_of_range_fixed_value_never_lies(spark, tmp_path):
     assert idx._guidepost_tuples(["grp", "band"], {"band": 70000}) is None
     with _pytest.raises(Exception, match="CAST_OVERFLOW|overflow"):
         idx.lookup_skip(band=70000).collect()
-    # in-range probes answer from the sidecar
+    # in-range probes answer from the record
     assert sorted(r["key"] for r in idx.lookup_skip(band=4464).collect()) == [
         0, 1, 2, 3, 4, 5,
     ]
@@ -1650,6 +1638,97 @@ def test_repair_wins_even_when_base_ts_moved_backwards(spark, tmp_path):
     assert out["stale_covered"] == 1
     assert [r["name"] for r in idx.lookup("red", covered=True).collect()] == ["b"]
     assert idx.scrutiny(deep=True).count() == 0
+
+
+def test_lower_ts_reinsert_after_delete_and_compaction_stays_indexed(spark, tmp_path):
+    """Through the index: delete a row, fully compact the base (its
+    tombstone and ts are purged), then write the same key with the same
+    indexed value at a LOWER ts. The base row is live, so the index must
+    hold its entry: entries carry no ts of their own and resolve by layer
+    order, so the index tombstone's old ts cannot mask the re-insert.
+    About 10 s of tier-1."""
+    tbl, idx = _fixture(spark, tmp_path)
+    idx.delete(spark.createDataFrame([Row(key=1)]))
+    tbl.compact()
+    idx.update(spark.createDataFrame([Row(key=1, name="a2", color="red", ts=50)]))
+    assert {r["key"] for r in idx.lookup("red").collect()} == {1, 2}
+    assert idx.scrutiny().count() == 0
+
+
+def test_repair_is_one_index_commit_and_none_on_a_consistent_index(
+    spark, tmp_path, monkeypatch
+):
+    """repair() of a consistent index writes nothing; repair() of an index
+    with missing, orphaned and stale-covered entries adds exactly ONE
+    index layer and runs no compaction. About 15 s of tier-1."""
+    tbl = KeyedTable(spark, str(tmp_path / "b"), key_col="key", ts_col="ts")
+    tbl.create(spark.createDataFrame(
+        [Row(key=k, name=f"n{k}", color="red", ts=100) for k in range(1, 5)]
+    ))
+    idx = SecondaryIndex(tbl, "color", str(tmp_path / "i"), include=["name"]).build()
+    log = idx.tbl._log()
+    assert idx.repair() == {"missing": 0, "orphaned": 0, "stale_covered": 0}
+    assert idx.tbl._log() == log
+
+    # behind the back: a new row (missing), a deleted row (orphaned) and a
+    # covered-column rename (stale_covered)
+    tbl.update(spark.createDataFrame([Row(key=9, name="n9", color="blue", ts=200)]))
+    tbl.delete(spark.createDataFrame([Row(key=2)]))
+    tbl.update(spark.createDataFrame([Row(key=3, name="x3", color="red", ts=200)]))
+    monkeypatch.setattr(
+        KeyedTable, "compact",
+        lambda *a, **k: pytest.fail("repair ran a compaction"),
+    )
+    layers = idx.tbl._layers()
+    assert idx.repair() == {"missing": 1, "orphaned": 1, "stale_covered": 1}
+    assert idx.tbl._layers()[:-1] == layers and len(idx.tbl._layers()) == len(layers) + 1
+    assert idx.scrutiny().count() == 0
+    got = {(r["key"], r["name"]) for r in idx.lookup("red", covered=True).collect()}
+    assert got == {(1, "n1"), (3, "x3"), (4, "n4")}
+    assert {r["key"] for r in idx.lookup("blue").collect()} == {9}
+
+
+def test_index_root_holds_only_its_log_and_listed_files(spark, tmp_path):
+    """Every index change is one commit of the index table's log, which
+    also carries the guidepost record: after build, each maintenance
+    path, repair and compaction, the index root holds only its log, the
+    listed layer directories and their listed part-files — no second
+    state file. About 13 s of tier-1."""
+    from pathlib import Path
+
+    tbl = KeyedTable(spark, str(tmp_path / "b"), key_col="key", ts_col="ts")
+    tbl.create(spark.createDataFrame(
+        [Row(key=k, color=f"c{k % 3}", score=k, cnt=0, ts=100) for k in range(6)]
+    ))
+    idx = SecondaryIndex(
+        tbl, ["color", "score"], str(tmp_path / "i"), include=["cnt"]
+    ).build()
+
+    def check():
+        root = Path(idx.tbl.path)
+        layers = idx.tbl._layers()
+        assert {p.name for p in root.iterdir()} == {"_log.json", *(L.name for L in layers)}
+        for L in layers:
+            assert {p.name for p in (root / L.name).glob("*.parquet")} == set(L.files)
+        assert idx.tbl._log()["extra"] is not None
+
+    check()
+    idx.update(spark.createDataFrame([Row(key=1, color="c9", score=1, cnt=0, ts=200)]))
+    check()
+    idx.put(spark.createDataFrame([Row(key=2, color="c8", ts=200)]))
+    check()
+    idx.increment(spark.createDataFrame([Row(key=3, delta=5)]), counter_col="cnt")
+    check()
+    idx.delete(spark.createDataFrame([Row(key=4)]))
+    check()
+    idx.delete(spark.createDataFrame([Row(key=5)]), columns=["score"])
+    check()
+    tbl.update(spark.createDataFrame([Row(key=0, color="c7", score=0, cnt=0, ts=300)]))
+    idx.repair()
+    check()
+    idx.tbl.compact()
+    check()
+    assert idx.scrutiny().count() == 0
 
 
 def test_key_only_functional_index_maintains_on_put(spark, tmp_path):
@@ -1749,12 +1828,10 @@ def test_constant_on_null_functional_index_maintains_row_creation(spark, tmp_pat
 
 
 def test_crashed_repair_rerun_converges(spark, tmp_path, monkeypatch):
-    """repair() is not atomic: a crash between the stale-slice fold and
-    the upsert leaves affected rows invisible to index reads. The pinned
-    contract: a RE-RUN converges (the crashed state re-classifies as
-    'missing' and takes the upsert-only path)."""
-    import pytest as _pytest
-
+    """repair() is one index commit, so its log swap is its only crash
+    point: crashed just before it, the index is unchanged and a re-run
+    repairs it; crashed just after it, the index is already repaired.
+    About 10 s of tier-1."""
     tbl = KeyedTable(
         spark, str(tmp_path / "b"), key_col="key", ts_col="ts"
     )
@@ -1766,23 +1843,22 @@ def test_crashed_repair_rerun_converges(spark, tmp_path, monkeypatch):
     tbl.compact()
     tbl.update(spark.createDataFrame([Row(key=1, name="b", color="red", ts=50)]))
 
-    real = KeyedTable.update
-
-    def crash_on_upsert(self, *a, **kw):
-        if self is idx.tbl:
-            raise RuntimeError("crash before the repair upsert")
-        return real(self, *a, **kw)
-
-    monkeypatch.setattr(KeyedTable, "update", crash_on_upsert)
-    with _pytest.raises(RuntimeError, match="crash"):
+    log = idx.tbl._log()
+    _crash_index_commit(monkeypatch, idx, "before")
+    with pytest.raises(_Crash):
         idx.repair()
-    monkeypatch.setattr(KeyedTable, "update", real)
-    # the crashed window: row invisible to index reads (documented)
-    assert idx.lookup("red").count() == 0
-    out = idx.repair()
-    assert out["missing"] == 1 and out["stale_covered"] == 0
+    assert idx.tbl._log() == log
+    assert [r["name"] for r in idx.lookup("red", covered=True).collect()] == ["a"]
+    assert idx.repair() == {"missing": 0, "orphaned": 0, "stale_covered": 1}
     assert [r["name"] for r in idx.lookup("red", covered=True).collect()] == ["b"]
     assert idx.scrutiny(deep=True).count() == 0
+
+    tbl.update(spark.createDataFrame([Row(key=1, name="c", color="red", ts=60)]))
+    _crash_index_commit(monkeypatch, idx, "after")
+    with pytest.raises(_Crash):
+        idx.repair()
+    assert idx.scrutiny(deep=True).count() == 0
+    assert [r["name"] for r in idx.lookup("red", covered=True).collect()] == ["c"]
 
 
 def test_guidepost_tuples_probe_observed_tuples_not_cross_product(
@@ -1791,7 +1867,7 @@ def test_guidepost_tuples_probe_observed_tuples_not_cross_product(
     """Advisor finding (r7): per-column guidepost sets answer a skip scan
     with their CROSS PRODUCT — k sparse leading columns of ~n values each
     cost n^k mostly-empty probe ranges where the live tuple set has only n
-    members. The sidecar now records observed leading TUPLES and the skip
+    members. The record holds the observed leading TUPLES and the skip
     scan prefers them: a (grp, band, score) index whose (grp, band) pairs
     are diagonal (grp i only ever pairs with band i) must probe exactly the
     |observed| prefixes, not |grp| x |band|."""
@@ -1834,39 +1910,6 @@ def test_guidepost_tuples_probe_observed_tuples_not_cross_product(
     # partially-fixed probe filters the record by the fixed equality
     tuples = idx._guidepost_tuples(["grp", "band", "score"], {"grp": "g0", "score": 1})
     assert sorted(t[1] for t in tuples) == [0, 7]
-
-
-def test_pre_tuple_sidecar_heals_from_the_full_index(spark, tmp_path, monkeypatch):
-    """A sidecar written before tuple tracking existed (no 'tuples' key)
-    has no complete tuple history — a batch-only record would be a
-    non-superset and silently drop pre-existing rows from skip scans.
-    The first maintenance write heals it by deriving the record from the
-    FULL pre-insert index (one column-pruned scan, once — the missing-
-    sidecar discipline), then unions the batch's tuples."""
-    rows = spark.createDataFrame(
-        [Row(key=i, grp=f"g{i % 3}", band=i % 3, score=i % 2, ts=100) for i in range(9)]
-    )
-    tbl = KeyedTable(
-        spark, str(tmp_path / "b"), key_col="key", ts_col="ts"
-    )
-    tbl.create(rows)
-    idx = SecondaryIndex(
-        tbl, ["grp", "band", "score"], str(tmp_path / "i")
-    ).build()
-    gp = idx._load_guideposts()
-    del gp["tuples"]  # simulate the r7-era sidecar
-    idx._save_guideposts(gp)
-    idx.update(
-        spark.createDataFrame([Row(key=50, grp="g9", band=9, score=0, ts=100)])
-    )
-    trec = idx._load_guideposts()["tuples"]
-    assert not trec["overflow"]
-    got = {tuple(t) for t in trec["values"]}
-    assert ("g9", 9) in got, "the batch's new tuple must union in"
-    assert ("g0", 0) in got, "pre-existing tuples must survive the heal"
-    _forbid_live_enumeration(monkeypatch)
-    want = sorted(r["key"] for r in tbl.df().where(F.col("score") == 0).collect())
-    assert sorted(r["key"] for r in idx.lookup_skip(score=0).collect()) == want
 
 
 def test_oversized_uncovered_lookup_bounds_the_base_scan(spark, tmp_path, monkeypatch):

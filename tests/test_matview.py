@@ -451,3 +451,65 @@ def test_view_root_of_the_old_layout_raises_until_rebuilt(spark, tmp_path):
     mv.build()
     assert mv.refresh() == 0
     assert _view(mv) == _recompute(base)
+
+
+def test_refresh_builds_a_view_whose_build_crashed(spark, tmp_path, monkeypatch):
+    """``build()`` drops the view before its one commit: crash that commit
+    inside the rebuild a compaction forces on ``refresh()``, and the view
+    is left with no stamp. The next refresh builds it (returns -1) instead
+    of raising. About 10 s of tier-1."""
+    base = _base(spark, str(tmp_path), n=50)
+    mv = _mv(spark, str(tmp_path), base).build()
+    base.delete(spark.range(0, 5).select(F.col("id").alias("k")))
+    base.compact()
+    real = KeyedTable._commit
+
+    def commit(self, layers, *a, **kw):
+        if self.path == mv.mv.path and layers:
+            monkeypatch.setattr(KeyedTable, "_commit", real)
+            raise _Crash("before")
+        return real(self, layers, *a, **kw)
+
+    monkeypatch.setattr(KeyedTable, "_commit", commit)
+    with pytest.raises(_Crash):
+        mv.refresh()
+    with pytest.raises(FileNotFoundError):
+        mv.applied_upto()
+    assert mv.refresh() == -1
+    assert _view(mv) == _recompute(base)
+    assert mv.refresh() == 0
+
+
+def test_sum_over_only_null_values_reads_null(spark, tmp_path):
+    """A maintained SUM whose group's summed values all became NULL reads
+    NULL, as the recomputed GROUP BY does — the view keeps a non-NULL
+    count per SUM. About 10 s of tier-1."""
+    t = KeyedTable(spark, str(tmp_path / "base"), key_col="k", ts_col="ts")
+    schema = "k bigint, g bigint, v bigint, ts int"
+    t.create(spark.createDataFrame([(1, 0, 10, 0), (2, 0, 20, 0), (3, 1, 5, 0)], schema))
+    mv = MaterializedAgg(spark, str(tmp_path / "mv"), t, "g", {"sv": "v"}).build()
+    t.delete(spark.createDataFrame([(1,), (2,)], "k bigint"), columns=["v"])
+    assert mv.refresh() == 1
+    want = {(0, None, 2), (1, 5, 1)}
+    assert _view(mv) == want
+    assert _view(mv.build()) == want
+    t.update(spark.createDataFrame([(2, 0, 0, 1)], schema))
+    mv.refresh()
+    assert _view(mv) == {(0, 0, 2), (1, 5, 1)}
+
+
+def test_view_stored_without_non_null_counts_rebuilds_on_refresh(spark, tmp_path):
+    """A view root stored before the view kept a non-NULL count per SUM
+    cannot tell a NULL sum from 0: refresh rebuilds it (returns -1), and
+    it is maintained incrementally after. About 10 s of tier-1."""
+    base = _base(spark, str(tmp_path), n=50)
+    mv = _mv(spark, str(tmp_path), base).build()
+    mv.mv._write_layer(mv.mv.df().drop("__nn_sum_val"), "base", keep=[])
+    base.delete(spark.range(0, 5).select(F.col("id").alias("k")))
+    assert mv.refresh() == -1
+    assert "__nn_sum_val" in mv.mv._schema()
+    assert _view(mv) == _recompute(base)
+    base.delete(spark.range(5, 10).select(F.col("id").alias("k")))
+    assert mv.refresh() > 0
+    assert _view(mv) == _recompute(base)
+

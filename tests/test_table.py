@@ -684,6 +684,10 @@ def test_mutation_sequence_matches_model(spark, tmp_path, layer_files):
                 self.checked = False
                 return
             self._run(lambda: self.t.compact(scope=scope))
+            if scope == "all":
+                # a full compaction folds every earlier snapshot away
+                with pytest.raises(HistoryFoldedError):
+                    self.t.df(as_of_layer=self.snaps[-1][0])
             tombs = {k for k, v in self.model.state.items() if v["tomb"]}
             if scope == "dirty":
                 # dirty scope purges the tombstones its rewritten ranges
