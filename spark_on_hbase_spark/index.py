@@ -16,8 +16,9 @@ Consistency model (Phoenix's, honestly): index maintenance is write-side
 (``_maintain``), base first: the base mutation lands, ONE read of the
 touched keys at the snapshots just before and just after it
 (``KeyedTable.semi_read`` with an ``as_of_layer`` pair) yields their old
-and new rows, and ONE index layer holds the new rows' entries plus
-tombstones for the old entries the new rows do not re-insert, so the
+and new rows, and ONE index layer (``KeyedTable._mutate``) tombstones the
+old rows' entries and upserts the new rows' — one layer's tombstones fold
+before its upserts, so an entry both rows imply stays live — and the
 index holds exactly what the base fold kept. Two writes and one read per
 mutation; the base table is never rewritten, and a batch within the
 multiget cap pushes into every base layer scan as an IN filter, so the
@@ -426,66 +427,63 @@ class SecondaryIndex:
             )
         )
 
-    def scrutiny(self, deep: bool = True) -> DataFrame:
-        """Index consistency audit (Phoenix's IndexScrutinyTool): one
-        full-outer diff of the stored entries against the entries the
-        CURRENT base implies. Returns (ikey, status) with status 'missing'
-        (a live base row has no entry — a lookup would silently drop it),
-        'orphaned' (an entry points at a row that no longer exists or no
-        longer carries that value — a lookup would resurrect or
-        duplicate), or — with ``deep`` (the default) — 'stale_covered'
-        (the ikey matches but the entry's typed indexed or covered values
-        diverge from the base row: ``lookup(covered=True)`` would serve
-        the stale value even though the key set looks consistent).
-        ``deep=False``
-        restricts the audit to key existence — no tuple is hashed at all
-        (a review pass caught the old code computing the full fingerprint
-        and merely ignoring it), same two scans. Empty result ==
-        consistent. Two table-sized scans, zero writes — the audit you
-        run after suspecting writes bypassed the index."""
+    def _diff(self, deep: bool = True) -> DataFrame:
+        """The one expected-against-stored full-outer diff behind
+        ``scrutiny`` and ``repair``: a row per diverging ikey, with the
+        entry the CURRENT base implies (NULL columns when none),
+        ``__efp`` (its fingerprint, NULL when no entry is expected) and
+        ``__afp`` (the stored entry's, NULL when none is stored). Without
+        ``deep`` the fingerprints are constants, so only key existence
+        diverges."""
         fp = self._entry_fingerprint() if deep else F.lit("1")
-        expected = self._entries(self.base.df()).select("ikey", fp.alias("__efp"))
+        expected = self._entries(self.base.df()).withColumn("__efp", fp)
         actual = self.tbl.df().select("ikey", fp.alias("__afp"))
-        j = expected.join(actual, "ikey", "full_outer")
+        efp, afp = F.col("__efp"), F.col("__afp")
+        return expected.join(actual, "ikey", "full_outer").where(
+            afp.isNull() | efp.isNull() | (efp != afp)
+        )
+
+    def scrutiny(self, deep: bool = True) -> DataFrame:
+        """Index consistency audit (Phoenix's IndexScrutinyTool): the
+        status projection of ``_diff``, the stored entries against the
+        entries the CURRENT base implies. Returns (ikey, status) with
+        status 'missing' (a live base row has no entry — a lookup would
+        silently drop it), 'orphaned' (an entry points at a row that no
+        longer exists or no longer carries that value — a lookup would
+        resurrect or duplicate), or — with ``deep`` (the default) —
+        'stale_covered' (the ikey matches but the entry's typed indexed
+        or covered values diverge from the base row:
+        ``lookup(covered=True)`` would serve the stale value even though
+        the key set looks consistent). ``deep=False`` restricts the audit
+        to key existence — no tuple is hashed at all, same two scans.
+        Empty result == consistent. Two table-sized scans, zero writes —
+        the audit you run after suspecting writes bypassed the index."""
         status = (
             F.when(F.col("__afp").isNull(), F.lit("missing"))
             .when(F.col("__efp").isNull(), F.lit("orphaned"))
+            .otherwise(F.lit("stale_covered"))
         )
-        if deep:
-            status = status.when(
-                F.col("__efp") != F.col("__afp"), F.lit("stale_covered")
-            )
-        return (
-            j.select("ikey", status.alias("status"))
-            .where(F.col("status").isNotNull())
-        )
+        return self._diff(deep).select("ikey", status.alias("status"))
 
     def repair(self) -> dict:
         """Reconcile the index to the CURRENT base (Phoenix's scrutiny
         repair) in ONE index commit (``_write_entries``): upserts of the
         missing and stale_covered entries plus tombstones of the orphaned
-        ones — two audit scans but O(divergence) writes, so fixing a few
-        behind-the-back rows never rewrites the index. Entries carry no
-        ts (see the module docstring), so an upsert lands whatever ts the
-        base row has — also after a behind-the-back delete, compaction
-        and lower-ts reinsert. A consistent index writes nothing.
+        ones — ``scrutiny``'s two audit scans but O(divergence) writes, so
+        fixing a few behind-the-back rows never rewrites the index.
+        Entries carry no ts (see the module docstring), so an upsert
+        lands whatever ts the base row has — also after a behind-the-back
+        delete, compaction and lower-ts reinsert. A consistent index
+        writes nothing.
 
         The commit is the only crash point: before the swap the index is
         unchanged and a re-run repairs it, after it the index is repaired
         (pinned by test_crashed_repair_rerun_converges). Returns
         {'missing': n, 'orphaned': n, 'stale_covered': n}."""
-        fp = self._entry_fingerprint()
-        expected = self._entries(self.base.df()).withColumn("__efp", fp)
-        actual = self.tbl.df().select("ikey", fp.alias("__afp"))
-        diff = expected.join(actual, "ikey", "full_outer").where(
-            F.col("__afp").isNull()
-            | F.col("__efp").isNull()
-            | (F.col("__efp") != F.col("__afp"))
-        )
         # one audit join feeds the counts, the upserts, the tombstones and
         # the guidepost union: divergence is O(small) by assumption, so
         # materializing it once is cheap
-        diff = diff.localCheckpoint()
+        diff = self._diff().localCheckpoint()
         efp, afp = F.col("__efp"), F.col("__afp")
         counts = diff.agg(
             F.count(F.when(afp.isNull(), 1)).alias("missing"),
@@ -617,9 +615,8 @@ class SecondaryIndex:
         3. read the touched keys ONCE, at ``(a, latest)`` — one
            ``semi_read`` with an ``as_of_layer`` pair;
         4. commit ONE index layer (stamp ``<stamp>_xi``,
-           ``_write_entries``): the entries of the rows at the latest
-           cut, plus null-ts tombstones for the cut-``a`` entries they do
-           not re-insert.
+           ``_write_entries``): tombstones of the cut-``a`` rows' entries
+           and upserts of the latest cut's.
 
         Row deletes and nulled plain components simply have no new
         entries. ``touches=False`` (the batch changes nothing the index
@@ -662,8 +659,8 @@ class SecondaryIndex:
         index layer did not. The pre-write rows are gone or unknown (a
         compaction, or another indexed write to the same keys, may have
         run since the crash), so the old side is every STORED entry of a
-        touched base key: the ones the current rows do not re-insert get
-        tombstoned. That probe is by base key, which the value-ordered
+        touched base key, tombstoned in the layer that upserts the current
+        rows' entries. That probe is by base key, which the value-ordered
         index cannot prune — O(index), on the retry path only."""
         current = self.base.semi_read(batch).localCheckpoint(eager=False)
         keys = batch.select(F.col(self.base.key_col).alias("base_key")).distinct()
@@ -673,26 +670,16 @@ class SecondaryIndex:
         )
 
     def _write_entries(self, new: DataFrame, old: DataFrame, stamp) -> None:
-        """ONE index commit: a layer of the ``new`` entries plus null-ts
-        tombstones for the ``old`` ikeys that ``new`` does not re-insert
-        (never both for one ikey: rows of one layer fold in arbitrary
-        order), and in the same log swap the guidepost record unioned
+        """ONE index commit (``KeyedTable._mutate``): a layer tombstoning
+        every ``old`` ikey and upserting the ``new`` entries — an ikey in
+        both reads live, since one layer's tombstones fold before its
+        upserts — and in the same log swap the guidepost record unioned
         with ``new``'s leading values. Callers hand in entries derived
         from a checkpointed read, so the record's aggregation and the
         layer write re-run only the cheap entry derivation."""
-        gone = old.select("ikey").join(
-            F.broadcast(new.select("ikey")), "ikey", "left_anti"
+        self.tbl._mutate(
+            {"delete": old, "upsert": new}, stamp, extra=self._noted(new)
         )
-        tombs = gone.select(
-            "ikey",
-            *[F.lit(None).cast(t).alias(c) for c, t in new.dtypes if c != "ikey"],
-            F.lit(True).alias(_TOMBSTONE),
-        )
-        self.tbl._write_layer(
-            new.withColumn(_TOMBSTONE, F.lit(False)).unionByName(tombs),
-            "delta", stamp=stamp, extra=self._noted(new),
-        )
-        self.tbl._maybe_compact()
 
     # -- reads ---------------------------------------------------------------
 

@@ -222,6 +222,39 @@ def input_tag(sf_dir: str, table: str) -> str:
     )
 
 
+def publish_fixture(root: str, make: Callable[[str], None], version) -> None:
+    """Publish a cross-session fixture at ``root`` unless a complete one
+    is there (its ``_COMPLETE`` marker exists): ``make(staging)`` fills a
+    pid-unique staging dir, the marker (holding ``version``) lands inside
+    it, and one atomic rename publishes it. A concurrent session either
+    wins the rename or reads the winner's complete root, which is never
+    removed; a crash mid-build leaves only an unreferenced staging dir,
+    and a marker-less root (a partial publish) is replaced."""
+    import shutil
+
+    marker = os.path.join(root, "_COMPLETE")
+    if os.path.exists(marker):
+        return
+    staging = f"{root}.build.{os.getpid()}"
+    shutil.rmtree(staging, ignore_errors=True)
+    make(staging)
+    with open(os.path.join(staging, "_COMPLETE"), "w") as f:
+        f.write(str(version))
+    if os.path.exists(marker):
+        # a concurrent session published while we built: never rmtree the
+        # complete root it may be reading — discard our staging instead
+        shutil.rmtree(staging, ignore_errors=True)
+        return
+    shutil.rmtree(root, ignore_errors=True)  # a marker-less partial
+    try:
+        os.rename(staging, root)
+    except OSError:
+        # a concurrent session won the rename — use its complete root
+        shutil.rmtree(staging, ignore_errors=True)
+        if not os.path.exists(marker):
+            raise
+
+
 def dec2(col) -> "F.Column":
     """Lossless decimal view of a raw 2-dp money column."""
     c = F.col(col) if isinstance(col, str) else col

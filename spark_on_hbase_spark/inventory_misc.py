@@ -22,7 +22,15 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from spark_on_hbase_spark.inventory import dsum, input_tag, load, query, sf_tag, warmer
+from spark_on_hbase_spark.inventory import (
+    dsum,
+    input_tag,
+    load,
+    publish_fixture,
+    query,
+    sf_tag,
+    warmer,
+)
 from spark_on_hbase_spark.operators import agg as A
 from spark_on_hbase_spark.table import KeyedTable, _upsert_latest
 
@@ -1514,134 +1522,118 @@ def _sec_index_fixture(spark: SparkSession, sf_dir: str) -> dict:
         f"sec_idx_fix_v{_SEC_IDX_FIXTURE_VERSION}_{sf_tag(sf_dir)}_"
         f"{input_tag(sf_dir, 'customer')}",
     )
-    marker = os.path.join(root, "_COMPLETE")
-    if root in _SEC_IDX_FIXTURE_DONE or os.path.exists(marker):
+
+    def make(staging: str) -> None:
+        h = _sec_index_handles(spark, staging)
+        cust = load(spark, sf_dir, "customer")
+        # nation-indexed table (covered): rename+move %10==3 -> 77, delete %10==6
+        rows = cust.select(
+            F.col("c_custkey").alias("key"),
+            F.col("c_name").alias("name"),
+            F.col("c_nationkey").cast("bigint").alias("nation"),
+            (F.col("c_custkey") % 13).cast("bigint").alias("band"),
+            F.lit(100).cast("int").alias("ts"),
+        )
+
+        def _build_nation() -> None:
+            h["idx_nation"].base.create(rows)
+            h["idx_nation"].build()
+            h["idx_nation"].update(
+                rows.where(F.col("key") % 10 == 3).select(
+                    "key",
+                    F.concat(
+                        F.lit("renamed #"), F.col("key").cast("string")
+                    ).alias("name"),
+                    F.lit(77).cast("bigint").alias("nation"),
+                    "band",
+                    F.lit(200).cast("int").alias("ts"),
+                )
+            )
+            h["idx_nation"].delete(rows.where(F.col("key") % 10 == 6).select("key"))
+            h["idx_comp"].build()
+
+        # functional-index table: append '#Z' to names %8==3 THROUGH the
+        # expression index (last-char derivation recomputed by maintenance),
+        # row-delete %8==5
+        frows = cust.select(
+            F.col("c_custkey").alias("key"),
+            F.col("c_name").alias("name"),
+            F.lit(100).cast("int").alias("ts"),
+        )
+
+        def _build_fx() -> None:
+            h["idx_fx"].base.create(frows)
+            h["idx_fx"].build()
+            h["idx_fx"].update(
+                frows.where(F.col("key") % 8 == 3).select(
+                    "key",
+                    F.concat(F.col("name"), F.lit("#Z")).alias("name"),
+                    F.lit(200).cast("int").alias("ts"),
+                )
+            )
+            h["idx_fx"].delete(frows.where(F.col("key") % 8 == 5).select("key"))
+
+        # bal-indexed table: +2,000,000 cents for %9==4, delete %9==7
+        brows = cust.select(
+            F.col("c_custkey").alias("key"),
+            F.col("c_name").alias("name"),
+            F.round(F.col("c_acctbal") * 100, 0).cast("bigint").alias("bal"),
+            F.lit(100).cast("int").alias("ts"),
+        )
+
+        def _build_bal() -> None:
+            h["idx_bal"].base.create(brows)
+            h["idx_bal"].build()
+            h["idx_bal"].update(
+                brows.where(F.col("key") % 9 == 4).select(
+                    "key", "name",
+                    (F.col("bal") + F.lit(2000000)).alias("bal"),
+                    F.lit(200).cast("int").alias("ts"),
+                )
+            )
+            h["idx_bal"].delete(brows.where(F.col("key") % 9 == 7).select("key"))
+
+        # index-free multiget table: rename %7==2 at ts 200, tombstone %7==5
+        prows = cust.select(
+            F.col("c_custkey").alias("key"),
+            F.col("c_name").alias("name"),
+            F.lit(100).cast("int").alias("ts"),
+        )
+
+        def _build_point() -> None:
+            h["tbl_point"].create(prows)
+            h["tbl_point"].update(
+                prows.where(F.col("key") % 7 == 2).select(
+                    "key",
+                    F.concat(
+                        F.lit("moved #"), F.col("key").cast("string")
+                    ).alias("name"),
+                    F.lit(200).cast("int").alias("ts"),
+                )
+            )
+            h["tbl_point"].delete(prows.where(F.col("key") % 7 == 5).select("key"))
+
+        # The four tables live under disjoint paths and share no state beyond
+        # the already-memoized source relation, so their mutation chains run
+        # from a thread pool: each chain is a sequence of SMALL Spark jobs
+        # that individually leave most of local[32] idle, and concurrent
+        # submission back-fills the gaps (guide §2.6 — overlap independent
+        # jobs). Sequencing WITHIN a chain (create -> build -> update ->
+        # delete -> dependent composite build) is preserved by each thread.
+        # Exceptions propagate: result() re-raises, the marker never lands.
+        from concurrent.futures import ThreadPoolExecutor
+
+        with ThreadPoolExecutor(max_workers=4) as pool:
+            futs = [
+                pool.submit(fn)
+                for fn in (_build_nation, _build_fx, _build_bal, _build_point)
+            ]
+            for fut in futs:
+                fut.result()
+
+    if root not in _SEC_IDX_FIXTURE_DONE:
+        publish_fixture(root, make, _SEC_IDX_FIXTURE_VERSION)
         _SEC_IDX_FIXTURE_DONE.add(root)
-        return _sec_index_handles(spark, root)
-    staging = f"{root}.build.{os.getpid()}"
-    shutil.rmtree(staging, ignore_errors=True)
-    h = _sec_index_handles(spark, staging)
-    cust = load(spark, sf_dir, "customer")
-    # nation-indexed table (covered): rename+move %10==3 -> 77, delete %10==6
-    rows = cust.select(
-        F.col("c_custkey").alias("key"),
-        F.col("c_name").alias("name"),
-        F.col("c_nationkey").cast("bigint").alias("nation"),
-        (F.col("c_custkey") % 13).cast("bigint").alias("band"),
-        F.lit(100).cast("int").alias("ts"),
-    )
-
-    def _build_nation() -> None:
-        h["idx_nation"].base.create(rows)
-        h["idx_nation"].build()
-        h["idx_nation"].update(
-            rows.where(F.col("key") % 10 == 3).select(
-                "key",
-                F.concat(
-                    F.lit("renamed #"), F.col("key").cast("string")
-                ).alias("name"),
-                F.lit(77).cast("bigint").alias("nation"),
-                "band",
-                F.lit(200).cast("int").alias("ts"),
-            )
-        )
-        h["idx_nation"].delete(rows.where(F.col("key") % 10 == 6).select("key"))
-        h["idx_comp"].build()
-
-    # functional-index table: append '#Z' to names %8==3 THROUGH the
-    # expression index (last-char derivation recomputed by maintenance),
-    # row-delete %8==5
-    frows = cust.select(
-        F.col("c_custkey").alias("key"),
-        F.col("c_name").alias("name"),
-        F.lit(100).cast("int").alias("ts"),
-    )
-
-    def _build_fx() -> None:
-        h["idx_fx"].base.create(frows)
-        h["idx_fx"].build()
-        h["idx_fx"].update(
-            frows.where(F.col("key") % 8 == 3).select(
-                "key",
-                F.concat(F.col("name"), F.lit("#Z")).alias("name"),
-                F.lit(200).cast("int").alias("ts"),
-            )
-        )
-        h["idx_fx"].delete(frows.where(F.col("key") % 8 == 5).select("key"))
-
-    # bal-indexed table: +2,000,000 cents for %9==4, delete %9==7
-    brows = cust.select(
-        F.col("c_custkey").alias("key"),
-        F.col("c_name").alias("name"),
-        F.round(F.col("c_acctbal") * 100, 0).cast("bigint").alias("bal"),
-        F.lit(100).cast("int").alias("ts"),
-    )
-
-    def _build_bal() -> None:
-        h["idx_bal"].base.create(brows)
-        h["idx_bal"].build()
-        h["idx_bal"].update(
-            brows.where(F.col("key") % 9 == 4).select(
-                "key", "name",
-                (F.col("bal") + F.lit(2000000)).alias("bal"),
-                F.lit(200).cast("int").alias("ts"),
-            )
-        )
-        h["idx_bal"].delete(brows.where(F.col("key") % 9 == 7).select("key"))
-
-    # index-free multiget table: rename %7==2 at ts 200, tombstone %7==5
-    prows = cust.select(
-        F.col("c_custkey").alias("key"),
-        F.col("c_name").alias("name"),
-        F.lit(100).cast("int").alias("ts"),
-    )
-
-    def _build_point() -> None:
-        h["tbl_point"].create(prows)
-        h["tbl_point"].update(
-            prows.where(F.col("key") % 7 == 2).select(
-                "key",
-                F.concat(
-                    F.lit("moved #"), F.col("key").cast("string")
-                ).alias("name"),
-                F.lit(200).cast("int").alias("ts"),
-            )
-        )
-        h["tbl_point"].delete(prows.where(F.col("key") % 7 == 5).select("key"))
-
-    # The four tables live under disjoint paths and share no state beyond
-    # the already-memoized source relation, so their mutation chains run
-    # from a thread pool: each chain is a sequence of SMALL Spark jobs
-    # that individually leave most of local[32] idle, and concurrent
-    # submission back-fills the gaps (guide §2.6 — overlap independent
-    # jobs). Sequencing WITHIN a chain (create -> build -> update ->
-    # delete -> dependent composite build) is preserved by each thread.
-    # Exceptions propagate: result() re-raises, the marker never lands.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        futs = [
-            pool.submit(fn)
-            for fn in (_build_nation, _build_fx, _build_bal, _build_point)
-        ]
-        for fut in futs:
-            fut.result()
-    with open(os.path.join(staging, "_COMPLETE"), "w") as f:
-        f.write(str(_SEC_IDX_FIXTURE_VERSION))
-    if os.path.exists(marker):
-        # a concurrent session published while we built: never rmtree the
-        # complete root it may be reading — discard our staging instead
-        shutil.rmtree(staging, ignore_errors=True)
-    else:
-        shutil.rmtree(root, ignore_errors=True)  # clear marker-less partial
-        try:
-            os.rename(staging, root)
-        except OSError:
-            # a concurrent session won the rename — use its complete root
-            shutil.rmtree(staging, ignore_errors=True)
-            if not os.path.exists(marker):
-                raise
-    _SEC_IDX_FIXTURE_DONE.add(root)
     return _sec_index_handles(spark, root)
 
 
@@ -2271,98 +2263,81 @@ def streaming_matview_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"stream_mv_v{_STREAM_MV_VERSION}_{sf_tag(sf_dir)}_"
         f"{input_tag(sf_dir, 'orders')}",
     )
-    marker = os.path.join(root, "_COMPLETE")
-    if root in _STREAM_MV_DONE or os.path.exists(marker):
-        _STREAM_MV_DONE.add(root)
-        _, mv = _stream_mv_handles(spark, root)
-        return mv.df()
-    staging = f"{root}.build.{os.getpid()}"
-    shutil.rmtree(staging, ignore_errors=True)
-    src_dir, ckpt = os.path.join(staging, "batches"), os.path.join(staging, "ckpt")
-    base, mv = _stream_mv_handles(spark, staging)
-    o = load(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_custkey").alias("cust"),
-        F.floor(F.col("o_totalprice") * 100).cast("bigint").alias("val"),
-    )
-    base.create(
-        o.select(
-            "k", (F.col("cust") % 97).alias("grp"), "val",
-            F.lit(0).cast("int").alias("ts"),
+
+    def make(staging: str) -> None:
+        src_dir, ckpt = os.path.join(staging, "batches"), os.path.join(staging, "ckpt")
+        base, mv = _stream_mv_handles(spark, staging)
+        o = load(spark, sf_dir, "orders").select(
+            F.col("o_orderkey").alias("k"),
+            F.col("o_custkey").alias("cust"),
+            F.floor(F.col("o_totalprice") * 100).cast("bigint").alias("val"),
         )
-    )
-    mv.build()
-    mutations = (
-        o.where(F.col("k") % 4 == 1)
-        .select(
-            "k",
-            F.when(
-                F.col("k") % 8 == 1, (F.col("cust") + 1) % 97
-            ).otherwise(F.col("cust") % 97).alias("grp"),
-            (F.col("val") + 13).alias("val"),
-            F.lit(10).cast("int").alias("ts"),
-        )
-        .unionByName(
-            o.where(F.col("k") % 4 == 3).select(
-                "k", (F.col("cust") % 97).alias("grp"),
-                (F.col("val") + 29).alias("val"),
-                F.lit(10).cast("int").alias("ts"),
+        base.create(
+            o.select(
+                "k", (F.col("cust") % 97).alias("grp"), "val",
+                F.lit(0).cast("int").alias("ts"),
             )
         )
-        .unionByName(
-            o.where(F.col("k") % 4 == 2).select(
-                (F.col("k") + 20_000_000).alias("k"),
-                (F.col("cust") % 97).alias("grp"),
-                F.lit(777).cast("bigint").alias("val"),
+        mv.build()
+        mutations = (
+            o.where(F.col("k") % 4 == 1)
+            .select(
+                "k",
+                F.when(
+                    F.col("k") % 8 == 1, (F.col("cust") + 1) % 97
+                ).otherwise(F.col("cust") % 97).alias("grp"),
+                (F.col("val") + 13).alias("val"),
                 F.lit(10).cast("int").alias("ts"),
             )
+            .unionByName(
+                o.where(F.col("k") % 4 == 3).select(
+                    "k", (F.col("cust") % 97).alias("grp"),
+                    (F.col("val") + 29).alias("val"),
+                    F.lit(10).cast("int").alias("ts"),
+                )
+            )
+            .unionByName(
+                o.where(F.col("k") % 4 == 2).select(
+                    (F.col("k") + 20_000_000).alias("k"),
+                    (F.col("cust") % 97).alias("grp"),
+                    F.lit(777).cast("bigint").alias("val"),
+                    F.lit(10).cast("int").alias("ts"),
+                )
+            )
         )
-    )
-    os.makedirs(src_dir, exist_ok=True)
-    for b in range(3):
-        tmp = os.path.join(staging, f"tmp{b}")
-        mutations.where(F.pmod(F.col("k"), F.lit(3)) == b).coalesce(
-            1
-        ).write.mode("overwrite").parquet(tmp)
-        part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-        shutil.move(
-            os.path.join(tmp, part), os.path.join(src_dir, f"b{b}.parquet")
+        os.makedirs(src_dir, exist_ok=True)
+        for b in range(3):
+            tmp = os.path.join(staging, f"tmp{b}")
+            mutations.where(F.pmod(F.col("k"), F.lit(3)) == b).coalesce(
+                1
+            ).write.mode("overwrite").parquet(tmp)
+            part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
+            shutil.move(
+                os.path.join(tmp, part), os.path.join(src_dir, f"b{b}.parquet")
+            )
+            shutil.rmtree(tmp, ignore_errors=True)
+        stream = (
+            spark.readStream.format("parquet")
+            .schema("k bigint, grp bigint, val bigint, ts int")
+            .option("maxFilesPerTrigger", 1)
+            .load(src_dir)
         )
-        shutil.rmtree(tmp, ignore_errors=True)
-    stream = (
-        spark.readStream.format("parquet")
-        .schema("k bigint, grp bigint, val bigint, ts int")
-        .option("maxFilesPerTrigger", 1)
-        .load(src_dir)
-    )
-    q = ST.merge_stream_into_matviewed_table(
-        stream, mv, ckpt, available_now=True
-    )
-    # the marker must NEVER land on a half-run stream: a timed-out build
-    # published cross-session would hash-fail every future session on
-    # this machine (no rebuild — the marker exists and the version tag is
-    # unchanged). Same checked-timeout convention as the other graded
-    # streaming fixtures.
-    if not q.awaitTermination(300):
-        q.stop()
-        shutil.rmtree(staging, ignore_errors=True)
-        raise TimeoutError("stream_mv fixture stream did not finish in 300s")
-    with open(os.path.join(staging, "_COMPLETE"), "w") as f:
-        f.write(str(_STREAM_MV_VERSION))
-    if os.path.exists(marker):
-        # a concurrent session published while we built: NEVER rmtree the
-        # complete root it may be reading — discard our staging instead
-        shutil.rmtree(staging, ignore_errors=True)
-    else:
-        shutil.rmtree(root, ignore_errors=True)  # clear marker-less partial
-        try:
-            os.rename(staging, root)
-        except OSError:
-            # a concurrent session won the rename — use its complete root
+        q = ST.merge_stream_into_matviewed_table(
+            stream, mv, ckpt, available_now=True
+        )
+        # the marker must NEVER land on a half-run stream: a timed-out build
+        # published cross-session would hash-fail every future session on
+        # this machine (no rebuild — the marker exists and the version tag is
+        # unchanged). Same checked-timeout convention as the other graded
+        # streaming fixtures.
+        if not q.awaitTermination(300):
+            q.stop()
             shutil.rmtree(staging, ignore_errors=True)
-            if not os.path.exists(marker):
-                raise
-    _STREAM_MV_DONE.add(root)
+            raise TimeoutError("stream_mv fixture stream did not finish in 300s")
+
+    if root not in _STREAM_MV_DONE:
+        publish_fixture(root, make, _STREAM_MV_VERSION)
+        _STREAM_MV_DONE.add(root)
     _, mv = _stream_mv_handles(spark, root)
     return mv.df()
 
@@ -2394,46 +2369,34 @@ def _bloom_pr_fixture(spark: SparkSession, sf_dir: str) -> KeyedTable:
         f"bloom_pr_v{_BLOOM_PR_VERSION}_{sf_tag(sf_dir)}_"
         f"{input_tag(sf_dir, 'customer')}",
     )
-    marker = os.path.join(root, "_COMPLETE")
-    if os.path.exists(marker):
-        return KeyedTable(
-            spark, root, key_col="key", ts_col="ts",
+
+    def make(staging: str) -> None:
+        tbl = KeyedTable(
+            spark, staging, key_col="key", ts_col="ts",
             bloom=True,
         )
-    staging = f"{root}.build.{os.getpid()}"
-    shutil.rmtree(staging, ignore_errors=True)
-    tbl = KeyedTable(
-        spark, staging, key_col="key", ts_col="ts",
-        bloom=True,
-    )
-    cust = load(spark, sf_dir, "customer")
-    rows = cust.select(
-        F.col("c_custkey").alias("key"),
-        F.floor(F.col("c_acctbal") * 100).cast("bigint").alias("bal"),
-        F.lit(100).cast("int").alias("ts"),
-    )
-    tbl.create(rows)
-    tbl.update(
-        rows.where(F.col("key") % 13 == 6).select(
-            "key", (F.col("bal") + 2000000).alias("bal"),
-            F.lit(200).cast("int").alias("ts"),
+        cust = load(spark, sf_dir, "customer")
+        rows = cust.select(
+            F.col("c_custkey").alias("key"),
+            F.floor(F.col("c_acctbal") * 100).cast("bigint").alias("bal"),
+            F.lit(100).cast("int").alias("ts"),
         )
-    )
-    tbl.update(
-        rows.where(F.col("key") % 11 == 4).select(
-            "key", (F.col("bal") + 1000000).alias("bal"),
-            F.lit(300).cast("int").alias("ts"),
+        tbl.create(rows)
+        tbl.update(
+            rows.where(F.col("key") % 13 == 6).select(
+                "key", (F.col("bal") + 2000000).alias("bal"),
+                F.lit(200).cast("int").alias("ts"),
+            )
         )
-    )
-    tbl.delete(rows.where(F.col("key") % 17 == 9).select("key"))
-    open(os.path.join(staging, "_COMPLETE"), "w").write(str(_BLOOM_PR_VERSION))
-    shutil.rmtree(root, ignore_errors=True)
-    try:
-        os.rename(staging, root)
-    except OSError:
-        shutil.rmtree(staging, ignore_errors=True)
-        if not os.path.exists(marker):
-            raise
+        tbl.update(
+            rows.where(F.col("key") % 11 == 4).select(
+                "key", (F.col("bal") + 1000000).alias("bal"),
+                F.lit(300).cast("int").alias("ts"),
+            )
+        )
+        tbl.delete(rows.where(F.col("key") % 17 == 9).select("key"))
+
+    publish_fixture(root, make, _BLOOM_PR_VERSION)
     return KeyedTable(
         spark, root, key_col="key", ts_col="ts", bloom=True
     )

@@ -23,6 +23,7 @@ from spark_on_hbase_spark.inventory import (
     build,
     input_tag,
     load,
+    publish_fixture,
     query,
     sf_tag,
     warmer,
@@ -2841,7 +2842,6 @@ def _clu_lsh_corpus(spark: SparkSession, sf_dir: str = "") -> DataFrame:
     parquet instead of re-deriving 4096x64 vectors through the hash
     expression tree."""
     import os
-    import shutil
     import tempfile
 
     key = spark.sparkContext.applicationId
@@ -2850,27 +2850,13 @@ def _clu_lsh_corpus(spark: SparkSession, sf_dir: str = "") -> DataFrame:
             tempfile.gettempdir(),
             f"clu_lsh_v{_CLU_LSH_VERSION}_n{_CLU_N}k{_CLU_K}b{_CLU_B}",
         )
-        marker = os.path.join(root, "_COMPLETE")
-        if not os.path.exists(marker):
-            staging = f"{root}.build.{os.getpid()}"
-            shutil.rmtree(staging, ignore_errors=True)
-            _clu_lsh_build(spark, sf_dir).write.mode("overwrite").parquet(
+        publish_fixture(
+            root,
+            lambda staging: _clu_lsh_build(spark, sf_dir).write.parquet(
                 os.path.join(staging, "assign")
-            )
-            with open(os.path.join(staging, "_COMPLETE"), "w") as f:
-                f.write(str(_CLU_LSH_VERSION))
-            if os.path.exists(marker):
-                # a concurrent session published while we built: never
-                # rmtree the complete root it may be reading
-                shutil.rmtree(staging, ignore_errors=True)
-            else:
-                shutil.rmtree(root, ignore_errors=True)
-                try:
-                    os.rename(staging, root)
-                except OSError:
-                    shutil.rmtree(staging, ignore_errors=True)
-                    if not os.path.exists(marker):
-                        raise
+            ),
+            _CLU_LSH_VERSION,
+        )
         cb = spark.read.parquet(os.path.join(root, "assign")).persist()
         cb.count()
         _CLU_LSH_CACHE[key] = cb
@@ -5570,7 +5556,6 @@ def _nd_index_fixture(spark: SparkSession, sf_dir: str) -> dict:
     update batch (the exact clones, ts 200) — the O(batch) incremental
     ingest the graded query's probe must see reflected in the index."""
     import os as _os
-    import shutil as _shutil
     import tempfile as _tempfile
 
     root = _os.path.join(
@@ -5578,35 +5563,22 @@ def _nd_index_fixture(spark: SparkSession, sf_dir: str) -> dict:
         f"nd_idx_fix_v{_ND_IDX_VERSION}_{sf_tag(sf_dir)}_"
         f"{input_tag(sf_dir, 'documents')}",
     )
-    marker = _os.path.join(root, "_COMPLETE")
-    if root in _ND_IDX_DONE or _os.path.exists(marker):
+
+    def make(staging: str) -> None:
+        h = _nd_index_handles(spark, staging)
+        docs = load(spark, sf_dir, "documents").select("doc_id", "text")
+        h["base"].create(docs.withColumn("ts", F.lit(100).cast("int")))
+        h["idx"].build()
+        clones = docs.where(F.col("doc_id") % 10 == 0).select(
+            (F.col("doc_id") + 1000000).alias("doc_id"),
+            "text",
+            F.lit(200).cast("int").alias("ts"),
+        )
+        h["idx"].update(clones)
+
+    if root not in _ND_IDX_DONE:
+        publish_fixture(root, make, _ND_IDX_VERSION)
         _ND_IDX_DONE.add(root)
-        return _nd_index_handles(spark, root)
-    staging = f"{root}.build.{_os.getpid()}"
-    _shutil.rmtree(staging, ignore_errors=True)
-    h = _nd_index_handles(spark, staging)
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    h["base"].create(docs.withColumn("ts", F.lit(100).cast("int")))
-    h["idx"].build()
-    clones = docs.where(F.col("doc_id") % 10 == 0).select(
-        (F.col("doc_id") + 1000000).alias("doc_id"),
-        "text",
-        F.lit(200).cast("int").alias("ts"),
-    )
-    h["idx"].update(clones)
-    with open(_os.path.join(staging, "_COMPLETE"), "w") as f:
-        f.write(str(_ND_IDX_VERSION))
-    if _os.path.exists(marker):
-        _shutil.rmtree(staging, ignore_errors=True)
-    else:
-        _shutil.rmtree(root, ignore_errors=True)
-        try:
-            _os.rename(staging, root)
-        except OSError:
-            _shutil.rmtree(staging, ignore_errors=True)
-            if not _os.path.exists(marker):
-                raise
-    _ND_IDX_DONE.add(root)
     return _nd_index_handles(spark, root)
 
 
@@ -5828,7 +5800,6 @@ def _curi_fixture(spark: SparkSession, sf_dir: str) -> dict:
     SNAP sidecar records the pre-mutation snapshot seq for time travel and
     the change feed."""
     import os as _os
-    import shutil as _shutil
     import tempfile as _tempfile
 
     from spark_on_hbase_spark.table import KeyedTable
@@ -5838,7 +5809,6 @@ def _curi_fixture(spark: SparkSession, sf_dir: str) -> dict:
         f"curi_fix_v{_CURI_VERSION}_{sf_tag(sf_dir)}_"
         f"{input_tag(sf_dir, 'documents')}",
     )
-    marker = _os.path.join(root, "_COMPLETE")
 
     def handles(r: str, snap: int | None = None) -> dict:
         tbl = KeyedTable(
@@ -5850,38 +5820,25 @@ def _curi_fixture(spark: SparkSession, sf_dir: str) -> dict:
                 snap = int(fh.read().strip())
         return {"tbl": tbl, "snap": snap}
 
-    if root in _CURI_DONE or _os.path.exists(marker):
-        _CURI_DONE.add(root)
-        return handles(root)
-    staging = f"{root}.build.{_os.getpid()}"
-    _shutil.rmtree(staging, ignore_errors=True)
-    corp = corpus(spark, sf_dir)
-    h = handles(staging, snap=0)
-    h["tbl"].create(corp.withColumn("ts", F.lit(100).cast("int")))
-    snap = h["tbl"].snapshot_seq()
-    h["tbl"].update(
-        corp.where(F.col("doc_id") % 7 == 2).select(
-            "doc_id",
-            F.expr("substring(text, instr(text, ' ') + 1)").alias("text"),
-            F.lit(200).cast("int").alias("ts"),
+    def make(staging: str) -> None:
+        corp = corpus(spark, sf_dir)
+        h = handles(staging, snap=0)
+        h["tbl"].create(corp.withColumn("ts", F.lit(100).cast("int")))
+        snap = h["tbl"].snapshot_seq()
+        h["tbl"].update(
+            corp.where(F.col("doc_id") % 7 == 2).select(
+                "doc_id",
+                F.expr("substring(text, instr(text, ' ') + 1)").alias("text"),
+                F.lit(200).cast("int").alias("ts"),
+            )
         )
-    )
-    h["tbl"].delete(corp.where(F.col("doc_id") % 13 == 3).select("doc_id"))
-    with open(_os.path.join(staging, "SNAP"), "w") as fh:
-        fh.write(str(snap))
-    with open(_os.path.join(staging, "_COMPLETE"), "w") as f:
-        f.write(str(_CURI_VERSION))
-    if _os.path.exists(marker):
-        _shutil.rmtree(staging, ignore_errors=True)
-    else:
-        _shutil.rmtree(root, ignore_errors=True)
-        try:
-            _os.rename(staging, root)
-        except OSError:
-            _shutil.rmtree(staging, ignore_errors=True)
-            if not _os.path.exists(marker):
-                raise
-    _CURI_DONE.add(root)
+        h["tbl"].delete(corp.where(F.col("doc_id") % 13 == 3).select("doc_id"))
+        with open(_os.path.join(staging, "SNAP"), "w") as fh:
+            fh.write(str(snap))
+
+    if root not in _CURI_DONE:
+        publish_fixture(root, make, _CURI_VERSION)
+        _CURI_DONE.add(root)
     return handles(root)
 
 

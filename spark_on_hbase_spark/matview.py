@@ -16,11 +16,11 @@ and Applications", IEEE DE Bulletin 1995) with O(Δ) work per refresh:
     delta(group) = agg(new state of changed keys)
                  − agg(old state of changed keys)
 
-applied to the stored aggregate as DELTA rows (one per touched group,
+applied to the stored aggregate as increments (one per touched group,
 every sum and the count in the same row) of the refresh's ONE view layer.
 SUM and COUNT are self-maintainable under insert/update/delete (the delta
 is computable from the changed rows alone). Each SUM also keeps the
-count of its non-NULL inputs in the view state: a DELTA row cannot store
+count of its non-NULL inputs in the view state: an increment cannot store
 NULL, so a group whose summed values all became NULL would read 0 where
 a recomputed GROUP BY reads NULL; ``df()`` returns NULL where that count
 is 0.
@@ -33,12 +33,11 @@ column) the affected groups' current rows come from ONE multi-range index
 read (``lookup_in`` — O(|groups| + result) files); without one, a single
 base scan semi-joined to the affected groups (the honest degradation,
 documented cost O(table) per refresh). The recomputed extremes ride the
-same layer as the sum deltas: a SPARSE row per group holding its non-NULL
-extremes, and a CELLDEL row naming the extremes that came out NULL (a
-SPARSE NULL means "keep stored", so a NULL result needs a cell delete).
-The rows of one group touch disjoint cells and at most one of them is
-SPARSE, so they commute inside the layer (``_merge_layers_fold``), and
-sums and extremes commit together.
+same layer as the sum deltas (``KeyedTable._mutate``): a put of each
+group's recomputed extremes and a cell delete of the ones that came out
+NULL (a put's NULL means "keep stored", so a NULL result needs a cell
+delete, which folds after the put of its layer), and sums and extremes
+commit together.
 
 Scale posture, piece by piece:
 - change detection reads ONLY the post-snapshot layers (metadata-pruned —
@@ -71,8 +70,9 @@ Consistency + crash story:
   commit point: a crash before the swap leaves the view as it was and
   the next refresh redoes the whole window; a crash after it leaves a
   current view, and the next refresh finds nothing to do. ``build()``
-  drops the view before its one commit, so a crash inside a build leaves
-  a view with no stamp, which the next refresh builds;
+  commits its base in place of every view layer, and its stamp in place
+  of the view's stamps, in one swap, so a crash inside a build leaves the
+  old view and horizon readable;
 - a base compaction that folded unprocessed history away (a base layer
   inside the refresh window, or the time-travel horizon passing it) makes
   the read raise ``HistoryFoldedError``, answered with a full rebuild —
@@ -94,19 +94,10 @@ import functools
 import operator
 import os
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from spark_on_hbase_spark.table import (
-    _CELLDEL,
-    _DELCOLS,
-    _DELTA,
-    _KIND,
-    _SPARSE,
-    HistoryFoldedError,
-    KeyedTable,
-    _is_numeric_dtype,
-)
+from spark_on_hbase_spark.table import HistoryFoldedError, KeyedTable, _is_numeric_dtype
 
 #: a view root of the layout before the view log carried the horizon
 _OLD_META = "_mv_meta.json"
@@ -259,23 +250,8 @@ class MaterializedAgg:
             "__mv_ts", F.lit(0).cast("int")
         )
 
-    @staticmethod
-    def _layer_rows(df: DataFrame, schema: dict, kind: int) -> DataFrame:
-        """``df`` as view-layer rows of one ``__kind``: the view columns
-        (and ``__delcols``) ``df`` carries, every other cell NULL."""
-        return df.select(
-            *[
-                (F.col(c) if c in df.columns else F.lit(None)).cast(t).alias(c)
-                for c, t in schema.items()
-            ],
-            F.lit(kind).alias(_KIND),
-            (F.col(_DELCOLS) if _DELCOLS in df.columns else F.lit(None))
-            .cast("array<string>")
-            .alias(_DELCOLS),
-        )
-
-    def _delta_rows(self, old: DataFrame, new: DataFrame, schema: dict) -> DataFrame:
-        """DELTA rows of agg(new) − agg(old): each touched group's sum,
+    def _delta_rows(self, old: DataFrame, new: DataFrame) -> DataFrame:
+        """Increments of agg(new) − agg(old): each touched group's sum,
         non-NULL count and count deltas, groups whose deltas are all zero
         dropped."""
         counted = [*self.sums, *map(self._nn, self.sums)]
@@ -292,19 +268,17 @@ class MaterializedAgg:
             operator.or_,
             [F.coalesce(F.col(c), F.lit(0)) != 0 for c in [*counted, self.count_col]],
         )
-        return self._layer_rows(delta.where(nonzero), schema, _DELTA)
+        return delta.where(nonzero)
 
-    def _extreme_rows(
-        self, old: DataFrame, new: DataFrame, schema: dict, cur: int
-    ) -> DataFrame:
-        """The touched groups' MIN/MAX recomputed from their current rows:
-        a SPARSE row of the non-NULL extremes (``__mv_ts = cur``) and a
-        CELLDEL row naming the NULL ones."""
+    def _extreme_rows(self, old: DataFrame, new: DataFrame, cur: int):
+        """(put, cell_delete) of the touched groups' MIN/MAX recomputed
+        from their current rows: a put of the extremes (``__mv_ts =
+        cur``) and a cell delete of the ones that came out NULL."""
         g = F.col(self.group_col)
         groups = (
             old.select(g).unionByName(new.select(g)).where(g.isNotNull()).distinct()
         )
-        # lazily checkpointed: the SPARSE and the CELLDEL rows both derive
+        # lazily checkpointed: the put and the cell delete both derive
         # from it, and the group rows behind it are read once
         ext = (
             self._group_rows(groups)
@@ -314,32 +288,30 @@ class MaterializedAgg:
             .localCheckpoint(eager=False)
         )
         cols = [*self.mins, *self.maxs]
-        nulls = F.array_compact(
-            F.array(*[F.when(F.col(c).isNull(), F.lit(c)) for c in cols])
-        )
-        put = ext.where(F.size(nulls) < len(cols)).withColumn("__mv_ts", F.lit(cur))
-        dropped = ext.select(g, nulls.alias(_DELCOLS)).where(F.size(_DELCOLS) > 0)
-        return self._layer_rows(put, schema, _SPARSE).unionByName(
-            self._layer_rows(dropped, schema, _CELLDEL)
+        return (
+            ext.withColumn("__mv_ts", F.lit(cur)),
+            ext.select(g, *[F.col(c).isNull().alias(c) for c in cols]),
         )
 
     # -- lifecycle -----------------------------------------------------------
 
     def build(self) -> "MaterializedAgg":
-        """Full (re)build: one aggregate scan of the base, committed as a
-        fresh view table's base layer under the stamp of the base snapshot
-        it read; then the view is maintained incrementally. Also the
-        fallback when incremental maintenance is provably impossible
-        (compaction folded the needed history away), and the way to
-        replace a view of the old layout."""
+        """Full (re)build: one aggregate scan of the base, committed as the
+        view table's base layer in place of every view layer, with the
+        stamp of the base snapshot it read in place of the view's stamps
+        (one swap: a crash before it leaves the old view readable); then
+        the view is maintained incrementally. Also the fallback when
+        incremental maintenance is provably impossible (compaction folded
+        the needed history away), and the way to replace a view of the
+        old layout."""
         self._check_exact()
         upto = self.base.snapshot_seq()
-        self.mv.drop()  # a fresh log: the stamp below always commits
+        self.mv._write_layer(
+            self._full_agg(), "base", keep=[],
+            stamps=[f"{_STAMP_PREFIX}{upto:06d}"],
+        )
         with contextlib.suppress(FileNotFoundError):
             os.remove(os.path.join(self.path, _OLD_META))
-        self.mv._write_layer(
-            self._full_agg(), "base", stamp=f"{_STAMP_PREFIX}{upto:06d}"
-        )
         return self
 
     def _changed_states(self, lo: int, hi: int):
@@ -375,9 +347,8 @@ class MaterializedAgg:
         the sum delta (0 when the view is already current or the window
         changed no key — nothing is written then — and -1 when it ran a
         full rebuild instead: a compaction folded the window's history
-        away, the view has no stamp — a build crashed after dropping it,
-        or none ran — or it stores no non-NULL count per SUM). O(Δ) — see
-        the module docstring."""
+        away, the view has no stamp (none was built), or it stores no
+        non-NULL count per SUM). O(Δ) — see the module docstring."""
         self._check_exact()
         try:
             lo, schema = self.applied_upto(), self.mv._schema()
@@ -393,19 +364,10 @@ class MaterializedAgg:
             states = self._changed_states(lo, cur)
             if states is None:
                 return 0
-            layer = self._delta_rows(*states, schema)
-            deltas = None
+            rows = {"increment": self._delta_rows(*states)}
             if self.mins or self.maxs:
-                # the return counts the DELTA rows alone: observe them while
-                # the layer materializes here, once (an observation below
-                # the write's lazy checkpoint would read 0)
-                deltas = Observation()
-                layer = (
-                    layer.unionByName(self._extreme_rows(*states, schema, cur))
-                    .observe(deltas, F.count(F.when(F.col(_KIND) == _DELTA, 1)).alias("n"))
-                    .localCheckpoint()
-                )
-            n = self.mv._write_layer(layer, "delta", stamp=f"{_STAMP_PREFIX}{cur:06d}")
+                rows["put"], rows["cell_delete"] = self._extreme_rows(*states, cur)
+            return self.mv._mutate(rows, f"{_STAMP_PREFIX}{cur:06d}")["increment"]
         except HistoryFoldedError:
             # a compaction folded the history the window needs (a base
             # layer inside it, or the time-travel horizon past it):
@@ -414,8 +376,6 @@ class MaterializedAgg:
             # not silently cost an O(table) rebuild on every refresh
             self.build()
             return -1
-        self.mv._maybe_compact()
-        return n if deltas is None else deltas.get["n"]
 
     def _group_rows(self, groups: DataFrame) -> DataFrame:
         """Current base rows of the given groups — the MIN/MAX recompute

@@ -34,10 +34,14 @@ This table re-expresses that **same LSM design on columnar storage**:
   236-344), each with a narrow key range disjoint from its neighbours';
 - ``update``/``put``/``increment``/``delete``/``bulk_*``: every mutation
   appends ONE sorted delta layer — O(batch) write, the table is never
-  rewritten (the reference's bulkUpdate intent; HBase's memstore append);
+  rewritten (the reference's bulkUpdate intent; HBase's memstore append).
+  They are validation plus one call of ``_mutate``, the one mutation body,
+  which also writes the layers of a ``SecondaryIndex`` and a
+  ``MaterializedAgg``: any mix of the five mutation kinds, shaped to the
+  table's columns and committed as one layer under one stamp;
 - layer row kinds (``__kind``) carry the mutation semantics to the read
   path, exactly as HBase cell types (Put / Delete / DeleteColumn /
-  server-side-add) ride in HFiles:
+  server-side-add) ride in one HFile. Only this module names them:
   ROW 0    whole-row upsert (update/create/compact), last-writer-wins by ts;
   SPARSE 1 cell-level put — non-null cells overwrite, nulls mean "keep
            stored" (HBaseTable.put, HBaseTable.scala:124-155);
@@ -46,7 +50,9 @@ This table re-expresses that **same LSM design on columnar storage**:
            server-side atomic add, here folded at read/compaction);
   CELLDEL 3 per-cell tombstone — ``__delcols`` lists the cells nulled
            (HBase DeleteColumn);
-  plus ``__tombstone`` on ROW rows for whole-row deletes (HBase Delete);
+  plus ``__tombstone`` on ROW rows for whole-row deletes (HBase Delete).
+  One key's rows inside one layer fold in a fixed kind order: delete,
+  upsert, put, increment, cell delete (``_OPS``);
 - reads: a lone base layer scans directly; every multi-layer stack,
   whatever its row kinds, resolves through ONE version fold
   (``_merge_layers_fold``): each key's versions apply in layer order by the
@@ -67,7 +73,9 @@ sort — the same single-shuffle shape as the reference's HFile load.
 from __future__ import annotations
 
 import contextlib
+import functools
 import json
+import operator
 import os
 import shutil
 import threading
@@ -84,6 +92,16 @@ _DELCOLS = "__delcols"
 
 # row kinds (see module docstring); layers without a __kind column are ROW
 _ROW, _SPARSE, _DELTA, _CELLDEL = 0, 1, 2, 3
+
+# the mutation kinds (``changes()``'s op names) with the row kind each
+# writes, in the order one key's rows of one layer fold (see
+# _merge_layers_fold): a tombstone first, so an upsert in the same layer
+# re-inserts; a put before the increment that adds onto it; cell deletes
+# last
+_OPS = {
+    "delete": _ROW, "upsert": _ROW, "put": _SPARSE, "increment": _DELTA,
+    "cell_delete": _CELLDEL,
+}
 
 _LOG = "_log.json"  # the table log (see module docstring)
 
@@ -323,10 +341,11 @@ class KeyedTable:
 
     def _commit(
         self, layers: list[_Layer], stamp: str | None = None, horizon: int = 0,
-        extra: dict | None = None,
+        extra: dict | None = None, stamps: list[str] | None = None,
     ) -> None:
         """THE commit point of every table change: swap in a log listing
-        ``layers``, with ``stamp`` added to the applied stamps, the
+        ``layers``, with ``stamp`` added to the applied stamps (or, given
+        ``stamps``, the applied stamps replaced by them), the
         time-travel horizon raised to ``horizon`` and the owner's record
         replaced by ``extra`` (None keeps the committed one, so every
         commit that does not name a record — compaction included —
@@ -336,10 +355,12 @@ class KeyedTable:
         root = Path(self.path)
         log = self._log()
         layers = sorted(layers, key=lambda L: L.seq)
+        if stamps is None:
+            stamps = log["stamps"]
         tmp = root / f"{_LOG}.tmp"
         tmp.write_text(json.dumps({
             "horizon": max(log["horizon"], horizon),
-            "stamps": sorted({*log["stamps"], *([stamp] if stamp else [])}),
+            "stamps": sorted({*stamps, *([stamp] if stamp else [])}),
             "layers": [L._asdict() for L in layers],
             "extra": log["extra"] if extra is None else extra,
         }))
@@ -370,18 +391,21 @@ class KeyedTable:
                     shutil.rmtree(p, ignore_errors=True)
 
     def _write_layer(
-        self, df: DataFrame, kind: str, row_kind: int | None = None,
-        stamp: str | None = None, seq: int | None = None,
-        keep: list[_Layer] | None = None, extra: dict | None = None,
-    ) -> int:
+        self, df: DataFrame, kind: str, stamp: str | None = None,
+        seq: int | None = None, keep: list[_Layer] | None = None,
+        extra: dict | None = None, stamps: list[str] | None = None,
+    ) -> dict[str, int]:
         """Write one sorted layer, in as many range part-files as AQE
         coalesces its size to (see the module docstring), and commit it
         next to ``keep`` — every live layer by default (a mutation
         appends); a compaction passes the layers its output does not
-        replace. Returns rows written, observed inside the write job (A16
-        accumulator parity) — the observe node sits ABOVE the range
-        exchange, so the sampling pass repartitionByRange runs to pick
-        bounds does not double-count.
+        replace. Returns rows written per mutation kind (``_OPS``' names;
+        a layer without ``__kind`` holds upserts and deletes), observed
+        inside the write job (A16 accumulator parity) — the observe node
+        sits ABOVE the range exchange, so the sampling pass
+        repartitionByRange runs to pick bounds does not double-count.
+        ``df`` carries its row kinds as ``_mutate`` shapes them; a frame
+        without them is ROW rows.
 
         The input runs ONCE: it is lazily checkpointed, so the
         range-sampling job materializes it and the write job reads the
@@ -389,17 +413,15 @@ class KeyedTable:
         two Python-worker passes. A compaction's input needs no lineage
         cut of its own: nothing it reads is deleted before the commit.
 
-        ``row_kind`` stamps a __kind column (sparse put / additive delta /
-        cell delete / ROW tombstones); plain upsert layers omit it and the
-        fold reads a missing __kind as ROW.
-
         ``stamp``: an idempotence token committed in the SAME log swap as
         the layer, so data and applied-marker can never disagree. A stamp
         already in ``applied_stamps()`` marks a retry of a committed
-        write: nothing runs on ``df`` and 0 is returned — the region
+        write: nothing runs on ``df`` and every count is 0 — the region
         server dropping a retried Increment by its nonce. Every stamped
         mutation gets its exactly-once guarantee here, so callers never
-        pre-check.
+        pre-check. ``stamps`` replaces the applied stamps instead, with
+        no retry check — for a base that replaces a table's whole history
+        (a ``MaterializedAgg`` rebuild, whose horizon is its stamp).
 
         ``seq``: explicit layer sequence — ONLY for prefix compaction,
         whose folded base takes the folded prefix's max seq so it orders
@@ -409,7 +431,7 @@ class KeyedTable:
         owner's record, committed in the same swap (see ``_commit``)."""
         log = self._log()
         if stamp is not None and stamp in log["stamps"]:
-            return 0
+            return dict.fromkeys(_OPS, 0)
         root = Path(self.path)
         if not (root / _LOG).exists():
             # the first write commits an empty log before any layer
@@ -424,14 +446,10 @@ class KeyedTable:
         df = df.localCheckpoint(eager=False)
         if _TOMBSTONE not in df.columns:
             df = df.withColumn(_TOMBSTONE, F.lit(False))
-        if row_kind is not None and _KIND not in df.columns:
-            df = df.withColumn(_KIND, F.lit(row_kind).cast("int"))
-        if row_kind == _CELLDEL and _DELCOLS not in df.columns:
-            raise ValueError("CELLDEL layers need a __delcols column")
         out = df.repartitionByRange(F.col(self.key_col)).sortWithinPartitions(
             self.key_col
         )
-        out, obs = _observed_count(out)
+        out, obs = _observed_counts(out)
         out.write.parquet(str(root / name))
         layer = _Layer(
             seq, kind, name,
@@ -440,18 +458,20 @@ class KeyedTable:
         # open the new layer with the schema just written, so its first
         # read skips the schema-inference job
         _cached_layer_df(self.spark, self._paths(layer), _nullable(df.schema))
-        n = int(obs.get["n"])
+        counts = {op: int(n) for op, n in obs.get.items()}
         if self.bloom:
             # SOFT-fail: a sidecar only prunes, so a build error commits
             # the layer without one instead of failing the write
             with contextlib.suppress(Exception):
-                layer = layer._replace(bloom=self._write_bloom(layer, n))
+                layer = layer._replace(
+                    bloom=self._write_bloom(layer, sum(counts.values()))
+                )
         self._commit(
             (live if keep is None else keep) + [layer], stamp,
-            seq if kind == "base" else 0, extra,
+            seq if kind == "base" else 0, extra, stamps,
         )
         self._sweep()
-        return n
+        return counts
 
     def applied_stamps(self) -> set[str]:
         """Every idempotence stamp this table has committed — the log
@@ -769,10 +789,12 @@ class KeyedTable:
         read — O(changed layers), the table itself is never scanned.
 
         Output: the table's columns plus ``__seq`` (the layer that carried
-        the change — replay in ``__seq`` order reproduces the table's fold
-        exactly), ``op`` ('upsert' | 'put' | 'increment' | 'delete' |
-        'cell_delete' — the five mutation kinds, HBase's Put / partial Put /
-        server-side-add / Delete / DeleteColumn), and ``deleted_cells``
+        the change — replay in ``__seq`` order, and one layer's rows of a
+        key in the fold's kind order delete, upsert, put, increment,
+        cell_delete, reproduces the table's fold exactly), ``op`` ('upsert'
+        | 'put' | 'increment' | 'delete' | 'cell_delete' — the five
+        mutation kinds, HBase's Put / partial Put / server-side-add /
+        Delete / DeleteColumn), and ``deleted_cells``
         (comma-joined cell names for cell_delete, else NULL). Semantics per
         op mirror the write path: 'put' rows carry NULL for cells the batch
         did not touch ("keep stored"), 'increment' rows carry the DELTA in
@@ -780,7 +802,7 @@ class KeyedTable:
         like the read path), 'delete' rows are key-only. Pair with
         ``snapshot_seq()``: ``changes(since_layer=snap)`` is everything
         applied after the snapshot, exactly once, never reordered within a
-        key (layer seq is the order). Compaction folds history away, so a
+        key (layer seq, then kind, is the order). Compaction folds history away, so a
         feed must be consumed before its layers compact — same horizon
         contract as time travel (``_visible_layers`` raises for an
         ``until_layer`` below the last compaction, and a base layer
@@ -806,19 +828,7 @@ class KeyedTable:
         frames = []
         for L in layers:
             f = self._layer_df(L)
-            if _KIND in f.columns:
-                op = (
-                    F.when(F.col(_KIND) == _SPARSE, F.lit("put"))
-                    .when(F.col(_KIND) == _DELTA, F.lit("increment"))
-                    .when(F.col(_KIND) == _CELLDEL, F.lit("cell_delete"))
-                    .when(F.col(_TOMBSTONE), F.lit("delete"))
-                    .otherwise(F.lit("upsert"))
-                )
-            else:
-                op = F.when(F.col(_TOMBSTONE), F.lit("delete")).otherwise(
-                    F.lit("upsert")
-                )
-            f = f.withColumn("op", op).withColumn(
+            f = f.withColumn("op", _op_col(f.columns)).withColumn(
                 "__seq", F.lit(L.seq).cast("bigint")
             )
             f = f.withColumn(
@@ -1032,6 +1042,64 @@ class KeyedTable:
 
     # -- mutations ---------------------------------------------------------
 
+    def _mutate(
+        self, rows: dict[str, DataFrame], stamp: str | None = None,
+        extra: dict | None = None,
+    ) -> dict[str, int]:
+        """THE mutation body: ``rows`` maps mutation kinds (``_OPS``' names)
+        to relations keyed by the table's key column, shaped here to the
+        table's columns (typed NULL where a relation has none) and written
+        as ONE delta layer in ONE commit under ``stamp``, with ``extra``
+        (the owner's record, see ``_commit``) in the same swap; then the
+        inline compaction check. Per kind:
+
+        - ``upsert``: whole rows (ROW), ``put``: cells to overwrite
+          (SPARSE), ``increment``: additive cells (DELTA) — each keeps the
+          table columns it carries;
+        - ``delete``: row tombstones — only the key is kept;
+        - ``cell_delete``: boolean columns named after table cells, TRUE
+          deleting that cell of the key (CELLDEL); a row deleting no cell
+          is dropped.
+
+        One key's rows of the layer fold in ``_OPS`` order (delete first,
+        so an upsert of the same layer re-inserts the key). Returns the
+        rows written per kind, observed by the write job; a retry of an
+        applied stamp writes nothing and returns zeros."""
+        schema = self._schema()
+        # a layer of ROW rows alone carries no __kind (the fold reads its
+        # absence as ROW), and one without cell deletes no __delcols
+        kinded = bool(set(rows) - {"upsert", "delete"})
+        parts = []
+        for op, df in rows.items():
+            kept = {self.key_col} if op in ("delete", "cell_delete") else set(df.columns)
+            cols = [
+                (F.col(c) if c in kept else F.lit(None)).cast(t).alias(c)
+                for c, t in schema.items()
+            ]
+            cols.append(F.lit(op == "delete").alias(_TOMBSTONE))
+            if kinded:
+                cols.append(F.lit(_OPS[op]).alias(_KIND))
+            if "cell_delete" in rows:
+                named = [
+                    c for c in df.columns
+                    if op == "cell_delete" and c in schema and c != self.key_col
+                ]
+                cols.append(
+                    F.array_compact(
+                        F.array(*[F.when(F.col(c), F.lit(c)) for c in named])
+                    ).alias(_DELCOLS)
+                    if named
+                    else F.lit(None).cast("array<string>").alias(_DELCOLS)
+                )
+            part = df.select(*cols)
+            if op == "cell_delete":
+                part = part.where(F.size(_DELCOLS) > 0)
+            parts.append(part)
+        layer = functools.reduce(DataFrame.unionByName, parts)
+        counts = self._write_layer(layer, "delta", stamp=stamp, extra=extra)
+        self._maybe_compact()
+        return counts
+
     def update(self, batch: DataFrame, stamp: str | None = None) -> int:
         """Upsert whole rows by key, last-writer-wins by ``ts`` (S5,
         HBaseTable.update, HBaseTable.scala:100-122): ONE appended delta
@@ -1040,15 +1108,15 @@ class KeyedTable:
         inside the write job (see _write_layer), not a second pass.
 
         Whole-row means WHOLE row: the batch must carry exactly the
-        table's columns. A missing column would write a layer the merge
-        can no longer read (every subsequent scan fails) — fail fast
-        BEFORE writing instead; partial-row mutations are ``put``'s job.
+        table's columns. A missing column would silently NULL a cell —
+        fail fast BEFORE writing instead; partial-row mutations are
+        ``put``'s job.
 
         ``stamp`` names the layer and makes the call apply at most once:
         a retry with an applied stamp writes nothing and returns 0 (see
         ``_write_layer``; the same holds for put, increment and delete)."""
         expected = set(self._schema())
-        got = set(batch.columns) - {_TOMBSTONE}
+        got = set(batch.columns)
         if got != expected:
             missing, extra = sorted(expected - got), sorted(got - expected)
             raise ValueError(
@@ -1056,9 +1124,7 @@ class KeyedTable:
                 f"(missing {missing}, unexpected {extra}); use put() for "
                 f"partial rows"
             )
-        n = self._write_layer(batch, "delta", stamp=stamp)
-        self._maybe_compact()
-        return n
+        return self._mutate({"upsert": batch}, stamp)["upsert"]
 
     # S9 bulkUpdate shares semantics with update; both are one sorted layer
     # write — the HFile path made literal.
@@ -1072,8 +1138,8 @@ class KeyedTable:
         analyzing the full merged-fold plan (per-column window and CASE
         expressions) costs Catalyst 50-200ms, and every mutation calls
         this — the footer read is equivalent because every live layer
-        carries the full data-column set (update validates it, put/delete/
-        increment shape to it, add/drop_column compact first) and the merge
+        carries the full data-column set (``_mutate`` shapes every
+        mutation to it, add/drop_column compact first) and the merge
         preserves the lowest layer's column ORDER (``unionByName``; the
         fold takes payload order from frames[0]), which callers rely on to
         shape layers consistently."""
@@ -1102,19 +1168,10 @@ class KeyedTable:
         is neither read nor rewritten, matching HBase's per-cell memstore
         append. A retry with an applied ``stamp`` returns 0 (see
         ``update``)."""
-        schema = self._schema()
-        unknown = [c for c in batch.columns if c not in schema]
+        unknown = [c for c in batch.columns if c not in self._schema()]
         if unknown:
             raise ValueError(f"columns not in table schema: {unknown}")
-        sparse = batch.select(
-            *[
-                (F.col(c).cast(t) if c in batch.columns else F.lit(None).cast(t)).alias(c)
-                for c, t in schema.items()
-            ]
-        )
-        n = self._write_layer(sparse, "delta", row_kind=_SPARSE, stamp=stamp)
-        self._maybe_compact()
-        return n
+        return self._mutate({"put": batch}, stamp)["put"]
 
     bulk_load = put
 
@@ -1162,31 +1219,13 @@ class KeyedTable:
             if col in (self.key_col, self.ts_col):
                 raise ValueError(f"cannot increment {col}: key/ts column")
         deltas = batch.groupBy(self.key_col).agg(
-            *[
-                F.sum(F.col(dcol)).alias(f"__d_{col}")
-                for col, dcol in counters.items()
-            ]
+            *[F.sum(F.col(dcol)).alias(col) for col, dcol in counters.items()]
         )
-        nonzero = None
-        for col in counters:
-            c = F.coalesce(F.col(f"__d_{col}"), F.lit(0)) != 0
-            nonzero = c if nonzero is None else (nonzero | c)
-        deltas = deltas.where(nonzero)
-        layer = deltas.select(
-            *[
-                (
-                    F.col(self.key_col)
-                    if c == self.key_col
-                    else F.col(f"__d_{c}").cast(t)
-                    if c in counters
-                    else F.lit(None).cast(t)
-                ).alias(c)
-                for c, t in schema.items()
-            ]
+        nonzero = functools.reduce(
+            operator.or_,
+            [F.coalesce(F.col(col), F.lit(0)) != 0 for col in counters],
         )
-        n = self._write_layer(layer, "delta", row_kind=_DELTA, stamp=stamp)
-        self._maybe_compact()
-        return n
+        return self._mutate({"increment": deltas.where(nonzero)}, stamp)["increment"]
 
     def delete(
         self, keys: DataFrame, columns: list[str] | None = None,
@@ -1199,33 +1238,21 @@ class KeyedTable:
         O(batch): only the keys are written — the table is not read;
         resolution happens at merge/compaction like every other mutation.
         A retry with an applied ``stamp`` returns 0 (see ``update``)."""
-        schema = self._schema()
         keys = keys.select(self.key_col).distinct()
-        skeleton = keys.select(
-            *[
-                (F.col(c) if c == self.key_col else F.lit(None).cast(t)).alias(c)
-                for c, t in schema.items()
-            ]
-        )
         if not columns:
-            n = self._write_layer(
-                skeleton.withColumn(_TOMBSTONE, F.lit(True)), "delta", row_kind=_ROW,
-                stamp=stamp,
-            )
-        else:
-            # ts_col is rejected alongside key_col: the fold's ts-column
-            # branch carries no CELLDEL case (the version timestamp is merge
-            # bookkeeping, not a deletable cell), so accepting it would
-            # silently ignore the delete
-            bad = [c for c in columns if c not in schema or c in (self.key_col, self.ts_col)]
-            if bad:
-                raise ValueError(f"cannot column-delete: {bad}")
-            marked = skeleton.withColumn(
-                _DELCOLS, F.array(*[F.lit(c) for c in columns]).cast("array<string>")
-            )
-            n = self._write_layer(marked, "delta", row_kind=_CELLDEL, stamp=stamp)
-        self._maybe_compact()
-        return n
+            return self._mutate({"delete": keys}, stamp)["delete"]
+        # ts_col is rejected alongside key_col: the fold's ts-column
+        # branch carries no CELLDEL case (the version timestamp is merge
+        # bookkeeping, not a deletable cell), so accepting it would
+        # silently ignore the delete
+        schema = self._schema()
+        bad = [c for c in columns if c not in schema or c in (self.key_col, self.ts_col)]
+        if bad:
+            raise ValueError(f"cannot column-delete: {bad}")
+        cells = keys.select(
+            self.key_col, *[F.lit(True).alias(c) for c in dict.fromkeys(columns)]
+        )
+        return self._mutate({"cell_delete": cells}, stamp)["cell_delete"]
 
     bulk_delete = delete
 
@@ -1486,17 +1513,38 @@ def _nullable(dt):
     return dt
 
 
-def _observed_count(df: DataFrame):
-    """Attach a row-count observation to ``df`` — the engine's twin of the
-    reference's write-path accumulators (A16, HBaseTable.scala:127,137,168):
-    the count is collected DURING the write job by the observe operator, so
-    mutations report rows applied without a second pass over the batch (or,
-    for deletes, over the table). Returns (observed_df, Observation); read
-    ``obs.get["n"]`` after the write action."""
+def _op_col(columns) -> "F.Column":
+    """Each layer row's mutation kind, by ``_OPS``' names — the ``op`` of
+    ``changes()`` and the key of ``_write_layer``'s counts. A layer
+    without ``__kind`` holds ROW rows."""
+    tomb = F.col(_TOMBSTONE) if _TOMBSTONE in columns else F.lit(False)
+    op = F.when(tomb, F.lit("delete"))
+    if _KIND in columns:
+        k = F.col(_KIND)
+        op = (
+            F.when(k == _SPARSE, F.lit("put"))
+            .when(k == _DELTA, F.lit("increment"))
+            .when(k == _CELLDEL, F.lit("cell_delete"))
+            .when(tomb, F.lit("delete"))
+        )
+    return op.otherwise(F.lit("upsert"))
+
+
+def _observed_counts(df: DataFrame):
+    """Attach a per-kind row-count observation to ``df`` — the engine's
+    twin of the reference's write-path accumulators (A16,
+    HBaseTable.scala:127,137,168): the counts are collected DURING the
+    write job by the observe operator, so mutations report rows applied
+    without a second pass over the batch (or, for deletes, over the
+    table). Returns (observed_df, Observation); ``obs.get`` maps each of
+    ``_OPS`` to its count after the write action."""
     from pyspark.sql import Observation
 
     obs = Observation()
-    return df.observe(obs, F.count(F.lit(1)).alias("n")), obs
+    op = _op_col(df.columns)
+    return df.observe(
+        obs, *[F.count(F.when(op == name, 1)).alias(name) for name in _OPS]
+    ), obs
 
 
 def _fold_q(c: str) -> str:  # identifier quoting
@@ -1575,13 +1623,14 @@ def _merge_layers_fold(
        order after it, so even float addition associates exactly as the
        sequential rule does (bit-identical doubles).
 
-    In-layer duplicate keys share a seq; their relative order is arbitrary
-    (row_number's tie-break), so a batch must not rely on it. Rows of one
-    layer for one key commute when at most one of them is ROW or SPARSE
-    and no two touch the same cell (a ROW touches every cell, a SPARSE or
-    DELTA its non-null cells, a CELLDEL the cells it names) — the shape
-    of a ``MaterializedAgg`` refresh layer's DELTA, SPARSE and CELLDEL
-    rows of one group."""
+    One key's rows inside one layer apply in ``_OPS`` order: ROW
+    tombstones, ROW upserts, SPARSE, DELTA, CELLDEL — one more sort key of
+    the same window, no extra shuffle. So a layer that tombstones a key
+    and upserts it again (an index layer re-inserting an unchanged entry)
+    leaves it live, and a put and an increment of one cell apply put
+    first. Rows of one kind share their position; their relative order
+    is row_number's tie-break, arbitrary, so a batch must not rely on
+    it."""
     data_cols = [c for c in frames[0].columns if c not in (_TOMBSTONE, _KIND, _DELCOLS)]
     payload = [c for c in data_cols if c != key_col]
     dtypes = dict(frames[0].dtypes)
@@ -1590,18 +1639,21 @@ def _merge_layers_fold(
 
     tagged = None
     for seq, f in enumerate(frames):
+        kind = f"CAST({q(_KIND)} AS INT)" if _KIND in f.columns else f"CAST({_ROW} AS INT)"
+        tomb = q(_TOMBSTONE) if _TOMBSTONE in f.columns else "false"
         sel = [
             key_q,
             f"CAST({seq} AS INT) AS __fseq",
-            (
-                f"CAST({q(_KIND)} AS INT)"
-                if _KIND in f.columns
-                else f"CAST({_ROW} AS INT)"
-            )
-            + " AS __fk",
+            f"{kind} AS __fk",
             (q(_DELCOLS) if _DELCOLS in f.columns else "CAST(NULL AS ARRAY<STRING>)")
             + " AS __fdc",
-            (q(_TOMBSTONE) if _TOMBSTONE in f.columns else "false") + " AS __ftb",
+            f"{tomb} AS __ftb",
+            # the position inside one layer, in _OPS order — a column the
+            # window passes share, not an ORDER BY expression each pass
+            # would re-derive under a fresh name (Spark then re-sorts for
+            # every pass it cannot match to its child's order)
+            f"CASE WHEN {kind} = {_ROW} THEN (CASE WHEN {tomb} THEN 0 ELSE 1 END) "
+            f"ELSE {kind} + 1 END AS __fko",
         ] + [q(c) for c in payload]
         if cuts is not None:
             tags = [f"CAST({int(c)} AS BIGINT)" for c in cuts[seq]]
@@ -1613,7 +1665,7 @@ def _merge_layers_fold(
         tagged = t if tagged is None else tagged.unionByName(t)
 
     part = key_q if cuts is None else f"{key_q}, __cut"
-    wo = f"PARTITION BY {part} ORDER BY __fseq"
+    wo = f"PARTITION BY {part} ORDER BY __fseq, __fko"
     wpart = f"{wo} ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING"
 
     # pass 1: position + the running ts max that decides the LWW gate

@@ -454,12 +454,15 @@ def test_view_root_of_the_old_layout_raises_until_rebuilt(spark, tmp_path):
 
 
 def test_refresh_builds_a_view_whose_build_crashed(spark, tmp_path, monkeypatch):
-    """``build()`` drops the view before its one commit: crash that commit
-    inside the rebuild a compaction forces on ``refresh()``, and the view
-    is left with no stamp. The next refresh builds it (returns -1) instead
-    of raising. About 10 s of tier-1."""
+    """``build()`` commits the rebuilt view in place of every view layer,
+    and its stamp in place of the view's stamps, in one swap: crash that
+    commit inside the rebuild a compaction forces on ``refresh()``, and
+    the old view and its horizon stay readable. The next refresh rebuilds
+    (returns -1) and leaves the build's stamp alone in the view log.
+    About 10 s of tier-1."""
     base = _base(spark, str(tmp_path), n=50)
     mv = _mv(spark, str(tmp_path), base).build()
+    view, upto = _view(mv), mv.applied_upto()
     base.delete(spark.range(0, 5).select(F.col("id").alias("k")))
     base.compact()
     real = KeyedTable._commit
@@ -473,10 +476,10 @@ def test_refresh_builds_a_view_whose_build_crashed(spark, tmp_path, monkeypatch)
     monkeypatch.setattr(KeyedTable, "_commit", commit)
     with pytest.raises(_Crash):
         mv.refresh()
-    with pytest.raises(FileNotFoundError):
-        mv.applied_upto()
+    assert _view(mv) == view and mv.applied_upto() == upto
     assert mv.refresh() == -1
     assert _view(mv) == _recompute(base)
+    assert mv.mv.applied_stamps() == {f"mv_upto_{base.snapshot_seq():06d}"}
     assert mv.refresh() == 0
 
 

@@ -24,13 +24,7 @@ from hypothesis.stateful import (
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from spark_on_hbase_spark.table import (
-    _CELLDEL,
-    _DELTA,
-    _SPARSE,
-    HistoryFoldedError,
-    KeyedTable,
-)
+from spark_on_hbase_spark.table import HistoryFoldedError, KeyedTable
 
 
 @pytest.fixture
@@ -178,12 +172,14 @@ def test_mixed_kind_merge_is_single_shuffle(spark, table):
     """Every multi-layer read resolves through the one window fold: union
     of layers -> one hash shuffle by key -> sort -> Window/CASE
     resolution. Pinned for a mixed-kind stack (sparse put + increment) and
-    an update-only stack alike: ONE shuffle, Window operators, and no
-    interpreted aggregate-HOF lambda, collect_list or max_by merge."""
+    an update-only stack alike: ONE shuffle, ONE sort (every window pass
+    orders by the same columns), Window operators, and no interpreted
+    aggregate-HOF lambda, collect_list or max_by merge."""
     from spark_on_hbase_spark import plans
 
     def assert_window_fold(df):
         assert plans.count_shuffles(df) == 1
+        assert df._jdf.queryExecution().executedPlan().toString().count("Sort [") == 1
         plan = plans.formatted_plan(df)
         assert "Window" in plan
         for banned in ("aggregate(", "collect_list", "max_by"):
@@ -194,6 +190,31 @@ def test_mixed_kind_merge_is_single_shuffle(spark, table):
     table.put(spark.createDataFrame([Row(key="k004", ts=300, height=1)]))
     table.increment(spark.createDataFrame([Row(key="k005", delta=2)]), counter_col="height")
     assert_window_fold(table.df())
+
+
+def test_one_layer_folds_its_rows_in_kind_order(spark, tmp_path):
+    """One layer's rows of a key fold in kind order — delete, upsert, put,
+    increment, cell delete — whatever their order on disk. Here the layer
+    holds a live row before its tombstone (the key reads live: the
+    tombstone folds first) and an increment before a put of the same cell
+    (the put applies, then the increment adds onto it). Fails where one
+    layer's rows of a key folded in row order. About 5 s of tier-1."""
+    t = KeyedTable(spark, str(tmp_path / "t"), key_col="key", ts_col="ts")
+    schema = "key bigint, ts bigint, cnt bigint"
+    t.create(spark.createDataFrame([(1, 5, 10), (2, 5, 10)], schema))
+    layer = spark.createDataFrame(
+        [
+            (1, None, 7, False, 0),  # upsert
+            (1, None, None, True, 0),  # delete
+            (2, None, 3, False, 2),  # increment
+            (2, None, 100, False, 1),  # put
+        ],
+        f"{schema}, __tombstone boolean, __kind int",
+    )
+    # one partition, so the rows reach the layer's file in this order
+    t._write_layer(layer.coalesce(1), "delta")
+    assert {tuple(r) for r in t.df().collect()} == {(1, 5, 7), (2, 5, 103)}
+    assert {tuple(r) for r in t.point_read([1, 2]).collect()} == {(1, 5, 7), (2, 5, 103)}
 
 
 def test_null_ts_update_applies_over_stored_ts(spark, tmp_path):
@@ -321,6 +342,10 @@ _M_TYPES = {"key": "bigint", "ts": "bigint", "cnt": "bigint", "bal": "double",
 _M_COLS = tuple(_M_TYPES)
 
 
+# the order one key's rows of one layer fold in, by mutation kind
+_M_KIND_ORDER = ("delete", "upsert", "put", "increment", "cell_delete")
+
+
 def _m_schema(cols) -> str:
     return ", ".join(f"{c} {_M_TYPES[c]}" for c in cols)
 
@@ -445,9 +470,11 @@ def test_mutation_sequence_matches_model(spark, tmp_path, layer_files):
     after it, the table reads as the model after the op and a stamped
     retry returns 0. After every commit the root holds only what the log
     lists; an after-swap crash leaves the replaced files until the next
-    commit sweeps them. A mixed layer holds a DELTA, a SPARSE and a
-    CELLDEL row of one key over disjoint cells; the model applies them in
-    both orders, and both must equal df().
+    commit sweeps them. A mixed layer holds rows of several mutation kinds
+    for one key, in random row order, overlapping or (one draw) an
+    increment, a put and a cell delete over disjoint cells; the model
+    applies them in the fold's kind order (delete, upsert, put,
+    increment, cell delete).
     Derandomized with no example database, so every run replays the same
     bounded set of sequences; shrinking is off to keep a failure's cost
     bounded (the failing steps are still printed). Which rules run depends
@@ -457,6 +484,7 @@ def test_mutation_sequence_matches_model(spark, tmp_path, layer_files):
     swap."""
     dirs = itertools.count()
     key_sets = st.lists(st.sampled_from(_M_PROBE), max_size=3, unique=True)
+    mixed_kinds = st.lists(st.sampled_from(_M_KIND_ORDER), min_size=1, unique=True)
     cell_sets = st.sets(st.sampled_from(_M_CELLS), min_size=1)
     fired = collections.Counter()  # rule -> steps hypothesis drew it for
     crashes = collections.Counter()  # "before" / "after" -> _Crash raised
@@ -626,42 +654,71 @@ def test_mutation_sequence_matches_model(spark, tmp_path, layer_files):
             self._snap(keys)
 
         @rule(key=st.sampled_from(_M_KEYS),
-              cells=st.permutations(_M_CELLS).filter(lambda c: c[0] != "tag"),
-              ts=st.sampled_from([None, 5, 10, 20, 30]))
+              kinds=st.one_of(st.none(), mixed_kinds), data=st.data())
         @counted
-        def mixed_layer(self, key, cells, ts):
-            # one layer, one key: a DELTA, a SPARSE and a CELLDEL row over
-            # disjoint cells. Their in-layer order is arbitrary, so the
-            # rows must commute: the model applies them in both orders
-            add, put, drop = cells
-            d = {"cnt": 4, "bal": 0.25}[add]
-            v = {"cnt": 11, "bal": 3.5, "tag": "m"}[put]
-            rows_ = [
-                {"key": key, add: d, "__kind": _DELTA},
-                {"key": key, "ts": ts, put: v, "__kind": _SPARSE},
-                {"key": key, "__kind": _CELLDEL, "__delcols": [drop]},
-            ]
-            cols = [*_M_COLS, "__kind", "__delcols"]
+        def mixed_layer(self, key, kinds, data):
+            # one layer (KeyedTable._mutate), one key, several mutation
+            # kinds, their rows in random order; the fold applies them in
+            # kind order, and so does the model. kinds=None draws an
+            # increment, a put and a cell delete over disjoint cells
+            ts = st.sampled_from([None, 5, 10, 20, 30])
+            vals = {"cnt": st.integers(-5, 50), "bal": st.sampled_from([0.25, 3.5, -2.25]),
+                    "tag": st.sampled_from(["a", "m"])}
+            cells = st.lists(st.sampled_from(_M_CELLS), min_size=1, unique=True)
+            if kinds is None:
+                add, put, drop = data.draw(
+                    st.permutations(_M_CELLS).filter(lambda c: c[0] != "tag")
+                )
+                got = {
+                    "increment": {add: {"cnt": 4, "bal": 0.25}[add]},
+                    "put": {"ts": data.draw(ts), put: {"cnt": 11, "bal": 3.5, "tag": "m"}[put]},
+                    "cell_delete": {drop: True},
+                }
+                kinds = data.draw(st.permutations(list(got)))
+                got = {k: got[k] for k in kinds}
+            else:
+                got = {}
+                for k in kinds:
+                    if k == "delete":
+                        got[k] = {}
+                    elif k == "upsert":
+                        got[k] = {"ts": data.draw(ts), **{
+                            c: data.draw(st.one_of(st.none(), vals[c])) for c in _M_CELLS
+                        }}
+                    elif k == "put":
+                        got[k] = {"ts": data.draw(ts), **{
+                            c: data.draw(st.one_of(st.none(), vals[c])) for c in data.draw(cells)
+                        }}
+                    elif k == "increment":
+                        got[k] = {c: data.draw(vals[c]) for c in data.draw(
+                            st.lists(st.sampled_from(["cnt", "bal"]), min_size=1, unique=True)
+                        )}
+                    else:
+                        got[k] = dict.fromkeys(data.draw(cells), True)
+            frames = {}
+            for k, r in got.items():
+                types = {**_M_TYPES, **({c: "boolean" for c in r} if k == "cell_delete" else {})}
+                frames[k] = spark.createDataFrame(
+                    [(key, *r.values())], ", ".join(f"{c} {types[c]}" for c in ["key", *r])
+                )
             self._stamped(
-                self.t._write_layer,
-                spark.createDataFrame(
-                    [tuple(r.get(c) for c in cols) for r in rows_],
-                    _m_schema(_M_COLS) + ", __kind int, __delcols array<string>",
-                ),
-                "delta",
+                lambda rows, stamp: sum(self.t._mutate(rows, stamp).values()), frames
             )
-            steps = [
-                lambda m: m.delta(key, add, d, 0 if add == "cnt" else 0.0),
-                lambda m: m.sparse(key, ts, {put: v}),
-                lambda m: m.celldel(key, [drop]),
-            ]
-            models = []
-            for order in (steps, steps[::-1]):
-                models.append(copy.deepcopy(self.model))
-                for apply in order:
-                    apply(models[-1])
-            assert models[0].visible() == models[1].visible()
-            self.model = models[0]
+            for k in _M_KIND_ORDER:
+                r = got.get(k)
+                if r is None:
+                    continue
+                if k == "delete":
+                    self.model.row(key, None, dict.fromkeys(_M_CELLS), tomb=True)
+                elif k == "upsert":
+                    self.model.row(key, r["ts"], {c: r[c] for c in _M_CELLS})
+                elif k == "put":
+                    self.model.sparse(key, r["ts"], {c: r[c] for c in r if c != "ts"})
+                elif k == "increment":
+                    for c, d in r.items():
+                        self.model.delta(key, c, d, 0 if c == "cnt" else 0.0)
+                else:
+                    self.model.celldel(key, list(r))
             self._snap([key])
 
         @rule(scope=st.sampled_from(["all", "dirty", "keep_since"]), data=st.data())
