@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from spark_on_hbase_spark.functions.ep import VENDOR_CODES
-from spark_on_hbase_spark.plans import loop_planner
+from spark_on_hbase_spark.plans import loop_planner, shuffle_width
 
 
 def vendor_code_expr(vendor_col: str = "vendor"):
@@ -129,14 +129,16 @@ def from_pairs_partitioned(pairs: DataFrame, num_partitions: int | None = None) 
     own. Use when the network will be persisted and consumed by src-keyed
     joins/aggregations (the BSP/degree workloads): one 2|E|-row shuffle
     total, versus canonical-dedup (|E|) + repartition (2|E|) for
-    ``from_pairs(...).repartition("src")``."""
+    ``from_pairs(...).repartition("src")``.
+
+    The network is ``num_partitions`` wide, by default
+    ``plans.shuffle_width`` of the symmetrized pairs: AQE may not
+    re-partition a persisted plan, so the width is sized to the data here,
+    once — ``spark.sql.shuffle.partitions`` at scale, ``defaultParallelism``
+    for a small graph, whose src-keyed consumers and BSP loops then run
+    that many tasks per stage instead of 32."""
     sym = reverse_edges(pairs)
-    sym = (
-        sym.repartition(num_partitions, "src")
-        if num_partitions
-        else sym.repartition("src")
-    )
-    return dedup_edges(sym)
+    return dedup_edges(sym.repartition(num_partitions or shuffle_width(sym), "src"))
 
 
 def to_adjacency(edges: DataFrame) -> DataFrame:
@@ -225,6 +227,19 @@ def inner_expand(edges: DataFrame, pool: DataFrame, profile: DataFrame) -> DataF
     return originals.join(profiled, on="origin", how="inner")
 
 
+def _narrowed(edges: DataFrame, width: int | None) -> DataFrame:
+    """``edges`` hash-partitioned by src at ``width`` when it is wider,
+    else ``edges`` itself (also for an adaptive loop, whose width is
+    None). A superstep's join reuses the wider side's partitioning, so
+    edges wider than the loop's width would pull the state up to their
+    width every superstep; narrowing them once keeps every superstep at
+    the width. Called inside ``loop_planner`` (AQE off), where reading
+    the partition count plans without a job."""
+    if width is not None and edges._jdf.rdd().getNumPartitions() > width:
+        return edges.repartition(width, "src")
+    return edges
+
+
 def bsp_step(edges: DataFrame, state: DataFrame) -> DataFrame:
     """G1 — one BSP superstep of max-label propagation: every vertex adopts
     the max of its own label and its neighbors' labels (AGraph.bsp,
@@ -264,11 +279,19 @@ def bsp_steps(
     its materialized blocks, holding plan size and superstep time constant;
     superseded checkpoint blocks are reclaimed by the ContextCleaner on JVM
     GC, which the engine's session hygiene triggers periodically.
-    ``adaptive``: see ``plans.loop_planner``."""
-    with loop_planner(edges, adaptive):
-        for _ in range(n):
-            state = bsp_step(edges, state).localCheckpoint(eager=False)
-            state.count()  # ONE job: materializes the lazy checkpoint
+    ``adaptive``: see ``plans.loop_planner``; edges wider than its width
+    are narrowed to a persisted copy the loop owns."""
+    with loop_planner(edges, adaptive) as width:
+        loop = _narrowed(edges, width)
+        if loop is not edges:
+            loop = loop.persist()
+        try:
+            for _ in range(n):
+                state = bsp_step(loop, state).localCheckpoint(eager=False)
+                state.count()  # ONE job: materializes the lazy checkpoint
+        finally:
+            if loop is not edges:
+                loop.unpersist()
     return state
 
 
@@ -309,19 +332,27 @@ def bsp_converge(
     the materialized blocks, holding superstep cost constant over hundreds
     of supersteps; superseded checkpoint blocks are reclaimed by the
     ContextCleaner on JVM GC (the engine's session hygiene triggers one
-    periodically)."""
+    periodically).
+
+    The loop runs at ``plans.loop_planner``'s width: ``defaultParallelism``
+    tasks per superstep shuffle on a small graph, where a fixed
+    ``spark.sql.shuffle.partitions`` (32) made the loop pay per-task
+    overhead, not work. Edges wider than the width are narrowed to a copy
+    the loop owns; the state is checkpointed at the width too."""
     agg_fn = F.min if minimize else F.max
-    # persist edges only if the CALLER hasn't: persist() on an
-    # already-cached relation returns the same plan, so the finally-block
-    # unpersist would otherwise evict the caller's shared cache entry (the
-    # memoized network relation) behind its back
-    owns_edges = edges.storageLevel == StorageLevel.NONE
-    if owns_edges:
-        edges = edges.persist()
-    current = state.localCheckpoint(eager=False)
-    frontier = current
-    with loop_planner(edges, adaptive):
+    with loop_planner(edges, adaptive) as width:
+        loop = _narrowed(edges, width)
+        # persist edges only if the CALLER hasn't: persist() on an
+        # already-cached relation returns the same plan, so the finally-
+        # block unpersist would otherwise evict the caller's shared cache
+        # entry (the memoized network relation) behind its back
+        owns_edges = loop is not edges or edges.storageLevel == StorageLevel.NONE
+        if owns_edges:
+            loop = loop.persist()
+        edges = loop
         try:
+            current = state.localCheckpoint(eager=False)
+            frontier = current
             for i in range(1, max_iters + 1):
                 if i % 16 == 0:
                     # superseded checkpoint blocks are reclaimed by the
@@ -395,15 +426,16 @@ def propagate_probabilities(
     # an edge with prob < min_prob can never deliver a passing message
     # (message prob starts at 1.0 and only decays), so drop it before the
     # loop: one filter here removes its fanout from EVERY superstep's join.
-    edges = edges.where(F.col("prob") >= min_prob).persist()
-    current = (
-        seeds.select("key", "origin")
-        .withColumn("prob", F.lit(1.0))
-        .localCheckpoint(eager=False)
-    )
-    frontier = current
-    with loop_planner(edges, adaptive):
+    edges = edges.where(F.col("prob") >= min_prob)
+    with loop_planner(edges, adaptive) as width:
+        edges = _narrowed(edges, width).persist()
         try:
+            current = (
+                seeds.select("key", "origin")
+                .withColumn("prob", F.lit(1.0))
+                .localCheckpoint(eager=False)
+            )
+            frontier = current
             for i in range(1, max_iters + 1):
                 # shuffle-hash hint: see bsp_step — keeps the cached edge
                 # relation stationary instead of re-broadcasting it
@@ -496,15 +528,16 @@ def propagate_incremental(
             F.col("__known").isNull() | (F.col("prob") > F.col("__known"))
         ).select("key", "origin", "prob")
 
-    edges = edges.where(F.col("prob") >= min_prob).persist()
+    edges = edges.where(F.col("prob") >= min_prob)
     seeds = (
         new_seeds.select("key", "origin")
         .withColumn("prob", F.lit(1.0))
     )
-    delta = beats_stored(seeds).localCheckpoint(eager=False)
-    frontier = delta
-    with loop_planner(edges, adaptive):
+    with loop_planner(edges, adaptive) as width:
+        edges = _narrowed(edges, width).persist()
         try:
+            delta = beats_stored(seeds).localCheckpoint(eager=False)
+            frontier = delta
             if frontier.limit(1).count() == 0:
                 return delta, 0
             for i in range(1, max_iters + 1):
@@ -577,20 +610,21 @@ def label_propagation(
     aggregation, one per-dst argmax aggregation — all partial+final, no
     driver state; one scalar changed-count collect paces the loop. Stops
     when no vertex changes label. Returns ((key, label), supersteps)."""
-    edges = edges.select("src", "dst").persist()
-    # src ∪ dst so pure-sink vertices of a directed input get state too
-    # (on the symmetric networks the engine builds, src alone covers all —
-    # the explode rides the same cached scan)
-    current = (
-        edges.select(
-            F.explode(F.array(F.col("src"), F.col("dst"))).alias("key")
-        )
-        .distinct()
-        .withColumn("label", F.col("key"))
-        .localCheckpoint(eager=False)
-    )
-    with loop_planner(edges, adaptive):
+    edges = edges.select("src", "dst")
+    with loop_planner(edges, adaptive) as width:
+        edges = _narrowed(edges, width).persist()
         try:
+            # src ∪ dst so pure-sink vertices of a directed input get state
+            # too (on the symmetric networks the engine builds, src alone
+            # covers all — the explode rides the same cached scan)
+            current = (
+                edges.select(
+                    F.explode(F.array(F.col("src"), F.col("dst"))).alias("key")
+                )
+                .distinct()
+                .withColumn("label", F.col("key"))
+                .localCheckpoint(eager=False)
+            )
             for i in range(1, max_iters + 1):
                 msgs = edges.join(
                     current.hint("shuffle_hash"),
@@ -729,31 +763,15 @@ def pagerank(
     severing lineage holds it constant (~0.3 s/superstep). Superseded
     checkpoint blocks are reclaimed by the ContextCleaner on JVM GC — which
     the engine's session hygiene triggers periodically.
+
+    The whole computation runs inside ``plans.loop_planner``: ``verts``,
+    ``deg``, ``links`` and the first state are built at the loop's width
+    too, so on a small graph every stage is ``defaultParallelism`` tasks
+    wide, not ``spark.sql.shuffle.partitions``; edges wider than the width
+    are narrowed once into ``links``. ``verts`` and ``links`` are
+    unpersisted on the way out, also when the loop raises.
+
     Returns (key, rank); ranks sum to 1."""
-    verts = (
-        edges.select(F.col("src").alias("key"))
-        .unionByName(edges.select(F.col("dst").alias("key")))
-        .distinct()
-        .persist()
-    )
-    n = verts.count()
-    deg = edges.groupBy(F.col("src").alias("key")).agg(F.count("*").alias("__deg"))
-    # dangling vertices (no out-edges) carry __deg = 0 on the rank state and
-    # feed the redistribution term instead of the message join
-    links = (
-        edges.join(deg.select(F.col("key").alias("src"), "__deg"), on="src")
-        .select("src", "dst", (F.lit(1.0) / F.col("__deg")).alias("__w"))
-        .persist()
-    )
-    state = (
-        verts.join(deg, on="key", how="left")
-        .select(
-            "key",
-            F.lit(1.0 / n).alias("rank"),
-            F.coalesce(F.col("__deg"), F.lit(0)).alias("__deg"),
-        )
-        .localCheckpoint(eager=False)
-    )
 
     def _materialize_and_probe_dangling(s: DataFrame) -> float:
         # ONE job: the aggregation's full scan materializes the lazily
@@ -765,27 +783,57 @@ def pagerank(
             .collect()[0][0]
         )
 
-    dangling = _materialize_and_probe_dangling(state)
-    with loop_planner(links, adaptive):
-        for _ in range(max_iters):
-            contribs = pagerank_contribs(links, state)
-            base = (1.0 - damping) / n + damping * dangling / n
+    with loop_planner(edges, adaptive) as width:
+        edges = _narrowed(edges, width)
+        verts = links = None
+        try:
+            verts = (
+                edges.select(F.col("src").alias("key"))
+                .unionByName(edges.select(F.col("dst").alias("key")))
+                .distinct()
+                .persist()
+            )
+            n = verts.count()
+            deg = edges.groupBy(F.col("src").alias("key")).agg(F.count("*").alias("__deg"))
+            # dangling vertices (no out-edges) carry __deg = 0 on the rank
+            # state and feed the redistribution term instead of the message
+            # join
+            links = (
+                edges.join(deg.select(F.col("key").alias("src"), "__deg"), on="src")
+                .select("src", "dst", (F.lit(1.0) / F.col("__deg")).alias("__w"))
+                .persist()
+            )
             state = (
-                state.select("key", "__deg")
-                .join(contribs.hint("shuffle_hash"), on="key", how="left")
+                verts.join(deg, on="key", how="left")
                 .select(
                     "key",
-                    (
-                        F.lit(base)
-                        + F.lit(damping) * F.coalesce(F.col("__in"), F.lit(0.0))
-                    ).alias("rank"),
-                    "__deg",
+                    F.lit(1.0 / n).alias("rank"),
+                    F.coalesce(F.col("__deg"), F.lit(0)).alias("__deg"),
                 )
                 .localCheckpoint(eager=False)
             )
             dangling = _materialize_and_probe_dangling(state)
-    verts.unpersist()
-    links.unpersist()
+            for _ in range(max_iters):
+                contribs = pagerank_contribs(links, state)
+                base = (1.0 - damping) / n + damping * dangling / n
+                state = (
+                    state.select("key", "__deg")
+                    .join(contribs.hint("shuffle_hash"), on="key", how="left")
+                    .select(
+                        "key",
+                        (
+                            F.lit(base)
+                            + F.lit(damping) * F.coalesce(F.col("__in"), F.lit(0.0))
+                        ).alias("rank"),
+                        "__deg",
+                    )
+                    .localCheckpoint(eager=False)
+                )
+                dangling = _materialize_and_probe_dangling(state)
+        finally:
+            for cached in (verts, links):
+                if cached is not None:
+                    cached.unpersist()
     return state.select("key", "rank")
 
 

@@ -186,11 +186,42 @@ def count_shuffles(df: DataFrame) -> int:
     return live.count("Exchange (") - live.count("BroadcastExchange (")
 
 
+def shuffle_width(df: DataFrame) -> int:
+    """Partitions a shuffle of ``df`` should have: AQE's coalescing rule,
+    applied once at plan time to Catalyst's size estimate of ``df`` —
+    about ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` per
+    partition, never fewer than ``defaultParallelism`` and never more than
+    ``spark.sql.shuffle.partitions``. For plans AQE may not re-partition
+    at run time: a persisted relation, whose partitioning later plans
+    reuse, and the non-adaptive superstep loops (``loop_planner``). It
+    launches no job. Unknown stats estimate as
+    ``spark.sql.defaultSizeInBytes`` (huge), so they get
+    ``shuffle.partitions``, as does any input of ``shuffle.partitions``
+    advisory-sized partitions or more: at scale nothing changes."""
+    spark = df.sparkSession
+    jvm = spark._jvm  # type: ignore[attr-defined]
+    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    advisory = jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+        spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    )
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    floor = spark.sparkContext.defaultParallelism
+    return min(cap, max(floor, -(-size // max(1, advisory))))
+
+
 @contextmanager
 def loop_planner(df: DataFrame, adaptive: bool):
-    """Planner mode for iterative loops (BSP, Lloyd's). With
-    ``adaptive=False`` (the BSP loop operators' default) AQE is suspended
-    for the duration of the loop and restored after.
+    """Planner mode for iterative loops (BSP, Lloyd's); yields the loop's
+    shuffle width. With ``adaptive=False`` (the BSP loop operators'
+    default) AQE is suspended for the duration of the loop and
+    ``spark.sql.shuffle.partitions`` is set to ``shuffle_width(df)`` — the
+    width AQE would have coalesced the loop's shuffles to, fixed at plan
+    time so the loop state keeps a hash partitioning later plans can
+    reuse. Both settings are restored on exit, also when the loop raises.
+    A loop whose edge relation is wider than the yielded width narrows a
+    copy of it once, so every superstep's join meets the state at one
+    width instead of re-shuffling one side. With ``adaptive=True`` nothing
+    is set and it yields None: AQE sizes the loop's shuffles.
 
     The r12 re-measurement nuanced the original "~25% superstep latency"
     rationale: AQE's partition coalescing actually makes the loops
@@ -204,15 +235,27 @@ def loop_planner(df: DataFrame, adaptive: bool):
     at scale for local superstep latency inverts guide §1.2's priority,
     so the BSP loops keep ``adaptive=False``. ``kmeans_refine`` defaults
     ``adaptive=True`` instead: its output is consumed through persisted
-    relations with no partitioning reuse, and the measured win is ~2x."""
+    relations with no partitioning reuse, and the measured win is ~2x.
+
+    The width keeps most of that local win without the coalescing: a
+    superstep over a small graph ran 32 tasks per shuffle where AQE
+    would have run a handful, so the loops pay per-task overhead, not
+    work. At scale the width is ``shuffle.partitions``: the loop's
+    shuffles keep their width, and only an edge relation with more
+    partitions than that is narrowed."""
     spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    if not adaptive:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    prev = [spark.conf.get(k) for k in keys]
+    width = None
     try:
-        yield
+        if not adaptive:
+            width = shuffle_width(df)
+            spark.conf.set(keys[0], "false")
+            spark.conf.set(keys[1], str(width))
+        yield width
     finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
+        for k, v in zip(keys, prev):
+            spark.conf.set(k, v)
 
 
 def _node_depth(ln: str) -> int:

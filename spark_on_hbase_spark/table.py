@@ -720,7 +720,11 @@ class KeyedTable:
         one keyed read for a key set given as a relation, identical to
         ``df(...).join(keys, key, 'semi')``. It collects at most
         ``POINT_READ_CAP + 1`` distinct keys in one bounded job and picks
-        the read from the count:
+        the read from the count. A key relation whose distinct shuffles is
+        marked for a lazy local checkpoint first, so that collect runs the
+        key lineage and its shuffle once, and the over-cap envelope and
+        broadcast read the checkpoint's blocks instead of running them
+        again:
 
         - at or under the cap: ``point_read`` of the collected keys — a
           literal IN list that reaches every layer's parquet scan, where
@@ -735,7 +739,7 @@ class KeyedTable:
           (r12): a key-range predicate reaches the parquet scan as
           PushedFilters, so a localized batch reads only the file run
           covering it; a spread-out batch prunes nothing and costs one
-          extra small aggregation.
+          extra small aggregation over the checkpoint.
 
         Either way the key set is resolved when ``semi_read`` is called.
 
@@ -747,10 +751,22 @@ class KeyedTable:
         own — the old and new states of a changed key set that
         incremental maintenance diffs."""
         distinct = keys.select(self.key_col).distinct()
-        head = [r[0] for r in distinct.limit(self.POINT_READ_CAP + 1).collect()]
+        # Over the cap the envelope and the broadcast read the key set
+        # again. A key set that shuffles is marked for a lazy checkpoint
+        # BEFORE the bounded collect, which then materializes it: the key
+        # lineage and its shuffle run once. A key set whose input is already
+        # distinct or partitioned by the key plans no shuffle, and its
+        # collect scans partitions incrementally, so an early checkpoint
+        # would cost one more job (to fill the partitions the collect
+        # skipped) on every read under the cap; it is checkpointed only once
+        # it is known to be over.
+        shuffles = "Exchange" in distinct._jdf.queryExecution().executedPlan().toString()
+        kd = distinct.localCheckpoint(eager=False) if shuffles else distinct
+        head = [r[0] for r in kd.limit(self.POINT_READ_CAP + 1).collect()]
         if len(head) <= self.POINT_READ_CAP:
             return self.point_read(head, as_of_layer)
-        kd = distinct.localCheckpoint(eager=False)
+        if not shuffles:
+            kd = distinct.localCheckpoint(eager=False)
         lo, hi = kd.agg(F.min(self.key_col), F.max(self.key_col)).first()
         layers = self._visible_layers(as_of_layer)
         k = F.col(self.key_col)

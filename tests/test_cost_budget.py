@@ -1,9 +1,10 @@
-"""Spark job budgets of the keyed write paths.
+"""Spark job and task budgets of the keyed paths and the graph pipeline.
 
-Jobs are deterministic for a fixed plan and input size, where wall time on
-a shared host is not, so a regression that adds a job to a write path
-(an extra collect, a broadcast, an eager checkpoint) shows here from one
-run. A budget may be lowered freely; raising one is a change to a check.
+Jobs and tasks are deterministic for a fixed plan and input size, where
+wall time on a shared host is not, so a regression that adds a job to a
+write path (an extra collect, a broadcast, an eager checkpoint) or widens
+a shuffle shows here from one run. A budget may be lowered freely;
+raising one is a change to a check.
 """
 
 from __future__ import annotations
@@ -14,12 +15,15 @@ from pyspark.sql import functions as F
 
 from spark_on_hbase_spark.index import SecondaryIndex
 from spark_on_hbase_spark.matview import MaterializedAgg
+from spark_on_hbase_spark.operators import graph as G
 from spark_on_hbase_spark.table import KeyedTable
 
 
-def _jobs(spark, op) -> int:
-    """Spark jobs ``op()`` runs, read from the status tracker by job group
-    once the listener bus has caught up with the jobs' events."""
+def _cost(spark, op) -> tuple[int, int]:
+    """(jobs, tasks) ``op()`` runs, read from the status tracker by job
+    group once the listener bus has caught up with the jobs' events. Tasks
+    are the completed tasks of every stage of every job, as the
+    benchmark's tracer counts them."""
     sc = spark.sparkContext
     group = f"cost-{uuid.uuid4().hex}"
     sc.setJobGroup(group, group)
@@ -28,7 +32,15 @@ def _jobs(spark, op) -> int:
     finally:
         sc._jsc.clearJobGroup()
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+    st = sc.statusTracker()
+    jobs = st.getJobIdsForGroup(group)
+    tasks = 0
+    for jid in jobs:
+        info = st.getJobInfo(jid)
+        for sid in info.stageIds if info else ():
+            si = st.getStageInfo(sid)
+            tasks += si.numCompletedTasks if si is not None else 0
+    return len(jobs), tasks
 
 
 def test_indexed_writes_and_minmax_refresh_job_budget(spark, tmp_path):
@@ -53,9 +65,9 @@ def test_indexed_writes_and_minmax_refresh_job_budget(spark, tmp_path):
     )
     gone = spark.range(100, 110).select(F.col("id").alias("k"))
     jobs = {
-        "update": _jobs(spark, lambda: idx.update(batch)),
-        "delete": _jobs(spark, lambda: idx.delete(gone)),
-        "refresh": _jobs(spark, mv.refresh),
+        "update": _cost(spark, lambda: idx.update(batch))[0],
+        "delete": _cost(spark, lambda: idx.delete(gone))[0],
+        "refresh": _cost(spark, mv.refresh)[0],
     }
     assert jobs["update"] <= 9 and jobs["delete"] <= 9 and jobs["refresh"] <= 15, jobs
     assert idx.scrutiny().count() == 0
@@ -65,3 +77,78 @@ def test_indexed_writes_and_minmax_refresh_job_budget(spark, tmp_path):
         .collect()
     )
     assert {tuple(r) for r in mv.df().collect()} == {tuple(r) for r in want}
+
+
+def test_semi_read_job_budget_under_and_over_the_cap(spark, tmp_path, monkeypatch):
+    """Jobs and tasks of building a ``semi_read`` of a key relation (four
+    input partitions, duplicate keys) under and over ``POINT_READ_CAP``
+    (64 here): 2 jobs and 5 tasks under the cap, 4 jobs and 7 tasks over
+    it. Under the cap one bounded collect runs the key lineage and its
+    distinct shuffle; over it the same collect materializes the key
+    relation's checkpoint, which the envelope aggregate then reads. When
+    the envelope re-ran the lineage and the shuffle under a second
+    checkpoint, the over-cap build took 5 jobs and 11 tasks. The under-cap
+    row is index upkeep's, refresh's and lookup's path, so it must not
+    rise. About 6 s of tier-1."""
+    monkeypatch.setattr(KeyedTable, "POINT_READ_CAP", 64)
+    schema = "k bigint, v bigint, ts int"
+    t = KeyedTable(spark, str(tmp_path / "t"), key_col="k", ts_col="ts")
+    t.create(spark.createDataFrame([(k, k * 3, 0) for k in range(400)], schema))
+    t.update(spark.createDataFrame([(k, k * 5, 1) for k in range(0, 400, 7)], schema))
+
+    def keys(step):
+        # ids wrap around the key span, so every key appears twice
+        return spark.range(0, 800, step, 4).select((F.col("id") % 400).alias("k"))
+
+    got = {}
+    for name, step in (("under", 20), ("over", 2)):
+        out = {}
+        got[name] = _cost(spark, lambda: out.setdefault("df", t.semi_read(keys(step))))
+        assert out["df"].count() == 400 // step
+    budget = {"under": (2, 5), "over": (4, 7)}
+    assert all(g <= b for k in budget for g, b in zip(got[k], budget[k])), got
+
+
+def test_graph_pipeline_task_budget(spark):
+    """Tasks of building the network (``from_pairs_partitioned`` of 2000
+    pairs in four input partitions, persisted and counted), of
+    ``bsp_converge`` over it (3 supersteps) and of 3 ``pagerank``
+    iterations, under ``local[N]``: at most 5 + 2N, 3 + 10N and 5 + 13N.
+    Each shuffle of this small graph is N = ``defaultParallelism``
+    partitions wide (``plans.shuffle_width``). When the network and every
+    superstep shuffled at ``spark.sql.shuffle.partitions`` (32 on a
+    machine of up to 32 cores) they took 69, 323 and 549 tasks on
+    ``local[4]``, against 13, 43 and 57 now. About 10 s of tier-1."""
+    n = spark.sparkContext.defaultParallelism
+    pairs = spark.range(0, 2000, 1, 4).select(
+        (F.col("id") % 400).alias("src"),
+        (F.col("id") % 400 - F.col("id") % 8 + F.col("id") % 3).alias("dst"),
+        (F.col("id") % 256 / 255.0).alias("prob"),
+        F.lit("P1").alias("vendor"),
+        F.col("id").alias("ts"),
+    ).persist()
+    pairs.count()
+    out = {}
+    try:
+        build = _cost(spark, lambda: out.setdefault(
+            "net", G.from_pairs_partitioned(pairs).persist()
+        ).count())
+        net = out["net"]
+        state = net.select(F.col("src").alias("key")).distinct().withColumn("label", F.col("key"))
+        bsp = _cost(spark, lambda: out.setdefault("cc", G.bsp_converge(net, state)))
+        cc, steps = out["cc"]
+        assert steps == 3 and cc.select("label").distinct().count() == 50
+        pr = _cost(spark, lambda: out.setdefault(
+            "pr", G.pagerank(net.select("src", "dst"), max_iters=3).collect()
+        ))
+        assert len(out["pr"]) == 400
+        assert abs(sum(r["rank"] for r in out["pr"]) - 1.0) < 1e-9
+        tasks = {"network": build[1], "bsp_converge": bsp[1], "pagerank": pr[1]}
+        assert net.rdd.getNumPartitions() == n, tasks
+        assert tasks["network"] <= 5 + 2 * n, tasks
+        assert tasks["bsp_converge"] <= 3 + 10 * n, tasks
+        assert tasks["pagerank"] <= 5 + 13 * n, tasks
+    finally:
+        pairs.unpersist()
+        if "net" in out:
+            out["net"].unpersist()

@@ -262,6 +262,58 @@ def test_pagerank_matches_power_iteration(spark):
     assert abs(sum(out.values()) - 1.0) < 1e-9
 
 
+@pytest.mark.parametrize(
+    "loop", ["pagerank", "bsp_converge", "bsp_steps", "label_propagation"]
+)
+def test_a_loop_that_raises_leaves_no_relation_of_its_own_cached(spark, monkeypatch, loop):
+    """Every superstep loop unpersists what it persisted — ``pagerank``'s
+    ``verts`` and ``links``, and the narrowed copy a loop owns of edges
+    wider than its width — also when a superstep raises (here: the second
+    ``localCheckpoint``). The caller's cached edges stay cached. About 2 s
+    per loop."""
+    from pyspark import StorageLevel
+
+    n = spark.sparkContext.defaultParallelism
+    edges = (
+        spark.createDataFrame([(i % 40, (i * 7) % 40) for i in range(200)], "src long, dst long")
+        .repartition(2 * n, "src")
+        .persist()
+    )
+    edges.count()
+    state = edges.select(F.col("src").alias("key")).distinct().withColumn("label", F.col("key"))
+    cls = type(edges)
+    real_persist, real_checkpoint = cls.persist, cls.localCheckpoint
+    persisted, checkpoints = [], []
+
+    def persist(self, *args, **kwargs):
+        persisted.append(self)
+        return real_persist(self, *args, **kwargs)
+
+    def local_checkpoint(self, *args, **kwargs):
+        checkpoints.append(self)
+        if len(checkpoints) == 2:
+            raise RuntimeError("superstep failed")
+        return real_checkpoint(self, *args, **kwargs)
+
+    run = {
+        "pagerank": lambda: G.pagerank(edges, max_iters=3),
+        "bsp_converge": lambda: G.bsp_converge(edges, state),
+        "bsp_steps": lambda: G.bsp_steps(edges, state, 3),
+        "label_propagation": lambda: G.label_propagation(edges),
+    }[loop]
+    monkeypatch.setattr(cls, "persist", persist)
+    monkeypatch.setattr(cls, "localCheckpoint", local_checkpoint)
+    try:
+        with pytest.raises(RuntimeError, match="superstep failed"):
+            run()
+        own = [df for df in persisted if df is not edges]
+        assert own, "the loop persisted no relation of its own"
+        assert all(df.storageLevel == StorageLevel.NONE for df in own)
+        assert edges.storageLevel != StorageLevel.NONE
+    finally:
+        edges.unpersist()
+
+
 def test_triangle_count_known_graphs(spark):
     from spark_on_hbase_spark.operators import graph as G
 

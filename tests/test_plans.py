@@ -519,3 +519,54 @@ def test_sq8_topk_plans_window_group_limit_for_both_rankings(spark, sf_dir):
     df = QUERIES["ann_sq8_topk"].fn(spark, sf_dir)
     plan = plans.formatted_plan(df)
     assert plan.count("WindowGroupLimit") >= 2, plan.count("WindowGroupLimit")
+
+
+def test_shuffle_width_follows_the_size_estimate(spark):
+    """``plans.shuffle_width`` is AQE's coalescing rule at plan time:
+    ``spark.range(n)`` estimates 8n bytes, so with a 1 KiB advisory size a
+    tiny input gets ``defaultParallelism``, ten advisory partitions' worth
+    gets ten (when that lies between the floor and the cap), and an input
+    of ``shuffle.partitions`` advisory partitions or more — also one with
+    unknown, default-size stats — gets ``shuffle.partitions``: at scale
+    nothing changes. No job runs."""
+    keys = ("spark.sql.adaptive.advisoryPartitionSizeInBytes", "spark.sql.shuffle.partitions")
+    prev = [spark.conf.get(k) for k in keys]
+    floor = spark.sparkContext.defaultParallelism
+    cap = max(floor + 11, 32)
+    spark.conf.set(keys[0], "1024")
+    spark.conf.set(keys[1], str(cap))
+    try:
+        assert plans.shuffle_width(spark.range(8)) == floor
+        mid = floor + 10
+        assert plans.shuffle_width(spark.range(mid * 128)) == mid
+        assert plans.shuffle_width(spark.range(mid * 128 + 1)) == mid + 1
+        assert plans.shuffle_width(spark.range(cap * 128)) == cap
+        assert plans.shuffle_width(spark.range(10**12)) == cap
+        unknown = spark.createDataFrame(spark.sparkContext.parallelize([(1,)]), "a long")
+        assert plans.shuffle_width(unknown) == cap
+    finally:
+        for k, v in zip(keys, prev):
+            spark.conf.set(k, v)
+    # the engine defaults: a terabyte-sized estimate keeps shuffle.partitions
+    assert plans.shuffle_width(spark.range(10**12)) == int(prev[1])
+
+
+def test_loop_planner_restores_both_settings_when_the_loop_raises(spark):
+    """A non-adaptive loop runs with AQE off at its edge relation's width
+    and gives both settings back on the way out, also from an exception."""
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    prev = [spark.conf.get(k) for k in keys]
+    tiny = spark.range(8)
+    try:
+        with plans.loop_planner(tiny, adaptive=False) as width:
+            assert width == spark.sparkContext.defaultParallelism
+            assert spark.conf.get(keys[0]) == "false"
+            assert spark.conf.get(keys[1]) == str(width)
+            raise RuntimeError("superstep failed")
+    except RuntimeError:
+        pass
+    assert [spark.conf.get(k) for k in keys] == prev
+    with plans.loop_planner(tiny, adaptive=True) as width:
+        assert width is None
+        assert [spark.conf.get(k) for k in keys] == prev
+    assert [spark.conf.get(k) for k in keys] == prev
