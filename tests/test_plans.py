@@ -5,6 +5,7 @@ These are the checks that matter at 100 TB: a filter that silently stops
 pushing to Parquet, or a dimension join that falls back to a full shuffle,
 is invisible at sf0.001 and catastrophic at scale (SURVEY.md §4.1)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from spark_on_hbase_spark import plans
@@ -557,14 +558,12 @@ def test_loop_planner_restores_both_settings_when_the_loop_raises(spark):
     keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
     prev = [spark.conf.get(k) for k in keys]
     tiny = spark.range(8)
-    try:
+    with pytest.raises(RuntimeError, match="superstep failed"):
         with plans.loop_planner(tiny, adaptive=False) as width:
             assert width == spark.sparkContext.defaultParallelism
             assert spark.conf.get(keys[0]) == "false"
             assert spark.conf.get(keys[1]) == str(width)
             raise RuntimeError("superstep failed")
-    except RuntimeError:
-        pass
     assert [spark.conf.get(k) for k in keys] == prev
     with plans.loop_planner(tiny, adaptive=True) as width:
         assert width is None
