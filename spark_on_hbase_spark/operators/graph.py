@@ -227,19 +227,6 @@ def inner_expand(edges: DataFrame, pool: DataFrame, profile: DataFrame) -> DataF
     return originals.join(profiled, on="origin", how="inner")
 
 
-def _narrowed(edges: DataFrame, width: int | None) -> DataFrame:
-    """``edges`` hash-partitioned by src at ``width`` when it is wider,
-    else ``edges`` itself (also for an adaptive loop, whose width is
-    None). A superstep's join reuses the wider side's partitioning, so
-    edges wider than the loop's width would pull the state up to their
-    width every superstep; narrowing them once keeps every superstep at
-    the width. Called inside ``loop_planner`` (AQE off), where reading
-    the partition count plans without a job."""
-    if width is not None and edges._jdf.rdd().getNumPartitions() > width:
-        return edges.repartition(width, "src")
-    return edges
-
-
 def bsp_step(edges: DataFrame, state: DataFrame) -> DataFrame:
     """G1 — one BSP superstep of max-label propagation: every vertex adopts
     the max of its own label and its neighbors' labels (AGraph.bsp,
@@ -279,19 +266,11 @@ def bsp_steps(
     its materialized blocks, holding plan size and superstep time constant;
     superseded checkpoint blocks are reclaimed by the ContextCleaner on JVM
     GC, which the engine's session hygiene triggers periodically.
-    ``adaptive``: see ``plans.loop_planner``; edges wider than its width
-    are narrowed to a persisted copy the loop owns."""
-    with loop_planner(edges, adaptive) as width:
-        loop = _narrowed(edges, width)
-        if loop is not edges:
-            loop = loop.persist()
-        try:
-            for _ in range(n):
-                state = bsp_step(loop, state).localCheckpoint(eager=False)
-                state.count()  # ONE job: materializes the lazy checkpoint
-        finally:
-            if loop is not edges:
-                loop.unpersist()
+    ``adaptive``: see ``plans.loop_planner``."""
+    with loop_planner(edges, adaptive):
+        for _ in range(n):
+            state = bsp_step(edges, state).localCheckpoint(eager=False)
+            state.count()  # ONE job: materializes the lazy checkpoint
     return state
 
 
@@ -337,19 +316,18 @@ def bsp_converge(
     The loop runs at ``plans.loop_planner``'s width: ``defaultParallelism``
     tasks per superstep shuffle on a small graph, where a fixed
     ``spark.sql.shuffle.partitions`` (32) made the loop pay per-task
-    overhead, not work. Edges wider than the width are narrowed to a copy
-    the loop owns; the state is checkpointed at the width too."""
+    overhead, not work. A network ``from_pairs_partitioned`` built is read
+    in place: the width is its own. The state is checkpointed at the width
+    too."""
     agg_fn = F.min if minimize else F.max
-    with loop_planner(edges, adaptive) as width:
-        loop = _narrowed(edges, width)
-        # persist edges only if the CALLER hasn't: persist() on an
-        # already-cached relation returns the same plan, so the finally-
-        # block unpersist would otherwise evict the caller's shared cache
-        # entry (the memoized network relation) behind its back
-        owns_edges = loop is not edges or edges.storageLevel == StorageLevel.NONE
-        if owns_edges:
-            loop = loop.persist()
-        edges = loop
+    # persist edges only if the CALLER hasn't: persist() on an
+    # already-cached relation returns the same plan, so the finally-block
+    # unpersist would otherwise evict the caller's shared cache entry (the
+    # memoized network relation) behind its back
+    owns_edges = edges.storageLevel == StorageLevel.NONE
+    if owns_edges:
+        edges = edges.persist()
+    with loop_planner(edges, adaptive):
         try:
             current = state.localCheckpoint(eager=False)
             frontier = current
@@ -426,9 +404,8 @@ def propagate_probabilities(
     # an edge with prob < min_prob can never deliver a passing message
     # (message prob starts at 1.0 and only decays), so drop it before the
     # loop: one filter here removes its fanout from EVERY superstep's join.
-    edges = edges.where(F.col("prob") >= min_prob)
-    with loop_planner(edges, adaptive) as width:
-        edges = _narrowed(edges, width).persist()
+    edges = edges.where(F.col("prob") >= min_prob).persist()
+    with loop_planner(edges, adaptive):
         try:
             current = (
                 seeds.select("key", "origin")
@@ -528,13 +505,12 @@ def propagate_incremental(
             F.col("__known").isNull() | (F.col("prob") > F.col("__known"))
         ).select("key", "origin", "prob")
 
-    edges = edges.where(F.col("prob") >= min_prob)
+    edges = edges.where(F.col("prob") >= min_prob).persist()
     seeds = (
         new_seeds.select("key", "origin")
         .withColumn("prob", F.lit(1.0))
     )
-    with loop_planner(edges, adaptive) as width:
-        edges = _narrowed(edges, width).persist()
+    with loop_planner(edges, adaptive):
         try:
             delta = beats_stored(seeds).localCheckpoint(eager=False)
             frontier = delta
@@ -611,8 +587,12 @@ def label_propagation(
     driver state; one scalar changed-count collect paces the loop. Stops
     when no vertex changes label. Returns ((key, label), supersteps)."""
     edges = edges.select("src", "dst")
-    with loop_planner(edges, adaptive) as width:
-        edges = _narrowed(edges, width).persist()
+    # a caller's cached (src, dst) relation IS this projection's cache
+    # entry: persist and unpersist only a copy of our own (see bsp_converge)
+    owns_edges = edges.storageLevel == StorageLevel.NONE
+    if owns_edges:
+        edges = edges.persist()
+    with loop_planner(edges, adaptive):
         try:
             # src ∪ dst so pure-sink vertices of a directed input get state
             # too (on the symmetric networks the engine builds, src alone
@@ -657,7 +637,8 @@ def label_propagation(
                     return current, i
             return current, max_iters
         finally:
-            edges.unpersist()
+            if owns_edges:
+                edges.unpersist()
 
 
 def f1_validate(modeled: DataFrame, validation: DataFrame) -> DataFrame:
@@ -767,9 +748,11 @@ def pagerank(
     The whole computation runs inside ``plans.loop_planner``: ``verts``,
     ``deg``, ``links`` and the first state are built at the loop's width
     too, so on a small graph every stage is ``defaultParallelism`` tasks
-    wide, not ``spark.sql.shuffle.partitions``; edges wider than the width
-    are narrowed once into ``links``. ``verts`` and ``links`` are
-    unpersisted on the way out, also when the loop raises.
+    wide, not ``spark.sql.shuffle.partitions``. Edges already
+    hash-partitioned by src (a network ``from_pairs_partitioned`` built)
+    set that width, so ``deg`` and ``links`` reuse their partitioning.
+    ``verts`` and ``links`` are unpersisted on the way out, also when the
+    loop raises.
 
     Returns (key, rank); ranks sum to 1."""
 
@@ -783,8 +766,7 @@ def pagerank(
             .collect()[0][0]
         )
 
-    with loop_planner(edges, adaptive) as width:
-        edges = _narrowed(edges, width)
+    with loop_planner(edges, adaptive):
         verts = links = None
         try:
             verts = (

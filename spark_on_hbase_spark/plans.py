@@ -209,19 +209,52 @@ def shuffle_width(df: DataFrame) -> int:
     return min(cap, max(floor, -(-size // max(1, advisory))))
 
 
+# physical nodes whose output partitioning is their one input's
+_PASS_THROUGH = ("ProjectExec", "FilterExec", "WholeStageCodegenExec", "InputAdapter")
+
+
+def planned_partitions(df: DataFrame) -> tuple[bool, int]:
+    """(hash-partitioned?, partitions) of ``df``'s physical plan as the
+    static planner makes it; call it with AQE off, since an adaptive
+    plan's root reports no partitioning. It plans a fresh projection of
+    ``df`` (the physical plan ``df`` caches may have been planned under
+    AQE) and executes nothing. A cached relation whose blocks are not
+    built yet reports no partitioning either, as its AQE plan has not
+    run: the walk reads the plan that cache was planned from, through
+    projections and filters. A plan of unknown partitioning, such as a
+    file scan, reports 0 partitions."""
+    node = df.select("*")._jdf.queryExecution().executedPlan()
+    while True:
+        p = node.outputPartitioning()
+        kind = node.getClass().getSimpleName()
+        if p.numPartitions() > 0:
+            break
+        if kind == "InMemoryTableScanExec":
+            node = node.relation().cachedPlan()
+        elif kind == "AdaptiveSparkPlanExec":
+            node = node.inputPlan()
+        elif kind in _PASS_THROUGH:
+            node = node.children().head()
+        else:
+            break
+    return p.getClass().getSimpleName() == "HashPartitioning", p.numPartitions()
+
+
 @contextmanager
 def loop_planner(df: DataFrame, adaptive: bool):
     """Planner mode for iterative loops (BSP, Lloyd's); yields the loop's
     shuffle width. With ``adaptive=False`` (the BSP loop operators'
     default) AQE is suspended for the duration of the loop and
-    ``spark.sql.shuffle.partitions`` is set to ``shuffle_width(df)`` — the
-    width AQE would have coalesced the loop's shuffles to, fixed at plan
+    ``spark.sql.shuffle.partitions`` is set to the width, fixed at plan
     time so the loop state keeps a hash partitioning later plans can
-    reuse. Both settings are restored on exit, also when the loop raises.
-    A loop whose edge relation is wider than the yielded width narrows a
-    copy of it once, so every superstep's join meets the state at one
-    width instead of re-shuffling one side. With ``adaptive=True`` nothing
-    is set and it yields None: AQE sizes the loop's shuffles.
+    reuse. A ``df`` that is already hash-partitioned keeps its width: a
+    network ``graph.from_pairs_partitioned`` sized, or any edge relation a
+    caller partitioned, which every superstep's join then reads in place
+    (the planner would shuffle the state to the wider hash side anyway).
+    Any other ``df`` gets ``shuffle_width(df)``, the width AQE would have
+    coalesced the loop's shuffles to. Both settings are restored on exit,
+    also when the loop raises. With ``adaptive=True`` nothing is set and
+    it yields None: AQE sizes the loop's shuffles.
 
     The r12 re-measurement nuanced the original "~25% superstep latency"
     rationale: AQE's partition coalescing actually makes the loops
@@ -240,17 +273,18 @@ def loop_planner(df: DataFrame, adaptive: bool):
     The width keeps most of that local win without the coalescing: a
     superstep over a small graph ran 32 tasks per shuffle where AQE
     would have run a handful, so the loops pay per-task overhead, not
-    work. At scale the width is ``shuffle.partitions``: the loop's
-    shuffles keep their width, and only an edge relation with more
-    partitions than that is narrowed."""
+    work. At scale the network and the width are both
+    ``shuffle.partitions`` wide, and the loop's shuffles keep their
+    width."""
     spark = df.sparkSession
     keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
     prev = [spark.conf.get(k) for k in keys]
     width = None
     try:
         if not adaptive:
-            width = shuffle_width(df)
             spark.conf.set(keys[0], "false")
+            hashed, n = planned_partitions(df)
+            width = n if hashed else shuffle_width(df)
             spark.conf.set(keys[1], str(width))
         yield width
     finally:

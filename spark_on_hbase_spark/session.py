@@ -50,12 +50,14 @@ def get_spark(app_name: str = "spark_on_hbase_spark", shuffle_partitions: int | 
     every shuffle is planned at. ``plans.shuffle_width`` sizes two kinds
     of plan to their data instead, capped at it: the persisted network
     (``graph.from_pairs_partitioned``) and the non-adaptive superstep
-    loops (``plans.loop_planner``). The 32 floor still sets the map-side
-    width of the shuffles AQE runs (it coalesces their reducers at run
-    time), the sampled bounds of range-partitioned layer writes (likewise
-    coalesced), the width of every other persisted relation a shuffle
-    partitions (AQE may not change a cached plan's partitioning), and the
-    width ``shuffle_width`` gives an input with unknown size statistics.
+    loops (``plans.loop_planner``), which over an already hash-partitioned
+    relation, such as that network, take its width. The 32 floor still
+    sets the map-side width of the shuffles AQE runs (it coalesces their
+    reducers at run time), the sampled bounds of range-partitioned layer
+    writes (likewise coalesced), the width of every other persisted
+    relation a shuffle partitions (AQE may not change a cached plan's
+    partitioning), and the width ``shuffle_width`` gives an input with
+    unknown size statistics.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if shuffle_partitions is None:

@@ -86,6 +86,8 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from spark_on_hbase_spark import plans
+
 _TOMBSTONE = "__tombstone"
 _KIND = "__kind"
 _DELCOLS = "__delcols"
@@ -760,7 +762,7 @@ class KeyedTable:
         # would cost one more job (to fill the partitions the collect
         # skipped) on every read under the cap; it is checkpointed only once
         # it is known to be over.
-        shuffles = "Exchange" in distinct._jdf.queryExecution().executedPlan().toString()
+        shuffles = plans.count_shuffles(distinct) > 0
         kd = distinct.localCheckpoint(eager=False) if shuffles else distinct
         head = [r[0] for r in kd.limit(self.POINT_READ_CAP + 1).collect()]
         if len(head) <= self.POINT_READ_CAP:

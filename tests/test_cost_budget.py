@@ -80,16 +80,29 @@ def test_indexed_writes_and_minmax_refresh_job_budget(spark, tmp_path):
 
 
 def test_semi_read_job_budget_under_and_over_the_cap(spark, tmp_path, monkeypatch):
-    """Jobs and tasks of building a ``semi_read`` of a key relation (four
-    input partitions, duplicate keys) under and over ``POINT_READ_CAP``
-    (64 here): 2 jobs and 5 tasks under the cap, 4 jobs and 7 tasks over
-    it. Under the cap one bounded collect runs the key lineage and its
-    distinct shuffle; over it the same collect materializes the key
-    relation's checkpoint, which the envelope aggregate then reads. When
-    the envelope re-ran the lineage and the shuffle under a second
-    checkpoint, the over-cap build took 5 jobs and 11 tasks. The under-cap
-    row is index upkeep's, refresh's and lookup's path, so it must not
-    rise. About 6 s of tier-1."""
+    """Jobs and tasks of building a ``semi_read`` under and over
+    ``POINT_READ_CAP``, of two key relations: one in four input partitions
+    with duplicate keys, whose distinct shuffles, and one persisted and
+    already hash-partitioned by the key, whose distinct does not.
+
+    ========================  =========  =========
+    key relation, cap         parent     now
+    ========================  =========  =========
+    shuffling, under (64)     2 / 5      2 / 5
+    shuffling, over (64)      5 / 11     4 / 7
+    partitioned, under (400)  1 / 4      1 / 4
+    partitioned, over (64)    3 / 6      3 / 6
+    ========================  =========  =========
+
+    For a shuffling key set one bounded collect runs the key lineage and
+    its distinct shuffle; over the cap that collect materializes the key
+    relation's checkpoint, which the envelope aggregate then reads, where
+    the parent ran the lineage and the shuffle again under a second
+    checkpoint. A partitioned key set is checkpointed only once it is
+    known to be over the cap: checkpointing it first cost 3 / 7 under the
+    cap and 4 / 9 over it. The under-cap rows are index upkeep's,
+    refresh's and lookup's path, so they must not rise. About 8 s of
+    tier-1."""
     monkeypatch.setattr(KeyedTable, "POINT_READ_CAP", 64)
     schema = "k bigint, v bigint, ts int"
     t = KeyedTable(spark, str(tmp_path / "t"), key_col="k", ts_col="ts")
@@ -105,7 +118,17 @@ def test_semi_read_job_budget_under_and_over_the_cap(spark, tmp_path, monkeypatc
         out = {}
         got[name] = _cost(spark, lambda: out.setdefault("df", t.semi_read(keys(step))))
         assert out["df"].count() == 400 // step
-    budget = {"under": (2, 5), "over": (4, 7)}
+    parted = spark.range(0, 400, 1, 4).select(F.col("id").alias("k")).repartition(4, "k").persist()
+    try:
+        parted.count()
+        for name, cap in (("parted_under", 400), ("parted_over", 64)):
+            monkeypatch.setattr(KeyedTable, "POINT_READ_CAP", cap)
+            out = {}
+            got[name] = _cost(spark, lambda: out.setdefault("df", t.semi_read(parted)))
+            assert out["df"].count() == 400
+    finally:
+        parted.unpersist()
+    budget = {"under": (2, 5), "over": (4, 7), "parted_under": (1, 4), "parted_over": (3, 6)}
     assert all(g <= b for k in budget for g, b in zip(got[k], budget[k])), got
 
 

@@ -262,21 +262,20 @@ def test_pagerank_matches_power_iteration(spark):
     assert abs(sum(out.values()) - 1.0) < 1e-9
 
 
-@pytest.mark.parametrize(
-    "loop", ["pagerank", "bsp_converge", "bsp_steps", "label_propagation"]
-)
+@pytest.mark.parametrize("loop", ["pagerank", "bsp_converge", "label_propagation"])
 def test_a_loop_that_raises_leaves_no_relation_of_its_own_cached(spark, monkeypatch, loop):
     """Every superstep loop unpersists what it persisted — ``pagerank``'s
-    ``verts`` and ``links``, and the narrowed copy a loop owns of edges
-    wider than its width — also when a superstep raises (here: the second
-    ``localCheckpoint``). The caller's cached edges stay cached. About 2 s
-    per loop."""
+    ``verts`` and ``links``, ``bsp_converge``'s copy of edges the caller
+    did not cache, ``label_propagation``'s projection of the edges — also
+    when a superstep raises (here: the second ``localCheckpoint``). The
+    caller's cached edges stay cached. About 2 s per loop."""
     from pyspark import StorageLevel
 
-    n = spark.sparkContext.defaultParallelism
     edges = (
-        spark.createDataFrame([(i % 40, (i * 7) % 40) for i in range(200)], "src long, dst long")
-        .repartition(2 * n, "src")
+        spark.createDataFrame(
+            [(i % 40, (i * 7) % 40, 1.0) for i in range(200)], "src long, dst long, w double"
+        )
+        .repartition("src")
         .persist()
     )
     edges.count()
@@ -297,8 +296,7 @@ def test_a_loop_that_raises_leaves_no_relation_of_its_own_cached(spark, monkeypa
 
     run = {
         "pagerank": lambda: G.pagerank(edges, max_iters=3),
-        "bsp_converge": lambda: G.bsp_converge(edges, state),
-        "bsp_steps": lambda: G.bsp_steps(edges, state, 3),
+        "bsp_converge": lambda: G.bsp_converge(edges.select("src", "dst"), state),
         "label_propagation": lambda: G.label_propagation(edges),
     }[loop]
     monkeypatch.setattr(cls, "persist", persist)
@@ -312,6 +310,70 @@ def test_a_loop_that_raises_leaves_no_relation_of_its_own_cached(spark, monkeypa
         assert edges.storageLevel != StorageLevel.NONE
     finally:
         edges.unpersist()
+
+
+def test_label_propagation_keeps_the_callers_cached_edges(spark):
+    """``label_propagation`` projects its input to (src, dst); when the
+    caller's cached relation is exactly that, the projection's cache entry
+    is the caller's, and unpersisting it on the way out evicted the
+    caller's cache. About 2 s."""
+    from pyspark import StorageLevel
+
+    edges = spark.createDataFrame(
+        [(i % 30, (i * 7) % 30) for i in range(120)], "src long, dst long"
+    ).persist()
+    try:
+        edges.count()
+        labels, _ = G.label_propagation(edges, max_iters=2)
+        assert labels.count() == 30
+        assert edges.storageLevel != StorageLevel.NONE
+    finally:
+        edges.unpersist()
+
+
+def test_the_loops_run_at_the_width_of_the_network_they_are_given(spark):
+    """A network ``from_pairs_partitioned`` built at a width between
+    ``defaultParallelism`` and ``spark.sql.shuffle.partitions`` sets the
+    width of every loop over it — also through the projection ``pagerank``
+    is given and the cached filter the propagation loops make — so no loop
+    shuffles the network: ``pagerank``'s ``deg`` and ``links`` reuse its
+    partitioning with no exchange, and a superstep's only exchange is its
+    per-vertex aggregation's. About 6 s."""
+    from spark_on_hbase_spark import plans
+
+    n = spark.sparkContext.defaultParallelism
+    w = n + 3
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(max(int(prev), w + 1)))
+    pairs = spark.range(0, 600).select(
+        (F.col("id") % 150).alias("src"),
+        ((F.col("id") * 7) % 150).alias("dst"),
+        (F.col("id") % 256 / 255.0).alias("prob"),
+        F.lit("P1").alias("vendor"),
+        F.col("id").alias("ts"),
+    )
+    net = G.from_pairs_partitioned(pairs, num_partitions=w).persist()
+    kept = net.where(F.col("prob") >= 0.5).persist()
+    try:
+        net.count()
+        for edges in (net, net.select("src", "dst"), kept):
+            with plans.loop_planner(edges, adaptive=False) as width:
+                assert width == w
+        state = net.select(F.col("src").alias("key")).distinct().withColumn("label", F.col("key"))
+        with plans.loop_planner(net, adaptive=False):
+            deg = net.groupBy(F.col("src").alias("key")).agg(F.count("*").alias("__deg"))
+            links = net.join(deg.select(F.col("key").alias("src"), "__deg"), on="src")
+            assert plans.count_shuffles(links) == 0, plans.formatted_plan(links)
+            # a state one superstep old carries the loop's partitioning
+            step1 = G.bsp_steps(net, state, 1)
+            superstep = G.bsp_step(net, step1)
+            assert plans.count_shuffles(superstep) == 1, plans.formatted_plan(superstep)
+        assert net.rdd.getNumPartitions() == w
+    finally:
+        spark.conf.set(key, prev)
+        kept.unpersist()
+        net.unpersist()
 
 
 def test_triangle_count_known_graphs(spark):

@@ -569,3 +569,28 @@ def test_loop_planner_restores_both_settings_when_the_loop_raises(spark):
         assert width is None
         assert [spark.conf.get(k) for k in keys] == prev
     assert [spark.conf.get(k) for k in keys] == prev
+
+
+def test_loop_planner_keeps_the_width_of_a_hash_partitioned_input(spark):
+    """A relation already hash-partitioned keeps its width as the loop's —
+    narrower than ``defaultParallelism`` or wider than
+    ``shuffle.partitions`` alike, since a superstep's join reuses it —
+    also through a projection and a filter, and also when it is cached but
+    its blocks are not built yet. Any other relation gets
+    ``shuffle_width``. No job runs."""
+    sc = spark.sparkContext
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    base = spark.range(0, 64).select(F.col("id").alias("src"), (F.col("id") % 7).alias("dst"))
+    first_job = sc._jsc.sc().dagScheduler().nextJobId()
+    for n in (2, cap + 5):
+        hashed = base.repartition(n, "src")
+        cached = hashed.persist()
+        try:
+            for df in (hashed, hashed.select("dst", "src"), cached.where(F.col("dst") > 2)):
+                with plans.loop_planner(df, adaptive=False) as width:
+                    assert width == n
+        finally:
+            cached.unpersist()
+    with plans.loop_planner(base.repartition(cap + 5), adaptive=False) as width:
+        assert width == plans.shuffle_width(base)
+    assert sc._jsc.sc().dagScheduler().nextJobId() == first_job
